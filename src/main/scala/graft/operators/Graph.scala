@@ -160,7 +160,8 @@ object Graph {
     // path is exactly one distinct-edge derivation + one collect.
     val e = edges.select("src", "dst").cache()
     val small = e.count() <= 2 * maxEdges
-    if (small) return triangleCountsKernel(e)
+    // the kernel collects e, so its result no longer needs the cache
+    if (small) return try triangleCountsKernel(e) finally e.unpersist()
     val deg = e.groupBy(col("src").as("n")).agg(count(lit(1)).as("deg"))
     // orient each undirected edge once: (deg, id)-smaller endpoint first
     val o = e
@@ -175,6 +176,10 @@ object Graph {
       // build (fact self-join + distinct) is the expensive part and must
       // not run three times
       .cache()
+    // o holds all the triangles need: materialize it, then release e (o
+    // stays cached for the result's three scans of it)
+    o.count()
+    e.unpersist()
     // wedges from the orientation-least corner; b1 ≺ b2 in the SAME
     // (deg, id) order so the closing edge (b1 → b2) is oriented if present
     val wedges = o.as("x").join(o.as("y"), col("x.a") === col("y.a") &&

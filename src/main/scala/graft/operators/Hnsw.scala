@@ -1,7 +1,11 @@
 package graft.operators
 
 import scala.collection.mutable
+import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** In-partition HNSW — the graph-ANN option for the regime where IVF
   * partition-probing loses recall (r2 verdict "What's missing" #2).
@@ -40,8 +44,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 object Hnsw {
 
   /** One partition's graph. Distances are squared L2 in double (sqrt is
-    * monotone — only comparisons happen inside the graph). */
-  final class Graph(dims: Int, m: Int, efConstruction: Int) {
+    * monotone — only comparisons happen inside the graph). Serializable, so
+    * a resident graph can be fetched by a remote task. */
+  final class Graph(val dims: Int, m: Int, efConstruction: Int) extends Serializable {
     private val mL = 1.0 / math.log(m.toDouble)
     private val maxM0 = 2 * m // layer-0 degree cap (standard)
     private val vecs = mutable.ArrayBuffer.empty[Array[Float]]
@@ -529,70 +534,165 @@ object Hnsw {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** Search every persisted graph and merge to the global top-k. Graphs
-    * are restored verbatim per part (a Spark partition may carry several
-    * parts after the part-keyed repartition — grouped in one pass), so
-    * results are identical to searching the freshly-built graphs. */
-  def searchPersisted(spark: SparkSession, path: String, query: Array[Float],
-                      k: Int, ef: Int = 64): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val nodes = spark.read.parquet(path).as[PersistedNode]
-    val perPart: Dataset[(Long, Long)] = nodes
-      .repartition(col("part"))
-      .mapPartitions { it =>
-        it.toSeq.groupBy(_.part).iterator.flatMap { case (_, rows) =>
-          // dims come from the STORED vectors — a wrong-width query must
-          // fail loudly, not silently compute truncated distances
-          checkVersion(rows.head)
-          val dims = rows.head.vec.length
-          require(query.length == dims,
-            s"hnsw query has ${query.length} dims, persisted index has $dims")
-          val g = new Graph(dims, 16, 64)
-          rows.sortBy(_.node).foreach(r => g.restoreNode(r.ext_id, r.vec, r.level, r.links))
-          g.restoreEntry(rows.head.ep, rows.head.top)
-          g.search(query, k, if (ef > 0) ef else rows.length)
-        }
-      }
-    perPart.toDF("vec_id", "score")
-      .orderBy(col("score").asc, col("vec_id").asc).limit(k)
+  /** Rebuild one part's graph from its dumped nodes verbatim — no
+    * re-insertion, no neighbor recomputation — so a restored graph is
+    * bit-identical to the built one. `m` and `efConstruction` only matter
+    * to later inserts. */
+  private def restoreGraph(rows: Seq[PersistedNode], m: Int = 16,
+                           efConstruction: Int = 64): Graph = {
+    checkVersion(rows.head)
+    val sorted = rows.sortBy(_.node)
+    val g = new Graph(sorted.head.vec.length, m, efConstruction)
+    sorted.foreach(r => g.restoreNode(r.ext_id, r.vec, r.level, r.links))
+    g.restoreEntry(sorted.head.ep, sorted.head.top)
+    g
   }
 
-  /** BATCHED serving from the persisted index — the reference's evaluation
-    * loop (acorn.py __main__: one index, a whole query file): graphs
-    * restore ONCE per partition and answer the entire broadcast query set,
-    * so restore cost amortizes over |Q| and the shuffle carries ≤ P·|Q|·k
-    * rows into the same k-heap merge batchKnn uses. */
-  def searchPersistedBatch(spark: SparkSession, path: String,
-                           queries: Seq[(Long, Array[Float])], k: Int,
-                           ef: Int = 64): DataFrame = {
+  /** The graph an id belongs to: the build's `repartition(numParts,
+    * vec_id)` assignment, `pmod(hash(vec_id AS BIGINT), numParts)`. */
+  private def partOf(id: Long, numParts: Int): Int =
+    Math.floorMod(Murmur3_x86_32.hashLong(id, 42), numParts)
+
+  // a wrong-width query must fail loudly, not compute truncated distances
+  private def requireDims(g: Graph, q: Array[Float], what: String = "hnsw query"): Unit =
+    require(q.length == g.dims, s"$what has ${q.length} dims, persisted index has ${g.dims}")
+
+  /** (budget, return cut, beam) of a filtered walk over `n` nodes.
+    * `metaSearch <= 0` saturates: all three >= n (+10 so the budget's
+    * stepping cannot overshoot an exact cap). */
+  private def walkSettings(n: Int, metaSearch: Int, largeK: Int, ef: Int): (Int, Int, Int) =
+    if (metaSearch > 0) (metaSearch, largeK, ef)
+    else (n + 10, math.max(largeK, n), math.max(ef, n))
+
+  // ---- resident serving: each persisted index's graphs restored once ----
+
+  /** (part, graph, nodes of the part that `partOf` puts elsewhere) */
+  private type Graphs = RDD[(Int, Graph, Int)]
+  private final case class Resident(listing: Seq[(String, Long, Long)], graphs: Graphs,
+                                    misrouted: Long)
+  /** keyed by (index path, numParts) */
+  private val registry = mutable.HashMap.empty[(String, Int), Resident]
+
+  /** (name, length, mtime) of every file in the index directory; None once
+    * it is gone. An overwrite writes new file names. */
+  private def listing(sc: SparkContext, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try Some(p.getFileSystem(sc.hadoopConfiguration).listStatus(p).toSeq
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted)
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  private def drop(key: (String, Int)): Unit =
+    registry.remove(key).foreach(r =>
+      if (!r.graphs.sparkContext.isStopped) r.graphs.unpersist(blocking = false))
+
+  /** Unpersist the resident graphs of the index at `path`, under every
+    * numParts. The next search of it restores them again. */
+  def release(path: String): Unit = registry.synchronized {
+    registry.keys.filter(_._1 == path).toSeq.foreach(drop)
+  }
+
+  /** The resident graphs of the index at `path`: `numParts` Spark
+    * partitions, graph part p in partition p, persisted MEMORY_ONLY. An
+    * unrouted search (`numParts = None`) takes any live entry of the path,
+    * else the index's own part count. Every access first releases the
+    * entries whose directory is gone or lists differently, or whose
+    * SparkContext stopped. A miss restores in one job under the registry
+    * lock, so concurrent first calls restore once. */
+  private def resident(spark: SparkSession, path: String, numParts: Option[Int]): Graphs =
+    registry.synchronized {
+      val sc = spark.sparkContext
+      registry.toSeq.foreach { case (key, r) =>
+        if (r.graphs.sparkContext.isStopped || !listing(sc, key._1).contains(r.listing)) drop(key)
+      }
+      val key = numParts.map(n => (path, n))
+        .orElse(registry.keys.find(_._1 == path))
+        .getOrElse((path, partCount(spark, path)))
+      val r = registry.getOrElseUpdate(key, loadResident(spark, path, key._2))
+      if (numParts.isDefined && r.misrouted > 0) {
+        drop(key)
+        throw new IllegalArgumentException(
+          s"hnsw persisted index at $path: ${r.misrouted} nodes sit in a graph other " +
+            s"than pmod(hash(ext_id), ${key._2}) — the index was built with a " +
+            "different numParts, and passing ids would be routed to the wrong " +
+            "graphs; search with the numParts the index was built with")
+      }
+      r.graphs
+    }
+
+  private def partCount(spark: SparkSession, path: String): Int = {
+    import org.apache.spark.sql.functions.{col, max}
+    Option(spark.read.parquet(path).agg(max(col("part"))).head.get(0))
+      .fold(1)(_.asInstanceOf[Int] + 1)
+  }
+
+  private def loadResident(spark: SparkSession, path: String, numParts: Int): Resident = {
+    import spark.implicits._
+    // listed before the read, so an overwrite racing the restore re-lists
+    val files = listing(spark.sparkContext, path).getOrElse(Nil)
+    val graphs = spark.read.parquet(path).as[PersistedNode].rdd
+      .keyBy(_.part).partitionBy(new HashPartitioner(numParts))
+      .mapPartitions(_.map(_._2).toSeq.groupBy(_.part).iterator.map { case (p, rows) =>
+        (p, restoreGraph(rows), rows.count(r => partOf(r.ext_id, numParts) != p))
+      })
+      .setName(s"hnsw graphs $path")
+      .persist(StorageLevel.MEMORY_ONLY)
+    try Resident(files, graphs, graphs.map(_._3.toLong).fold(0L)(_ + _))
+    catch { case e: Throwable => graphs.unpersist(blocking = false); throw e }
+  }
+
+  /** `passing` ids (a `vec_id` column), each in the partition of the graph
+    * that holds it: only the ids cross the shuffle. */
+  private def route(passing: DataFrame, numParts: Int): RDD[(Int, Long)] = {
+    val spark = passing.sparkSession
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    passing.select(col("vec_id").cast("long")).filter(col("vec_id").isNotNull).as[Long].rdd
+      .map(id => (partOf(id, numParts), id)).partitionBy(new HashPartitioner(numParts))
+  }
+
+  private def topHits(spark: SparkSession, hits: RDD[(Long, Long)], k: Int): DataFrame = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    hits.toDF("vec_id", "score").orderBy(col("score").asc, col("vec_id").asc).limit(k)
+  }
+
+  /** per-query top-k via the k-heap merge batchKnn uses: ≤ P·|Q|·k rows in */
+  private def topHitsPerQuery(spark: SparkSession, hits: RDD[(Long, Long, Long)],
+                              k: Int): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, posexplode}
-    val qb = spark.sparkContext.broadcast(queries)
-    val nodes = spark.read.parquet(path).as[PersistedNode]
-    val perPart: Dataset[(Long, Long, Long)] = nodes
-      .repartition(col("part"))
-      .mapPartitions { it =>
-        it.toSeq.groupBy(_.part).iterator.flatMap { case (_, rows) =>
-          checkVersion(rows.head)
-          val dims = rows.head.vec.length
-          val g = new Graph(dims, 16, 64)
-          rows.sortBy(_.node).foreach(r => g.restoreNode(r.ext_id, r.vec, r.level, r.links))
-          g.restoreEntry(rows.head.ep, rows.head.top)
-          qb.value.iterator.flatMap { case (qid, qv) =>
-            require(qv.length == dims,
-              s"hnsw query $qid has ${qv.length} dims, persisted index has $dims")
-            g.search(qv, k, if (ef > 0) ef else rows.length).map { case (id, s) => (qid, id, s) }
-          }
-        }
-      }
-    perPart.toDF("q_id", "vec_id", "score")
+    hits.toDF("q_id", "vec_id", "score")
       .groupBy("q_id")
       .agg(graft.functions.aggs.topK(col("score"), col("vec_id"), k, asc = true).as("hits"))
       .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
       .select(col("q_id"), col("hit.id").as("vec_id"),
         (col("pos") + 1).cast("long").as("rank"), col("hit.score").as("score"))
   }
+
+  /** Search every persisted graph and merge to the global top-k. The
+    * graphs are the resident ones, restored verbatim, so results equal
+    * searching the freshly built graphs. */
+  def searchPersisted(spark: SparkSession, path: String, query: Array[Float],
+                      k: Int, ef: Int = 64): DataFrame =
+    topHits(spark, resident(spark, path, None).flatMap { case (_, g, _) =>
+      requireDims(g, query)
+      g.search(query, k, if (ef > 0) ef else g.size)
+    }, k)
+
+  /** BATCHED serving from the persisted index — the reference's evaluation
+    * loop (acorn.py __main__: one index, a whole query file): every
+    * resident graph answers the whole query set, and the merge carries
+    * ≤ P·|Q|·k rows. */
+  def searchPersistedBatch(spark: SparkSession, path: String,
+                           queries: Seq[(Long, Array[Float])], k: Int,
+                           ef: Int = 64): DataFrame =
+    topHitsPerQuery(spark, resident(spark, path, None).flatMap { case (_, g, _) =>
+      queries.iterator.flatMap { case (qid, qv) =>
+        requireDims(g, qv, s"hnsw query $qid")
+        g.search(qv, k, if (ef > 0) ef else g.size).map { case (id, s) => (qid, id, s) }
+      }
+    }, k)
 
   /** APPEND while serving — A30's graph form (the reference add_items()s
     * into a live index, acorn.py:61): restore the persisted graphs, insert
@@ -602,14 +702,14 @@ object Hnsw {
     * the ascending-id insertion discipline — when arriving ids exceed the
     * indexed ids (the ingest case), the appended graph is BIT-IDENTICAL to
     * a fresh full-corpus build under the same partitioning (spec-proved).
-    * Cogroup co-partitions graphs and arrivals in one shuffle of the
+    * The inserts mutate the graphs, so every call restores its own copy:
+    * cogroup co-partitions graphs and arrivals in one shuffle of the
     * (tiny) arriving side plus the node table. */
   def searchAppended(spark: SparkSession, path: String, arriving: DataFrame,
                      numParts: Int, query: Array[Float], k: Int, ef: Int = 64,
                      m: Int = 16, efConstruction: Int = 64): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    val dims = query.length
     val nodes = spark.read.parquet(path).as[PersistedNode]
     val arr = arriving.select(
         // hash the CAST column: Murmur3 over int vs long differs, and the
@@ -619,11 +719,11 @@ object Hnsw {
       .as[(Int, Long, Array[Float])]
     val perPart = nodes.groupByKey(_.part).cogroup(arr.groupByKey(_._1)) {
       (_, ns, as) =>
-        val nodeRows = ns.toArray.sortBy(_.node)
-        nodeRows.headOption.foreach(checkVersion)
-        val g = new Graph(dims, m, efConstruction)
-        nodeRows.foreach(r => g.restoreNode(r.ext_id, r.vec, r.level, r.links))
-        if (nodeRows.nonEmpty) g.restoreEntry(nodeRows.head.ep, nodeRows.head.top)
+        val nodeRows = ns.toSeq
+        val g =
+          if (nodeRows.isEmpty) new Graph(query.length, m, efConstruction)
+          else restoreGraph(nodeRows, m, efConstruction)
+        requireDims(g, query)
         as.toArray.sortBy(_._2).foreach { case (_, id, v) => g.insert(id, v) }
         if (g.size == 0) Iterator.empty
         else g.search(query, k, if (ef > 0) ef else g.size).iterator
@@ -635,94 +735,42 @@ object Hnsw {
   /** ACORN against the PERSISTED index — the reference's actual serving
     * path (one filter-agnostic index on disk, acorn.py:61; every filtered
     * query walks it, acorn.py:149). The predicate is evaluated
-    * relationally at query time and ships as a per-partition id set via
-    * cogroup (ids route to their graph by replaying the build's hash
-    * partitioning), so ONE persisted index serves every predicate — the
-    * whole point of ACORN vs per-predicate indexes. */
+    * relationally at query time; its passing ids route to the partitions
+    * of the resident graphs that hold them, and one job walks them, so ONE
+    * persisted index serves every predicate — the whole point of ACORN vs
+    * per-predicate indexes. `numParts` must be the build's. */
   def searchFilteredPersisted(spark: SparkSession, path: String, passing: DataFrame,
                               numParts: Int, query: Array[Float], k: Int,
-                              metaSearch: Int, ef: Int = 200, largeK: Int = 200): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    val nodes = spark.read.parquet(path).as[PersistedNode]
-    val pass = passing.select(
-        pmod(hash(col("vec_id").cast("long")), lit(numParts)).cast("int").as("part"),
-        col("vec_id").cast("long").as("vec_id"))
-      .as[(Int, Long)]
-    val perPart = nodes.groupByKey(_.part).cogroup(pass.groupByKey(_._1)) {
-      (_, ns, ps) =>
-        val nodeRows = ns.toArray.sortBy(_.node)
-        if (nodeRows.isEmpty) Iterator.empty
-        else {
-          checkVersion(nodeRows.head)
-          val dims = nodeRows.head.vec.length
-          require(query.length == dims,
-            s"hnsw query has ${query.length} dims, persisted index has $dims")
-          val g = new Graph(dims, 16, 64)
-          nodeRows.foreach(r => g.restoreNode(r.ext_id, r.vec, r.level, r.links))
-          g.restoreEntry(nodeRows.head.ep, nodeRows.head.top)
-          val ok = ps.map(_._2).toSet
-          val n = nodeRows.length
-          // metaSearch <= 0 → saturate (budget/beam/cut all >= partition
-          // size; +10 so the stepping cannot overshoot an exact cap)
-          val (ms, lk, e) =
-            if (metaSearch > 0) (metaSearch, largeK, ef)
-            else (n + 10, math.max(largeK, n), math.max(ef, n))
-          g.searchFiltered(query, k, ok, ms, lk, e).iterator
+                              metaSearch: Int, ef: Int = 200, largeK: Int = 200): DataFrame =
+    topHits(spark, resident(spark, path, Some(numParts)).zipPartitions(route(passing, numParts)) {
+      (gs, ids) =>
+        val ok = ids.map(_._2).toSet
+        gs.flatMap { case (_, g, _) =>
+          requireDims(g, query)
+          val (ms, lk, e) = walkSettings(g.size, metaSearch, largeK, ef)
+          g.searchFiltered(query, k, ok, ms, lk, e)
         }
-    }
-    perPart.toDF("vec_id", "score")
-      .orderBy(col("score").asc, col("vec_id").asc).limit(k)
-  }
+    }, k)
 
   /** BATCHED ACORN against the persisted index — the reference's README §3
     * evaluation loop (one filter-agnostic index, a whole query file per
-    * selectivity class, acorn.py:296-302): graphs restore ONCE per
-    * partition, the predicate's surviving-id set ships once via cogroup
-    * (same routing replay as searchFilteredPersisted), and every broadcast
-    * query walks the restored graph. Restore cost amortizes over |Q| and
-    * the merge carries ≤ P·|Q|·k rows into the per-query k-heap —
-    * the searchPersistedBatch shape with the ACORN walk inside. */
+    * selectivity class, acorn.py:296-302): the passing ids route once, as
+    * in searchFilteredPersisted, and every query walks the resident
+    * graphs; the merge carries ≤ P·|Q|·k rows into the per-query k-heap. */
   def searchFilteredPersistedBatch(spark: SparkSession, path: String, passing: DataFrame,
                                    numParts: Int, queries: Seq[(Long, Array[Float])], k: Int,
-                                   metaSearch: Int, ef: Int = 200, largeK: Int = 200): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod, posexplode}
-    val qb = spark.sparkContext.broadcast(queries)
-    val nodes = spark.read.parquet(path).as[PersistedNode]
-    val pass = passing.select(
-        pmod(hash(col("vec_id").cast("long")), lit(numParts)).cast("int").as("part"),
-        col("vec_id").cast("long").as("vec_id"))
-      .as[(Int, Long)]
-    val perPart = nodes.groupByKey(_.part).cogroup(pass.groupByKey(_._1)) {
-      (_, ns, ps) =>
-        val nodeRows = ns.toArray.sortBy(_.node)
-        if (nodeRows.isEmpty) Iterator.empty
-        else {
-          checkVersion(nodeRows.head)
-          val dims = nodeRows.head.vec.length
-          val g = new Graph(dims, 16, 64)
-          nodeRows.foreach(r => g.restoreNode(r.ext_id, r.vec, r.level, r.links))
-          g.restoreEntry(nodeRows.head.ep, nodeRows.head.top)
-          val ok = ps.map(_._2).toSet
-          val n = nodeRows.length
-          val (ms, lk, e) =
-            if (metaSearch > 0) (metaSearch, largeK, ef)
-            else (n + 10, math.max(largeK, n), math.max(ef, n))
-          qb.value.iterator.flatMap { case (qid, qv) =>
-            require(qv.length == dims,
-              s"hnsw query $qid has ${qv.length} dims, persisted index has $dims")
+                                   metaSearch: Int, ef: Int = 200, largeK: Int = 200): DataFrame =
+    topHitsPerQuery(spark, resident(spark, path, Some(numParts)).zipPartitions(route(passing, numParts)) {
+      (gs, ids) =>
+        val ok = ids.map(_._2).toSet
+        gs.flatMap { case (_, g, _) =>
+          val (ms, lk, e) = walkSettings(g.size, metaSearch, largeK, ef)
+          queries.iterator.flatMap { case (qid, qv) =>
+            requireDims(g, qv, s"hnsw query $qid")
             g.searchFiltered(qv, k, ok, ms, lk, e).map { case (id, sc) => (qid, id, sc) }
           }
         }
-    }
-    perPart.toDF("q_id", "vec_id", "score")
-      .groupBy("q_id")
-      .agg(graft.functions.aggs.topK(col("score"), col("vec_id"), k, asc = true).as("hits"))
-      .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(col("q_id"), col("hit.id").as("vec_id"),
-        (col("pos") + 1).cast("long").as("rank"), col("hit.score").as("score"))
-  }
+    }, k)
 
   /** Distributed ACORN-1: one predicate-aware graph walk per partition.
     * `corpus` must expose (vec_id: long, embedding: array<float>,
@@ -765,9 +813,7 @@ object Hnsw {
           val g = new Graph(dims, m, efConstruction)
           rows.foreach { case (id, v, _) => g.insert(id, v) }
           sb.value.iterator.flatMap { case (budget, twoHop) =>
-            val (ms, lk, e) =
-              if (budget > 0) (budget, largeK, ef)
-              else (rows.length + 10, math.max(largeK, rows.length), math.max(ef, rows.length))
+            val (ms, lk, e) = walkSettings(rows.length, budget, largeK, ef)
             g.searchFiltered(query, k, passing, ms, lk, e, twoHop)
               .map { case (id, s) => (budget, twoHop, id, s) }
           }
@@ -800,11 +846,7 @@ object Hnsw {
           val passing = rows.iterator.collect { case (id, _, true) => id }.toSet
           val g = new Graph(dims, m, efConstruction)
           rows.foreach { case (id, v, _) => g.insert(id, v) }
-          // size+10, not size: the +10 stepping could overshoot an exact
-          // `size` cap without ever running the full-coverage round
-          val (ms, lk, e) =
-            if (metaSearch > 0) (metaSearch, largeK, ef)
-            else (rows.length + 10, math.max(largeK, rows.length), math.max(ef, rows.length))
+          val (ms, lk, e) = walkSettings(rows.length, metaSearch, largeK, ef)
           g.searchFiltered(query, k, passing, ms, lk, e, twoHop).iterator
         }
       }

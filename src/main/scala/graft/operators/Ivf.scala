@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import graft.functions.{scaled, vectors}
 
 /** IVF-style clustered index — the Spark-first re-expression of the
@@ -50,6 +53,23 @@ object Ivf {
       .limit(nProbe)
       .select(clusterCol)
 
+  /** [[probe]]'s ranking over driver-side centroids, every cluster best
+    * first: the same scaled metric evaluated on the driver (no job), nulls
+    * placed as Spark sorts them, ties to the lower cluster id. */
+  private[graft] def probeOrder(cent: Seq[(Long, Array[Float])], q: Array[Float],
+                                metric: Knn.Metric): Seq[Long] = {
+    def literal(v: Array[Float]) =
+      Bridge.column(Literal.create(v, ArrayType(FloatType, containsNull = false)))
+    cent.map { case (label, c) =>
+      val s = Option(Bridge.expression(metric.score(literal(c), literal(q))).eval())
+        .map(v => math.floor(v.asInstanceOf[Double] * math.pow(10, Knn.ScoreDigits) + 0.5).toLong)
+      // Spark sorts nulls first ascending and last descending
+      val key = if (metric.ascending) (s.fold(0)(_ => 1), s.getOrElse(0L))
+                else (s.fold(1)(_ => 0), -s.getOrElse(0L))
+      (key, label)
+    }.sorted.map(_._2)
+  }
+
   /** Per-query probes for a BROADCAST query set — [[probe]]'s ordering
     * (metric order, then lower cluster id) replayed per q_id over the
     * C×|Q| scored centroid frame (tiny: centroids are model state), via a
@@ -91,9 +111,8 @@ object Ivf {
   def adaptiveHybridKnn(emb: DataFrame, meta: DataFrame, pred: Column, query: DataFrame,
                         k: Int, metric: Knn.Metric = Knn.Cosine,
                         idCol: String = "vec_id", metaIdCol: String = "doc_id",
-                        vecCol: String = "embedding", clusterCol: String = "label",
-                        precomputedCent: Option[DataFrame] = None): DataFrame = {
-    val cent = precomputedCent.getOrElse(centroids(emb, idCol, vecCol, clusterCol).cache())
+                        vecCol: String = "embedding", clusterCol: String = "label"): DataFrame = {
+    val cent = centroids(emb, idCol, vecCol, clusterCol).cache()
     try {
       val totalClusters = cent.count().toInt
       // each widening materializes via eager localCheckpoint, so the loop's
@@ -110,7 +129,7 @@ object Ivf {
         res = searchAt(nProbe)
       }
       res
-    } finally if (precomputedCent.isEmpty) cent.unpersist()
+    } finally cent.unpersist()
   }
 
   /** Incremental assignment to an EXISTING centroid table (the FAISS add()
@@ -318,8 +337,8 @@ object Ivf {
         (col("pos") + 1).cast("long").as("rank"), col("hit.score").as("score"))
   }
 
-  /** Shared probe + pruned-scan + top-k body (used by hybridKnn, the
-    * adaptive variant, and HybridSearchEngine so they cannot drift). */
+  /** Shared probe + pruned-scan + top-k body (used by hybridKnn and the
+    * adaptive variant so they cannot drift). */
   private[graft] def searchProbed(cent: DataFrame, emb: DataFrame, meta: DataFrame, pred: Column,
                            query: DataFrame, k: Int, nProbe: Int, metric: Knn.Metric,
                            idCol: String, metaIdCol: String, vecCol: String,

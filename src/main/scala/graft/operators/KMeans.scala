@@ -109,7 +109,7 @@ object KMeans {
   }
 
   /** (label, vector) rows of a small centroid frame, label widened to long. */
-  private[operators] def collectCentroids(centroids: DataFrame): Seq[(Long, Array[Float])] =
+  private[graft] def collectCentroids(centroids: DataFrame): Seq[(Long, Array[Float])] =
     centroids.collect().toSeq.map { r =>
       val label = r.get(0) match {
         case i: Int => i.toLong

@@ -66,6 +66,11 @@ class GraphSpec extends SparkSpec {
     assert(tri(g) == Map(1L -> 2L, 2L -> 2L, 3L -> 1L, 4L -> 1L))
   }
 
+  test("triangleCounts releases the edge set it caches") {
+    val k4 = sym(0L -> 1L, 0L -> 2L, 0L -> 3L, 1L -> 2L, 1L -> 3L, 2L -> 3L)
+    assertReleases(assert(tri(k4).size == 4))
+  }
+
   test("triangleCounts matches a brute-force enumeration on the sf0.001 graph") {
     val dir = "/root/testdata/sf0.001"
     val got = AnalyticsQueries.defs("parts_triangles")(spark, dir)

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Hnsw, Knn}
+import org.apache.spark.sql.DataFrame
+import graft.operators.{Hnsw, Ivf, Knn, MetaPredicate}
 
 /** In-partition HNSW (library + spec, the graph-ANN option for corpora
   * where IVF probing loses recall): measured recall vs the exact scan,
@@ -346,5 +347,203 @@ class HnswSpec extends SparkSpec {
       Option(t).toSeq.flatMap(e => e.getMessage +: messages(e.getCause))
     assert(messages(err).exists(m => m != null && m.contains("maxRowsPerGraph")),
       s"guard message missing: ${messages(err)}")
+  }
+
+  // ---- resident serving: the registry of restored graphs, and the
+  // engine's cached relation, against the per-query operators ----
+
+  private object Serving {
+    val K = 10
+    val QueryId = 11L
+    lazy val corpus = emb.select("vec_id", "embedding", "label")
+    lazy val qv: Array[Float] =
+      emb.filter(col("vec_id") === QueryId).select("embedding").head().getSeq[Float](0).toArray
+    lazy val query = corpus.filter(col("vec_id") === QueryId).select(col("embedding").as("q_vec"))
+    /** the query's nearest other row, which gets no metadata row */
+    lazy val orphan: Long =
+      rows(Knn.topK(corpus.select("vec_id", "embedding"), query, 2, Knn.Cosine))(1)._1
+    lazy val meta = Tables(spark, dir, "documents").filter(col("doc_id") =!= orphan)
+
+    val Classes: Seq[(String, Map[String, (String, Any)])] = Seq(
+      "selective" -> Map("lang" -> ("exact", "zh"), "n_chars" -> ("<", 150)),
+      "mid" -> Map("lang" -> ("exact", "zh")),
+      "broad" -> Map("lang" -> ("substring", "e")))
+
+    def rows(df: DataFrame): Seq[(Long, Long)] =
+      df.select("vec_id", "score").collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+    def passing(m: Map[String, (String, Any)]): DataFrame =
+      meta.filter(MetaPredicate(m.toSeq: _*)).select(col("doc_id").as("vec_id"))
+
+    lazy val hnswPath: String = {
+      val p = TmpDirs.wiped("resident_spec_hnsw")
+      Hnsw.buildAndWrite(corpus.select("vec_id", "embedding"), p, dims = 64, numParts = 4)
+      p
+    }
+    def filteredWalk(path: String, m: Map[String, (String, Any)], budget: Int,
+                             numParts: Int = 4): DataFrame =
+      Hnsw.searchFilteredPersisted(spark, path, passing(m), numParts, qv, K, metaSearch = budget)
+    /** the same walk over graphs freshly built from the same partitioning */
+    def freshWalk(m: Map[String, (String, Any)], budget: Int): DataFrame =
+      Hnsw.searchFilteredPerPartition(
+        corpus.join(passing(m).withColumn("pass", lit(true)), Seq("vec_id"), "left")
+          .select(col("vec_id"), col("embedding"), coalesce(col("pass"), lit(false)).as("pass"))
+          .repartition(4, col("vec_id")),
+        qv, K, metaSearch = budget)
+
+    /** every strategy's answer per class, each checked against its reference */
+    def answers(): Map[(String, String), Seq[(Long, Long)]] = {
+      val engine = HybridSearchEngine(corpus, meta)
+      val vecs = corpus.select("vec_id", "embedding")
+      val cent = Ivf.centroids(corpus)
+      try {
+        val out = Classes.flatMap { case (cls, m) =>
+          val pred = MetaPredicate(m.toSeq: _*)
+          Seq(
+            "pre" -> (engine.preFilterSearch(m, query, K),
+              Knn.prefilterKnn(vecs, meta, pred, query, K, Knn.Cosine)),
+            "pre_l2" -> (engine.preFilterSearch(m, query, K, Knn.L2),
+              Knn.prefilterKnn(vecs, meta, pred, query, K, Knn.L2)),
+            "post" -> (engine.postFilterSearch(m, query, K, largeK = 50),
+              Knn.postfilterKnn(vecs, meta, pred, query, K, 50, Knn.Cosine)),
+            "acorn" -> (engine.acornSearch(m, query, K, nProbe = 2),
+              Ivf.searchProbed(cent, corpus, meta, pred, query, K, 2, Knn.Cosine,
+                "vec_id", "doc_id", "embedding", "label")),
+            "hnsw" -> (filteredWalk(hnswPath, m, 100), freshWalk(m, 100)),
+            "hnsw_saturated" -> (filteredWalk(hnswPath, m, 0),
+              Knn.prefilterKnn(vecs, meta, pred, query, K, Knn.L2))
+          ).map { case (strategy, (got, want)) =>
+            val g = rows(got)
+            assert(g == rows(want), s"$cls $strategy: resident $g vs reference ${rows(want)}")
+            (cls, strategy) -> g
+          }
+        }.toMap
+        // post-filter may come back empty on the selective class; no
+        // strategy may come back empty everywhere and gate nothing
+        out.groupBy(_._1._2).foreach { case (strategy, byCls) =>
+          assert(byCls.values.exists(_.nonEmpty), s"$strategy answered nothing")
+        }
+        out
+      } finally engine.close()
+    }
+
+    def withConf[T](conf: (String, String))(body: => T): T = {
+      val old = spark.conf.getOption(conf._1)
+      spark.conf.set(conf._1, conf._2)
+      try body finally old.fold(spark.conf.unset(conf._1))(spark.conf.set(conf._1, _))
+    }
+  }
+
+  test("resident answers equal the per-query operators, under any partitioning and with AQE off") {
+    import Serving._
+    val base = answers()
+    Seq("spark.sql.shuffle.partitions" -> "1", "spark.sql.shuffle.partitions" -> "7",
+      "spark.sql.shuffle.partitions" -> "64", "spark.sql.adaptive.enabled" -> "false")
+      .foreach(c => assert(withConf(c)(answers()) == base, s"answers changed under $c"))
+  }
+
+  test("post-filter counts a corpus row without metadata as a candidate that fails") {
+    import Serving._
+    val engine = HybridSearchEngine(corpus, meta)
+    try {
+      assert(rows(engine.exactSearch(query, 50)).map(_._1).contains(orphan))
+      val post = rows(engine.postFilterSearch(Map.empty, query, 50, largeK = 50))
+      assert(!post.map(_._1).contains(orphan))
+      assert(post.size == 49, "the other 49 candidates all have metadata and pass")
+      assert(!rows(engine.preFilterSearch(Map.empty, query, 50)).map(_._1).contains(orphan))
+    } finally engine.close()
+  }
+
+  test("a point search refuses a query frame that does not hold exactly one row") {
+    import Serving._
+    val engine = HybridSearchEngine(corpus, meta)
+    try {
+      val two = corpus.filter(col("vec_id").isin(1L, 2L)).select(col("embedding").as("q_vec"))
+      val searches: Seq[DataFrame => Any] = Seq(
+        engine.preFilterSearch(Map.empty, _, K),
+        engine.postFilterSearch(Map.empty, _, K),
+        engine.acornSearch(Map.empty, _, K),
+        engine.exactSearch(_, K))
+      for (q <- Seq(two, two.limit(0)); search <- searches) {
+        val e = intercept[IllegalArgumentException](search(q))
+        assert(e.getMessage.contains("exactly one row"), e.getMessage)
+      }
+    } finally engine.close()
+  }
+
+  test("close releases the resident relation; a closed engine refuses searches") {
+    import Serving._
+    // over a slice of the corpus, so no other engine shares its cached relation
+    val engine = HybridSearchEngine(corpus.filter(col("vec_id") > 0), meta)
+    assertReleases {
+      val (rdds, cached) = held
+      engine.preFilterSearch(Map.empty, query, K).collect()
+      engine.acornSearch(Map.empty, query, K).collect()
+      assert(held._2 == cached + 1 && (held._1 -- rdds).nonEmpty, "the relation was not cached")
+      engine.close()
+    }
+    intercept[IllegalArgumentException](engine.preFilterSearch(Map.empty, query, K))
+  }
+
+  test("release unpersists an index's resident graphs") {
+    import Serving._
+    val p = TmpDirs.wiped("resident_spec_release")
+    Hnsw.buildAndWrite(corpus.select("vec_id", "embedding"), p, dims = 64, numParts = 4)
+    assertReleases {
+      val rdds = held._1
+      rows(filteredWalk(p, Classes.head._2, 0))
+      rows(Hnsw.searchPersisted(spark, p, qv, K))
+      assert((held._1 -- rdds).size == 1, "routed and unrouted searches share one restore")
+      Hnsw.release(p)
+    }
+  }
+
+  test("a numParts other than the build's is refused, not routed to the wrong graphs") {
+    import Serving._
+    assertReleases {
+      Seq(3, 8).foreach { n =>
+        val e = intercept[IllegalArgumentException](filteredWalk(hnswPath, Classes(1)._2, 0, n))
+        assert(e.getMessage.contains("numParts"), e.getMessage)
+      }
+    }
+  }
+
+  test("registry: an overwritten index answers from its new graphs; a deleted one is released") {
+    import Serving._
+    val sub = "resident_spec_overwrite"
+    val everyone = Map[String, (String, Any)]("n_chars" -> ("geq", 0))
+    rows(filteredWalk(hnswPath, everyone, 0)) // the shared index is resident first
+    assertReleases {
+      val rdds = held._1
+      val p = TmpDirs.wiped(sub)
+      val vecs = corpus.select("vec_id", "embedding")
+      Hnsw.buildAndWrite(vecs.filter(col("vec_id") < 250), p, dims = 64, numParts = 4)
+      assert(rows(filteredWalk(p, everyone, 0)).forall(_._1 < 250))
+      val newer = vecs.filter(col("vec_id") >= 250)
+      Hnsw.buildAndWrite(newer, p, dims = 64, numParts = 4)
+      val got = rows(filteredWalk(p, everyone, 0))
+      assert(got == rows(Knn.prefilterKnn(newer, meta, MetaPredicate(everyone.toSeq: _*),
+        query, K, Knn.L2)))
+      assert((held._1 -- rdds).size == 1, "the stale graphs were not released")
+      TmpDirs.wiped(sub) // deletes the index
+      rows(filteredWalk(hnswPath, everyone, 0)) // any access sweeps the registry
+    }
+  }
+
+  test("registry: concurrent first searches restore once") {
+    import Serving._
+    val p = TmpDirs.wiped("resident_spec_concurrent")
+    Hnsw.buildAndWrite(corpus.select("vec_id", "embedding"), p, dims = 64, numParts = 4)
+    assertReleases {
+      val rdds = held._1
+      // the acorn_pipeline_e2e shape: one filtered walk per class, built concurrently
+      val got = Par.ordered(Classes) { case (cls, m) =>
+        filteredWalk(p, m, 0).select(lit(cls).as("cls"), col("vec_id"), col("score"))
+      }.reduce(_ union _).collect().toSeq.map(r => (r.getString(0), (r.getLong(1), r.getLong(2))))
+      assert((held._1 -- rdds).size == 1, "concurrent first calls restored more than once")
+      Classes.foreach { case (cls, m) =>
+        assert(got.filter(_._1 == cls).map(_._2) == rows(freshWalk(m, 0)), cls)
+      }
+      Hnsw.release(p)
+    }
   }
 }
