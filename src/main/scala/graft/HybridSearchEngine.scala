@@ -1,10 +1,11 @@
 package graft
 
+import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.scaled
-import graft.operators.{Ivf, KMeans, Knn, MetaPredicate}
+import graft.functions.{BoundParam, ParamHolder, scaled}
+import graft.operators.{Ivf, KMeans, Knn, MetaOp, MetaPredicate}
 
 /** High-level facade mirroring the reference's `HNSWSearch` workflow
   * (/root/reference/acorn.py:20) on Spark:
@@ -23,11 +24,19 @@ import graft.operators.{Ivf, KMeans, Knn, MetaPredicate}
   * Serving is resident, as the reference serves from its in-memory index.
   * The first search caches one serving relation, every corpus row (id,
   * vector, cluster) once, left-joined to its metadata row, and the first
-  * probing search collects the C×d centroid table to the driver. A point
-  * search collects its one-row query frame and scores the cached relation
-  * with the vector as a literal: no join and no broadcast per query.
-  * Metadata holds at most one row per id (the reference keys it by id).
-  * Point searches return (idCol, vecCol, score), best first.
+  * probing search collects the C×d centroid table to the driver. Metadata
+  * holds at most one row per id (the reference keys it by id).
+  *
+  * Point searches run through prepared plans. A query shape — strategy,
+  * metric, k (largeK for the post-filter) and the predicate's sorted
+  * (attribute, op, value type) list — is analysed, optimised, planned and
+  * compiled once, on its first query and under the session conf in force
+  * then; later queries of the shape bind the query vector, the predicate
+  * values and the probe set as parameters and re-run that plan, so they
+  * neither plan nor compile. One lock per shape serialises its queries
+  * from bind to collect; different shapes run concurrently. Point searches
+  * run when called and return driver-local frames of (idCol, vecCol,
+  * score), best first. `close()` drops the prepared plans.
   */
 final class HybridSearchEngine private (corpus: DataFrame, metadata: DataFrame,
                                         idCol: String, vecCol: String, clusterCol: String,
@@ -36,6 +45,7 @@ final class HybridSearchEngine private (corpus: DataFrame, metadata: DataFrame,
 
   private var served: DataFrame = _
   private var cents: Seq[(Long, Array[Float])] = _
+  private val plans = mutable.HashMap.empty[Shape, Prepared]
   private var closed = false
 
   private def checkOpen(): Unit =
@@ -65,21 +75,24 @@ final class HybridSearchEngine private (corpus: DataFrame, metadata: DataFrame,
     cents
   }
 
-  /** Unpersist the serving relation and drop the centroid table. A closed
-    * engine refuses further searches. */
+  /** The number of prepared query shapes. */
+  private[graft] def shapes: Int = synchronized(plans.size)
+
+  /** Unpersist the serving relation and drop the centroid table and the
+    * prepared plans. A closed engine refuses further searches. */
   def close(): Unit = synchronized {
     closed = true
+    plans.clear()
     if (served != null) served.unpersist()
     served = null
     cents = null
   }
 
-  /** Rows whose metadata row exists and satisfies `meta` — exactly the rows
-    * an inner join with the filtered metadata keeps. */
-  private def keep(meta: Map[String, (String, Any)]): Column = {
-    val pred = if (meta.isEmpty) lit(true) else MetaPredicate(meta.toSeq: _*)
-    coalesce(col(metaIdCol).isNotNull && pred, lit(false))
-  }
+  /** Rows whose metadata row exists and satisfies every constraint —
+    * exactly the rows an inner join with the filtered metadata keeps. */
+  private def keep(constraints: Seq[Column]): Column =
+    coalesce(col(metaIdCol).isNotNull && constraints.reduceOption(_ && _).getOrElse(lit(true)),
+      lit(false))
 
   /** The query frame's vector; a point search takes exactly one. */
   private def queryVector(query: DataFrame): Array[Float] = {
@@ -94,31 +107,71 @@ final class HybridSearchEngine private (corpus: DataFrame, metadata: DataFrame,
     rows(0).getSeq[Float](0).toArray
   }
 
-  /** `rows` scored against `q`, best first with ties to the lower id
-    * (the Knn.topK order). */
-  private def ranked(rows: DataFrame, q: Array[Float], metric: Knn.Metric,
-                     extra: Column*): DataFrame =
-    rows.select(Seq(col(Id).as(idCol), col(Vec).as(vecCol),
-        scaled(metric.score(col(Vec), typedLit(q)), Knn.ScoreDigits).as("score")) ++ extra: _*)
-      .orderBy(metric.order(col("score")), col(idCol).asc)
+  /** One planned and compiled query shape over the resident relation. */
+  private final class Prepared(val plan: DataFrame, vec: ParamHolder, values: Seq[ParamHolder],
+                               probes: Option[ParamHolder]) {
+    /** Bind one query's values and run the plan. The lock spans bind
+      * through collect: the tasks carry the values bound when they are
+      * serialised, so they must be this query's own. */
+    def run(q: Array[Float], preds: Seq[MetaPredicate], probeSet: Seq[Long]): Array[Row] =
+      synchronized {
+        vec.bind(q)
+        values.zip(preds).foreach { case (h, p) => h.bind(p.value) }
+        probes.foreach(_.bind(probeSet.toArray))
+        plan.collect()
+      }
+  }
 
-  /** `rows` (id, vec, score) as a frame of driver-local rows */
-  private def local(rows: Seq[Row], like: DataFrame): DataFrame =
-    like.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      StructType(like.schema.take(3)))
+  /** `preds` as the shape key's constraint list: sorted by attribute. */
+  private def parse(meta: Map[String, (String, Any)]): Seq[MetaPredicate] =
+    meta.toSeq.sortBy(_._1).map { case (attr, (op, v)) => MetaPredicate(attr, MetaOp.parse(op), v) }
+
+  /** The prepared plan of a shape, planned on its first use: `preds`' values
+    * are parameters, as are the query vector and (for `Probe`) the probe
+    * set, an `array<bigint>` tested with `array_contains`. */
+  private def prepared(kind: Kind, metric: Knn.Metric, limit: Int,
+                       preds: Seq[MetaPredicate]): Prepared = synchronized {
+    val rel = resident
+    plans.getOrElseUpdate(Shape(kind, metric, limit, preds.map(p => (p.attr, p.op, p.valueType))), {
+      val (vec, q) = BoundParam(ArrayType(FloatType, containsNull = false))
+      val values = preds.map(p => BoundParam(p.valueType))
+      val pass = keep(preds.zip(values).map { case (p, (_, v)) => p.toColumn(v) })
+      val (probes, probeSet) = BoundParam(ArrayType(LongType, containsNull = false))
+      val rows = kind match {
+        case Exact | Post => rel
+        case Pre => rel.filter(pass)
+        case Probe => rel.filter(array_contains(probeSet, col(Cluster)) && pass)
+      }
+      val scored = rows.select(Seq(col(Id).as(idCol), col(Vec).as(vecCol),
+          scaled(metric.score(col(Vec), q), Knn.ScoreDigits).as("score")) ++
+          (if (kind == Post) Seq(pass.as("pass")) else Nil): _*)
+        .orderBy(metric.order(col("score")), col(idCol).asc)
+        .limit(limit)
+      new Prepared(scored, vec, values.map(_._1), Some(probes).filter(_ => kind == Probe))
+    })
+  }
+
+  /** `rows` (id, vec, score) of `p` as a frame of driver-local rows */
+  private def local(rows: Seq[Row], p: Prepared): DataFrame =
+    corpus.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(p.plan.schema.take(3)))
 
   /** Metadata filter first, exact kNN on survivors — perfect accuracy. */
   def preFilterSearch(meta: Map[String, (String, Any)], query: DataFrame, k: Int,
-                      metric: Knn.Metric = Knn.Cosine): DataFrame =
-    ranked(resident.filter(keep(meta)), queryVector(query), metric).limit(k)
+                      metric: Knn.Metric = Knn.Cosine): DataFrame = {
+    val preds = parse(meta)
+    val p = prepared(Pre, metric, k, preds)
+    local(p.run(queryVector(query), preds, Nil), p)
+  }
 
   /** Vector top-largeK, then metadata filter, then top-k. A corpus row
     * without metadata is a candidate that fails the filter. */
   def postFilterSearch(meta: Map[String, (String, Any)], query: DataFrame, k: Int,
                        largeK: Int = 50, metric: Knn.Metric = Knn.Cosine): DataFrame = {
-    val top = ranked(resident, queryVector(query), metric, keep(meta).as("pass")).limit(largeK)
-    local(top.collect().toSeq.filter(_.getBoolean(3)).take(k)
-      .map(r => Row(r.get(0), r.get(1), r.get(2))), top)
+    val preds = parse(meta)
+    val p = prepared(Post, metric, largeK, preds)
+    local(p.run(queryVector(query), preds, Nil).toSeq.filter(_.getBoolean(3)).take(k)
+      .map(r => Row(r.get(0), r.get(1), r.get(2))), p)
   }
 
   /** ACORN-style hybrid: probe the nearest clusters, ranked over the
@@ -126,32 +179,32 @@ final class HybridSearchEngine private (corpus: DataFrame, metadata: DataFrame,
   def acornSearch(meta: Map[String, (String, Any)], query: DataFrame, k: Int,
                   nProbe: Int = 2, metric: Knn.Metric = Knn.Cosine): DataFrame = {
     val q = queryVector(query)
-    probed(Ivf.probeOrder(centroids, q, metric).take(nProbe), meta, q, k, metric)
+    val preds = parse(meta)
+    val p = prepared(Probe, metric, k, preds)
+    local(p.run(q, preds, Ivf.probeOrder(centroids, q, metric).take(nProbe)), p)
   }
 
-  private def probed(labels: Seq[Long], meta: Map[String, (String, Any)], q: Array[Float],
-                     k: Int, metric: Knn.Metric): DataFrame =
-    ranked(resident.filter(col(Cluster).isin(labels: _*) && keep(meta)), q, metric).limit(k)
-
   /** Exact brute-force kNN (no filter) — the evaluation ground truth. */
-  def exactSearch(query: DataFrame, k: Int, metric: Knn.Metric = Knn.Cosine): DataFrame =
-    ranked(resident, queryVector(query), metric).limit(k)
+  def exactSearch(query: DataFrame, k: Int, metric: Knn.Metric = Knn.Cosine): DataFrame = {
+    val p = prepared(Exact, metric, k, Nil)
+    local(p.run(queryVector(query), Nil, Nil), p)
+  }
 
   /** The reference's adaptive loop: widen the probe count until ≥ k
     * filter-passing survivors (acorn.py:162), doubling from one probe. */
   def acornSearchAdaptive(meta: Map[String, (String, Any)], query: DataFrame, k: Int,
                           metric: Knn.Metric = Knn.Cosine): DataFrame = {
     val q = queryVector(query)
+    val preds = parse(meta)
+    val plan = prepared(Probe, metric, k, preds)
     val order = Ivf.probeOrder(centroids, q, metric)
     var nProbe = 1
-    var res = probed(order.take(nProbe), meta, q, k, metric)
-    var rows = res.collect()
+    var rows = plan.run(q, preds, order.take(nProbe))
     while (nProbe < order.size && rows.length < k) {
       nProbe = math.min(nProbe * 2, order.size)
-      res = probed(order.take(nProbe), meta, q, k, metric)
-      rows = res.collect()
+      rows = plan.run(q, preds, order.take(nProbe))
     }
-    local(rows.toSeq, res)
+    local(rows.toSeq, plan)
   }
 
   /** Batch hybrid search: many queries in one plan, per-query probes and
@@ -170,6 +223,21 @@ object HybridSearchEngine {
   private val Vec = "__graft_vec"
   private val Cluster = "__graft_cluster"
   private val QVec = "q_vec"
+
+  /** What a prepared plan scans and ranks: every row (`Exact`), the
+    * filter's survivors (`Pre`), every row with the filter as a column
+    * (`Post`), or the survivors in the probed clusters (`Probe`). */
+  private sealed trait Kind
+  private case object Exact extends Kind
+  private case object Pre extends Kind
+  private case object Post extends Kind
+  private case object Probe extends Kind
+
+  /** A query shape: one prepared plan serves every query of it. `limit` is
+    * k, or largeK for `Post`; `preds` holds each constraint's attribute, op
+    * and value type, sorted by attribute. */
+  private case class Shape(kind: Kind, metric: Knn.Metric, limit: Int,
+                           preds: Seq[(String, MetaOp, DataType)])
 
   def apply(corpus: DataFrame, metadata: DataFrame,
             idCol: String = "vec_id", vecCol: String = "embedding",

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Iterative graph analytics over edge DataFrames (SURVEY §2 C57).
   *
@@ -159,7 +160,11 @@ object Graph {
     // does while building its CSR, so the cluster-side cost of the fast
     // path is exactly one distinct-edge derivation + one collect.
     val e = edges.select("src", "dst").cache()
-    val small = e.count() <= 2 * maxEdges
+    // the kernel indexes ids as longs, so it takes integral ids only: a
+    // string or decimal id would collide or wrap there
+    val integral = e.schema.forall(f => Seq(ByteType, ShortType, IntegerType, LongType)
+      .contains(f.dataType))
+    val small = integral && e.count() <= 2 * maxEdges
     // the kernel collects e, so its result no longer needs the cache
     if (small) return try triangleCountsKernel(e) finally e.unpersist()
     val deg = e.groupBy(col("src").as("n")).agg(count(lit(1)).as("deg"))
@@ -208,7 +213,9 @@ object Graph {
     val spark = e.sparkSession
     import spark.implicits._
     val nodeType = e.schema("src").dataType
-    val rows = e.select(col("src").cast("long"), col("dst").cast("long")).collect()
+    // an edge with a null end closes no triangle (the join path drops it)
+    val rows = e.filter(col("src").isNotNull && col("dst").isNotNull)
+      .select(col("src").cast("long"), col("dst").cast("long")).collect()
     val mSym = rows.length
     val srcIds = new Array[Long](mSym); val dstIds = new Array[Long](mSym)
     var i = 0

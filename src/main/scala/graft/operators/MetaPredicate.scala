@@ -1,7 +1,10 @@
 package graft.operators
 
+import scala.util.Try
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The reference's metadata query language, compiled to Catalyst `Column`s.
   *
@@ -36,10 +39,27 @@ object MetaOp {
 }
 
 final case class MetaPredicate(attr: String, op: MetaOp, value: Any) {
+  /** The value's Catalyst type. A null value would make every row fail
+    * silently (a comparison with NULL is never true), and an array, map or
+    * struct is no scalar of the query language: both are refused. */
+  val valueType: DataType = {
+    if (value == null) throw new IllegalArgumentException(
+      s"MetaPredicate: the value for '$attr' is null")
+    Try(Literal(value).dataType).toOption.filter {
+      case _: ArrayType | _: MapType | _: StructType => false
+      case _ => true
+    }.getOrElse(
+      throw new IllegalArgumentException(
+        s"MetaPredicate: the value for '$attr' is not a scalar: $value (${value.getClass.getName})"))
+  }
+
   /** One constraint → Column. NULL attr ⇒ false (reference rejects missing attrs). */
-  def toColumn: Column = {
+  def toColumn: Column = toColumn(lit(value))
+
+  /** The constraint against a caller-supplied value column of `valueType`,
+    * e.g. a bound parameter of a prepared plan. */
+  def toColumn(v: Column): Column = {
     val c = col(attr)
-    val v = lit(value)
     val cond = op match {
       case MetaOp.Exact     => c === v
       case MetaOp.Lt        => c < v

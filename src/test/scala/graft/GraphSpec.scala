@@ -71,6 +71,23 @@ class GraphSpec extends SparkSpec {
     assertReleases(assert(tri(k4).size == 4))
   }
 
+  test("triangles: string ids take the join path, null ends close nothing") {
+    // "1" and "01" cast to the same long: the kernel would merge them
+    val strs = Seq("x" -> "y", "y" -> "z", "x" -> "z", "1" -> "2", "2" -> "01", "01" -> "3")
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }.toDF("src", "dst")
+    val viaDefault = Graph.triangleCounts(strs).as[(String, Long)].collect().toMap
+    assert(viaDefault == Map("x" -> 1L, "y" -> 1L, "z" -> 1L))
+    assert(viaDefault == Graph.triangleCounts(strs, broadcastMaxEdges = 0L)
+      .as[(String, Long)].collect().toMap)
+    val k4 = sym(0L -> 1L, 0L -> 2L, 0L -> 3L, 1L -> 2L, 1L -> 3L, 2L -> 3L)
+      .map { case (a, b) => (Option(a), Option(b)) } ++ Seq((Some(0L), None), (None, Some(1L)))
+    val withNulls = k4.toDF("src", "dst")
+    val kernel = Graph.triangleCounts(withNulls).as[(Long, Long)].collect().toMap
+    assert(kernel == Map(0L -> 3L, 1L -> 3L, 2L -> 3L, 3L -> 3L))
+    assert(kernel == Graph.triangleCounts(withNulls, broadcastMaxEdges = 0L)
+      .as[(Long, Long)].collect().toMap)
+  }
+
   test("triangleCounts matches a brute-force enumeration on the sf0.001 graph") {
     val dir = "/root/testdata/sf0.001"
     val got = AnalyticsQueries.defs("parts_triangles")(spark, dir)

@@ -435,6 +435,7 @@ class HnswSpec extends SparkSpec {
 
   test("resident answers equal the per-query operators, under any partitioning and with AQE off") {
     import Serving._
+    // answers() builds a new engine, so each conf plans its own shapes
     val base = answers()
     Seq("spark.sql.shuffle.partitions" -> "1", "spark.sql.shuffle.partitions" -> "7",
       "spark.sql.shuffle.partitions" -> "64", "spark.sql.adaptive.enabled" -> "false")
@@ -479,8 +480,10 @@ class HnswSpec extends SparkSpec {
       engine.preFilterSearch(Map.empty, query, K).collect()
       engine.acornSearch(Map.empty, query, K).collect()
       assert(held._2 == cached + 1 && (held._1 -- rdds).nonEmpty, "the relation was not cached")
+      assert(engine.shapes == 2)
       engine.close()
     }
+    assert(engine.shapes == 0, "close kept prepared plans")
     intercept[IllegalArgumentException](engine.preFilterSearch(Map.empty, query, K))
   }
 
@@ -545,5 +548,86 @@ class HnswSpec extends SparkSpec {
       }
       Hnsw.release(p)
     }
+  }
+
+  // ---- prepared point plans: each query shape planned and compiled once,
+  // its vector, predicate values and probe set bound per query ----
+
+  private object Prepared {
+    import Serving._
+    /** Three bindings of every shape: query row, string and numeric
+      * constants, probe count. */
+    val Bindings: Seq[(Long, String, Int, Int)] =
+      Seq((11L, "e", 150, 1), (57L, "n", 400, 3), (203L, "h", 260, 2))
+    def filter(b: (Long, String, Int, Int)): Map[String, (String, Any)] =
+      Map("lang" -> ("substring", b._2), "n_chars" -> ("leq", b._3))
+    /** driver-local query frames, so building one compiles nothing new */
+    lazy val frames: Map[Long, DataFrame] = Bindings.map { b =>
+      val v = emb.filter(col("vec_id") === b._1).select("embedding").head().getSeq[Float](0).toArray
+      b._1 -> Seq(Tuple1(v)).toDF("q_vec")
+    }.toMap
+
+    def searches(engine: HybridSearchEngine, b: (Long, String, Int, Int)): Seq[DataFrame] = {
+      val (m, q) = (filter(b), frames(b._1))
+      Seq(engine.preFilterSearch(m, q, K), engine.postFilterSearch(m, q, K, largeK = 50),
+        engine.acornSearch(m, q, K, nProbe = b._4), engine.acornSearchAdaptive(m, q, K),
+        engine.exactSearch(q, K))
+    }
+    /** the same searches through the per-query operators, whose values are literals */
+    lazy val references: Map[(Long, String, Int, Int), Seq[Seq[(Long, Long)]]] = {
+      val vecs = corpus.select("vec_id", "embedding")
+      val cent = Ivf.centroids(corpus)
+      Bindings.map { b =>
+        val (pred, q) = (MetaPredicate(filter(b).toSeq: _*), frames(b._1))
+        b -> Seq(Knn.prefilterKnn(vecs, meta, pred, q, K, Knn.Cosine),
+          Knn.postfilterKnn(vecs, meta, pred, q, K, 50, Knn.Cosine),
+          Ivf.searchProbed(cent, corpus, meta, pred, q, K, b._4, Knn.Cosine,
+            "vec_id", "doc_id", "embedding", "label"),
+          Ivf.adaptiveHybridKnn(corpus, meta, pred, q, K),
+          Knn.topK(vecs, q, K, Knn.Cosine)).map(rows)
+      }.toMap
+    }
+  }
+
+  test("one prepared shape returns each binding's own answer, with whole-stage codegen on and off") {
+    import Serving._, Prepared._
+    // every strategy's bindings differ, so a value frozen at the first
+    // binding cannot pass
+    Bindings.map(references).transpose.foreach(answers => assert(answers.distinct.size == answers.size))
+    Seq("true", "false").foreach { wholeStage =>
+      // a shape is planned under the conf of its first use: a new engine per conf
+      withConf("spark.sql.codegen.wholeStage" -> wholeStage) {
+        val engine = HybridSearchEngine(corpus, meta)
+        try Bindings.foreach { b =>
+          assert(searches(engine, b).map(rows) == references(b), s"wholeStage=$wholeStage $b")
+        } finally engine.close()
+      }
+    }
+  }
+
+  test("after a shape's first query, later queries compile no code") {
+    import Serving._, Prepared._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    references // computed first: the operators compile their own code
+    val engine = HybridSearchEngine(corpus, meta)
+    try {
+      searches(engine, Bindings.head).foreach(rows)
+      val shapes = engine.shapes
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Bindings.tail.foreach(b => assert(searches(engine, b).map(rows) == references(b), b))
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+        "a query of a prepared shape compiled code")
+      assert(shapes == 4 && engine.shapes == shapes, "pre, post, probe (acorn and adaptive), exact")
+    } finally engine.close()
+  }
+
+  test("same-shape queries run concurrently each return their own answer") {
+    import Serving._, Prepared._
+    val engine = HybridSearchEngine(corpus, meta)
+    try {
+      val got = Par.ordered(Bindings ++ Bindings ++ Bindings, parallelism = 6)(b =>
+        searches(engine, b).map(rows))
+      assert(got == (Bindings ++ Bindings ++ Bindings).map(references))
+    } finally engine.close()
   }
 }

@@ -32,6 +32,12 @@ class MetaPredicateSpec extends SparkSpec {
   test("conjunction of constraints") {
     assert(ids(MetaPredicate("lang" -> ("substring", "en"), "n" -> ("leq", 100))) == Set(1L))
   }
+  test("a null or non-scalar value is refused, naming the attribute") {
+    Seq[Any](null, Seq(1, 2), Array(1, 2), Map("a" -> 1)).foreach { v =>
+      val e = intercept[IllegalArgumentException](MetaPredicate("n" -> ("leq", v)))
+      assert(e.getMessage.contains("'n'"), e.getMessage)
+    }
+  }
   test("unknown op throws") {
     intercept[IllegalArgumentException] { MetaPredicate("lang" -> ("regex", "x")) }
   }
