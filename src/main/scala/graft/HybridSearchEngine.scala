@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.{BoundParam, ParamHolder, scaled}
@@ -56,9 +57,9 @@ final class HybridSearchEngine private (corpus: DataFrame, metadata: DataFrame,
   private def resident: DataFrame = synchronized {
     checkOpen()
     if (served == null)
-      served = corpus.select(col(idCol).as(Id), col(vecCol).as(Vec), col(clusterCol).as(Cluster))
-        .join(metadata, col(Id) === metadata(metaIdCol), "left")
-        .cache()
+      served = acquire(
+        corpus.select(col(idCol).as(Id), col(vecCol).as(Vec), col(clusterCol).as(Cluster))
+          .join(metadata, col(Id) === metadata(metaIdCol), "left"))
     served
   }
 
@@ -78,12 +79,13 @@ final class HybridSearchEngine private (corpus: DataFrame, metadata: DataFrame,
   /** The number of prepared query shapes. */
   private[graft] def shapes: Int = synchronized(plans.size)
 
-  /** Unpersist the serving relation and drop the centroid table and the
-    * prepared plans. A closed engine refuses further searches. */
+  /** Release the serving relation (the last live engine sharing it
+    * unpersists it) and drop the centroid table and the prepared plans. A
+    * closed engine refuses further searches. */
   def close(): Unit = synchronized {
     closed = true
     plans.clear()
-    if (served != null) served.unpersist()
+    if (served != null) release(served)
     served = null
     cents = null
   }
@@ -238,6 +240,27 @@ object HybridSearchEngine {
     * and value type, sorted by attribute. */
   private case class Shape(kind: Kind, metric: Knn.Metric, limit: Int,
                            preds: Seq[(String, MetaOp, DataType)])
+
+  /** Live engines per cached serving relation, keyed by its canonical
+    * plan. Engines over the same inputs share one `CacheManager` entry
+    * through `.cache()`, so only the last of them to close unpersists it:
+    * an earlier unpersist would leave the others' prepared plans to rebuild
+    * the buffers outside the `CacheManager`, where nothing frees them. */
+  private val residentUsers = mutable.HashMap.empty[LogicalPlan, Int]
+
+  private def acquire(rel: DataFrame): DataFrame = residentUsers.synchronized {
+    val key = rel.queryExecution.analyzed.canonicalized
+    residentUsers(key) = residentUsers.getOrElse(key, 0) + 1
+    rel.cache()
+  }
+
+  private def release(rel: DataFrame): Unit = residentUsers.synchronized {
+    val key = rel.queryExecution.analyzed.canonicalized
+    residentUsers.getOrElse(key, 1) match {
+      case 1 => residentUsers.remove(key); rel.unpersist()
+      case n => residentUsers(key) = n - 1
+    }
+  }
 
   def apply(corpus: DataFrame, metadata: DataFrame,
             idCol: String = "vec_id", vecCol: String = "embedding",

@@ -116,7 +116,7 @@ object ScaleProbe {
       // scan, membership+ADC in a single label-keyed broadcast join —
       // the per-query cost a capacity planner divides by |Q| next to the
       // single-query pq_encode_adc_2048 row
-      time("ivfpq_batch8_wide_2048")(graft.operators.Pq.ivfpqBatchWide(
+      time("ivfpq_batch8_wide_2048")(graft.operators.Pq.ivfpqBatch(
         e, qids = (0L until 8L), k = 10, numSub = 16, subDim = 128,
         numCodes = 64, nProbe = 2, shortlist = 100).count()),
       // the reference's headline: HNSW build+search over the same corpus

@@ -27,7 +27,11 @@ import graft.functions.{pq, scaled, vectors}
   *
   * All sub-distances are squared L2 computed as an explicit left-assoc
   * 8-term sum (no sqrt, no engine aggregation-order ambiguity), scaled to
-  * BIGINT per the repo convention. */
+  * BIGINT per the repo convention.
+  *
+  * A query FILE is served by one batched path per algorithm —
+  * [[searchRerankBatch]], [[searchRerankBatchExternal]], [[ivfpqBatch]] and
+  * [[ivfpqResidualBatch]] — see the batched-serving section below. */
 object Pq {
 
   /** (m, code, cw): KMeans-trained codewords — real Lloyd's over every
@@ -153,7 +157,7 @@ object Pq {
     // projection and the shortlist heap measured ~3.5 s at d=2048 for
     // 2,000 rows (the wide-payload-through-operators penalty, r17
     // isolation probe) — the rerank re-joins the ≤shortlist ids to the
-    // stored frame instead, the exactRerankBatch convention
+    // stored frame instead, the batch rerank convention
     val codes = encodeIntCols(qall.filter(col("vec_id") =!= qid), cb, numSub,
       subDim, carry = Seq("vec_id"), vecCol = "q")
     val td: Map[(Int, Long), Long] = cb.map { case (m, c, cw) =>
@@ -233,11 +237,10 @@ object Pq {
       .orderBy(col("score").asc, col("vec_id").asc).limit(k)
   }
 
-  // ---- shared residual-IVFPQ construction (r8 verdict deferred item a):
-  // the single-query, literal-batch, and joined-wide forms build the SAME
-  // query-independent structure — integer coarse centroids, the dense-seed
-  // residual codebook, and the residual-transformed member encode — from
-  // ONE construction path each, instead of three inline copies.
+  // ---- shared residual-IVFPQ construction: the single-query and batch
+  // forms build the SAME query-independent structure — integer coarse
+  // centroids, the dense-seed residual codebook, and the
+  // residual-transformed member encode — from ONE construction path each.
 
   /** (vec_id, label, q): the quantized labeled corpus every residual form
     * starts from. */
@@ -319,204 +322,6 @@ object Pq {
     var acc = 0L; var i = 0
     while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
     acc
-  }
-
-  /** Exact integer rerank of a (q_id, vec_id) candidate frame in quantized
-    * space — the batch tail the residual literal and wide forms share. */
-  private def exactRerankIntBatch(qe: DataFrame, short: DataFrame,
-                                  qids: Seq[Long], k: Int): DataFrame = {
-    import org.apache.spark.sql.functions.posexplode
-    val qqDf = qe.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("q_id"), col("q").as("qq"))
-    qe.select("vec_id", "q")
-      .join(broadcast(short), "vec_id")
-      .join(broadcast(qqDf), "q_id")
-      .selectExpr("q_id", "vec_id",
-        graft.functions.sqDistLongSql("q", "qq") + " AS score")
-      .groupBy("q_id")
-      .agg(graft.functions.aggs.topK(col("score"), col("vec_id"), k, asc = true).as("hits"))
-      .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(col("q_id"), col("hit.id").as("vec_id"),
-        (col("pos") + 1).cast("long").as("rank"), col("hit.score").as("score"))
-  }
-
-  /** BATCHED residual IVF-PQ (A42's batch form). The residual structure is
-    * QUERY-INDEPENDENT — residuals, seeds, codebook, and codes all encode
-    * against each row's OWN cluster centroid — so one encode of the
-    * probed-cluster UNION serves every query; only the per-(query, probed
-    * cluster) ADC tables differ, and they ride as literal lookup arrays
-    * behind one CASE arm per cluster, per query (query-count-bounded model
-    * state, the ivfpqResidual convention). Membership is encoded in the
-    * same CASE: a row whose cluster is not among THIS query's probes gets
-    * NULL adist and is filtered — no membership join at all. Integer-exact
-    * end-to-end like the single-query form; per-query results ≡
-    * ivfpqResidual (spec-pinned). */
-  /** The batch-family |Q| guard, checked at FUNCTION ENTRY (before any
-    * Spark work — r8 review: a 65-query call must refuse before paying a
-    * corpus encode): each query adds literal ADC state and an adist
-    * column to the scan projection; chunk the query file above 64. */
-  private def requireBatchQids(qids: Seq[Long], who: String): Unit = {
-    require(qids.nonEmpty && qids.size <= 64,
-      s"$who: |Q|=${qids.size} — each query adds a literal ADC table and " +
-        "an adist column to the scan projection; chunk the query file " +
-        "above 64 per pass (and pass at least one query), or use the " +
-        "joined-ADC wide form (searchRerankBatchWide) for large query files")
-    // duplicated qids would emit two identical adist_<q> columns and
-    // duplicate stack() arms — an ambiguous-reference AnalysisException
-    // far from the cause (r8 ADVICE); refuse here, naming the ids
-    val dups = qids.diff(qids.distinct).distinct
-    require(dups.isEmpty,
-      s"$who: duplicate query ids: ${dups.mkString(", ")} — each qid " +
-        "contributes one ADC table and one adist column; dedupe the query file")
-  }
-
-  def ivfpqResidualBatch(emb: DataFrame, qids: Seq[Long], k: Int, numSub: Int,
-                         subDim: Int, numCodes: Int, nProbe: Int,
-                         shortlist: Int): DataFrame = {
-    import org.apache.spark.sql.functions.posexplode
-    requireBatchQids(qids, "ivfpqResidualBatch")
-    // store the quantized labeled frame once when wide (it feeds the
-    // model aggregates, the query collects, the residual encode, and
-    // the rerank — the lineage-vs-stored penalty, see materializeIfHeavy)
-    val qe = materializeIfHeavy(quantizedLabeled(emb),
-      numSub.toLong * numCodes * subDim)
-    val model = residualModel(qe, numSub, subDim, numCodes, "ivfpqResidualBatch")
-    val qvs: Map[Long, Array[Long]] = qe.filter(col("vec_id").isin(qids: _*))
-      .select("vec_id", "q").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
-    // absent query ids must refuse loudly, not silently drop from the
-    // answer set (the adcTables convention)
-    require(qids.forall(qvs.contains),
-      s"ivfpqResidualBatch: query ids absent from the corpus: " +
-        qids.filterNot(qvs.contains).mkString(", "))
-    // per-query probes: nProbe nearest integer centroids, ties lower label
-    val probedByQ: Map[Long, Seq[Long]] = qids.map { qid =>
-      qid -> model.cent.toSeq.map { case (l, c) => (l, sqdFull(c, qvs(qid))) }
-        .sortBy { case (l, d) => (d, l) }.take(nProbe).map(_._1)
-    }.toMap
-    val unionLabels = probedByQ.values.flatten.toSeq.distinct
-    val codes = Dedup.materialize(residualCodes(qe, model, unionLabels,
-      numSub, subDim, carry = Seq("vec_id", "label")))
-    // per-(query, probed cluster) ADC literal tables
-    val adcByQL: Map[(Long, Long), IndexedSeq[IndexedSeq[Long]]] =
-      (for { qid <- qids; l <- probedByQ(qid) } yield {
-        val qr = Array.tabulate(qvs(qid).length)(i => qvs(qid)(i) - model.cent(l)(i))
-        (qid, l) -> residualAdc(qr, model.cb, numSub, subDim)
-      }).toMap
-    // membership IS the CASE: labels outside this query's probes → NULL
-    val adistColsQ = qids.map { qid =>
-      val whens = probedByQ(qid)
-        .map(l => s"WHEN label = ${l}L THEN " +
-          s"(${adistLookupExpr(adcByQL((qid, l)), numSub)})").mkString(" ")
-      s"CAST(CASE $whens END AS BIGINT) AS adist_$qid"
-    }
-    val short = codes
-      .selectExpr(Seq("vec_id", "label") ++ adistColsQ: _*)
-      .selectExpr("vec_id", stackExpr(qids))
-      .filter(col("adist").isNotNull && col("vec_id") =!= col("q_id"))
-      .groupBy("q_id")
-      .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), shortlist,
-        asc = true).as("hits"))
-      .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(col("q_id"), col("hit.id").as("vec_id"))
-    // exact integer rerank in quantized space (the single-query convention)
-    exactRerankIntBatch(qe, short, qids, k)
-  }
-
-  /** WIDE-batch residual IVF-PQ: [[ivfpqResidualBatch]] semantics past the
-    * 64-query literal wall. Per-query probes AND per-(query, cluster) ADC
-    * tables are computed IN SPARK (query vectors never collect — the wide
-    * contract) and ride as ONE broadcast (q_id, label, tds) relation whose
-    * label key is BOTH the membership predicate and the ADC lookup: a
-    * row joins only the queries that probed its cluster. Plan size O(1) in
-    * |Q|; integer-exact end-to-end; per-query results ≡ ivfpqResidual
-    * (spec-pinned). */
-  def ivfpqResidualBatchWide(emb: DataFrame, qids: Seq[Long], k: Int,
-                             numSub: Int, subDim: Int, numCodes: Int,
-                             nProbe: Int, shortlist: Int): DataFrame = {
-    requireWideQids(qids, "ivfpqResidualBatchWide")
-    val st = residualBatchState(emb, qids, numSub, subDim, numCodes, nProbe,
-      "ivfpqResidualBatchWide")
-    exactRerankIntBatch(st.qe,
-      residualShortlist(st.codes, st.adcRel, numSub, shortlist), qids, k)
-  }
-
-  /** The query-file-wide residual serving state — quantized labeled
-    * corpus, trained residual model, the materialized per-(query, probed
-    * cluster) ADC relation (with the absent-id guard), and the ONE
-    * residual-encoded code table over the file's probed-cluster union.
-    * All of it is pass-invariant, so the sharded driver builds it once
-    * and every chunk reuses it (r17 optimization, guide §1.2). */
-  private final case class ResidualBatchState(qe: DataFrame, adcRel: DataFrame,
-                                              codes: DataFrame)
-
-  private def residualBatchState(emb: DataFrame, qids: Seq[Long], numSub: Int,
-                                 subDim: Int, numCodes: Int, nProbe: Int,
-                                 who: String): ResidualBatchState = {
-    import org.apache.spark.sql.expressions.Window
-    // store the quantized labeled frame once when wide (it feeds the
-    // model aggregates, the query collects, the residual encode, and
-    // the rerank — the lineage-vs-stored penalty, see materializeIfHeavy)
-    val qe = materializeIfHeavy(quantizedLabeled(emb),
-      numSub.toLong * numCodes * subDim)
-    val model = residualModel(qe, numSub, subDim, numCodes, who)
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val cbDf = model.cb.map { case (m, c, cw) => (m, c, cw.toSeq) }
-      .toDF("m", "code", "cw")
-    val qs = qe.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("q_id"), col("q"))
-    // per-query integer probes (d asc, label asc — the driver sort of the
-    // literal form, relationally) over the C×|Q| scored centroid frame
-    val probes = qs.crossJoin(broadcast(model.centDf))
-      .withColumn("d", expr(graft.functions.sqDistLongSql("cent", "q")))
-      .withColumn("rn", row_number().over(Window.partitionBy("q_id")
-        .orderBy(col("d").asc, col("label").asc)))
-      .filter(col("rn") <= nProbe)
-      .select(col("q_id"), col("label"), col("q"), col("cent"))
-    // per-(query, probed cluster) ADC: qr = q − cent_label; td per (m, code)
-    // with the exact integer arithmetic of residualAdc, grouped to nested
-    // code-ordered arrays (≤ |Q|·nProbe·M·K rows of model state)
-    val adcRel = Dedup.materialize(probes
-      .selectExpr("q_id", "label", "zip_with(q, cent, (a, b) -> a - b) AS qr")
-      .crossJoin(broadcast(cbDf))
-      .selectExpr("q_id", "label", "m", "code",
-        graft.functions.sqDistLongSql(s"slice(qr, m * $subDim + 1, $subDim)", "cw")
-          + " AS td")
-      .groupBy("q_id", "label", "m")
-      .agg(sort_array(collect_list(struct(col("code"), col("td")))).as("bym"))
-      .selectExpr("q_id", "label", "m", "transform(bym, x -> x.td) AS tda")
-      .groupBy("q_id", "label")
-      .agg(sort_array(collect_list(struct(col("m"), col("tda")))).as("byq"))
-      .selectExpr("q_id", "label", "transform(byq, x -> x.tda) AS tds"))
-    val presentQ = adcRel.select("q_id").distinct().collect()
-      .map(_.getLong(0)).toSet
-    require(qids.forall(presentQ),
-      s"$who: query ids absent from the corpus: " +
-        qids.filterNot(presentQ).mkString(", "))
-    val unionLabels = adcRel.select("label").distinct().collect()
-      .map(_.getLong(0)).toSeq
-    val codes = Dedup.materialize(residualCodes(qe, model, unionLabels,
-      numSub, subDim, carry = Seq("vec_id", "label")))
-    ResidualBatchState(qe, adcRel, codes)
-  }
-
-  /** The residual ADC shortlist tail over a (possibly chunk-sliced)
-    * broadcastable ADC relation — shared by the single-pass form and the
-    * sharded driver. */
-  private def residualShortlist(codes: DataFrame, adcRel: DataFrame,
-                                numSub: Int, shortlist: Int): DataFrame = {
-    import org.apache.spark.sql.functions.posexplode
-    codes
-      .join(broadcast(adcRel), "label")
-      .filter(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"CAST(${wideAdistExpr(numSub)} AS BIGINT) AS adist")
-      .groupBy("q_id")
-      .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), shortlist,
-        asc = true).as("hits"))
-      .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(col("q_id"), col("hit.id").as("vec_id"))
   }
 
   /** (m, code, cw): K seed codewords per subspace from the lowest-id vectors. */
@@ -914,284 +719,6 @@ object Pq {
     adcServe(codes.filter(col("vec_id") =!= qid), emb, qid, cbRows, td, k, numSub, shortlist)
   }
 
-  /** BATCHED PQ search (r7 verdict "next" #2): the reference's main loop is
-    * per-query over a query FILE, and the compressed path must amortize
-    * the way the exact/HNSW batch entries (A12/A35f) do — ONE code scan
-    * serving every query. Encoding runs ONCE over the whole corpus (in
-    * production the codes pre-exist from ingest; here the one encode pass
-    * is the honest build cost); each query contributes only a literal
-    * 512-entry ADC table to the projection. The scan then computes |Q|
-    * adist columns per row, stacks them to (q_id, adist) rows — a narrow
-    * generate, nothing shuffles yet — and the per-query shortlist comes
-    * out of the map-side k-heap aggregate (TopKHits: ≤ |Q|·shortlist rows
-    * per partition cross the only shuffle, never the |corpus|·|Q| scored
-    * rows). The exact rerank joins ≤ |Q|·shortlist ids broadcast against
-    * full vectors, per-query k-heaps again. Per-query results are
-    * IDENTICAL to `searchRerank` (encode is per-row independent, so
-    * encode-all-then-exclude ≡ exclude-then-encode) — spec-pinned.
-    * Output: (q_id, vec_id, rank, score), the A12 batch convention. */
-  /** `keep` (optional, single `vec_id` column) restricts the search to a
-    * metadata-qualified subset — the ACORN-hybrid composition over the
-    * compressed index, batched (query-INDEPENDENT filter: one keep set
-    * serves the whole query file, so the pruned encode/scan still runs
-    * once). Queries need no codes of their own (their side of the ADC is
-    * the raw vector), so the code table holds keep members only. */
-  def searchRerankBatch(emb: DataFrame, qids: Seq[Long], k: Int, numSub: Int,
-                        subDim: Int, numCodes: Int, shortlist: Int,
-                        keep: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.functions.posexplode
-    requireBatchQids(qids, "searchRerankBatch")
-    val cast0 = emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
-    val cast = keep.fold(cast0)(ids => cast0.join(ids, "vec_id"))
-    val cbRows = seededCodebook(emb, numSub, subDim, numCodes).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    // ADC tables FIRST (they carry the absent-query-id guard and need no
-    // encode) so a bad query set refuses before the corpus pays anything
-    val td = adcTables(emb, qids, cbRows, subDim)
-    // ONE encode pass over the (keep-pruned) corpus — query rows included
-    // when unfiltered (each is corpus for the other queries); same
-    // janino-depth split as the single-query path
-    val codes = Dedup.materialize(encodeFast(cast, cbRows, numSub, subDim))
-    val short = codes
-      .selectExpr(Seq("vec_id") ++ adistCols(qids, cbRows, td, numSub): _*)
-      .selectExpr("vec_id", stackExpr(qids))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy("q_id")
-      .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), shortlist,
-        asc = true).as("hits"))
-      .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(col("q_id"), col("hit.id").as("vec_id"))
-    exactRerankBatch(emb, short, qids, k)
-  }
-
-  /** Joined-ADC wide-batch cap: the broadcast ADC relation carries
-    * |Q|·M·K BIGINT entries (~|Q|·4 KB at M=8, K=64) and the rerank
-    * broadcasts |Q|·shortlist candidate ids — ~16 MB + model state at the
-    * cap, comfortably broadcastable. Past it, shard the query file across
-    * passes: each pass still scans the corpus ONCE at any |Q| ≤ cap
-    * (unlike the literal form's 64-query plan-size wall). */
-  val WideBatchCap = 4096
-
-  private def requireWideQids(qids: Seq[Long], who: String): Unit = {
-    require(qids.nonEmpty && qids.size <= WideBatchCap,
-      s"$who: |Q|=${qids.size} — the broadcast ADC relation and the rerank " +
-        "candidate set scale linearly in |Q|; shard the query file above " +
-        s"$WideBatchCap per pass (and pass at least one query)")
-    val dups = qids.diff(qids.distinct).distinct
-    require(dups.isEmpty,
-      s"$who: duplicate query ids: ${dups.mkString(", ")} — a duplicated " +
-        "query would double-join every code row; dedupe the query file")
-  }
-
-  /** The joined-ADC form of [[adcTables]] (r8 verdict next #1): ALL
-    * queries' td tables as ONE broadcastable relation (q_id, tds) with
-    * tds[m+1][code+1] = ||q_sub − cw||² — plan size O(1) in |Q|, so one
-    * code scan serves a query file of ANY size up to [[WideBatchCap]]
-    * (the literal [[adistCols]] columns cap at 64 queries per pass).
-    * Computed BY Spark with the exact [[sqDistExpr]] arithmetic (the
-    * searchRerank convention), grouped to nested code-ordered arrays,
-    * materialized once. Carries the absent-query-id guard. */
-  def adcRelation(emb: DataFrame, qids: Seq[Long],
-                  cbRows: Array[(Int, Long, Array[Double])],
-                  subDim: Int): DataFrame = {
-    requireWideQids(qids, "adcRelation")
-    val qvs = emb.filter(col("vec_id").isin(qids: _*))
-      .selectExpr("vec_id AS q_id", "CAST(embedding AS ARRAY<DOUBLE>) AS qv")
-    val rel = adcRelationOf(qvs, cbRows, subDim)
-    // a query id absent from the corpus would silently vanish from the
-    // answer set — refuse loudly (the adcTables convention)
-    val present = rel.select("q_id").collect().map(_.getLong(0)).toSet
-    val missing = qids.filterNot(present)
-    require(missing.isEmpty,
-      s"joined-ADC batch: query ids absent from the corpus: ${missing.mkString(", ")}")
-    rel
-  }
-
-  /** [[adcRelation]] for a SHARDED driver's whole query file: same
-    * duplicate/absent-id guards, but no per-pass |Q| cap — the relation
-    * is materialized once for every chunk and only per-chunk SLICES
-    * (≤ cap rows each) are ever broadcast, so the broadcast ceiling the
-    * cap protects still binds per pass. One materialize + one guard
-    * collect for the whole file instead of one per chunk. */
-  private def adcRelationSharded(emb: DataFrame, qids: Seq[Long],
-                                 cbRows: Array[(Int, Long, Array[Double])],
-                                 subDim: Int): DataFrame = {
-    val qvs = emb.filter(col("vec_id").isin(qids: _*))
-      .selectExpr("vec_id AS q_id", "CAST(embedding AS ARRAY<DOUBLE>) AS qv")
-    val rel = adcRelationOf(qvs, cbRows, subDim)
-    val present = rel.select("q_id").collect().map(_.getLong(0)).toSet
-    val missing = qids.filterNot(present)
-    require(missing.isEmpty,
-      s"joined-ADC batch: query ids absent from the corpus: ${missing.mkString(", ")}")
-    rel
-  }
-
-  /** The shared joined-ADC pipeline over a resolved (q_id, qv DOUBLE[])
-    * frame — [[adcRelation]] (query-by-indexed-item) and
-    * [[adcRelationFromQueries]] (external query frame) differ only in how
-    * the query vectors arrive. */
-  private def adcRelationOf(qvs: DataFrame,
-                            cbRows: Array[(Int, Long, Array[Double])],
-                            subDim: Int): DataFrame = {
-    val cbDf = qvs.sparkSession.createDataFrame(
-      cbRows.toIndexedSeq.map { case (m, c, cw) => (m, c, cw.toSeq) })
-      .toDF("m", "code", "cw")
-    Dedup.materialize(cbDf.crossJoin(broadcast(qvs))
-      .selectExpr("q_id", "m", "code",
-        s"slice(qv, m * $subDim + 1, $subDim) AS qsub", "cw")
-      .selectExpr("q_id", "m", "code",
-        s"${sqDistExpr("qsub", "cw", subDim, offset = false)} AS td")
-      .groupBy("q_id", "m")
-      .agg(sort_array(collect_list(struct(col("code"), col("td")))).as("bym"))
-      .selectExpr("q_id", "m", "transform(bym, x -> x.td) AS tda")
-      .groupBy("q_id")
-      .agg(sort_array(collect_list(struct(col("m"), col("tda")))).as("byq"))
-      .selectExpr("q_id", "transform(byq, x -> x.tda) AS tds"))
-  }
-
-  /** The EXTERNAL-query form of [[adcRelation]] (r11 verdict next #5):
-    * queries arrive as their own (q_id, q_vec) frame — the reference's
-    * actual demo shape, where `query.jpg` is embedded at serve time and
-    * is NOT an indexed corpus row (acorn.py __main__). No corpus-presence
-    * guard applies (presence is definitional: every frame row IS a
-    * query); the duplicate/empty/cap guards still do, post-materialize. */
-  def adcRelationFromQueries(queries: DataFrame,
-                             cbRows: Array[(Int, Long, Array[Double])],
-                             subDim: Int): DataFrame = {
-    // guards run on the INPUT frame, before the pipeline's groupBy would
-    // silently MERGE duplicate q_ids into one row with doubled (code, td)
-    // entries — corrupting every positional tds lookup downstream; the
-    // frame is model-state-sized, so the guard collect is one tiny job
-    val ids = queries.select("q_id").collect().map(_.getLong(0))
-    require(ids.nonEmpty, "external-query batch: empty query frame")
-    require(ids.distinct.length == ids.length,
-      "external-query batch: duplicate q_ids: " +
-        ids.diff(ids.distinct).distinct.mkString(", "))
-    require(ids.length <= WideBatchCap,
-      s"external-query batch: |Q|=${ids.length} exceeds $WideBatchCap — " +
-        "shard the query frame across passes")
-    val qvs = queries.selectExpr("q_id", "CAST(q_vec AS ARRAY<DOUBLE>) AS qv")
-    adcRelationOf(qvs, cbRows, subDim)
-  }
-
-  /** Sum of M nested-array lookups over the joined `tds` column — constant
-    * plan size regardless of |Q| (the wide counterpart of [[adistCols]]). */
-  private def wideAdistExpr(numSub: Int): String =
-    (0 until numSub).map(m =>
-      s"element_at(element_at(tds, ${m + 1}), CAST(code_$m AS INT) + 1)")
-      .mkString(" + ")
-
-  /** WIDE-batch PQ search (r8 verdict next #1 — the 64-query literal wall
-    * was the first production limit a reference user hit): identical
-    * per-query semantics to [[searchRerankBatch]], but the ADC tables ride
-    * as the ONE broadcast-joined [[adcRelation]] instead of |Q| literal
-    * columns. The code scan crossJoins the broadcast relation — a
-    * pipelined map-side generate; the n·|Q| scored rows exist only inside
-    * the task and flow straight into the same map-side k-heaps (TopKHits:
-    * ≤ P·|Q|·R rows cross the only shuffle) — then the shared broadcast
-    * exact rerank. ONE corpus scan at any |Q| ≤ [[WideBatchCap]]; a 10⁴-
-    * query eval pays ⌈10⁴/4096⌉ = 3 scans instead of the literal form's
-    * 157. Same Spark-computed td values, same tie-breaks ⇒ per-query
-    * results IDENTICAL to searchRerank (spec-pinned). The literal form
-    * stays preferable below its cap (no join in the scan); this is the
-    * scale path for the reference's unbounded query files. */
-  def searchRerankBatchWide(emb: DataFrame, qids: Seq[Long], k: Int, numSub: Int,
-                            subDim: Int, numCodes: Int, shortlist: Int,
-                            keep: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.functions.posexplode
-    requireWideQids(qids, "searchRerankBatchWide")
-    val cast0 = emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
-    val cast = keep.fold(cast0)(ids => cast0.join(ids, "vec_id"))
-    val cbRows = seededCodebook(emb, numSub, subDim, numCodes).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    // ADC relation FIRST (it carries the absent-id guard): refuse before
-    // the corpus pays the encode — the batch-family convention
-    val adc = adcRelation(emb, qids, cbRows, subDim)
-    val codes = Dedup.materialize(encodeFast(cast, cbRows, numSub, subDim))
-    exactRerankBatch(emb,
-      wideAdcShortlist(codes, adc, numSub, shortlist, excludeSelf = true),
-      qids, k)
-  }
-
-  /** The wide-batch ADC shortlist tail over an (already materialized)
-    * code table and a broadcastable (q_id, tds) relation — one
-    * construction site shared by the single-pass forms and the sharded
-    * drivers (which reuse ONE code table across every chunk). */
-  private def wideAdcShortlist(codes: DataFrame, adc: DataFrame, numSub: Int,
-                               shortlist: Int, excludeSelf: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.posexplode
-    val crossed = codes.crossJoin(broadcast(adc))
-    val body = if (excludeSelf) crossed.filter(col("vec_id") =!= col("q_id"))
-               else crossed
-    body
-      .selectExpr("q_id", "vec_id",
-        s"CAST(${wideAdistExpr(numSub)} AS BIGINT) AS adist")
-      .groupBy("q_id")
-      .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), shortlist,
-        asc = true).as("hits"))
-      .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(col("q_id"), col("hit.id").as("vec_id"))
-  }
-
-  /** EXTERNAL-query wide-batch PQ search (r11 verdict next #5): every
-    * other batch entry queries BY INDEXED ITEM (qids resolve against the
-    * corpus and the query row is excluded at serve time), but the
-    * reference's actual demo embeds a query image that is NOT in the
-    * corpus (query.jpg, acorn.py __main__). Queries arrive as their own
-    * (q_id, q_vec ARRAY<FLOAT>) frame; the proof this machinery never
-    * secretly depended on the query being indexed: the ADC relation
-    * derives from the frame ([[adcRelationFromQueries]]), NO
-    * self-exclusion applies (an external query has no corpus row to
-    * exclude), and the exact rerank joins the frame's raw vectors. Same
-    * one-code-scan / map-side-k-heap / broadcast-rerank shapes as
-    * [[searchRerankBatchWide]]; at 100 TB the query frame is the only new
-    * input and it is model-state-sized. Output: (q_id, vec_id, rank,
-    * score), the A12 batch convention. */
-  def searchRerankBatchWideExternal(emb: DataFrame, queries: DataFrame,
-                                    k: Int, numSub: Int, subDim: Int,
-                                    numCodes: Int, shortlist: Int,
-                                    keep: Option[DataFrame] = None,
-                                    cb: Option[Array[(Int, Long, Array[Double])]] = None,
-                                    codes0: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.functions.posexplode
-    // `cb`/`codes0` let a sharded driver thread ONE codebook collection
-    // and ONE materialized code table across every pass (shards share
-    // model state instead of re-deriving it); absent, build them here
-    val cbRows = cb.getOrElse(seededCodebook(emb, numSub, subDim, numCodes).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray)))
-    // ADC relation FIRST (it carries the duplicate/empty/cap guards):
-    // refuse before the corpus pays the encode — the batch-family
-    // convention
-    val adc = adcRelationFromQueries(queries, cbRows, subDim)
-    val codes = codes0.getOrElse {
-      val cast0 = emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
-      val cast = keep.fold(cast0)(ids => cast0.join(ids, "vec_id"))
-      Dedup.materialize(encodeFast(cast, cbRows, numSub, subDim))
-    }
-    val short = wideAdcShortlist(codes, adc, numSub, shortlist,
-      excludeSelf = false)
-    externalRerankTail(emb, short, queries, k)
-  }
-
-  /** The external-query exact rerank: shortlist ids broadcast back over
-    * the corpus, query vectors joined from the FRAME (an external query
-    * has no corpus row), per-query k-heaps — shared by the single-pass
-    * external form and the sharded driver's chunks. */
-  private def externalRerankTail(emb: DataFrame, short: DataFrame,
-                                 queries: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.functions.posexplode
-    val qfull = queries.selectExpr("q_id", "CAST(q_vec AS ARRAY<FLOAT>) AS q_vec")
-    emb.select("vec_id", "embedding")
-      .join(broadcast(short), "vec_id")
-      .join(broadcast(qfull), "q_id")
-      .withColumn("score", scaled(vectors.l2(col("embedding"), col("q_vec")), Knn.ScoreDigits))
-      .groupBy("q_id")
-      .agg(graft.functions.aggs.topK(col("score"), col("vec_id"), k, asc = true).as("hits"))
-      .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(col("q_id"), col("hit.id").as("vec_id"),
-        (col("pos") + 1).cast("long").as("rank"), col("hit.score").as("score"))
-  }
-
   /** Group [[cbRows]] by subspace and validate the positional-lookup
     * layout — the typedlit lookups index codewords POSITIONALLY, so a
     * codebook with code-id gaps would throw a bare
@@ -1245,7 +772,7 @@ object Pq {
   }
 
   /** One arriving query's WHOLE ADC table as a projection column — the
-    * streaming counterpart of [[adcRelationOf]] for widths where
+    * streaming counterpart of [[adcTables]] for widths where
     * [[adcDistCol]]'s inlined M·subDim-term tree would dwarf the plan
     * (16×128 = 2048 terms per candidate ROW at d=2048):
     * `tds[m+1][code+1] = floor(Σᵢ (qv[m·subDim+i] − cw[i])² · 10⁴)`,
@@ -1280,339 +807,293 @@ object Pq {
     * (the streaming wide serve shares the batch scan's arithmetic). */
   def wideAdistSql(numSub: Int): String = wideAdistExpr(numSub)
 
-  /** The whole-file guard + chunk-and-union skeleton shared by every
-    * sharded wide form: validates cap bounds, non-emptiness, and
-    * CROSS-shard duplicates (each shard's own guard only sees its chunk —
-    * a duplicate split across shards would double-answer in the union),
-    * then runs one wide pass per ≤cap chunk. */
-  /** The sharded drivers' whole-file input guards, runnable BEFORE any
-    * shared-state job (r17 optimization: the sharded drivers now hoist
-    * pass-invariant model state — codebook, encoded code table, probe
-    * relation — above the chunk loop, and the cheap input validation must
-    * still fire before that work starts). */
-  private def validateShardInput(qids: Seq[Long], cap: Int, who: String): Unit = {
+  // ---- batched serving: one sharded joined-ADC path per algorithm ----
+  //
+  // The reference serves every query of an evaluation file through one ADC
+  // shortlist-and-rerank. Each batch entry point below
+  //  1. runs the whole-file guard ([[requireQueryFile]]: cap range, empty,
+  //     duplicates across the file) and refuses ids absent from the corpus;
+  //  2. builds its pass-invariant state once: the codebook or residual
+  //     model, the query vectors in ONE driver action (every ADC table is
+  //     then driver arithmetic over model state), and the one code table —
+  //     encode is query-independent, so one encode serves every pass;
+  //  3. runs ⌈|Q|/cap⌉ shortlist passes and unions them. A pass joins the
+  //     code scan to a driver-local (q_id[, label], tds) relation of its
+  //     ≤ cap queries, broadcast — plan size O(1) in |Q| — cuts per-query
+  //     shortlists with map-side k-heaps (TopKHits: ≤ |Q|·shortlist rows
+  //     per partition cross the only shuffle) and reranks them exactly.
+  // Every q_id lands in exactly one pass and per-query funnels are
+  // independent, so any cap yields the same rows (spec-pinned), and each
+  // query's rows equal its single-query form's. Output: (q_id, vec_id,
+  // rank, score), the A12 batch convention.
+
+  /** Queries per pass: the broadcast ADC relation carries |Q|·M·K BIGINT
+    * entries (~|Q|·4 KB at M=8, K=64) and the rerank broadcasts
+    * |Q|·shortlist candidate ids — ~16 MB + model state at the cap. A
+    * larger query file runs ⌈|Q|/cap⌉ passes, each one code scan. */
+  val WideBatchCap = 4096
+
+  /** The batch family's whole-file guard, run before any Spark work where
+    * the ids are known up front. A duplicate split across passes would
+    * pass a per-pass check yet double-answer in the union, so duplicates
+    * are checked over the whole file. */
+  private[operators] def requireQueryFile(qids: Seq[Long], cap: Int, who: String): Unit = {
     require(cap >= 1 && cap <= WideBatchCap,
-      s"$who: cap=$cap must be in [1, $WideBatchCap] " +
-        "— the broadcast ADC relation ceiling binds per pass")
+      s"$who: cap=$cap must be in [1, $WideBatchCap] — the broadcast ADC " +
+        "relation and the rerank candidate set grow with the queries per " +
+        s"pass; shard the query file at most $WideBatchCap per pass")
     require(qids.nonEmpty, s"$who: empty query file")
     val dups = qids.diff(qids.distinct).distinct
     require(dups.isEmpty,
-      s"$who: duplicate query ids: ${dups.mkString(", ")}")
+      s"$who: duplicate query ids: ${dups.mkString(", ")} — a duplicated " +
+        "query would double-join every code row; dedupe the query file")
   }
 
+  /** ⌈|items|/cap⌉ passes of ≤ cap items each, unioned in input order. */
+  private def passes[A](items: Seq[A], cap: Int)(pass: Seq[A] => DataFrame): DataFrame =
+    items.grouped(cap).map(pass).reduce(_.union(_))
+
+  /** [[requireQueryFile]], then [[passes]]: the cap-and-union skeleton for
+    * a caller with its own per-pass serve (`Cascade.searchBatchSharded`). */
   private[operators] def shardedWide(qids: Seq[Long], cap: Int, who: String)
-                         (pass: Seq[Long] => DataFrame): DataFrame = {
-    validateShardInput(qids, cap, who)
-    qids.grouped(cap).map(pass).reduce(_.union(_))
+                                    (pass: Seq[Long] => DataFrame): DataFrame = {
+    requireQueryFile(qids, cap, who)
+    passes(qids, cap)(pass)
   }
 
-  /** AUTO-SHARDED wide-batch PQ search (r9 verdict next #4 — the
-    * sharding recipe [[requireWideQids]]'s guard message describes,
-    * executed): a query file of ANY size splits into ⌈|Q|/cap⌉ wide
-    * passes, each ONE corpus scan serving ≤ cap queries, results
-    * unioned. Every q_id lands in exactly one shard, so per-query
-    * results are IDENTICAL to a single wide pass (spec-pinned with a
-    * small cap); shards share the pass-INVARIANT model state — the
-    * (deterministic, seeded) codebook, the materialized all-queries ADC
-    * relation, and the ONE encoded code table (encode is query-
-    * independent, so re-encoding per chunk multiplied the corpus's
-    * dominant per-row kernel by the shard count for bit-identical
-    * output — r17 optimization, guide §1.2). Only per-chunk ADC slices
-    * (≤ cap rows) are broadcast, so the ceiling the cap protects still
-    * binds per pass. `cap` is parameterized for testability and bounded
-    * by [[WideBatchCap]]. */
-  def searchRerankBatchShardedWide(emb: DataFrame, qids: Seq[Long], k: Int,
-                                   numSub: Int, subDim: Int, numCodes: Int,
-                                   shortlist: Int,
-                                   keep: Option[DataFrame] = None,
-                                   cap: Int = WideBatchCap): DataFrame = {
-    val who = "searchRerankBatchShardedWide"
-    validateShardInput(qids, cap, who)
-    val cast0 = emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
-    val cast = keep.fold(cast0)(ids => cast0.join(ids, "vec_id"))
-    val cbRows = seededCodebook(emb, numSub, subDim, numCodes).collect()
+  private def seededRows(emb: DataFrame, numSub: Int, subDim: Int,
+                         numCodes: Int): Array[(Int, Long, Array[Double])] =
+    seededCodebook(emb, numSub, subDim, numCodes).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    // ADC relation FIRST (it carries the absent-id guard): refuse before
-    // the corpus pays the encode — the batch-family convention
-    val adcAll = adcRelationSharded(emb, qids, cbRows, subDim)
-    val codes = Dedup.materialize(encodeFast(cast, cbRows, numSub, subDim))
-    shardedWide(qids, cap, who) { chunk =>
-      val adc = adcAll.filter(col("q_id").isin(chunk: _*))
-      exactRerankBatch(emb,
-        wideAdcShortlist(codes, adc, numSub, shortlist, excludeSelf = true),
-        chunk, k)
-    }
+
+  /** (q_id, q_vec) rows of a query frame, collected: one per frame row,
+    * repeats included (the guards read them). */
+  private def collectQueries(qs: DataFrame): Seq[(Long, Array[Float])] =
+    qs.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+
+  /** The vectors of a query file of corpus ids, in file order, collected in
+    * one action; ids absent from the corpus are refused (a missing query
+    * would silently vanish from the answer set). */
+  private def indexedQueries(emb: DataFrame, qids: Seq[Long],
+                             who: String): Seq[(Long, Array[Float])] = {
+    val vecs = collectQueries(emb.filter(col("vec_id").isin(qids: _*))
+      .select("vec_id", "embedding")).toMap
+    requirePresent(qids, vecs.contains, who)
+    qids.map(q => q -> vecs(q))
   }
 
-  /** Sharded wide EXTERNAL-query PQ (r12 verdict next #6 — the external ×
-    * sharded composition): every sharded driver above takes INDEXED qids;
-    * this one takes a non-indexed (q_id, q_vec) frame of ANY size and
-    * splits it into ⌈|Q|/cap⌉ wide external passes, results unioned.
-    * The whole-frame guards run FIRST on the INPUT frame ids (the
-    * [[shardedWide]] convention — a duplicate split ACROSS shards would
-    * pass each shard's own guard yet double-answer in the union, and the
-    * per-pass guard cannot see it), and the seeded codebook is collected
-    * ONCE and threaded through every pass (shards share model state
-    * instead of re-scanning for it). Per-query funnels are independent,
-    * so the union is row-identical to one uncapped pass (spec-pinned).
-    * Chunks are cut in ascending q_id order — deterministic sharding,
-    * though any partition of the ids yields the same union. */
-  def searchRerankBatchShardedWideExternal(emb: DataFrame, queries: DataFrame,
-                                           k: Int, numSub: Int, subDim: Int,
-                                           numCodes: Int, shortlist: Int,
-                                           keep: Option[DataFrame] = None,
-                                           cap: Int = WideBatchCap): DataFrame = {
-    val who = "searchRerankBatchShardedWideExternal"
-    require(cap >= 1 && cap <= WideBatchCap,
-      s"$who: cap=$cap must be in [1, $WideBatchCap] " +
-        "— the broadcast ADC relation ceiling binds per pass")
-    // the frame is model-state-sized (query files, not corpus); one tiny
-    // collect validates the WHOLE frame before any corpus work
-    val ids = queries.select("q_id").collect().map(_.getLong(0))
-    require(ids.nonEmpty, s"$who: empty query frame")
-    val dups = ids.diff(ids.distinct).distinct
-    require(dups.isEmpty,
-      s"$who: duplicate q_ids across the frame: ${dups.mkString(", ")} — " +
-        "a duplicate split across shards would double-answer in the union")
-    val cbRows = seededCodebook(emb, numSub, subDim, numCodes).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    // the code table AND the all-queries ADC relation are pass-invariant:
-    // encode once, derive every query's td table in ONE materialize, and
-    // let each pass broadcast only its own ≤cap-row ADC slice (r17
-    // optimization, guide §1.2 — the per-pass form re-encoded the corpus
-    // and re-collected per-chunk guards for identical output)
-    val cast0 = emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
-    val cast = keep.fold(cast0)(ids2 => cast0.join(ids2, "vec_id"))
-    val codes = Dedup.materialize(encodeFast(cast, cbRows, numSub, subDim))
-    val adcAll = adcRelationOf(
-      queries.selectExpr("q_id", "CAST(q_vec AS ARRAY<DOUBLE>) AS qv"),
-      cbRows, subDim)
-    ids.sorted.grouped(cap).map { chunk =>
-      val adc = adcAll.filter(col("q_id").isin(chunk: _*))
-      val short = wideAdcShortlist(codes, adc, numSub, shortlist,
-        excludeSelf = false)
-      externalRerankTail(emb, short,
-        queries.filter(col("q_id").isin(chunk: _*)), k)
-    }.reduce(_.union(_))
-  }
-
-  /** Sharded wide IVF×PQ — [[ivfpqBatchWide]] past [[WideBatchCap]]:
-    * per-query probes are independent, so sharding the query file shards
-    * the probe set with it. Pass-invariant model state is hoisted above
-    * the chunk loop (r17 optimization, guide §1.2): ONE codebook
-    * collection, ONE all-queries probe relation, ONE all-queries ADC
-    * relation, and ONE code table over the whole file's probed-cluster
-    * union — per-chunk shortlists join against their own probe slice, so
-    * a code row from a label the chunk never probes simply never joins
-    * (results identical to the per-chunk-encode form, spec-pinned). Only
-    * per-chunk slices (≤ cap·nProbe rows) are ever broadcast. */
-  def ivfpqBatchShardedWide(emb: DataFrame, qids: Seq[Long], k: Int,
-                            numSub: Int, subDim: Int, numCodes: Int,
-                            nProbe: Int, shortlist: Int,
-                            cap: Int = WideBatchCap): DataFrame = {
-    val who = "ivfpqBatchShardedWide"
-    validateShardInput(qids, cap, who)
-    val cbRows = seededCodebook(emb, numSub, subDim, numCodes).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    // ADC relation FIRST — carries the absent-query-id guard
-    val adcAll = adcRelationSharded(emb, qids, cbRows, subDim)
-    val qsAll = emb.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val probesAll = Dedup.materialize(
-      Ivf.probeBatch(Ivf.centroids(emb), qsAll, nProbe))
-    val body = emb.join(broadcast(probesAll.select("label").distinct()), "label")
-      .selectExpr("vec_id", "label", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
-    val codes = Dedup.materialize(
-      encodeFast(body, cbRows, numSub, subDim, carry = Seq("vec_id", "label")))
-    shardedWide(qids, cap, who) { chunk =>
-      val probes = probesAll.filter(col("q_id").isin(chunk: _*))
-      val adc = adcAll.filter(col("q_id").isin(chunk: _*))
-      exactRerankBatch(emb,
-        ivfpqShortlist(codes, probes, adc, numSub, shortlist), chunk, k)
-    }
-  }
-
-  /** Sharded wide residual IVF-PQ — [[ivfpqResidualBatchWide]] past the
-    * cap; rows encode against their OWN centroid, so the encode is
-    * chunk-independent — and therefore HOISTED: the residual model (two
-    * training collects), the all-queries ADC relation, and the one
-    * residual code table over the file's probed-cluster union build once
-    * and every chunk joins against its own ADC slice (r17 optimization,
-    * guide §1.2; per-chunk state rebuilt the model and re-encoded the
-    * union for bit-identical output). Only ≤ cap·nProbe ADC rows are
-    * broadcast per pass. */
-  def ivfpqResidualBatchShardedWide(emb: DataFrame, qids: Seq[Long], k: Int,
-                                    numSub: Int, subDim: Int, numCodes: Int,
-                                    nProbe: Int, shortlist: Int,
-                                    cap: Int = WideBatchCap): DataFrame = {
-    val who = "ivfpqResidualBatchShardedWide"
-    validateShardInput(qids, cap, who)
-    val st = residualBatchState(emb, qids, numSub, subDim, numCodes, nProbe, who)
-    shardedWide(qids, cap, who) { chunk =>
-      val adc = st.adcRel.filter(col("q_id").isin(chunk: _*))
-      exactRerankIntBatch(st.qe,
-        residualShortlist(st.codes, adc, numSub, shortlist), chunk, k)
-    }
-  }
-
-  /** All queries' ADC tables in ONE Spark job (|Q|·K·M rows of model
-    * state), keyed (q_id, m, code) → td. Computed BY Spark (not the
-    * driver) so the literal tables are bit-identical to the joined form
-    * in both engines — the searchRerank convention, batched. */
-  def adcTables(emb: DataFrame, qids: Seq[Long],
-                cbRows: Array[(Int, Long, Array[Double])],
-                subDim: Int): Map[(Long, Int, Long), Long] = {
-    requireBatchQids(qids, "batched PQ")
-    val qvs = emb.filter(col("vec_id").isin(qids: _*))
-      .selectExpr("vec_id AS q_id", "CAST(embedding AS ARRAY<DOUBLE>) AS qv")
-    val cbDf = emb.sparkSession.createDataFrame(
-      cbRows.toIndexedSeq.map { case (m, c, cw) => (m, c, cw.toSeq) })
-      .toDF("m", "code", "cw")
-    val td = cbDf.crossJoin(broadcast(qvs))
-      .selectExpr("q_id", "m", "code",
-        s"slice(qv, m * $subDim + 1, $subDim) AS qsub", "cw")
-      .selectExpr("q_id", "m", "code",
-        s"${sqDistExpr("qsub", "cw", subDim, offset = false)} AS td")
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)) -> r.getLong(3)).toMap
-    // a query id absent from the corpus would otherwise just vanish from
-    // the answer set (the isin filter drops it) — refuse loudly instead
-    val missing = qids.filterNot(q => td.contains((q, cbRows.head._1, cbRows.head._2)))
+  private def requirePresent(qids: Seq[Long], present: Long => Boolean, who: String): Unit = {
+    val missing = qids.filterNot(present)
     require(missing.isEmpty,
-      s"batched PQ: query ids absent from the corpus: ${missing.mkString(", ")}")
-    td
+      s"$who: query ids absent from the corpus: ${missing.mkString(", ")}")
   }
 
-  /** One literal-array td-lookup adist column per query (`adist_<q>`)
-    * over bound code_0..code_{M-1} columns. */
-  def adistCols(qids: Seq[Long], cbRows: Array[(Int, Long, Array[Double])],
-                td: Map[(Long, Int, Long), Long], numSub: Int): Seq[String] =
-    qids.map { q =>
-      val sum = (0 until numSub).map { m =>
-        val tds = cbRows.filter(_._1 == m).sortBy(_._2)
-          .map { case (_, c, _) => s"${td((q, m, c))}L" }
-        s"element_at(array(${tds.mkString(", ")}), CAST(code_$m AS INT) + 1)"
-      }.mkString(" + ")
-      s"CAST($sum AS BIGINT) AS adist_$q"
+  /** Driver-local (q_id, q_vec ARRAY<FLOAT>) rows for the rerank join. */
+  private def queryFrame(s: SparkSession, qs: Seq[(Long, Array[Float])]): DataFrame =
+    s.createDataFrame(qs.map { case (q, v) => (q, v.toSeq) }).toDF("q_id", "q_vec")
+
+  /** One query's ADC table, tds(m)(code) = floor(Σᵢ (q[m·subDim+i] − cw[i])²
+    * · 10⁴) in code order: [[sqDistExpr]]'s IEEE double arithmetic in the
+    * same term order (a left fold from +0.0 adds nothing), so the values
+    * equal the engine-computed [[adcTable]]'s bit for bit. */
+  private def adcTds(q: Array[Float], cbRows: Array[(Int, Long, Array[Double])],
+                     numSub: Int, subDim: Int): Seq[Seq[Long]] =
+    (0 until numSub).map { m =>
+      cbRows.filter(_._1 == m).sortBy(_._2).map { case (_, _, cw) =>
+        var acc = 0.0; var i = 0
+        while (i < subDim) { val d = q(m * subDim + i).toDouble - cw(i); acc += d * d; i += 1 }
+        math.floor(acc * 10000.0).toLong
+      }.toSeq
     }
 
-  /** stack() the per-query adist columns to (q_id, adist) rows — a narrow
-    * generate, nothing shuffles. */
-  def stackExpr(qids: Seq[Long]): String =
-    s"stack(${qids.size}, " + qids.map(q =>
-      s"CAST($q AS BIGINT), adist_$q").mkString(", ") + ") AS (q_id, adist)"
+  /** Sum of M nested-array lookups over the joined `tds` column — constant
+    * plan size regardless of |Q|. */
+  private def wideAdistExpr(numSub: Int): String =
+    (0 until numSub).map(m =>
+      s"element_at(element_at(tds, ${m + 1}), CAST(code_$m AS INT) + 1)")
+      .mkString(" + ")
 
-  /** Exact rerank of a (q_id, vec_id) candidate frame: broadcast joins to
-    * full vectors + the per-query k-heap, emitting the A12 batch shape
-    * (q_id, vec_id, rank, score). */
-  def exactRerankBatch(emb: DataFrame, short: DataFrame, qids: Seq[Long],
-                       k: Int): DataFrame = {
-    import org.apache.spark.sql.functions.posexplode
-    val qfull = emb.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    emb.select("vec_id", "embedding")
-      .join(broadcast(short), "vec_id")
-      .join(broadcast(qfull), "q_id")
-      .withColumn("score", scaled(vectors.l2(col("embedding"), col("q_vec")), Knn.ScoreDigits))
-      .groupBy("q_id")
+  /** The ADC shortlist of one pass: the code scan joins the broadcast ADC
+    * relation — on `label` when it has one (the label key is both the
+    * probe membership and the lookup: a row joins only the queries that
+    * probed its cluster), else as a map-side cross join — and each
+    * query's shortlist comes out of the partial k-heap aggregate. */
+  private def adcShortlist(codes: DataFrame, adc: DataFrame, numSub: Int,
+                           shortlist: Int, excludeSelf: Boolean): DataFrame = {
+    val joined =
+      if (adc.columns.contains("label")) codes.join(broadcast(adc), "label")
+      else codes.crossJoin(broadcast(adc))
+    val body = if (excludeSelf) joined.filter(col("vec_id") =!= col("q_id")) else joined
+    topKPerQuery(body.selectExpr("q_id", "vec_id",
+      s"CAST(${wideAdistExpr(numSub)} AS BIGINT) AS score"), shortlist)
+      .select("q_id", "vec_id")
+  }
+
+  /** Per-query top-k of (q_id, vec_id, score) rows, ascending with ties to
+    * the lower id, via the k-heap aggregate: (q_id, vec_id, rank, score). */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
+    scored.groupBy("q_id")
       .agg(graft.functions.aggs.topK(col("score"), col("vec_id"), k, asc = true).as("hits"))
       .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
       .select(col("q_id"), col("hit.id").as("vec_id"),
         (col("pos") + 1).cast("long").as("rank"), col("hit.score").as("score"))
+
+  /** Exact rerank of a (q_id, vec_id) shortlist against the (q_id, q_vec)
+    * query vectors: broadcast joins to full vectors + the per-query k-heap. */
+  private def rerank(emb: DataFrame, short: DataFrame, qfull: DataFrame,
+                     k: Int): DataFrame =
+    topKPerQuery(emb.select("vec_id", "embedding")
+      .join(broadcast(short), "vec_id")
+      .join(broadcast(qfull), "q_id")
+      .select(col("q_id"), col("vec_id"),
+        scaled(vectors.l2(col("embedding"), col("q_vec")), Knn.ScoreDigits).as("score")), k)
+
+  /** The flat-PQ passes shared by the indexed and external forms. */
+  private def pqPasses(emb: DataFrame, qs: Seq[(Long, Array[Float])],
+                       cbRows: Array[(Int, Long, Array[Double])], codes: DataFrame,
+                       k: Int, numSub: Int, subDim: Int, shortlist: Int, cap: Int,
+                       excludeSelf: Boolean): DataFrame = {
+    val s = emb.sparkSession
+    passes(qs, cap) { chunk =>
+      val adc = s.createDataFrame(chunk.map { case (q, v) =>
+        (q, adcTds(v, cbRows, numSub, subDim)) }).toDF("q_id", "tds")
+      rerank(emb, adcShortlist(codes, adc, numSub, shortlist, excludeSelf),
+        queryFrame(s, chunk), k)
+    }
   }
 
-  /** BATCHED IVF×PQ (A24's batch form): per-query coarse probes prune the
-    * code scan to the probed clusters' UNION, membership resolves per
-    * (q_id, label) via a broadcast join of the ≤|Q|·nProbe probe pairs,
-    * and everything downstream is the searchRerankBatch machinery — one
-    * encode of the union, one code scan with |Q| literal ADC columns,
-    * per-query k-heap shortlists, broadcast exact rerank. At 100 TB the
-    * scan reads (distinct probed clusters)/C of an already-compressed
-    * corpus — the batch shares clusters probed by several queries. */
+  /** (vec_id, v DOUBLE[]) of the corpus, restricted to `keep` when given. */
+  private def candidates(emb: DataFrame, keep: Option[DataFrame]): DataFrame = {
+    val cast = emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
+    keep.fold(cast)(ids => cast.join(ids, "vec_id"))
+  }
+
+  /** Batched PQ search over a query file of corpus ids; each query is
+    * excluded from its own answer. Encoding runs once over the whole
+    * corpus, query rows included (each is corpus for the other queries):
+    * encode is per-row independent, so encode-all-then-exclude ≡
+    * exclude-then-encode and per-query results ≡ [[searchRerank]].
+    *
+    * `keep` (optional, single `vec_id` column) restricts candidates to a
+    * metadata-qualified subset — the ACORN-hybrid composition over the
+    * compressed index, batched. The filter is query-independent, so the
+    * keep-pruned encode still runs once; queries come from the full
+    * corpus (the filter qualifies candidates, never who may ask). */
+  def searchRerankBatch(emb: DataFrame, qids: Seq[Long], k: Int, numSub: Int,
+                        subDim: Int, numCodes: Int, shortlist: Int,
+                        keep: Option[DataFrame] = None,
+                        cap: Int = WideBatchCap): DataFrame = {
+    val who = "searchRerankBatch"
+    requireQueryFile(qids, cap, who)
+    val cbRows = seededRows(emb, numSub, subDim, numCodes)
+    // queries before the encode: a bad query file refuses before the
+    // corpus pays anything
+    val qs = indexedQueries(emb, qids, who)
+    // materialized: the encode and the ADC lookup must compile as two
+    // small codegen steps (the janino-depth split, see searchRerankCb)
+    val codes = Dedup.materialize(encodeFast(candidates(emb, keep), cbRows, numSub, subDim))
+    pqPasses(emb, qs, cbRows, codes, k, numSub, subDim, shortlist, cap, excludeSelf = true)
+  }
+
+  /** Batched PQ search over EXTERNAL queries: a (q_id, q_vec ARRAY<FLOAT>)
+    * frame whose vectors are not corpus rows — the reference's demo shape,
+    * where `query.jpg` is embedded at serve time (acorn.py __main__). No
+    * self-exclusion applies and the rerank joins the frame's vectors.
+    * The whole-file guard runs on the collected frame rows, before the
+    * corpus encode; passes are cut in ascending q_id order. */
+  def searchRerankBatchExternal(emb: DataFrame, queries: DataFrame, k: Int,
+                                numSub: Int, subDim: Int, numCodes: Int,
+                                shortlist: Int, keep: Option[DataFrame] = None,
+                                cap: Int = WideBatchCap): DataFrame = {
+    val who = "searchRerankBatchExternal"
+    val qs = collectQueries(
+      queries.selectExpr("q_id", "CAST(q_vec AS ARRAY<FLOAT>) AS q_vec"))
+    requireQueryFile(qs.map(_._1), cap, who)
+    val cbRows = seededRows(emb, numSub, subDim, numCodes)
+    val codes = Dedup.materialize(encodeFast(candidates(emb, keep), cbRows, numSub, subDim))
+    pqPasses(emb, qs.sortBy(_._1), cbRows, codes, k, numSub, subDim, shortlist, cap,
+      excludeSelf = false)
+  }
+
+  /** Batched IVF×PQ (A24's batch form): per-query coarse probes (the
+    * [[Ivf.probe]] order, via [[Ivf.probeBatch]]) prune the one encode to
+    * the probed clusters' union, and membership resolves per (q_id, label)
+    * inside the ADC join. At 100 TB the scan reads (distinct probed
+    * clusters)/C of an already-compressed corpus — the batch shares
+    * clusters probed by several queries. The ≤ |Q|·nProbe probe pairs are
+    * collected once: they key the ADC relation and name the union. */
   def ivfpqBatch(emb: DataFrame, qids: Seq[Long], k: Int, numSub: Int,
-                 subDim: Int, numCodes: Int, nProbe: Int, shortlist: Int): DataFrame = {
-    import org.apache.spark.sql.functions.posexplode
-    // entry-point guard BEFORE any Spark work (r8 ADVICE: adcTables'
-    // internal guard fires only after the seededCodebook collect has
-    // already paid a corpus job)
-    requireBatchQids(qids, "ivfpqBatch")
-    val cbRows = seededCodebook(emb, numSub, subDim, numCodes).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    // ADC tables FIRST: adcTables holds the |Q| and absent-query-id
-    // guards, and needs only (emb, qids, codebook) — refusing here costs
-    // one tiny job instead of a probe pass + a union encode (r8 review)
-    val td = adcTables(emb, qids, cbRows, subDim)
-    val qs = emb.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val probes = Dedup.materialize(Ivf.probeBatch(Ivf.centroids(emb), qs, nProbe))
-    // encode ONLY the probed-cluster union, carrying label for membership
-    val body = emb.join(broadcast(probes.select("label").distinct()), "label")
+                 subDim: Int, numCodes: Int, nProbe: Int, shortlist: Int,
+                 cap: Int = WideBatchCap): DataFrame = {
+    val who = "ivfpqBatch"
+    requireQueryFile(qids, cap, who)
+    val s = emb.sparkSession
+    val cbRows = seededRows(emb, numSub, subDim, numCodes)
+    val qs = indexedQueries(emb, qids, who)
+    val tds = qs.map { case (q, v) => q -> adcTds(v, cbRows, numSub, subDim) }.toMap
+    val probes = Ivf.probeBatch(Ivf.centroids(emb), queryFrame(s, qs), nProbe)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val body = emb.filter(col("label").isin(probes.map(_._2).distinct: _*))
       .selectExpr("vec_id", "label", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
     val codes = Dedup.materialize(
       encodeFast(body, cbRows, numSub, subDim, carry = Seq("vec_id", "label")))
-    val short = codes
-      .selectExpr(Seq("vec_id", "label") ++ adistCols(qids, cbRows, td, numSub): _*)
-      .selectExpr("vec_id", "label", stackExpr(qids))
-      .filter(col("vec_id") =!= col("q_id"))
-      // per-(row, query) membership: the row's cluster must be one of THIS
-      // query's probes — the label-keyed form that survives 100 TB (never
-      // a per-vec_id membership list)
-      .join(broadcast(probes), Seq("q_id", "label"))
-      .groupBy("q_id")
-      .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), shortlist,
-        asc = true).as("hits"))
-      .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(col("q_id"), col("hit.id").as("vec_id"))
-    exactRerankBatch(emb, short, qids, k)
+    passes(qs, cap) { chunk =>
+      val inChunk = chunk.map(_._1).toSet
+      val adc = s.createDataFrame(probes.collect {
+        case (q, l) if inChunk(q) => (q, l, tds(q)) }).toDF("q_id", "label", "tds")
+      rerank(emb, adcShortlist(codes, adc, numSub, shortlist, excludeSelf = true),
+        queryFrame(s, chunk), k)
+    }
   }
 
-  /** WIDE-batch IVF×PQ: [[ivfpqBatch]] semantics past the 64-query literal
-    * wall. Membership AND ADC resolve in ONE broadcast join: the
-    * ≤ |Q|·nProbe (q_id, label) probe pairs join the [[adcRelation]] on
-    * q_id (both model-state-sized), and the result joins the union-pruned
-    * code scan on label — the label-keyed form that survives 100 TB, now
-    * with O(1) plan size in |Q|. Per-query results ≡ ivfpqBatch /
-    * the single-query composition (spec-pinned). */
-  def ivfpqBatchWide(emb: DataFrame, qids: Seq[Long], k: Int, numSub: Int,
-                     subDim: Int, numCodes: Int, nProbe: Int,
-                     shortlist: Int): DataFrame = {
-    import org.apache.spark.sql.functions.posexplode
-    requireWideQids(qids, "ivfpqBatchWide")
-    val cbRows = seededCodebook(emb, numSub, subDim, numCodes).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    // ADC relation FIRST — carries the |Q| and absent-query-id guards
-    val adc = adcRelation(emb, qids, cbRows, subDim)
-    val qs = emb.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val probes = Dedup.materialize(Ivf.probeBatch(Ivf.centroids(emb), qs, nProbe))
-    val body = emb.join(broadcast(probes.select("label").distinct()), "label")
-      .selectExpr("vec_id", "label", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
-    val codes = Dedup.materialize(
-      encodeFast(body, cbRows, numSub, subDim, carry = Seq("vec_id", "label")))
-    exactRerankBatch(emb,
-      ivfpqShortlist(codes, probes, adc, numSub, shortlist), qids, k)
-  }
-
-  /** The label-pruned wide ADC shortlist tail — shared by
-    * [[ivfpqBatchWide]] and the sharded driver (whose chunks reuse ONE
-    * code table over the whole file's probed-cluster union: a row from a
-    * label no chunk query probes simply never joins). */
-  private def ivfpqShortlist(codes: DataFrame, probes: DataFrame,
-                             adc: DataFrame, numSub: Int,
-                             shortlist: Int): DataFrame = {
-    import org.apache.spark.sql.functions.posexplode
-    codes
-      // both sides of the inner membership×ADC join are model state — hint
-      // the inner side too, or the stats-blind localCheckpoint relations
-      // plan a SortMergeJoin for the |Q|·nProbe-row join
-      .join(broadcast(probes.join(broadcast(adc), "q_id")), "label")
-      .filter(col("vec_id") =!= col("q_id"))
-      .selectExpr("q_id", "vec_id",
-        s"CAST(${wideAdistExpr(numSub)} AS BIGINT) AS adist")
-      .groupBy("q_id")
-      .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), shortlist,
-        asc = true).as("hits"))
-      .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(col("q_id"), col("hit.id").as("vec_id"))
+  /** Batched residual IVF-PQ (A42's batch form). The residual structure
+    * is query-independent — seeds, codebook and codes all encode against
+    * each row's OWN cluster centroid — so one encode of the probed-cluster
+    * union serves every query; only the per-(query, probed cluster) ADC
+    * tables differ. Probes and tables are exact integer driver work on
+    * the collected query vectors and the model state, so the path stays
+    * integer-exact end to end and per-query results ≡ [[ivfpqResidual]]
+    * (spec-pinned). */
+  def ivfpqResidualBatch(emb: DataFrame, qids: Seq[Long], k: Int, numSub: Int,
+                         subDim: Int, numCodes: Int, nProbe: Int,
+                         shortlist: Int, cap: Int = WideBatchCap): DataFrame = {
+    val who = "ivfpqResidualBatch"
+    requireQueryFile(qids, cap, who)
+    val s = emb.sparkSession
+    // store the quantized labeled frame once when wide (it feeds the
+    // model aggregates, the query collect, the residual encode, and the
+    // rerank — the lineage-vs-stored penalty, see materializeIfHeavy)
+    val qe = materializeIfHeavy(quantizedLabeled(emb),
+      numSub.toLong * numCodes * subDim)
+    val model = residualModel(qe, numSub, subDim, numCodes, who)
+    val qvs: Map[Long, Array[Long]] = qe.filter(col("vec_id").isin(qids: _*))
+      .select("vec_id", "q").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
+    requirePresent(qids, qvs.contains, who)
+    // per query: the nProbe nearest integer centroids (ties to the lower
+    // label), and per probed cluster td(m, code) = ||(q − cent)_sub − cw||²
+    val adcRows: Seq[(Long, Long, Seq[Seq[Long]])] = for {
+      q <- qids
+      l <- model.cent.toSeq.map { case (l, c) => (l, sqdFull(c, qvs(q))) }
+        .sortBy { case (l, d) => (d, l) }.take(nProbe).map(_._1)
+    } yield {
+      val qr = Array.tabulate(qvs(q).length)(i => qvs(q)(i) - model.cent(l)(i))
+      (q, l, residualAdc(qr, model.cb, numSub, subDim))
+    }
+    val codes = Dedup.materialize(residualCodes(qe, model, adcRows.map(_._2).distinct,
+      numSub, subDim, carry = Seq("vec_id", "label")))
+    passes(qids, cap) { chunk =>
+      val inChunk = chunk.toSet
+      val adc = s.createDataFrame(adcRows.filter(r => inChunk(r._1)))
+        .toDF("q_id", "label", "tds")
+      val short = adcShortlist(codes, adc, numSub, shortlist, excludeSelf = true)
+      // exact integer rerank in quantized space (the single-query convention)
+      val qq = s.createDataFrame(chunk.map(q => (q, qvs(q).toSeq))).toDF("q_id", "qq")
+      topKPerQuery(qe.select("vec_id", "q")
+        .join(broadcast(short), "vec_id")
+        .join(broadcast(qq), "q_id")
+        .selectExpr("q_id", "vec_id",
+          graft.functions.sqDistLongSql("q", "qq") + " AS score"), k)
+    }
   }
 }

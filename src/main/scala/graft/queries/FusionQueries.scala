@@ -546,7 +546,7 @@ object FusionQueries {
     "knn_pq_batch_external" -> ((s, dir) => {
       val e = Tables(s, dir, "embeddings")
       val queries = externalMidpointQueries(e, 8)
-      Pq.searchRerankBatchWideExternal(e, queries, k = 10,
+      Pq.searchRerankBatchExternal(e, queries, k = 10,
         numSub = 8, subDim = 8, numCodes = 64, shortlist = 100)
     }),
 
@@ -562,7 +562,7 @@ object FusionQueries {
     "knn_pq_batch_external_sharded" -> ((s, dir) => {
       val e = Tables(s, dir, "embeddings")
       val queries = externalMidpointQueries(e, 256)
-      Pq.searchRerankBatchShardedWideExternal(e, queries, k = 10,
+      Pq.searchRerankBatchExternal(e, queries, k = 10,
         numSub = 8, subDim = 8, numCodes = 64, shortlist = 100, cap = 48)
     }),
 
@@ -630,7 +630,7 @@ object FusionQueries {
     // replay — the driver independently verifies the cap-and-union path
     // at d=2048 end-to-end.
     "knn_pq_batch_sharded_2048" -> ((s, dir) =>
-      Pq.searchRerankBatchShardedWide(HybridQueries.wideEmbeddings(s, dir),
+      Pq.searchRerankBatch(HybridQueries.wideEmbeddings(s, dir),
         qids = (0L until 8L), k = 10, numSub = 16, subDim = 128,
         numCodes = 64, shortlist = 100, cap = 3)),
 
@@ -644,7 +644,7 @@ object FusionQueries {
       val keep = docs(s, dir)
         .filter(col("lang").isNotNull && col("lang") === "en")
         .select(col("doc_id").as("vec_id"))
-      Pq.searchRerankBatchWide(HybridQueries.wideEmbeddings(s, dir),
+      Pq.searchRerankBatch(HybridQueries.wideEmbeddings(s, dir),
         qids = (0L until 8L), k = 10, numSub = 16, subDim = 128,
         numCodes = 64, shortlist = 100, keep = Some(keep))
     }),
@@ -663,7 +663,7 @@ object FusionQueries {
     // on the query being indexed, at the width it runs in production.
     "knn_pq_batch_external_2048" -> ((s, dir) => {
       val w = HybridQueries.wideEmbeddings(s, dir)
-      Pq.searchRerankBatchWideExternal(w, externalMidpointQueries(w, 8),
+      Pq.searchRerankBatchExternal(w, externalMidpointQueries(w, 8),
         k = 10, numSub = 16, subDim = 128, numCodes = 64, shortlist = 100)
     }),
 
@@ -679,7 +679,7 @@ object FusionQueries {
     "knn_ivfpq_batch_sharded_2048" -> ((s, dir) => {
       val w = HybridQueries.wideEmbeddings(s, dir)
       val e = w.join(Tables(s, dir, "embeddings").select("vec_id", "label"), "vec_id")
-      Pq.ivfpqBatchShardedWide(e, qids = (0L until 8L), k = 10,
+      Pq.ivfpqBatch(e, qids = (0L until 8L), k = 10,
         numSub = 16, subDim = 128, numCodes = 64, nProbe = 2,
         shortlist = 100, cap = 3)
     }),
@@ -692,7 +692,7 @@ object FusionQueries {
     "knn_ivfpq_residual_batch_sharded_2048" -> ((s, dir) => {
       val w = HybridQueries.wideEmbeddings(s, dir)
       val e = w.join(Tables(s, dir, "embeddings").select("vec_id", "label"), "vec_id")
-      Pq.ivfpqResidualBatchShardedWide(e, qids = (0L until 8L), k = 10,
+      Pq.ivfpqResidualBatch(e, qids = (0L until 8L), k = 10,
         numSub = 16, subDim = 128, numCodes = 16, nProbe = 2,
         shortlist = 100, cap = 3)
     }),
@@ -711,7 +711,7 @@ object FusionQueries {
     "knn_ivfpq_batch_wide_2048" -> ((s, dir) => {
       val w = HybridQueries.wideEmbeddings(s, dir)
       val e = w.join(Tables(s, dir, "embeddings").select("vec_id", "label"), "vec_id")
-      Pq.ivfpqBatchWide(e, qids = (0L until 8L), k = 10,
+      Pq.ivfpqBatch(e, qids = (0L until 8L), k = 10,
         numSub = 16, subDim = 128, numCodes = 64, nProbe = 2, shortlist = 100)
     }),
 
@@ -728,7 +728,7 @@ object FusionQueries {
     "knn_ivfpq_residual_batch_wide_2048" -> ((s, dir) => {
       val w = HybridQueries.wideEmbeddings(s, dir)
       val e = w.join(Tables(s, dir, "embeddings").select("vec_id", "label"), "vec_id")
-      Pq.ivfpqResidualBatchWide(e, qids = (0L until 8L), k = 10,
+      Pq.ivfpqResidualBatch(e, qids = (0L until 8L), k = 10,
         numSub = 16, subDim = 128, numCodes = 16, nProbe = 2, shortlist = 100)
     }),
 
@@ -809,7 +809,7 @@ object FusionQueries {
     // per-query results ≡ knn_pq_2048's single-query pipeline at qid 0
     // (same seeded codebook, same shortlist/rerank tie orders).
     "knn_pq_batch_wide_2048" -> ((s, dir) =>
-      Pq.searchRerankBatchWide(HybridQueries.wideEmbeddings(s, dir),
+      Pq.searchRerankBatch(HybridQueries.wideEmbeddings(s, dir),
         qids = (0L until 8L), k = 10, numSub = 16, subDim = 128,
         numCodes = 64, shortlist = 100)),
 
@@ -1332,8 +1332,8 @@ object FusionQueries {
     // A21b: BATCHED PQ search (r7 verdict "next" #2 — the reference's main
     // loop serves a query FILE, and until now only the exact/hybrid/HNSW
     // paths amortized it): ONE corpus encode + ONE code scan answer all 5
-    // queries — each query is a literal 512-entry ADC table in the
-    // projection and a map-side k-heap in the shortlist aggregate.
+    // queries — each query is one row of the broadcast ADC relation and a
+    // map-side k-heap in the shortlist aggregate.
     // Per-query results are IDENTICAL to knn_pq (spec-pinned); plan audit
     // pins the one-scan shape.
     "knn_pq_batch" -> ((s, dir) =>
@@ -1371,38 +1371,34 @@ object FusionQueries {
     // inside A41b's coarse stage, pq = A21b, ivfpq = A24b, residual =
     // this). The residual structure is query-independent (rows encode
     // against their OWN centroid), so ONE union encode serves every
-    // query; membership lives inside each query's per-cluster ADC CASE
-    // (non-probed labels → NULL adist, filtered) — zero membership joins.
+    // query; the label-keyed (q_id, label, tds) ADC join is the membership.
     "knn_ivfpq_residual_batch" -> ((s, dir) =>
       Pq.ivfpqResidualBatch(Tables(s, dir, "embeddings"), qids = (0L to 4L),
         k = 10, numSub = 8, subDim = 8, numCodes = 16, nProbe = 2,
         shortlist = 100)),
 
-    // A21c: WIDE-batch PQ search (r8 verdict next #1): the literal batch
-    // form walls at 64 queries (each adds an ADC table to the plan); the
-    // reference's evaluation loop runs UNBOUNDED query files. Here all 256
-    // queries' ADC tables ride as ONE broadcast-joined (q_id, tds)
-    // relation — plan size O(1) in |Q|, ONE corpus encode + ONE code scan
-    // at any query-file size up to Pq.WideBatchCap=4096. Per-query results
+    // A21c: WIDE-batch PQ search (r8 verdict next #1): the reference's
+    // evaluation loop runs UNBOUNDED query files. Here all 256 queries'
+    // ADC tables ride as ONE broadcast-joined (q_id, tds) relation — plan
+    // size O(1) in |Q|, ONE corpus encode + ONE code scan per pass of up
+    // to Pq.WideBatchCap=4096 queries. Per-query results
     // are IDENTICAL to knn_pq / knn_pq_batch (spec-pinned); plan audit
     // pins one-code-scan / no per-query projection columns / k-heaps.
     "knn_pq_batch_wide" -> ((s, dir) =>
-      Pq.searchRerankBatchWide(Tables(s, dir, "embeddings"),
+      Pq.searchRerankBatch(Tables(s, dir, "embeddings"),
         qids = (0L until 256L), k = 10, numSub = 8, subDim = 8,
         numCodes = 64, shortlist = 100)),
 
-    // A23c: WIDE-batch filtered PQ (r9 verdict next #3 — the one batch
-    // composition that was still literal-only at the driver surface):
-    // the ACORN-hybrid metadata filter is query-INDEPENDENT, so the ONE
-    // keep-pruned encode + ONE code scan serve all 128 queries exactly
-    // as in the literal A23b — only the ADC side rides as the broadcast
-    // joined relation instead of literal columns. Queries come from the
-    // FULL table (the filter qualifies candidates, never who may ask).
+    // A23c: WIDE-batch filtered PQ (r9 verdict next #3): the ACORN-hybrid
+    // metadata filter is query-INDEPENDENT, so the ONE keep-pruned encode
+    // + ONE code scan serve all 128 queries exactly as in A23b's 5.
+    // Queries come from the FULL table (the filter qualifies candidates,
+    // never who may ask).
     "hybrid_knn_pq_batch_wide" -> ((s, dir) => {
       val keep = docs(s, dir)
         .filter(col("lang").isNotNull && col("lang") === "en")
         .select(col("doc_id").as("vec_id"))
-      Pq.searchRerankBatchWide(Tables(s, dir, "embeddings"),
+      Pq.searchRerankBatch(Tables(s, dir, "embeddings"),
         qids = (0L until 128L), k = 10, numSub = 8, subDim = 8,
         numCodes = 64, shortlist = 100, keep = Some(keep))
     }),
@@ -1415,7 +1411,7 @@ object FusionQueries {
     // SAME relational replay — the driver independently verifies the
     // union-of-chunks path end-to-end.
     "knn_pq_batch_sharded" -> ((s, dir) =>
-      Pq.searchRerankBatchShardedWide(Tables(s, dir, "embeddings"),
+      Pq.searchRerankBatch(Tables(s, dir, "embeddings"),
         qids = (0L until 128L), k = 10, numSub = 8, subDim = 8,
         numCodes = 64, shortlist = 100, cap = 32)),
 
@@ -1423,7 +1419,7 @@ object FusionQueries {
     // broadcast (q_id, label, tds) join against the union-pruned code
     // scan; 128 queries, one scan, O(1) plan.
     "knn_ivfpq_batch_wide" -> ((s, dir) =>
-      Pq.ivfpqBatchWide(Tables(s, dir, "embeddings"), qids = (0L until 128L),
+      Pq.ivfpqBatch(Tables(s, dir, "embeddings"), qids = (0L until 128L),
         k = 10, numSub = 8, subDim = 8, numCodes = 64, nProbe = 2,
         shortlist = 100)),
 
@@ -1431,7 +1427,7 @@ object FusionQueries {
     // computed in Spark (query vectors never collect), label-keyed
     // broadcast membership+lookup join; integer-exact end-to-end.
     "knn_ivfpq_residual_batch_wide" -> ((s, dir) =>
-      Pq.ivfpqResidualBatchWide(Tables(s, dir, "embeddings"),
+      Pq.ivfpqResidualBatch(Tables(s, dir, "embeddings"),
         qids = (0L until 128L), k = 10, numSub = 8, subDim = 8,
         numCodes = 16, nProbe = 2, shortlist = 100)),
 
@@ -2096,7 +2092,7 @@ object FusionQueries {
       "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings",
       qsWhere = "vec_id < 128"),
 
-    // A24c / A42c: same relational replay as the literal batch forms,
+    // A24c / A42c: same relational replay as the 5-query batch entries,
     // wider query set
     "knn_ivfpq_batch_wide" -> ivfpqBatchOracleSql("vec_id < 128"),
     "knn_ivfpq_residual_batch_wide" -> ivfpqResidualBatchOracleSql("vec_id < 128"),
@@ -2688,7 +2684,7 @@ object FusionQueries {
        |WHERE rank <= 10""".stripMargin
 
   /** The BATCH IVF×PQ oracle, parameterized by the query-set predicate —
-    * the literal (A24b, 5 queries) and joined-wide (A24c, 128 queries)
+    * the 5-query (A24b) and 128-query (A24c) batch
     * entries replay the SAME relational pipeline: per-query probes,
     * union-label body encode, (q_id, label) membership join, per-query
     * ADC/shortlist/rerank window cuts. */
@@ -2737,7 +2733,7 @@ object FusionQueries {
        |WHERE rank <= 10""".stripMargin
 
   /** The BATCH residual-IVFPQ oracle, parameterized by the query-set
-    * predicate — shared by the literal (A42b) and joined-wide (A42c)
+    * predicate — shared by the 5-query (A42b) and 128-query (A42c)
     * entries: per-q integer probes, union-label residual body,
     * query-independent codebook/encode, the per-(q, cluster) ADC join
     * enforcing membership, per-q window cuts. */

@@ -180,16 +180,17 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("wide-batch PQ guards: over-cap at entry, duplicates named, absent ids refused") {
     import graft.operators.Pq
-    // over-cap refuses BEFORE any Spark work (emptyDataFrame would throw
-    // its own error on any action)
+    // an over-cap pass size refuses BEFORE any Spark work (emptyDataFrame
+    // would throw its own error on any action)
     val e1 = intercept[IllegalArgumentException] {
-      Pq.searchRerankBatchWide(spark.emptyDataFrame, qids = (0L until 4097L),
-        k = 3, numSub = 2, subDim = 8, numCodes = 8, shortlist = 10)
+      Pq.searchRerankBatch(spark.emptyDataFrame, qids = (0L until 8L),
+        k = 3, numSub = 2, subDim = 8, numCodes = 8, shortlist = 10,
+        cap = Pq.WideBatchCap + 1)
     }
     assert(e1.getMessage.contains("4097") && e1.getMessage.contains("shard"),
       e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
-      Pq.ivfpqResidualBatchWide(spark.emptyDataFrame, qids = Seq(1L, 2L, 1L),
+      Pq.ivfpqResidualBatch(spark.emptyDataFrame, qids = Seq(1L, 2L, 1L),
         k = 3, numSub = 2, subDim = 8, numCodes = 8, nProbe = 2, shortlist = 10)
     }
     assert(e2.getMessage.contains("duplicate") && e2.getMessage.contains("1"),
@@ -197,21 +198,35 @@ class EdgeCaseSpec extends SparkSpec {
     val emb = (0L until 40L).map(i =>
       (i, Array.tabulate(16)(d => (i * 16 + d).toFloat / 100))).toDF("vec_id", "embedding")
     val e3 = intercept[IllegalArgumentException] {
-      Pq.searchRerankBatchWide(emb, qids = Seq(0L, 999999L),
+      Pq.searchRerankBatch(emb, qids = Seq(0L, 999999L),
         k = 3, numSub = 2, subDim = 8, numCodes = 8, shortlist = 10)
     }
     assert(e3.getMessage.contains("999999"), e3.getMessage)
   }
 
-  test("ivfpqBatch refuses an over-cap query set at function entry") {
-    // the guard must fire before seededCodebook's collect pays a corpus
-    // job (r8 ADVICE) — an unresolvable frame proves no Spark work ran
-    val spark = this.spark
-    val bad = spark.emptyDataFrame // any action on this would throw its own error
-    val e = intercept[IllegalArgumentException] {
-      graft.operators.Pq.ivfpqBatch(bad, qids = (0L until 65L),
-        k = 3, numSub = 2, subDim = 8, numCodes = 8, nProbe = 2, shortlist = 10)
+  test("ivfpqBatch answers a 65-query file; each slice equals the single-query run") {
+    // 65 queries was the old literal form's refusal point; the one batch
+    // path serves any file size, and each query's rows must still equal
+    // the single-query composition (probe -> keep -> searchRerank)
+    import graft.operators.{Ivf, Pq}
+    import org.apache.spark.sql.functions.broadcast
+    val e = (0L until 120L).map(i =>
+      (i, (i % 4).toInt, Array.tabulate(16)(d => math.sin(i * 1.37 + d * 0.71).toFloat)))
+      .toDF("vec_id", "label", "embedding")
+    val batch = Pq.ivfpqBatch(e, qids = (0L until 65L), k = 3, numSub = 2,
+      subDim = 8, numCodes = 8, nProbe = 2, shortlist = 10).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(batch.map(_._1).distinct.sorted.toSeq === (0L until 65L))
+    val cent = Ivf.centroids(e)
+    for (qid <- 0 until 65) {
+      val qv = e.filter(col("vec_id") === qid).select(col("embedding").as("q_vec"))
+      val keep = e.join(broadcast(Ivf.probe(cent, qv, nProbe = 2)), "label").select("vec_id")
+      val single = Pq.searchRerank(e, qid = qid, k = 3, numSub = 2, subDim = 8,
+        numCodes = 8, shortlist = 10, keep = Some(keep))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val slice = batch.filter(_._1 == qid.toLong).sortBy(_._3)
+        .map(t => (t._2, t._4)).toSeq
+      assert(slice === single, s"q$qid: batch $slice vs single $single")
     }
-    assert(e.getMessage.contains("|Q|=65"), e.getMessage)
   }
 }

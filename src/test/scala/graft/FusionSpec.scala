@@ -203,7 +203,7 @@ class FusionSpec extends SparkSpec {
     // corpus row must get that row back at rank 1, distance 0
     val twin = e.filter(col("vec_id") === 0)
       .selectExpr("CAST(99L AS BIGINT) AS q_id", "embedding AS q_vec")
-    val res = Pq.searchRerankBatchWideExternal(e, twin, k = 3,
+    val res = Pq.searchRerankBatchExternal(e, twin, k = 3,
       numSub = 8, subDim = 8, numCodes = 64, shortlist = 100).collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(res.contains((0L, 1L, 0L)),
@@ -211,11 +211,11 @@ class FusionSpec extends SparkSpec {
     // guards: duplicate q_ids and an empty frame refuse loudly
     val dup = twin.union(twin)
     val e1 = intercept[IllegalArgumentException] {
-      Pq.searchRerankBatchWideExternal(e, dup, 3, 8, 8, 64, 100)
+      Pq.searchRerankBatchExternal(e, dup, 3, 8, 8, 64, 100)
     }
     assert(e1.getMessage.contains("duplicate"))
     val e2 = intercept[IllegalArgumentException] {
-      Pq.searchRerankBatchWideExternal(e, twin.filter(col("q_id") === -1L), 3, 8, 8, 64, 100)
+      Pq.searchRerankBatchExternal(e, twin.filter(col("q_id") === -1L), 3, 8, 8, 64, 100)
     }
     assert(e2.getMessage.contains("empty"))
   }
@@ -231,11 +231,11 @@ class FusionSpec extends SparkSpec {
       .selectExpr("vec_id div 2 AS q_id", "CAST(embedding AS ARRAY<DOUBLE>) AS vb")
     val queries = a.join(b, "q_id").selectExpr("q_id",
       "zip_with(va, vb, (x, y) -> CAST((x + y) * 0.5D AS FLOAT)) AS q_vec")
-    val sharded = Pq.searchRerankBatchShardedWideExternal(e, queries, k = 5,
+    val sharded = Pq.searchRerankBatchExternal(e, queries, k = 5,
       numSub = 8, subDim = 8, numCodes = 64, shortlist = 100, cap = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq.sorted
-    val whole = Pq.searchRerankBatchWideExternal(e, queries, k = 5,
+    val whole = Pq.searchRerankBatchExternal(e, queries, k = 5,
       numSub = 8, subDim = 8, numCodes = 64, shortlist = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq.sorted
@@ -245,17 +245,17 @@ class FusionSpec extends SparkSpec {
     val twin = e.filter(col("vec_id") === 0)
       .selectExpr("CAST(99L AS BIGINT) AS q_id", "embedding AS q_vec")
     val e1 = intercept[IllegalArgumentException] {
-      Pq.searchRerankBatchShardedWideExternal(e, twin.union(twin), 3,
+      Pq.searchRerankBatchExternal(e, twin.union(twin), 3,
         8, 8, 64, 100, cap = 1)
     }
     assert(e1.getMessage.contains("duplicate"))
     val e2 = intercept[IllegalArgumentException] {
-      Pq.searchRerankBatchShardedWideExternal(e,
+      Pq.searchRerankBatchExternal(e,
         twin.filter(col("q_id") === -1L), 3, 8, 8, 64, 100, cap = 3)
     }
     assert(e2.getMessage.contains("empty"))
     val e3 = intercept[IllegalArgumentException] {
-      Pq.searchRerankBatchShardedWideExternal(e, twin, 3, 8, 8, 64, 100, cap = 0)
+      Pq.searchRerankBatchExternal(e, twin, 3, 8, 8, 64, 100, cap = 0)
     }
     assert(e3.getMessage.contains("cap"))
   }
@@ -636,24 +636,24 @@ class FusionSpec extends SparkSpec {
     }
   }
 
-  test("searchRerankBatchWide honors a keep filter exactly like the literal batch") {
+  test("searchRerankBatch honors a keep filter at 70 queries exactly as at 5") {
     import graft.operators.Pq
     val e = Tables(spark, dir, "embeddings")
     val en = Tables(spark, dir, "documents")
       .filter(col("lang").isNotNull && col("lang") === "en")
       .select(col("doc_id").as("vec_id"))
-    val wide = Pq.searchRerankBatchWide(e, qids = (0L until 70L), k = 10,
+    val wide = Pq.searchRerankBatch(e, qids = (0L until 70L), k = 10,
       numSub = 8, subDim = 8, numCodes = 64, shortlist = 100,
       keep = Some(en)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(wide.map(_._1).distinct.sorted.toSeq === (0L until 70L),
-      "a 70-query filtered batch — past the literal form's 64 wall")
+      "a 70-query filtered batch — past the old literal form's 64 wall")
     val lit = q("hybrid_knn_pq_batch").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     for (qid <- 0 to 4) {
       val w = wide.filter(_._1 == qid.toLong).sortBy(_._3).toSeq
       val l = lit.filter(_._1 == qid.toLong).sortBy(_._3).toSeq
-      assert(w === l, s"q$qid: wide-keep $w vs literal-keep $l")
+      assert(w === l, s"q$qid: 70-query keep $w vs 5-query keep $l")
     }
   }
 
@@ -688,32 +688,32 @@ class FusionSpec extends SparkSpec {
     }
   }
 
-  test("searchRerankBatchShardedWide(cap=4) ≡ one wide pass; guards fire before work") {
+  test("searchRerankBatch(cap=4) ≡ one pass; guards fire before work") {
     import graft.operators.Pq
     val e = Tables(spark, dir, "embeddings")
     val qids = (0L until 10L)
     def sorted(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._3)).toSeq
-    val sharded = sorted(Pq.searchRerankBatchShardedWide(e, qids, k = 10,
+    val sharded = sorted(Pq.searchRerankBatch(e, qids, k = 10,
       numSub = 8, subDim = 8, numCodes = 64, shortlist = 100, cap = 4))
-    val wide = sorted(Pq.searchRerankBatchWide(e, qids, k = 10,
+    val wide = sorted(Pq.searchRerankBatch(e, qids, k = 10,
       numSub = 8, subDim = 8, numCodes = 64, shortlist = 100))
     assert(sharded === wide,
-      "3 shards of ≤4 queries must union to exactly the single wide pass")
+      "3 passes of ≤4 queries must union to exactly the single pass")
     // guards: cap bounds, empty file, cross-shard duplicates
     for (badCap <- Seq(0, Pq.WideBatchCap + 1)) {
       val ex = intercept[IllegalArgumentException] {
-        Pq.searchRerankBatchShardedWide(e, qids, 10, 8, 8, 64, 100,
+        Pq.searchRerankBatch(e, qids, 10, 8, 8, 64, 100,
           cap = badCap)
       }
       assert(ex.getMessage.contains("cap"), ex.getMessage)
     }
     assert(intercept[IllegalArgumentException] {
-      Pq.searchRerankBatchShardedWide(e, Seq.empty[Long], 10, 8, 8, 64, 100)
+      Pq.searchRerankBatch(e, Seq.empty[Long], 10, 8, 8, 64, 100)
     }.getMessage.contains("empty"))
     val dup = intercept[IllegalArgumentException] {
-      Pq.searchRerankBatchShardedWide(e, Seq(1L, 2L, 3L, 4L, 5L, 1L), 10,
+      Pq.searchRerankBatch(e, Seq(1L, 2L, 3L, 4L, 5L, 1L), 10,
         8, 8, 64, 100, cap = 4)
     }
     assert(dup.getMessage.contains("duplicate"),
@@ -735,32 +735,47 @@ class FusionSpec extends SparkSpec {
     def sorted(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._3)).toSeq
-    assert(sorted(Pq.searchRerankBatchShardedWide(e, qids, k = 5,
+    assert(sorted(Pq.searchRerankBatch(e, qids, k = 5,
       numSub = 8, subDim = 8, numCodes = 64, shortlist = 50,
       keep = Some(keep), cap = 2)) ===
-      sorted(Pq.searchRerankBatchWide(e, qids, k = 5, numSub = 8,
+      sorted(Pq.searchRerankBatch(e, qids, k = 5, numSub = 8,
         subDim = 8, numCodes = 64, shortlist = 50, keep = Some(keep))),
       "keep-filtered sharded union must equal the single filtered pass")
   }
 
-  test("ivfpq and residual sharded-wide forms ≡ their single wide pass") {
+  test("every batch entry point: cap 1, 3 and |Q| passes union to the same rows") {
+    // the one sharded joined-ADC path per algorithm: each q_id lands in
+    // exactly one pass and per-query funnels are independent, so the cap
+    // only changes how many passes run — never a row. cap = |Q| is the
+    // single pass; cap = 1 isolates every query in its own pass.
     import graft.operators.Pq
     val e = Tables(spark, dir, "embeddings")
-    val qids = (0L until 10L)
+    val qids = (0L until 6L)
+    val external = e.filter(col("vec_id") >= 100L && col("vec_id") < 106L)
+      .selectExpr("vec_id - 100 AS q_id",
+        "transform(embedding, x -> CAST(x * 0.5F AS FLOAT)) AS q_vec")
+    val entries: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "searchRerankBatch" -> (cap => Pq.searchRerankBatch(e, qids, k = 10,
+        numSub = 8, subDim = 8, numCodes = 64, shortlist = 100, cap = cap)),
+      "searchRerankBatchExternal" -> (cap => Pq.searchRerankBatchExternal(e,
+        external, k = 10, numSub = 8, subDim = 8, numCodes = 64,
+        shortlist = 100, cap = cap)),
+      "ivfpqBatch" -> (cap => Pq.ivfpqBatch(e, qids, k = 10, numSub = 8,
+        subDim = 8, numCodes = 64, nProbe = 2, shortlist = 100, cap = cap)),
+      "ivfpqResidualBatch" -> (cap => Pq.ivfpqResidualBatch(e, qids, k = 10,
+        numSub = 8, subDim = 8, numCodes = 16, nProbe = 2, shortlist = 100,
+        cap = cap)))
     def sorted(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._3)).toSeq
-    assert(sorted(Pq.ivfpqBatchShardedWide(e, qids, k = 10, numSub = 8,
-      subDim = 8, numCodes = 64, nProbe = 2, shortlist = 100, cap = 4)) ===
-      sorted(Pq.ivfpqBatchWide(e, qids, k = 10, numSub = 8, subDim = 8,
-        numCodes = 64, nProbe = 2, shortlist = 100)),
-      "sharded IVF×PQ must union to the single wide pass")
-    assert(sorted(Pq.ivfpqResidualBatchShardedWide(e, qids, k = 10,
-      numSub = 8, subDim = 8, numCodes = 16, nProbe = 2, shortlist = 100,
-      cap = 4)) ===
-      sorted(Pq.ivfpqResidualBatchWide(e, qids, k = 10, numSub = 8,
-        subDim = 8, numCodes = 16, nProbe = 2, shortlist = 100)),
-      "sharded residual IVF-PQ must union to the single wide pass")
+    for ((name, serve) <- entries) {
+      val one = sorted(serve(qids.size))
+      assert(one.map(_._1).distinct === qids && one.length === 60,
+        s"$name: every query answers with k rows in one pass")
+      for (cap <- Seq(1, 3))
+        assert(sorted(serve(cap)) === one,
+          s"$name: cap=$cap passes must union to the single pass")
+    }
   }
 
   test("cascade narrow-pack (at-scale) branch ≡ the full-pack batch") {

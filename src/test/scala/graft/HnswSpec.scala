@@ -487,6 +487,31 @@ class HnswSpec extends SparkSpec {
     intercept[IllegalArgumentException](engine.preFilterSearch(Map.empty, query, K))
   }
 
+  test("engines sharing a cached relation: only the last close unpersists it") {
+    import Serving._
+    // two engines over the same inputs share one cache entry; closing the
+    // first must leave the second serving from it (a premature unpersist
+    // left the second engine's prepared plans recomputing the join from
+    // lineage on every query), and the second close must free everything
+    val inputs = corpus.filter(col("vec_id") > 1)
+    val pred = MetaPredicate(Classes(1)._2.toSeq: _*)
+    val expected = rows(Knn.prefilterKnn(inputs.select("vec_id", "embedding"), meta, pred,
+      query, K, Knn.Cosine))
+    assertReleases {
+      val (_, cached) = held
+      val a = HybridSearchEngine(inputs, meta)
+      val b = HybridSearchEngine(inputs, meta)
+      assert(rows(a.preFilterSearch(Classes(1)._2, query, K)) == expected)
+      assert(rows(b.preFilterSearch(Classes(1)._2, query, K)) == expected)
+      assert(held._2 == cached + 1, "two engines over the same inputs hold one cache entry")
+      a.close()
+      assert(held._2 == cached + 1, "closing one engine uncached the other's relation")
+      for (_ <- 1 to 2)
+        assert(rows(b.preFilterSearch(Classes(1)._2, query, K)) == expected)
+      b.close()
+    }
+  }
+
   test("release unpersists an index's resident graphs") {
     import Serving._
     val p = TmpDirs.wiped("resident_spec_release")
