@@ -772,19 +772,6 @@ object Hnsw {
         }
     }, k)
 
-  /** Distributed ACORN-1: one predicate-aware graph walk per partition.
-    * `corpus` must expose (vec_id: long, embedding: array<float>,
-    * pass: boolean) — the metadata predicate is evaluated ONCE, relationally
-    * (join + filter pushdown territory), and shipped as a bit per row; the
-    * graph is built over ALL rows (that is ACORN's point: one
-    * filter-agnostic index serves every predicate) and only the traversal
-    * consults the bit. Per-partition survivors merge to the global top-k —
-    * ≤ P·k rows, the TakeOrdered shape, no corpus shuffle. */
-  /** `metaSearch <= 0` is the SATURATING sentinel: budget, beam, and the
-    * largeK return cut all widen to each partition's size, so the walk
-    * provably recovers every reachable passing node at ANY sf — the
-    * setting the oracle-replayed driver entries use. A positive
-    * metaSearch is the reference's recall/cost knob. */
   /** The whole (budget × twoHop) GRID of filtered walks in ONE pass —
     * [[searchFilteredPerPartition]] amortized over a settings sweep (the
     * A51 recall-curve entry: 5 budgets × 2 flags would otherwise rebuild
@@ -828,6 +815,20 @@ object Hnsw {
         col("hit.score").as("score"))
   }
 
+  /** Distributed ACORN-1: one predicate-aware graph walk per partition.
+    * `corpus` must expose (vec_id: long, embedding: array<float>,
+    * pass: boolean) — the metadata predicate is evaluated ONCE, relationally
+    * (join + filter pushdown territory), and shipped as a bit per row; the
+    * graph is built over ALL rows (that is ACORN's point: one
+    * filter-agnostic index serves every predicate) and only the traversal
+    * consults the bit. Per-partition survivors merge to the global top-k —
+    * ≤ P·k rows, the TakeOrdered shape, no corpus shuffle.
+    *
+    * `metaSearch <= 0` is the SATURATING sentinel: budget, beam, and the
+    * largeK return cut all widen to each partition's size, so the walk
+    * provably recovers every reachable passing node at ANY sf — the
+    * setting the oracle-replayed entries use. A positive
+    * metaSearch is the reference's recall/cost knob. */
   def searchFilteredPerPartition(corpus: DataFrame, query: Array[Float], k: Int,
                                  metaSearch: Int, m: Int = 16, efConstruction: Int = 64,
                                  ef: Int = 200, largeK: Int = 200,

@@ -35,9 +35,7 @@ object AnalyticsQueries {
 
   private val EventTypes = Seq("click", "view", "purchase", "signup", "error")
 
-  /** C64/C65: KMV sketch size — K smallest distinct hashes per group;
-    * standard error ≈ 1/√K ≈ 12.5% at 64, enough for the est-vs-exact
-    * report while the per-group synopsis stays broadcast-trivial. */
+  /** C64/C65: KMV sketch size. */
   private val KmvK = 64
 
   /** C65 pair-fan-out cap (r7 verdict "wrong" #3): pairwise Jaccard over D
@@ -50,18 +48,11 @@ object AnalyticsQueries {
     * join. */
   private[graft] val KmvPairDimCap = 64
 
-  /** The C65 pair expansion over a (event_type, hs, n_sk) sketch frame,
-    * behind the cardinality guard — split out so the guard is spec-testable
-    * on synthetic over-cap frames (AnalyticsSpec). */
+  /** The C65 pair expansion over a (event_type, hs, n_sk) sketch frame. */
   private[graft] def kmvPairwiseJaccard(sk: DataFrame): DataFrame = {
-    // materialize the D-row sketch frame ONCE: the guard count, and both
-    // sides of the pair self-join below, all read the materialized rows —
-    // without this the sketch aggregation would run three times (guard +
-    // two join sides), an extra corpus scan per run (r8 review finding)
+    // materialize the D-row sketch frame ONCE
     val skM = Dedup.materialize(sk)
-    // counted via limit(cap+1): the guard learns "over the cap", not the
-    // real cardinality — the message must not claim a measurement it
-    // didn't make (r8 ADVICE)
+    // counted via limit(cap+1): the guard learns "over the cap", not the real cardinality
     val d = skM.limit(KmvPairDimCap + 1).count()
     require(d <= KmvPairDimCap,
       s"kmv_jaccard_est: more than KmvPairDimCap=$KmvPairDimCap sketch groups " +
@@ -78,25 +69,10 @@ object AnalyticsQueries {
         "(n_shared * 1000000) div n_comb AS j_est_ppm")
   }
 
-  /** HLL precision: p=8 → m=256 buckets; hash is the shared 60-bit md5, so
-    * the bucket takes 8 bits and the rho word w the remaining 52 (rho ∈
-    * [1, 53], with empty-word rho = 53). alpha_256 = 0.7213/(1+1.079/256),
-    * fixed here as the ×10⁶ integer constant both dialects embed.
-    *
-    * This is the RAW estimator: the classical small-range linear-counting
-    * correction (m·ln(m/V)) is deliberately omitted because ln() is libm-
-    * dependent and would break bit-exact cross-engine comparison. Below
-    * ~2.5m distincts per group the estimate is biased high — acceptable
-    * for the 100 TB use case (massive cardinalities), asserted in-regime
-    * by the spec. */
+  /** HLL precision: p=8 → m=256 buckets. */
   private val HllAlphaScaled = graft.operators.Hll.AlphaScaled
 
-  /** C69/C69b shared body. `auditExact = true` is the VALIDATION shape:
-    * exact distinct counts ride along per rollup level (est-vs-exact
-    * audit) — corpus-sized distinct sides a 100 TB run cannot afford.
-    * `auditExact = false` is the PRODUCTION shape: one corpus scan to the
-    * ≤G·256-row sketch table, every coarser level a register-max merge
-    * over sketch rows, nothing corpus-sized after the scan. */
+  /** C69/C69b shared body. */
   private def hllRollup(s: SparkSession, dir: String, auditExact: Boolean): DataFrame = {
     import graft.operators.Hll
     val d = Tables(s, dir, "documents")
@@ -125,10 +101,7 @@ object AnalyticsQueries {
     }
   }
 
-  /** C67/C67b shared body. The audit toggle drops the exact per-column
-    * distinct COUNT; the distinct-by-hash feeding KMV stays (k-minimum-
-    * values is defined over the distinct hash set — duplicates would
-    * double-enter the heap), and the scan aggregates are one pass. */
+  /** C67/C67b shared body. */
   private def profileColumnsQ(s: SparkSession, dir: String, auditExact: Boolean): DataFrame = {
     val u = Tables(s, dir, "orders").selectExpr(
       """stack(4,
@@ -161,8 +134,7 @@ object AnalyticsQueries {
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // C21: as-of join — for each click, the user's most recent
-    // prior-or-simultaneous purchase (point-in-time correctness)
+    // C21: as-of join
     "events_asof" -> ((s, dir) => {
       val ev = events(s, dir)
       val purch = ev.filter(col("event_type") === "purchase")
@@ -200,10 +172,7 @@ object AnalyticsQueries {
         .select(col("pri"), col("cents").as("median_cents"))
     }),
 
-    // C33: correlated-subquery shape ("rows above their group's average",
-    // TPC-H Q17 family) decorrelated the scale-right way: the per-group
-    // aggregate is a tiny broadcast side, the fact table is scanned once —
-    // never a per-row subquery. Integer-cents avg keeps both engines exact.
+    // C33: correlated-subquery shape
     "above_avg_orders" -> ((s, dir) => {
       val o = Tables(s, dir, "orders").selectExpr("o_orderkey",
         "o_orderpriority AS pri", "CAST(floor(o_totalprice * 100) AS BIGINT) AS cents")
@@ -241,14 +210,7 @@ object AnalyticsQueries {
         .agg(countDistinct("user_id").as("n_users"))
     }),
 
-    // C30: mergeable equi-width histogram quantile sketch (the quantile
-    // sibling of the HLL sketch): 256 integer bins over global (mn, mx)
-    // calibration (broadcast model state, like sq8's), so ONLY the ≤256
-    // (group, bin, count) sketch rows cross the shuffle no matter the
-    // input size; count-merge is associative (map-side partials). p50/90/99
-    // read off the cumulative sketch — windows run over ≤256 rows/group.
-    // All-integer (bin = (cents−mn)·256 div span; estimate = bin upper
-    // edge), so both engines agree bit-exactly.
+    // C30: mergeable equi-width histogram quantile sketch
     "approx_quantile_hist" -> ((s, dir) => {
       val c = Tables(s, dir, "orders").selectExpr("o_orderpriority AS pri",
         "CAST(floor(o_totalprice * 100) AS BIGINT) AS cents")
@@ -266,20 +228,13 @@ object AnalyticsQueries {
           min(when(col("cum") * 100 >= col("n") * 99, col("bin"))).as("b99"))
         .crossJoin(broadcast(st))
         // bin upper edge, clamped to the bin's lower edge so narrow spans
-        // (span < bins) can never report a value below the bin itself
         .selectExpr("pri", "n",
           "mn + greatest(((b50 + 1) * (mx - mn + 1)) div 256 - 1, (b50 * (mx - mn + 1)) div 256) AS p50_cents",
           "mn + greatest(((b90 + 1) * (mx - mn + 1)) div 256 - 1, (b90 * (mx - mn + 1)) div 256) AS p90_cents",
           "mn + greatest(((b99 + 1) * (mx - mn + 1)) div 256 - 1, (b99 * (mx - mn + 1)) div 256) AS p99_cents")
     }),
 
-    // C29: ordered funnel — users reaching view → later click → later
-    // purchase, with per-stage survivor counts. Each stage is a
-    // user_id-keyed min aggregate joined to the previous stage's
-    // timestamps: three co-keyed shuffles (same partitioning reused), no
-    // windows over the full stream, and stage tables shrink monotonically.
-    // Timestamps compare as unix micros on both sides (the parquet ts is
-    // nanos; micros is the shared truncation).
+    // C29: ordered funnel
     "events_funnel" -> ((s, dir) => {
       val ev = events(s, dir).select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
@@ -294,23 +249,13 @@ object AnalyticsQueries {
         .union(p.agg(count(lit(1)).as("n_users")).select(lit("3_purchase").as("stage"), col("n_users")))
     }),
 
-    // C28: the Salting operator driver-verified end-to-end — two-phase
-    // salted aggregation over a hot key (event_type: 5 values across the
-    // whole corpus, the power-law shape that melts a direct groupBy at
-    // 100 TB). count/sum are salt-invariant, so the final table equals the
-    // direct aggregate the oracle computes; integer cents keep the sum fp-free.
+    // C28: the Salting operator, oracle-verified end-to-end
     "salted_agg" -> ((s, dir) =>
       graft.operators.Salting.saltedCounts(events(s, dir), col("event_type"),
           salts = 16, valueCol = Some(expr("CAST(floor(value * 100) AS BIGINT)")))
         .select(col("k"), col("n"), col("total"))),
 
-    // C37: the salted JOIN driver-verified — event_type has 5 values across
-    // the whole corpus, the power-law shape where a sort-merge join melts:
-    // every hot key lands on one reducer. `Salting.saltedJoin` spreads each
-    // key over 16 salt sub-keys (small side replicated ×16), and the kept
-    // salt is REUSED for the two-phase final aggregation — one salting pays
-    // for both the join and the agg. count/sum are salt-invariant, so the
-    // result equals the direct join + group-by the oracle computes.
+    // C37: the salted JOIN, oracle-verified
     "salted_join" -> ((s, dir) => {
       val ev = events(s, dir).selectExpr("event_type",
         "CAST(floor(value * 100) AS BIGINT) AS cents")
@@ -324,13 +269,7 @@ object AnalyticsQueries {
         .agg(sum("pc").as("n"), sum("pw").as("weighted_cents"))
     }),
 
-    // C38: time-series gap filling — each user's daily activity series with
-    // missing days zero-filled via sequence + explode (the generate_series
-    // shape). The explode factor is bounded by the per-user day span (the
-    // events corpus spans one month; an unbounded-span source would cap the
-    // span first), and the fill join is co-partitioned on (user_id, d) —
-    // the daily aggregate's own key — so the fill costs one extra shuffle
-    // of the tiny span table, never a second pass over raw events.
+    // C38: time-series gap filling
     "events_gap_fill" -> ((s, dir) => {
       val daily = events(s, dir)
         .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("d"))
@@ -341,15 +280,7 @@ object AnalyticsQueries {
         .select(col("user_id"), col("d"), coalesce(col("n"), lit(0L)).as("n"))
     }),
 
-    // C46: snapshot MERGE (upsert) — the MERGE INTO shape in stock Spark:
-    // a changes batch (docs 350–449, the "new crawl") merges into the
-    // current snapshot (docs < 400) by key; matched keys take the change
-    // row (SCD-1 overwrite), unmatched changes insert, unmatched current
-    // rows persist. ONE full-outer join on the key decides all three
-    // classes — no per-row lookups, no second pass; at 100 TB both sides
-    // bucket by the merge key (C36's layout) so the join is shuffle-free.
-    // Output: per-class counts + content checksum of the merged snapshot,
-    // so the oracle verifies the merge RESULT, not just the counts.
+    // C46: snapshot MERGE (upsert)
     "snapshot_merge" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
       val current = docs.filter(col("doc_id") < 400)
@@ -370,13 +301,7 @@ object AnalyticsQueries {
           "concat(CAST(doc_id AS STRING), '|', coalesce(text, ''))")} % 1000000007")).as("checksum"))
     }),
 
-    // C45: LOCF imputation — repair a sparse measure by carrying each
-    // user's last observed value forward in event order (sensor/price
-    // series repair; the imputation twin of the as-of join's carry-forward
-    // window). The measure is REPORTED only on purchase events (a checkout
-    // amount); every other event of the user reads the last reported one
-    // via last(ignoreNulls) over an unbounded-preceding row frame. One
-    // shuffle on user_id, sorted-run local — no self-join, no per-row probe.
+    // C45: LOCF imputation
     "events_impute_locf" -> ((s, dir) => {
       val ev = events(s, dir).selectExpr("user_id", "event_id",
         "unix_micros(ts) AS us",
@@ -388,29 +313,10 @@ object AnalyticsQueries {
         .select("event_id", "user_id", "k", "k_filled")
     }),
 
-    // C44: robust outlier detection — median-absolute-deviation flagging
-    // per event_type (the data-quality gate an ingest pipeline runs before
-    // training): med and MAD are lower medians of integer cents, outlier =
-    // dev > 3·MAD. Mean/stddev would be dragged by the outliers
-    // themselves; medians are the robust form, and all-integer arithmetic
-    // keeps both engines hash-exact.
-    //
-    // HISTOGRAM medians (r6 rewrite): the base table is scanned ONCE into
-    // a (event_type, cents) → count histogram — a map-side-combined
-    // shuffle keyed by VALUE, so the 5-key skew of a per-type window sort
-    // never exists (the old shape sorted 20k rows on each of 5 cores,
-    // twice). The lower median falls out of cumulative counts on the
-    // ~half-size histogram (med = the value whose cumulative range covers
-    // rank (n+1) div 2 — identical to the row-sorted definition, since
-    // the median is a property of the value multiset), and the DEVIATION
-    // histogram derives from the cents histogram arithmetically — the
-    // base table is never rescanned. At 100 TB this is the exact-median
-    // shape that survives: shuffle |distinct values| rows, not |rows|.
+    // C44: robust outlier detection
     "events_anomaly_mad" -> ((s, dir) => {
-      // eagerly materialized: the histogram feeds the med window, the
-      // deviation histogram AND (through it) the mad window + final agg —
-      // without the checkpoint each consumer re-expands the subtree and
-      // the base table is scanned 5× (PlanAuditSpec pins ≤1 live scan)
+      // eagerly materialized: the histogram feeds three consumers, and without the checkpoint
+      // each re-expands the subtree (PlanAuditSpec pins ≤1 live base-table scan)
       val hist = events(s, dir)
         .selectExpr("event_type", "CAST(floor(value * 100) AS BIGINT) AS cents")
         .groupBy("event_type", "cents").agg(count(lit(1)).as("cnt"))
@@ -425,11 +331,8 @@ object AnalyticsQueries {
           .select(col("event_type"), col(valCol).as(out))
       }
       val med = lowerMedianHist(hist, "cents", "med")
-      // NOT checkpointed (r6 verdict wrong #1): the mad window and the
-      // final agg each re-derive this subtree, but it reads the
-      // CHECKPOINTED histogram — |distinct cents| rows of arithmetic, no
-      // base rescan — so a second eager materialization buys nothing and
-      // costs a fixed job launch that dominated the entry at sf0.1
+      // NOT checkpointed: it reads the checkpointed histogram, so a second eager
+      // materialization would only add a job launch
       val devHist = hist.join(broadcast(med), "event_type")
         .withColumn("dev", abs(col("cents") - col("med")))
         .groupBy("event_type", "dev").agg(sum("cnt").as("cnt"))
@@ -460,13 +363,7 @@ object AnalyticsQueries {
         .select("event_id", "user_id", "n_hour", "cents_hour")
     }),
 
-    // C40: broadcast interval (range) join — events matched against the
-    // corpus's 3 busiest hours widened to OVERLAPPING [h−30 min, h+90 min)
-    // windows. A range join has no equi-key, so the scale shape is a
-    // broadcast nested-loop against a tiny derived interval table: the big
-    // side stays one narrow scan (no shuffle before the 3-row aggregate).
-    // Overlap is deliberate — an event near a boundary matches 2 windows,
-    // which a date_trunc equi-join cannot express.
+    // C40: broadcast interval (range) join
     "events_interval_join" -> ((s, dir) => {
       val ev = events(s, dir)
       val busy = ev.groupBy(date_trunc("hour", col("ts")).as("h"))
@@ -479,10 +376,7 @@ object AnalyticsQueries {
         .agg(count(lit(1)).as("n_events"), countDistinct("user_id").as("n_users"))
     }),
 
-    // C41: unpivot (melt) — the wide pivoted table reshaped back to long
-    // form: wide↔long round-trips in ONE exchange (the pivot's); unpivot
-    // itself is a narrow generator, and zero-count cells drop to restore
-    // the sparse long form exactly
+    // C41: unpivot (melt)
     "events_unpivot" -> ((s, dir) => {
       val wide = events(s, dir).groupBy("user_id")
         .pivot("event_type", EventTypes).agg(count(lit(1)))
@@ -492,8 +386,7 @@ object AnalyticsQueries {
         .filter(col("n") > 0)
     }),
 
-    // C24: deterministic HyperLogLog (p=8) distinct estimate vs exact —
-    // the shared operators.Hll fragments also back the streaming sketch
+    // C24: deterministic HyperLogLog (p=8) distinct estimate vs exact
     "approx_distinct_hll" -> ((s, dir) => {
       val ev = events(s, dir)
       val sketch = graft.operators.Hll.sketchAgg(
@@ -506,41 +399,13 @@ object AnalyticsQueries {
         .select("event_type", "est", "n_exact")
     }),
 
-    // C69: sketch-merge ROLLUP — the mergeability of C24's HLL rows made
-    // load-bearing (Flajolet et al. 2007 §6: register-wise max IS the
-    // union sketch): ONE corpus scan builds the per-(source, lang) sketch
-    // table; the per-source and global distinct estimates then derive by
-    // merging those ≤256-row sketches (max-of-max per bucket), never
-    // rescanning. This is the 100 TB operating pattern for cardinality
-    // cubes: COUNT(DISTINCT) is not additive across grouping sets — a
-    // ROLLUP of exact distincts rescans per level or holds per-cell value
-    // sets — but sketch rows are, so every coarser level costs an
-    // aggregate over G·256 rows. Exact counts ride along per level (the
-    // est-vs-exact audit); merged-vs-direct equality is spec-pinned.
+    // C69: sketch-merge ROLLUP
     "hll_rollup_merge" -> ((s, dir) => hllRollup(s, dir, auditExact = true)),
 
-    // C69b: the PRODUCTION shape of C69 (r10 verdict "what's wrong" #2) —
-    // the audited entry carries a corpus-sized exact distinct alongside
-    // the sketches (the est-vs-exact audit a validation run wants); at
-    // 100 TB you keep only the sketch, and this entry IS that path in
-    // code: auditExact = false never builds the distinct triple — one
-    // corpus scan to the ≤G·256-row sketch table, then every rollup level
-    // is a register-max merge over sketch rows. Spec pins est-only ≡ the
-    // audited entry minus its audit column, row for row.
+    // C69b: the PRODUCTION shape of C69
     "hll_rollup_est" -> ((s, dir) => hllRollup(s, dir, auditExact = false)),
 
-    // C64: KMV (k-minimum-values) distinct sketch — the ORDER-STATISTICS
-    // member of the sketch family (Bar-Yossef et al. 2002; Beyer et al.
-    // 2007): per event type, keep the K smallest distinct 60-bit user
-    // hashes; the K-th smallest U_K estimates the distinct-user count as
-    // (K−1)·2⁶⁰/U_K. Unlike HLL (C24) the KMV synopsis supports SET
-    // OPERATIONS (C65 builds audience-overlap Jaccard from these same
-    // sketches). Tri-scale exercises BOTH branches: 15 users/type at
-    // sf0.001 (n_sk < K exact path), 150/1500 above (estimator path).
-    // Shape at 100 TB: one distinct shuffle on (group, hash), then the
-    // TopKHits k-bounded heap partial-aggregates map-side — ≤K rows per
-    // group cross the second shuffle. Estimator arithmetic: one int→double
-    // conversion + one division + floor, identical IEEE ops both engines.
+    // C64: KMV (k-minimum-values) distinct sketch
     "kmv_distinct_est" -> ((s, dir) => {
       val h = events(s, dir)
         .selectExpr("event_type",
@@ -559,15 +424,7 @@ object AnalyticsQueries {
           "n_exact")
     }),
 
-    // C65: KMV set-operation estimate — pairwise audience-overlap Jaccard
-    // between event types from the C64 sketches (Beyer et al. 2007 §4):
-    // the combined sketch is the K smallest of the union;
-    // ρ = |combined ∩ A_sk ∩ B_sk| / |combined| estimates J(A,B). The
-    // whole pair computation runs on ≤K-element arrays per group (bounded
-    // — event_type is a dimension), with the exact pairwise Jaccard joined
-    // alongside (the dedup_minhash_est est-vs-exact reporting pattern).
-    // At 100 TB the sketches are the only thing that moves — the hash
-    // scan never pairs.
+    // C65: KMV set-operation estimate
     "kmv_jaccard_est" -> ((s, dir) => {
       // (r18: a cms_topk_est-style scan spread was A/B-measured here and
       // REJECTED — 1.3 -> 2.1 s: `h` feeds FOUR consumer subtrees, each of
@@ -596,37 +453,13 @@ object AnalyticsQueries {
           "(ni2 * 1000000) div (na + nb - ni2) AS j_exact_ppm")
     }),
 
-    // C67: one-pass COLUMN PROFILER — the first thing any pipeline runs
-    // against a new 100 TB table (count / nulls / min / max / distinct per
-    // column) before choosing keys, partitioning, or filters. Columns
-    // unpivot via a narrow stack (4× the rows, still one scan), then TWO
-    // key-partitioned aggregates: per-column counts+extrema, and a KMV
-    // distinct sketch (C64's estimator, k smallest md5-60 hashes) over the
-    // deduped (col, val) stream. Exact distinct rides along for the
-    // est-vs-exact report (the C64 convention; at 100 TB you keep only the
-    // sketch). Profiled columns are the exactly-stringifiable ones
-    // (bigint/varchar) so both engines compare values bytewise.
+    // C67: one-pass COLUMN PROFILER
     "profile_columns" -> ((s, dir) => profileColumnsQ(s, dir, auditExact = true)),
 
-    // C67b: the PRODUCTION shape of C67 (r10 verdict "what's wrong" #2) —
-    // auditExact = false drops the exact per-column distinct COUNT (the
-    // n_distinct audit); what remains is the scan aggregates (n, n_null,
-    // min, max — one pass) and the KMV estimate. The distinct-by-hash
-    // feeding KMV stays: k-minimum-values is defined over the distinct
-    // hash SET (duplicates would double-enter the heap), and the map-side
-    // partial distinct bounds what shuffles. Spec pins est-only ≡ the
-    // audited entry minus n_distinct, row for row.
+    // C67b: the PRODUCTION shape of C67
     "profile_columns_est" -> ((s, dir) => profileColumnsQ(s, dir, auditExact = false)),
 
-    // C68: per-key SKEW PROFILE — the diagnostic a planner reads BEFORE
-    // reaching for C28/C37's salting (salt width = f(max/p99 group size)):
-    // exact group-size quantiles from the HISTOGRAM OF GROUP SIZES (the
-    // (size, freq) table is tiny at any corpus scale — one row per
-    // distinct size — so the cumulative window is bounded), max, and the
-    // top-10-keys' row share in ppm. One (key)-shuffle for the counts;
-    // everything downstream operates on K key-rows, never the stream.
-    // Quantile convention: smallest size with cumulative keys ≥
-    // ceil(K·q/100), all-integer both sides.
+    // C68: per-key SKEW PROFILE
     "key_skew_profile" -> ((s, dir) => {
       val c = events(s, dir).groupBy("user_id").agg(count(lit(1)).as("n"))
         .localCheckpoint(true)
@@ -647,11 +480,7 @@ object AnalyticsQueries {
           "(CAST(s10 AS BIGINT) * 1000000) div CAST(n_rows AS BIGINT) AS top10_ppm")
     }),
 
-    // C48: session path mining — per session, the ordered event-type path
-    // (the clickstream "top journeys" report). Sessions reuse C6's gap
-    // logic; the path is built by an ORDER-DETERMINISTIC in-group sort
-    // ((ts, event_id) is unique) so both engines agg the same string.
-    // One user-keyed shuffle for the windows, one path-keyed aggregate.
+    // C48: session path mining
     "events_path_topk" -> ((s, dir) => {
       val byUser = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
       val cum = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
@@ -670,15 +499,7 @@ object AnalyticsQueries {
         .orderBy(col("n").desc, col("path").asc).limit(10)
     }),
 
-    // C49: Bloom-pruned join — the 100 TB semi-join pruning pattern: a
-    // 4096-bit / 3-hash Bloom filter over the FILTERED dim keys is built
-    // by a tiny Spark job (so the bits come from the same xxhash64 the
-    // probe side uses) and compiled into a narrow bit-test predicate on
-    // the fact scan. Non-member facts drop BEFORE the join shuffle — at
-    // scale that is the difference between shuffling the whole fact table
-    // and shuffling the ~selectivity fraction that can match. Bloom FPs
-    // are harmless: the exact join follows, so the result EQUALS the
-    // plain join (which is exactly what the oracle runs).
+    // C49: Bloom-pruned join
     "bloom_prune_join" -> ((s, dir) => {
       val m = 4096
       val seeds = Seq(1, 2, 3)
@@ -700,14 +521,7 @@ object AnalyticsQueries {
           graft.functions.scaled(sum("o_totalprice"), 0).as("total"))
     }),
 
-    // C50: count-min sketch heavy-hitter estimation — the FREQUENCY member
-    // of the sketch family (HLL = distinct, histogram = quantiles, CMS =
-    // counts): 4 seeded hash rows × 256 cells of integer counters, fully
-    // mergeable (cells sum) and deterministic (shared md5 hash60, so the
-    // oracle replays it). The entry emits the true top-5 users next to
-    // their CMS estimate (min over the 4 rows' cells) — est ≥ true by
-    // construction; at 100 TB the 1024-cell sketch replaces a full
-    // per-key count for "is anything hot" monitoring.
+    // C50: count-min sketch heavy-hitter estimation
     "cms_topk_est" -> ((s, dir) => {
       // r18: the 4x-per-event md5 cell hashing measured as a 1.1 s
       // single-task stage over the one-row-group events scan — spread it
@@ -728,15 +542,7 @@ object AnalyticsQueries {
         .groupBy("user_id", "n_true").agg(min("cnt").as("n_est"))
     }),
 
-    // C52: SCD-2 (slowly-changing-dimension type 2) history — the
-    // HISTORY-KEEPING sibling of C46's SCD-1 merge: an updates batch
-    // against the current dimension closes changed rows (valid_to = batch
-    // day), opens new versions, passes unchanged rows through, and opens
-    // brand-new keys. One full-outer join on the key classifies
-    // everything; at 100 TB both sides bucket by the key (C36) making it
-    // shuffle-free. Updates are derived deterministically in-query
-    // (keys %7: balance restated; %13: new key) so the oracle replays
-    // them; validity bounds are integer days.
+    // C52: SCD-2 (slowly-changing-dimension type 2) history
     "scd2_history" -> ((s, dir) => {
       val cur = Tables(s, dir, "customer").selectExpr("c_custkey AS k",
         "c_mktsegment AS seg", "CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents")
@@ -765,13 +571,7 @@ object AnalyticsQueries {
           "h.s AS seg", "h.b AS bal_cents")
     }),
 
-    // C53: incremental aggregate maintenance — the partial-agg MERGE that
-    // keeps a 100 TB rollup fresh without rescanning history: the
-    // pre-cutoff state (a tiny (group, n, sum) table — in production a
-    // stored artifact) merges with the new partition's delta partials by
-    // plain associative addition. Only the delta scans; the result is
-    // proven equal to the full recompute by the oracle (which computes it
-    // directly), and n_delta makes the increment itself visible.
+    // C53: incremental aggregate maintenance
     "agg_incremental" -> ((s, dir) => {
       val ev = events(s, dir).selectExpr("event_type",
         "unix_micros(ts) div 86400000000 AS d", "CAST(floor(value * 100) AS BIGINT) AS cents")
@@ -820,15 +620,7 @@ object AnalyticsQueries {
         .filter(!(col("n_a") <=> col("n_b")) || !(col("chk_a") <=> col("chk_b")))
     }),
 
-    // C51: bucketed big-big interval join — attribution (clicks within the
-    // hour before each purchase) as an EQUI-join: clicks key by their hour
-    // bucket, purchases probe (bucket-1, bucket), residual time predicate
-    // after the match. A raw inequality join between two big sides plans
-    // as a per-user cartesian (or BNLJ); bucketing turns it into a
-    // SortMergeJoin on (user, bucket) whose per-key fan-out is bounded by
-    // the bucket width — the standard range-join decomposition
-    // (plan-audited: no cartesian/BNLJ). C40 is the broadcast-tiny-side
-    // complement; this is the shape when NEITHER side fits.
+    // C51: bucketed big-big interval join
     "events_attribution_bucketed" -> ((s, dir) => {
       val ev = events(s, dir)
       val clicks = ev.filter(col("event_type") === "click")
@@ -847,14 +639,7 @@ object AnalyticsQueries {
           col("min_click"))
     }),
 
-    // C55: OHLC resampling bars — the time-series downsampling shape
-    // (metrics rollup, market bars): per (event_type, hour), first/last/
-    // min/max of the value in integer cents. First/last are ARGMIN/ARGMAX
-    // by the unique (ts, event_id) order, resolved with one row_number
-    // window; the follow-on aggregate groups on the window's own partition
-    // keys, so the hash partitioning is REUSED — one exchange total. At
-    // 100 TB this is a narrow scan + one shuffle keyed by (type, hour);
-    // bar count is bounded by the time span, not the event volume.
+    // C55: OHLC resampling bars
     "events_ohlc" -> ((s, dir) => {
       val ev = events(s, dir).filter(col("value").isNotNull)
         .select(col("event_type"), expr("unix_micros(ts) div 3600000000").as("h"),
@@ -871,13 +656,7 @@ object AnalyticsQueries {
           count(lit(1)).as("n"), sum("cents").as("vol_cents"))
     }),
 
-    // C56: first-order Markov transition matrix over each user's event
-    // stream — the one-hop summary complementing C48's full session paths
-    // (next-event prediction, UX flow analysis). One shuffle on user_id
-    // for the lag window; the pair aggregate reduces to |types|² rows, so
-    // the probability normalization windows over a tiny frame. Integer
-    // probabilities: p_scaled = n·10⁴ floor-div row total (both operands
-    // non-negative, so Spark div ≡ DuckDB //).
+    // C56: first-order Markov transition matrix over each user's event stream
     "events_transitions" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
       events(s, dir)
@@ -889,56 +668,30 @@ object AnalyticsQueries {
         .withColumn("p_scaled", expr("(n * 10000) div sum(n) OVER (PARTITION BY prev_type)"))
     }),
 
-    // C57: PageRank over the part co-purchase graph — 5 fixed power
-    // iterations of integer-exact rank flow (see operators.Graph for the
-    // zero-driver-action loop contract). Edges: parts sharing an order;
-    // TPC-H orders hold ≤ 7 lineitems, so the self-join fan-out is bounded
-    // per key and the edge build is linear in the fact table. The graph is
-    // symmetric by construction (a,b) ⇔ (b,a) — no dangling mass.
+    // C57: PageRank over the part co-purchase graph
     "parts_pagerank" -> ((s, dir) =>
-      // symmetric edges ⇒ dst covers every node: the left-join completion
-      // is skipped (one fewer join + rank-table shuffle per iteration)
+      // symmetric edges ⇒ dst covers every node
       Graph.pageRank(coPurchaseEdges(s, dir), iters = 5, symmetric = true)),
 
-    // C61: triangle counting over the same co-purchase graph — the local
-    // cluster-density member of the graph family (C57 ranks global
-    // influence, B18 finds components, this measures how tightly each
-    // part's neighborhood interlocks: parts whose co-purchase partners are
-    // ALSO bought together, i.e. genuine bundles vs hub coincidence).
-    // Degree-oriented wedge join (see operators.Graph.triangleCounts for
-    // the O(m^{3/2}) bound); top-15 parts under the total
-    // (n_tri desc, node) order so both engines cut identically.
+    // C61: triangle counting over the same co-purchase graph
     "parts_triangles" -> ((s, dir) =>
       Graph.triangleCounts(coPurchaseEdges(s, dir))
         .orderBy(col("n_tri").desc, col("node").asc)
         .limit(15))
   )
 
-  /** Distinct symmetric part co-purchase pairs — parts sharing an order.
-    * TPC-H orders hold ≤ 7 lineitems, so the self-join fan-out is bounded
-    * per key and the edge build is linear in the fact table; (a,b) ⇔
-    * (b,a) by construction (the join predicate is symmetric). */
+  /** Distinct symmetric part co-purchase pairs. */
   private def coPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
     val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_partkey")
-    // canonical HALF edges (src < dst) through the distinct — the
-    // symmetric closure of the distinct half equals the distinct of the
-    // symmetric set, and the self-join + distinct shuffle carry half the
-    // rows; the mirror union is a narrow map
+    // canonical HALF edges (src < dst) through the distinct
     val half = li.as("a").join(li.as("b"),
         col("a.l_orderkey") === col("b.l_orderkey") &&
           col("a.l_partkey") < col("b.l_partkey"))
       .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
       .distinct()
-      // both union branches AND both consumers (degree pass + orientation
-      // pass in triangles; rank loop in pagerank) re-scan the half set —
-      // cache it (2 longs × |E|/2, ~20 MB at sf0.1) or the fact self-join
-      // re-runs once per branch per scan
+      // both union branches AND both consumers
       .cache()
-    // cache the MIRRORED set too (r5 verdict #2: pagerank regressed when
-    // its three setup scans — outdeg, edge-join, node-distinct — became
-    // union-of-cached-half scans, each reading 2× the partitions): the
-    // full set materializes once from the half cache (narrow), and every
-    // consumer reads one compact cached relation. ~40 MB at sf0.1.
+    // cache the MIRRORED set too
     half.union(half.select(col("dst").as("src"), col("src").as("dst"))).cache()
   }
 
@@ -1162,7 +915,6 @@ object AnalyticsQueries {
         |FROM filled f LEFT JOIN daily dy USING (user_id, d)""".stripMargin,
 
     // C64: per-source K smallest distinct hashes via row_number, the same
-    // (K−1)·2⁶⁰/U_K estimator with identical IEEE ops
     "kmv_distinct_est" ->
       s"""WITH h AS (SELECT DISTINCT event_type,
          |  ${DuckDialect.hash("'kmv'||CAST(user_id AS VARCHAR)")} AS h FROM events),
@@ -1176,8 +928,7 @@ object AnalyticsQueries {
          |     / CAST(kth AS DOUBLE), 9.0e18)) AS BIGINT) END AS est, n_exact
          |FROM sk JOIN ex USING (event_type)""".stripMargin,
 
-    // C65: combined-sketch Jaccard over ≤K-element lists + the exact
-    // pairwise Jaccard from the same distinct-hash relation
+    // C65: combined-sketch Jaccard over ≤K-element lists + the exact pairwise Jaccard
     "kmv_jaccard_est" ->
       s"""WITH h AS (SELECT DISTINCT event_type,
          |  ${DuckDialect.hash("'kmv'||CAST(user_id AS VARCHAR)")} AS h FROM events),
@@ -1217,8 +968,7 @@ object AnalyticsQueries {
          |  x.n_exact
          |FROM z JOIN x ON z.event_type = x.event_type""".stripMargin,
 
-    // C69: same bucket/rho/zsum CTEs as C24; coarser levels aggregate the
-    // FINE sketch (max-of-max), mirroring the engine's merge exactly
+    // C69: same bucket/rho/zsum CTEs as C24
     "hll_rollup_merge" -> {
       def z(src: String, grp: String) = {
         val sel = if (grp.isEmpty) "" else s"$grp, "
@@ -1325,8 +1075,7 @@ object AnalyticsQueries {
         |SELECT path, count(*) AS n FROM p
         |GROUP BY path ORDER BY n DESC, path ASC LIMIT 10""".stripMargin,
 
-    // the Bloom filter only PRUNES before the exact join, so the result is
-    // exactly the plain join — which is the oracle
+    // the Bloom filter only PRUNES before the exact join, so the result is exactly the plain join
     "bloom_prune_join" ->
       """SELECT count(*) AS n_orders,
         | CAST(floor(sum(o_totalprice) + 0.5) AS BIGINT) AS total
@@ -1452,8 +1201,7 @@ object AnalyticsQueries {
          |SELECT node, r FROM r5""".stripMargin
     },
 
-    // identical degree-orientation + wedge-closure walk: every comparison
-    // is on integers, so both engines enumerate the same triangles
+    // identical degree-orientation + wedge-closure walk
     "parts_triangles" ->
       """WITH e AS (SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
         |  FROM lineitem a JOIN lineitem b

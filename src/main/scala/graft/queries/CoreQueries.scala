@@ -6,30 +6,18 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.scaled
 
-/** §2.C — general analytics: the engine is a full query engine, not only a
-  * vector-search library. Shapes chosen for their scale behavior: partial
-  * (map-side) aggregation, broadcastable dims, multi-join shuffle keying,
-  * window top-N, time-window aggregation, semi-structured extraction. */
+/** §2.C — general analytics: the engine is a full query engine, not only a vector-search
+  * library. */
 object CoreQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame = Tables(s, dir, name)
 
-  // bucketed_join's layout write is the ONE-TIME cost the repeated-join
-  // saving amortizes (at 100 TB the bucketed tables are written at ingest,
-  // not per query) — so it runs once per (JVM, sfDir) and the timed entry
-  // body is the join alone (r4 verdict #4: two saveAsTable calls were ~4×
-  // the entry's median). Guarded by the class monitor: Bench's interleaved
-  // repeats must not double-write. Tables are named PER sfDir (ADVICE r5:
-  // the in-memory ExternalCatalog lives in SharedState, i.e. is JVM-WIDE
-  // across sessions of one context — globally-named tables under a
-  // single-slot memo let two sessions interleaving different sfDirs read
-  // each other's data).
+  // bucketed_join's layout write is the ONE-TIME cost the repeated-join saving amortizes
   private val bucketedLayoutFor = scala.collection.mutable.Set.empty[String]
   private[graft] def bucketedTable(dir: String, base: String): String =
     "graft_buckets." + base + "_" + graft.TmpDirs.dirKeyAlnum(dir)
   private def ensureBucketedLayout(s: SparkSession, dir: String): Unit = synchronized {
-    // re-check the catalog too: a NEW spark context in the same JVM (tests
-    // stop/start several) resets SharedState even when the memo is warm
+    // re-check the catalog too
     if (!bucketedLayoutFor.contains(dir) ||
         !s.catalog.tableExists(bucketedTable(dir, "orders_b"))) {
       s.sql("CREATE DATABASE IF NOT EXISTS graft_buckets")
@@ -37,8 +25,7 @@ object CoreQueries {
           ("orders_b", "orders", "o_custkey"),
           ("customer_b", "customer", "c_custkey"))) {
         val name = bucketedTable(dir, tbl)
-        // orphan table dirs from a previous JVM trip
-        // LOCATION_ALREADY_EXISTS — drop + clear both
+        // orphan table dirs from a previous JVM trip LOCATION_ALREADY_EXISTS
         s.sql(s"DROP TABLE IF EXISTS $name")
         val p = new org.apache.hadoop.fs.Path(
           s"${s.conf.get("spark.sql.warehouse.dir")}/graft_buckets.db/${name.stripPrefix("graft_buckets.")}")
@@ -52,8 +39,7 @@ object CoreQueries {
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // C1: pricing summary — hash agg with map-side combine; one shuffle on
-    // the (tiny-cardinality) group keys.
+    // C1: pricing summary
     "q1_agg" -> ((s, dir) =>
       t(s, dir, "lineitem")
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
@@ -65,8 +51,7 @@ object CoreQueries {
           scaled(avg("l_discount"), 4).as("avg_disc"),
           count(lit(1)).as("count_order"))),
 
-    // C2: shuffle joins on orderkey/custkey; revenue top-10. At 100 TB the
-    // customer side is bucketable; AQE picks broadcast when a side is small.
+    // C2: shuffle joins on orderkey/custkey
     "q3_join" -> ((s, dir) => {
       val cust = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
       val ord = t(s, dir, "orders").filter(col("o_orderdate") < lit("1996-07-01").cast("timestamp"))
@@ -75,8 +60,7 @@ object CoreQueries {
         .join(cust, ord("o_custkey") === cust("c_custkey"))
         .groupBy(ord("o_orderkey"), ord("o_orderdate"), ord("o_orderpriority"))
         .agg(scaled(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 0).as("revenue"))
-        // order date as integer epoch days — formatted date strings are
-        // engine/version sensitive (SURVEY §6 integer-only convention)
+        // order date as integer epoch days
         .select(col("o_orderkey"),
           expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000").as("o_date_day"),
           col("o_orderpriority"), col("revenue"))
@@ -84,8 +68,7 @@ object CoreQueries {
         .limit(10)
     }),
 
-    // C3: six-table join; region/nation broadcast (tiny dims), the rest
-    // shuffle on their keys; local-supplier condition c_nationkey=s_nationkey.
+    // C3: six-table join
     "q5_multijoin" -> ((s, dir) => {
       val region = t(s, dir, "region").filter(col("r_name") === "ASIA")
       val nation = t(s, dir, "nation")
@@ -114,8 +97,7 @@ object CoreQueries {
         .select(col("p_brand"), col("p_partkey"), col("rank"), scaled(col("p_retailprice"), 2).as("price"))
     }),
 
-    // C5: tumbling time-window agg — batch mirror of the streaming pipeline
-    // (graft.streaming.EventsStream uses the identical plan over readStream).
+    // C5: tumbling time-window agg
     "events_window" -> ((s, dir) =>
       t(s, dir, "events")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
@@ -124,8 +106,7 @@ object CoreQueries {
         .select(expr("unix_micros(w.start) div 60000000").as("hour_min"),
           col("event_type"), col("n"), col("sum_value"))),
 
-    // C11: scan-heavy filter + global agg (TPC-H Q6 shape) — no shuffle at
-    // all beyond the final single-row combine; predicate fully pushed down
+    // C11: scan-heavy filter + global agg (TPC-H Q6 shape)
     "q6_filter_agg" -> ((s, dir) =>
       t(s, dir, "lineitem")
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -134,9 +115,7 @@ object CoreQueries {
         .agg(scaled(sum(col("l_extendedprice") * col("l_discount")), 0).as("revenue"),
           count(lit(1)).as("n"))),
 
-    // C12: left-anti join — customers with no orders in the window
-    // (shuffle keyed by custkey both sides; AQE may broadcast the filtered
-    // orders side)
+    // C12: left-anti join
     "anti_join" -> ((s, dir) => {
       val ord = t(s, dir, "orders")
         .filter(col("o_orderdate") >= lit("1999-01-01").cast("timestamp"))
@@ -146,9 +125,7 @@ object CoreQueries {
         .agg(count(lit(1)).as("n_inactive"))
     }),
 
-    // C13: left-semi join — parts that appear in any lineitem (EXISTS).
-    // Prices are cents-exact, so the average is integer arithmetic
-    // (sum-of-cents div n) — immune to fp .5 rounding boundaries.
+    // C13: left-semi join
     "semi_join" -> ((s, dir) =>
       t(s, dir, "part")
         .join(t(s, dir, "lineitem"), col("p_partkey") === col("l_partkey"), "left_semi")
@@ -167,8 +144,7 @@ object CoreQueries {
         scaled(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 0).as("total_rev"))
     }),
 
-    // C15: running analytics — cumulative revenue per customer over order
-    // dates (window sort reuses the shuffle's partitioning by custkey)
+    // C15: running analytics
     "running_total" -> ((s, dir) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
@@ -179,16 +155,13 @@ object CoreQueries {
           scaled(sum("o_totalprice").over(w), 2).as("cum_spend"))
     }),
 
-    // C18: ROLLUP subtotals — grouping sets expand inside one hash
-    // aggregate (still a single shuffle on the group keys); whole-unit
-    // rounding per the big-double-sum convention (SURVEY §6)
+    // C18: ROLLUP subtotals
     "rollup_agg" -> ((s, dir) =>
       t(s, dir, "orders")
         .rollup("o_orderpriority", "o_orderstatus")
         .agg(count(lit(1)).as("n"), scaled(sum("o_totalprice"), 0).as("total"))),
 
-    // C26: set algebra — INTERSECT/EXCEPT chain with set (distinct)
-    // semantics; each op is one hash shuffle on the full row
+    // C26: set algebra
     "set_ops" -> ((s, dir) => {
       val o = t(s, dir, "orders")
       o.filter(col("o_orderpriority") === "1-URGENT").select("o_custkey")
@@ -196,22 +169,19 @@ object CoreQueries {
         .except(o.filter(col("o_orderstatus") === "F").select("o_custkey"))
     }),
 
-    // C27: CUBE grouping sets — every (priority, status) subtotal
-    // combination in one expand + hash aggregate
+    // C27: CUBE grouping sets
     "cube_agg" -> ((s, dir) =>
       t(s, dir, "orders")
         .cube("o_orderpriority", "o_orderstatus")
         .agg(count(lit(1)).as("n"), scaled(sum("o_totalprice"), 0).as("total"))),
 
-    // C19: exact distinct cardinality per group — Spark plans the classic
-    // two-phase (expand + partial) distinct aggregate
+    // C19: exact distinct cardinality per group
     "events_distinct" -> ((s, dir) =>
       t(s, dir, "events")
         .groupBy("event_type")
         .agg(countDistinct("user_id").as("n_users"), count(lit(1)).as("n_events"))),
 
-    // C20: bounded-frame moving aggregate; integer-exact — each price
-    // rounds to cents per row, the frame sums longs
+    // C20: bounded-frame moving aggregate
     "moving_avg" -> ((s, dir) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
@@ -222,12 +192,7 @@ object CoreQueries {
           sum(scaled(col("o_totalprice"), 2)).over(w).as("ma3_cents"))
     }),
 
-    // C36: BUCKETED co-located join — the zero-shuffle join layout for
-    // repeated fact⋈dim joins at 100 TB: both tables written bucketBy the
-    // join key (+ sortBy inside buckets), so the SortMergeJoin reads
-    // co-located buckets with NO Exchange on either side (PlanAuditSpec
-    // asserts the shuffle-free plan with broadcast disabled). The write
-    // is the one-time layout cost the repeated-join saving amortizes.
+    // C36: BUCKETED co-located join
     "bucketed_join" -> ((s, dir) => {
       ensureBucketedLayout(s, dir)
       s.table(bucketedTable(dir, "orders_b"))
@@ -237,25 +202,14 @@ object CoreQueries {
         .agg(count(lit(1)).as("n_orders"), scaled(sum("o_totalprice"), 0).as("total"))
     }),
 
-    // C42: Z-order layout — the multi-dim member of the layout family
-    // (clustered_probe = partition pruning, bucketed_join = hash
-    // co-location, this = Morton-code data skipping). The entry round-trips
-    // events through a z-clustered parquet layout (repartitionByRange +
-    // sortWithinPartitions on the interleaved code) and answers a 2-D box
-    // query over it; z_lo/z_hi hash-verify the bit-interleave formula
-    // against the oracle's identical integer expression. The skipping
-    // claim itself (box prunes most files via per-column min/max in BOTH
-    // dims; a 1-D sort prunes only one) is asserted in PlanAuditSpec over
-    // the written files' stats.
+    // C42: Z-order layout
     "events_zorder" -> ((s, dir) => {
       val ev = t(s, dir, "events").selectExpr(
         "user_id % 256 AS u",
         "(unix_micros(ts) div 86400000000) % 256 AS d",
         "CAST(floor(value * 100) AS BIGINT) AS cents")
         .withColumn("zval", expr(graft.operators.ZOrder.zvalExpr("u", "d", 8)))
-      // fixed overwrite target (ADVICE r2): a fresh temp dir per invocation
-      // leaked a full parquet copy on every Verify/Bench pass. Per-process
-      // root so a concurrent harness JVM can't overwrite mid-read.
+      // fixed overwrite target
       val path = graft.TmpDirs.path("zorder_layout")
       graft.operators.ZOrder.writeZOrdered(ev, "zval", path, nFiles = 16)
       s.read.parquet(path)

@@ -6,22 +6,8 @@ import graft.Tables
 import graft.functions.aggs
 import graft.operators.{Dedup, Pq}
 
-/** §2.B13–B15 — corpus-curation operators a 100 TB training-data pipeline
-  * runs between dedup and training: vocabulary extraction, deterministic
-  * mixture sampling, and benchmark decontamination.
-  *
-  * Scale notes:
-  *  - `text_vocab` is a two-phase hash aggregate (map-side partial counts)
-  *    followed by TakeOrdered — the shuffle carries one row per distinct
-  *    token per partition, never the token stream.
-  *  - `sample_mixture` is a pure narrow scan: the keep/drop decision is a
-  *    per-row hash comparison, so at 100 TB it is a filter with NO shuffle;
-  *    reruns are reproducible because the hash is content-derived (md5),
-  *    not RNG state.
-  *  - `decontaminate` broadcasts the benchmark shingle set (benchmarks are
-  *    ~MBs against a ~TB corpus), scans the corpus once, and shuffles only
-  *    (doc_id, count) partial aggregates.
-  */
+/** §2.B13–B15 — corpus-curation operators a training-data pipeline runs between dedup
+  * and training. */
 object CurationQueries {
 
   private def docs(s: SparkSession, dir: String): DataFrame = Tables(s, dir, "documents")
@@ -36,55 +22,30 @@ object CurationQueries {
     * so both engines pick the identical top set. */
   private val VocabTopK = 20
 
-  /** B15: minimum shared (hashed, per-doc-distinct) 3-gram shingles with the
-    * benchmark split before a training doc is flagged as contaminated.
-    * private[queries]: C63 `streaming_decontaminate` runs the SAME gate as
-    * a stream and must share the constants (and the oracle). */
+  /** B15: minimum shared (hashed, per-doc-distinct) 3-gram shingles with the benchmark split. */
   private[queries] val MinSharedShingles = 5
   private[queries] val BenchmarkSource = "src0"
 
-  /** B21: quality-gate threshold (score ∈ [0, 10⁴]; ~median of the corpus)
-    * and the per-source quota of the final sampling stage. */
+  /** B21: quality-gate threshold. */
   private[queries] val MinQuality = 5500L
   private val QuotaPerSource = 10
 
-  /** B27: tokens per packed training sequence, and the span of the
-    * doc-id buckets the distributed prefix-sum reduces over. */
+  /** B27: tokens per packed training sequence. */
   private val SeqLen = 64L
   private val PackBucketSpan = 32L
 
-  /** B39: weighted-sample size (inclusion probability rises with a doc's
-    * token count — see `sample_weighted`). */
+  /** B39: weighted-sample size. */
   private val WeightedSampleK = 100
 
-  /** B40: stratified-sample size (allocated across languages by largest
-    * remainder — see `sample_stratified`). */
+  /** B40: stratified-sample size. */
   private val StratSampleK = 50
 
-  /** B28: semantic-decontamination cosine threshold ×10⁴ (the corpus's
-    * cross-source p99 is ≈0.29 — 0.30 flags the true near-benchmark tail)
-    * and the LSH bucketing shared with B5's embedding dedup. */
+  /** B28: semantic-decontamination cosine threshold ×10⁴. */
   private val SemTauScaled = 3000L
   private val SemNumPlanes = 4
   private val SemDims = 64
 
-  /** B27's distributed exclusive prefix-sum of per-doc token counts in
-    * ascending doc_id order — `(doc_id, n) → (doc_id, n, off)`.
-    *
-    * Two-level reduction: per-doc counts fold into `doc_id div span`
-    * bucket subtotals, those fold again into `span²`-wide superbucket
-    * subtotals, and ONLY the superbucket rows (n/span² — at 100 TB with
-    * span 32, ~10⁵ rows per 10¹¹ docs) are collected for the driver-side
-    * exclusive scan, the k·d-model-state analogue. Bucket bases are then
-    * recovered distributively — a ≤span-row window inside each
-    * superbucket — and doc offsets by a ≤span-row window inside each
-    * bucket, so no window partition exceeds `span` rows and nothing
-    * else leaves its partition. Bucketing is deterministic `div` (no
-    * RangePartitioner sampling), so re-evaluation cannot shift
-    * partition boundaries; offsets are independent of `span` (any two
-    * bucketings agree — PackOffsetsSpec pins this). The n/span-row
-    * bucket-base side is an equi-join on `b`, broadcast while it fits
-    * (AQE's call), a plain shuffle join beyond that. */
+  /** B27's distributed exclusive prefix-sum of per-doc token counts in ascending doc_id order. */
   private[graft] def packOffsets(s: SparkSession, nt: DataFrame,
                                  span: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -118,10 +79,7 @@ object CurationQueries {
         .orderBy(col("n").desc, col("tok"))
         .limit(VocabTopK)),
 
-    // B14: deterministic mixture sampling — per-source keep rates applied
-    // via a content-derived hash bucket, so the sample is reproducible
-    // across runs/engines and requires no shuffle (pure filter at scale).
-    // rate(srcN) = 10 + 7N mod 80 ∈ [10, 89] percent.
+    // B14: deterministic mixture sampling
     "sample_mixture" -> ((s, dir) =>
       docs(s, dir)
         .selectExpr("doc_id", "source",
@@ -148,16 +106,13 @@ object CurationQueries {
         .selectExpr("lang", "n_tok", "s", "(s * 1000000) div ts AS w_ppm")
     }),
 
-    // B16: PII-style scrub — mask digit runs in the semi-structured props
-    // payload; pure narrow scan (regex is codegen'd), no shuffle at any SF
+    // B16: PII-style scrub
     "pii_scrub" -> ((s, dir) =>
       Tables(s, dir, "events").selectExpr("event_id",
         "regexp_replace(props, '[0-9]+', '#') AS scrubbed",
         "CAST(size(regexp_extract_all(props, '[0-9]+', 0)) AS BIGINT) AS n_redacted")),
 
-    // B17: deterministic per-group quota sampling — exactly ≤10 docs per
-    // source chosen by content-hash order, via the TopKHits map-side-heap
-    // aggregate (≤10 rows per group cross the shuffle, reproducible sample)
+    // B17: deterministic per-group quota sampling
     "sample_group_topk" -> ((s, dir) =>
       docs(s, dir)
         .selectExpr("source", "doc_id",
@@ -167,21 +122,7 @@ object CurationQueries {
         .selectExpr("source", "explode(hits) AS hit")
         .selectExpr("source", "hit.id AS doc_id", "hit.score AS h")),
 
-    // B23: deterministic train/val/test split (98/1/1) by content-derived
-    // hash bucket — the assignment is a pure narrow map (reproducible
-    // across runs/engines/reshards, unlike RNG-based randomSplit); the
-    // only shuffle is the tiny per-(source, split) audit aggregate
-    // B33: deterministic EPOCH SHUFFLE + shard assignment — the step
-    // between curation and shard-writing: each epoch seed induces a
-    // reproducible pseudo-random training order (hash order), sharded for
-    // parallel readers. RNG shuffles (randomSplit / shuffle=True loaders)
-    // are neither engine- nor rerun-reproducible; the hash order is, so a
-    // resumed or re-run epoch reads byte-identical shards. Scale shape:
-    // shard = pmod(hash) is a NARROW map (uniform hash → balanced
-    // shards), the one shuffle keys by shard, and the in-shard position
-    // window sorts only |corpus|/nShards rows per shard — shards are
-    // sized to training files, so no global-order window ever runs
-    // (pack_sequences' B27 lesson).
+    // B23: deterministic train/val/test split (98/1/1) by content-derived hash bucket
     "epoch_shuffle" -> ((s, dir) =>
       docs(s, dir)
         .selectExpr("doc_id",
@@ -192,19 +133,7 @@ object CurationQueries {
               .orderBy(col("hv"), col("doc_id"))).cast("long"))
         .select("doc_id", "shard", "pos")),
 
-    // B39: weighted priority sampling — the bottom-k weighted sketch
-    // (Cohen & Kaplan, "Summarizing data using bottom-k sketches", PODC
-    // 2007): each doc draws a deterministic rank H(doc) div w(doc) with
-    // w = its token count, and the sample is the k smallest ranks.
-    // Inclusion probability rises with w (the token-budget-proportional
-    // sampling a training-mix builder wants: a 10×-longer doc is ~10× as
-    // likely in), yet the draw is content-derived — reproducible across
-    // runs/engines/reshards, unlike RNG weighted reservoirs, and two
-    // engines agree on the EXACT sample, not just its distribution.
-    // Scale shape: rank is a narrow per-row map; the only "shuffle" is
-    // TakeOrdered's per-partition k-heap merge (k rows per partition
-    // cross, never the corpus). Weighted-sampling ranks also compose:
-    // min-rank per key = a weighted distinct sketch, mergeable like KMV.
+    // B39: weighted priority sampling
     "sample_weighted" -> ((s, dir) =>
       docs(s, dir)
         .selectExpr("doc_id", s"CAST(size($sTok) AS BIGINT) AS w",
@@ -256,9 +185,7 @@ object CurationQueries {
         .groupBy("source", "split")
         .agg(count(lit(1)).as("n"), min("doc_id").as("sample_doc"))),
 
-    // B15: benchmark decontamination — flag training docs sharing ≥
-    // MinSharedShingles hashed 3-gram shingles with the benchmark split.
-    // The benchmark shingle set is broadcast; the corpus is scanned once.
+    // B15: benchmark decontamination
     "decontaminate" -> ((s, dir) => {
       val d = docs(s, dir)
       val bench = Dedup.shingledExploded(d.filter(col("source") === BenchmarkSource))
@@ -274,14 +201,7 @@ object CurationQueries {
         .filter(col("n_shared") >= MinSharedShingles)
     }),
 
-    // B27: sequence packing — the step between curation and training:
-    // greedy-contiguous packing of the tokenized corpus (ingest = doc_id
-    // order) into fixed SeqLen-token training sequences, reporting per
-    // sequence its contributing docs and token count (the "how many docs
-    // does a training row straddle" audit). The global token offset is a
-    // DISTRIBUTED PREFIX-SUM (packOffsets), never a global-order window;
-    // driver state is O(n/span²). A doc spanning sequences contributes to
-    // each via a bounded explode (n/SeqLen + 1).
+    // B27: sequence packing
     "pack_sequences" -> ((s, dir) => {
       val nt = docs(s, dir)
         .selectExpr("doc_id", s"CAST(size($sTok) AS BIGINT) AS n")
@@ -318,15 +238,7 @@ object CurationQueries {
           min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
     }),
 
-    // B28: SEMANTIC benchmark decontamination — the embedding-space
-    // complement of B15's n-gram overlap (catches paraphrased/translated
-    // contamination that shares no shingles): training docs whose
-    // embedding lands in a benchmark doc's LSH bucket with cosine ≥ τ.
-    // The benchmark side is broadcast (benchmarks are ~MBs against a ~TB
-    // corpus); the bucket equi-match prunes before any cosine is computed
-    // — one narrow corpus scan, only the per-doc match aggregate
-    // shuffles. Bucket misses above τ are the declared LSH recall trade
-    // (B5's same-planes contract); multi-probe (A31) widens it if needed.
+    // B28: SEMANTIC benchmark decontamination
     "decontaminate_semantic" -> ((s, dir) => {
       val de = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
         .join(docs(s, dir).select(col("doc_id"), col("source")),
@@ -344,13 +256,7 @@ object CurationQueries {
         .agg(count(lit(1)).as("n_matches"), max("cs").as("max_cs"))
     }),
 
-    // B21: the composed curation pipeline — what a user actually RUNS
-    // before training: language gate (B7's predictor, not the stored
-    // column) → integer quality gate (B8) → exact-dedup keepers (B1,
-    // partition-only window) → deterministic per-source quota (B17's
-    // map-side k-heaps). One narrow scan feeds everything; the only
-    // shuffles are the dedup window (by content hash) and the final
-    // quota aggregate (by source) — nothing else leaves its partition.
+    // B21: the composed curation pipeline
     "curation_pipeline" -> ((s, dir) => {
       import TextScoring._
       val w = org.apache.spark.sql.expressions.Window.partitionBy("h")

@@ -5,17 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{Dedup, Pq}
 
-/** §2.B1–B5 — deduplication for LLM-training-data pipelines.
-  *
-  * Shared deterministic hash (both engines): 60-bit positive int from the
-  * first 15 hex chars of md5 — Spark `conv(substr(md5(s),1,15),16,10)`,
-  * DuckDB `CAST('0x'||substr(md5(s),1,15) AS BIGINT)`.
-  *
-  * Scale notes: every variant shuffles on a *key* (content hash, LSH band
-  * bucket, shared shingle) — never a full O(n²) cross join. The only
-  * all-pairs query (`dedup_embedding`) is the small-corpus exact baseline;
-  * its scale path is `ann_lsh` bucketing (B6).
-  */
+/** §2.B1–B5 — deduplication for training-data pipelines; every variant shuffles on a key
+  * (content hash, LSH band bucket, shared shingle), never a full O(n²) cross join. */
 object DedupQueries {
 
   private def docs(s: SparkSession, dir: String): DataFrame = Tables(s, dir, "documents")
@@ -25,8 +16,7 @@ object DedupQueries {
   private def dH(v: String) = DuckDialect.hash(v)
   private val dShingles = DuckDialect.Shingles
 
-  // minhash constants — single source of truth in operators.Dedup, embedded
-  // identically into both dialects
+  // minhash constants
   private val P = Dedup.P
   private val NumHashes = 12
   private val Bands = 3 // 4 rows per band
@@ -34,44 +24,31 @@ object DedupQueries {
   private def bj(j: Int): Long = Dedup.minhashB(j)
 
   private val JaccardTauScaled = 800000L // 0.8 at scale 6
-  // B29: lower τ than B2 so the prefix filter's pruning is exercised on a
-  // denser pair set; the oracle is the UNCAPPED all-pairs join (losslessness)
+  // B29: lower τ than B2 so the prefix filter's pruning is exercised on a denser pair set
   private val PrefixTauScaled = 700000L  // 0.7 at scale 6
   private val CosineTauScaled = 4500L    // 0.45 at scale 4
   private val SimhashMaxHamming = 1
-  // df cap for B2 (stop-shingle guard): well above the observed max df in
-  // the testdata (7 at sf0.01, 25 at sf0.1) so small-SF results equal the
-  // uncapped form, while a billion-doc stop-phrase can never go quadratic
+  // df cap for B2 (stop-shingle guard)
   private val MaxShingleDf = 64
-  // bucket cap for B3 (duplicate-saturation guard), same contract: the
-  // oracle mirrors the cap, so the capped path is driver-verified
+  // bucket cap for B3 (duplicate-saturation guard), same contract
   private val MaxBucket = 64
-  // B38: the allocations of the 12-hash budget (rows = 12/bands) and the
-  // verification threshold of the sweep — τ=0.5 sits between the
-  // allocations' s-curve thresholds (1/b)^(1/r) ≈ 0.89/0.76/0.63/0.41/0.08
-  // so the sweep's precision/recall actually separate
+  // B38: the allocations of the 12-hash budget
   private val SweepBands = Seq(2, 3, 4, 6, 12)
 
   /** B41b: bit widths of the b-bit minhash fidelity sweep. */
   private val BbitSweep = Seq(1, 2, 4, 8)
   private val SweepTauScaled = 500000L
-  // B24: "the first 250 ingested docs" stand in for the existing corpus;
-  // every sf has ≥500 docs so both sides are non-empty at any gate scale
+  // B24: "the first 250 ingested docs" stand in for the existing corpus
   private val IncrementalSplit = 250L
-  // B25: passage chunk width — 4 tokens gives a non-trivial cross-doc
-  // duplicated-passage set on the synthetic corpus at every gate sf
+  // B25: passage chunk width
   private val PassageChunk = 4
-  // B5 dispatch: ≤ threshold → exact all-pairs; above → LSH-bucketed
-  // (sf0.01's 500 rows verify the exact form, sf0.1's 2000 the bucketed)
+  // B5 dispatch: ≤ threshold → exact all-pairs
   private val EmbPairThreshold = 1000L
   private val EmbNumPlanes = 4
-  private val EmbDims = 64
-  // B35 SemDeDup: cluster count / Lloyd's iterations — knn_ivf_trained's
-  // constants, so the oracle's unrolled CTE chain stays the shared shape
+  // B35 SemDeDup: cluster count / Lloyd's iterations
   private val SemClusters = 10
   private val SemIters = 3
-  // B36: sliding-gram width for cross-doc span coverage — B25's chunk
-  // width (4 tokens yields a non-trivial cross-doc gram set at every sf)
+  // B36: sliding-gram width for cross-doc span coverage
   private val SpanGram = 4
 
   /** The B35/B35b SemDeDup body shared by both widths over any
@@ -93,41 +70,67 @@ object DedupQueries {
       .select(col("cl"), col("a_id"), col("b_id"), col("cs"))
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The embedding dedup families defined once over their [[Width]]; each emits a d=64
+    * entry and its `_2048` twin. */
+  private val twins: Seq[Seq[Width.Entry]] = Seq(
+    // B5/B5b: embedding-cosine near-dup pairs; exact all-pairs up to EmbPairThreshold
+    // rows, LSH-bucketed above it (the oracle mirrors the count dispatch)
+    Width.twin("dedup_embedding")(
+      w => (s, dir) => Dedup.embeddingPairsAuto(w.frame(s, dir).select("vec_id", "embedding"),
+        CosineTauScaled, EmbNumPlanes, w.dims, EmbPairThreshold),
+      w => s"""WITH ${w.cte}nr AS (SELECT count(*) AS c FROM ${w.tbl}),
+              |bk AS (SELECT vec_id, embedding,
+              |  ${DuckDialect.bucketSql("embedding", EmbNumPlanes, w.dims)} AS bucket FROM ${w.tbl})
+              |SELECT a.vec_id AS a_id, b.vec_id AS b_id, ${cosDuck("a.embedding", "b.embedding")} AS cs
+              |FROM ${w.tbl} a JOIN ${w.tbl} b ON a.vec_id < b.vec_id
+              |WHERE ${cosDuck("a.embedding", "b.embedding")} >= $CosineTauScaled
+              |  AND (SELECT c FROM nr) <= $EmbPairThreshold
+              |UNION ALL
+              |SELECT a.vec_id, b.vec_id, ${cosDuck("a.embedding", "b.embedding")}
+              |FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+              |WHERE ${cosDuck("a.embedding", "b.embedding")} >= $CosineTauScaled
+              |  AND (SELECT c FROM nr) > $EmbPairThreshold""".stripMargin),
+
+    // B35/B35b: SemDeDup (Abbas et al. 2023): integer-exact Lloyd's clusters the space,
+    // then cosine near-dup pairs only within each cluster (cross-cluster near-dups are
+    // invisible by design)
+    Width.twin("dedup_semdedup")(
+      w => (s, dir) => semdedupPairs(w.frame(s, dir).select("vec_id", "embedding")),
+      w => s"""WITH ${w.cte}ed AS MATERIALIZED (SELECT vec_id,
+              |  ${DuckDialect.quantizeVec("embedding")} AS q FROM ${w.tbl}),
+              |${DuckDialect.lloydChain(SemClusters, SemIters, w.dims)},
+              |m AS (SELECT e.vec_id, e.embedding, a.cl FROM ${w.tbl} e JOIN af a USING (vec_id))
+              |SELECT a.cl AS cl, a.vec_id AS a_id, b.vec_id AS b_id,
+              |  ${cosDuck("a.embedding", "b.embedding")} AS cs
+              |FROM m a JOIN m b ON a.cl = b.cl AND a.vec_id < b.vec_id
+              |WHERE ${cosDuck("a.embedding", "b.embedding")} >= $CosineTauScaled""".stripMargin)
+  )
+
+  private def cosDuck(a: String, b: String): String =
+    s"CAST(floor(list_cosine_similarity(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])) * 10000 + 0.5) AS BIGINT)"
+
+  val defs: Map[String, (SparkSession, String) => DataFrame] = Map[String, Width.Run](
     // B1: exact dedup — one shuffle on the content hash
     "dedup_exact" -> ((s, dir) => Dedup.exact(docs(s, dir))),
 
-    // B2: n-gram Jaccard near-dup — candidates via shingle equi-join,
-    // df-capped so one hot shingle in m docs can't emit m² candidate rows
+    // B2: n-gram Jaccard near-dup
     "dedup_ngram_jaccard" -> ((s, dir) =>
       Dedup.ngramJaccard(docs(s, dir), JaccardTauScaled, maxDf = Some(MaxShingleDf))),
 
-    // B29: prefix-filtered Jaccard join (SSJoin/PPJoin candidate pruning) —
-    // only each doc's rarest n−⌈τn⌉+1 shingles generate candidates; exact
-    // verify after, so the result equals the uncapped all-pairs join
+    // B29: prefix-filtered Jaccard join (SSJoin/PPJoin candidate pruning)
     "dedup_jaccard_prefix" -> ((s, dir) =>
       Dedup.jaccardPrefixJoin(docs(s, dir), PrefixTauScaled)),
 
-    // B3: MinHash + banded LSH — shuffle keyed by (band, bucket) only,
-    // with the hot-bucket pair-cap active (oracle mirrors the cap)
+    // B3: MinHash + banded LSH
     "dedup_minhash_lsh" -> ((s, dir) =>
       Dedup.minhashLsh(docs(s, dir), NumHashes, Bands, maxBucket = Some(MaxBucket))),
 
-    // B38: the LSH TUNING curve — banding-allocation sweep over the fixed
-    // 12-hash budget (MMDS ch.3 s-curve: threshold ≈ (1/b)^(1/r)); per
-    // allocation: candidates, exact-verified positives at τ=0.5,
-    // precision, recall vs the union frontier. One signature pass feeds
-    // every allocation; exact verification joins ONCE against the union
-    // of candidates. At sf0.001: precision 100%→2.8%, recall 92.9%→100%
-    // across (2,6)…(12,1) — the knob a planner reads before fixing (b,r)
-    // at 100 TB, where bucket fan-out is the shuffle cost and recall is
-    // the dedup guarantee. See operators.Dedup.lshBandSweep.
+    // B38: the LSH TUNING curve
     "dedup_lsh_sweep" -> ((s, dir) =>
       Dedup.lshBandSweep(docs(s, dir), NumHashes, SweepBands,
         SweepTauScaled, MaxBucket)),
 
-    // B4: 64-bit SimHash near-dup, hamming ≤ 1 — cost-based: all-pairs on
-    // small corpora, byte-banded LSH (pigeonhole-EXACT, same oracle) at scale
+    // B4: 64-bit SimHash near-dup, hamming ≤ 1
     "dedup_simhash" -> ((s, dir) =>
       // r18: the per-token md5 signature kernel measured as a ~1 s
       // single-task stage over the one-row-group docs scan — spread it;
@@ -136,58 +139,7 @@ object DedupQueries {
         Pq.spreadHeavyKernel(docs(s, dir), opsPerRow = 1 << 20),
         SimhashMaxHamming)),
 
-    // B5: embedding-cosine near-dup pairs — exact all-pairs below the
-    // dispatch threshold, LSH-bucketed above (the oracle mirrors the
-    // dispatch, so both branches are hash-verified)
-    "dedup_embedding" -> ((s, dir) =>
-      Dedup.embeddingPairsAuto(
-        Tables(s, dir, "embeddings").select("vec_id", "embedding"), CosineTauScaled,
-        EmbNumPlanes, EmbDims, EmbPairThreshold)),
-
-    // B5b: embedding near-dup at the REFERENCE width — production
-    // embeddings arrive at the width the encoder emits (the reference's
-    // 2048-d ResNet stand-in), and BOTH dispatch branches' arithmetic is
-    // width-dependent: the all-pairs cosine AND the hyperplane buckets
-    // (planeWeights(j, dims) draws 2048-slot planes, so the bucket
-    // assignment itself changes with width). Same constants — the
-    // dispatch count is width-independent, so the branch taken per scale
-    // matches B5 (exact ≤1000 rows, bucketed above).
-    "dedup_embedding_2048" -> ((s, dir) =>
-      Dedup.embeddingPairsAuto(
-        HybridQueries.wideEmbeddings(s, dir), CosineTauScaled,
-        EmbNumPlanes, HybridQueries.WideDims, EmbPairThreshold)),
-
-    // B35: SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic dedup
-    // at the published scale shape: k-means-cluster the embedding space,
-    // then compute cosine near-dup pairs ONLY within each cluster. Pair
-    // work drops from O(n²) to O(Σ|cluster|²) ≈ O(n²/k), and the pair join
-    // shuffles on the cluster id — at 100 TB k grows to ~5·10⁴ (the paper's
-    // LAION setting) so each cluster's members fit one task. Training is
-    // the integer-exact Lloyd's shared with knn_ivf_trained (bounded model
-    // state on the driver, bit-identical in any engine), so the DuckDB
-    // oracle replays clustering AND pairing end-to-end. Cross-cluster
-    // near-dups are invisible by design — the algorithm's documented
-    // recall trade (B5 is the exact small-corpus baseline).
-    "dedup_semdedup" -> ((s, dir) =>
-      semdedupPairs(Tables(s, dir, "embeddings").select("vec_id", "embedding"))),
-
-    // B35b: SemDeDup at the REFERENCE width — the paper's actual shape
-    // (Abbas et al. cluster 512–2048-d image embeddings): the wide
-    // integer Lloyd's (the A14g chain) clusters the 2048-slot space,
-    // cosine near-dup pairs within each cluster only. Same body via the
-    // shared helper; the oracle replays lloydChain at dims=2048 + the
-    // in-cluster wide cosine join.
-    "dedup_semdedup_2048" -> ((s, dir) =>
-      semdedupPairs(HybridQueries.wideEmbeddings(s, dir))),
-
-    // B36: per-document duplicated-span coverage — the "fraction of text in
-    // a duplicated ≥n-token span" metric from the exact-substring dedup line
-    // (Lee et al. 2022, arXiv:2107.06499), at its distributed approximation:
-    // a doc position counts as duplicated when its 4-token sliding gram also
-    // occurs in ANOTHER document. Two key-partitioned shuffles, both on the
-    // 60-bit gram hash: one aggregate (distinct-doc count per gram), one
-    // join back + per-doc aggregate. No all-pairs anywhere — cost is
-    // O(corpus grams), the same shape at 100 TB.
+    // B36: per-document duplicated-span coverage
     "dedup_span_coverage" -> ((s, dir) => {
       // spread the per-doc tokenize+shingle+md5 kernel off the single
       // scan task (r18; the multivector_maxsim convention — EntryProbe
@@ -207,24 +159,17 @@ object DedupQueries {
           "(n_dup * 1000000) div n_grams AS cov_ppm")
     }),
 
-    // B18: candidate pairs → dedup GROUPS via min-label connected
-    // components ("keep one per cluster" = doc_id = cluster); the oracle
-    // recomputes the same fixpoint with a recursive CTE
+    // B18: candidate pairs → dedup GROUPS via min-label connected components
     "dedup_clusters" -> ((s, dir) =>
       Dedup.connectedComponents(
         Dedup.minhashLsh(docs(s, dir), NumHashes, Bands, maxBucket = Some(MaxBucket)))),
 
-    // B18b: the SAME clusters via alternating large-star/small-star
-    // contraction (O(log n) rounds vs propagation's O(diameter)) — two
-    // independent distributed algorithms, one oracle fixpoint
+    // B18b: the SAME clusters via alternating large-star/small-star contraction
     "dedup_clusters_star" -> ((s, dir) =>
       Dedup.connectedComponentsStar(
         Dedup.minhashLsh(docs(s, dir), NumHashes, Bands, maxBucket = Some(MaxBucket)))),
 
-    // B24: incremental near-dup admission — the batch backstop of the
-    // stream/batch lambda contract: arriving docs (id ≥ 250) probe the
-    // existing corpus's banded index; per arrival, best existing match +
-    // match count (see operators.Dedup.incrementalMinhash scale notes)
+    // B24: incremental near-dup admission
     "dedup_incremental" -> ((s, dir) =>
       Dedup.incrementalMinhash(docs(s, dir), IncrementalSplit, NumHashes, Bands,
         maxBucket = Some(MaxBucket))),
@@ -240,66 +185,37 @@ object DedupQueries {
     "dedup_passages" -> ((s, dir) => Dedup.passageDups(docs(s, dir), PassageChunk)),
 
     // B19: normalized exact dedup + canonical keep-best selection
-    // (operator scaladoc has the packed-argmin scale rationale)
     "dedup_normalized" -> ((s, dir) => Dedup.normalizedKeepBest(docs(s, dir))),
 
-    // B20: minhash estimator quality — est vs exact Jaccard per candidate
-    // pair (the dedup analogue of recall_eval); exact side restricted to
-    // candidate docs via broadcast semi-join before the shingle join
+    // B20: minhash estimator quality
     "dedup_minhash_est" -> ((s, dir) =>
       Dedup.minhashEstimate(docs(s, dir), NumHashes, Bands, maxBucket = Some(MaxBucket))),
 
-    // B41: b-bit minhash (Li & König, WWW 2010, b = 1) — B20's estimator
-    // with the signature crushed 64×: the lowest bit of each of the 12
-    // permutation minima packs into ONE BIGINT per doc (12 bits vs 12·64),
-    // pair similarity is a single bit_count(xor), and the estimator
-    // debiases the C = ½ accidental-parity-collision rate (Ĵ = 2·m/k − 1,
-    // floored at 0). Emitted alongside B20's full-width estimate and the
-    // exact Jaccard from the SAME one signature scan — the fidelity
-    // s-curve an operator reads before committing the 100 TB signature
-    // store to b bits (the packed word is the column that always stays
-    // resident; full signatures page in only for verification).
+    // B41: b-bit minhash (Li & König, WWW 2010, b = 1)
     "dedup_minhash_1bit" -> ((s, dir) =>
       Dedup.minhashEstimate(docs(s, dir), NumHashes, Bands,
         maxBucket = Some(MaxBucket), oneBit = true)),
 
-    // B41b: the b-bit fidelity SWEEP (Li & König's central trade-off,
-    // the B41 sibling of B38's banding sweep): per b ∈ {1, 2, 4, 8},
-    // chunk every permutation minimum to its lowest b bits, debias with
-    // C = 2⁻ᵇ, and report mean/max absolute error vs exact shingle
-    // Jaccard — ONE signature scan and ONE exact-verification join feed
-    // every b. The curve an operator reads before fixing the 100 TB
-    // signature store's bit width (b bits ⇒ 64/b× compression; at
-    // sf0.001 MAE falls 59.3k → 39.1k ppm from b=1 to b=4).
+    // B41b: the b-bit fidelity SWEEP
     "dedup_minhash_bbit_sweep" -> ((s, dir) =>
       Dedup.minhashBbitSweep(docs(s, dir), NumHashes, Bands,
         maxBucket = Some(MaxBucket), bs = BbitSweep)),
 
-    // B3b: the full-signature duplicate-cluster triage report (the
-    // wholesale view for duplicate-saturated corpora, where the pair cap
-    // skips expansion) — one hash aggregate over the signature pipeline
+    // B3b: the full-signature duplicate-cluster triage report
     "dedup_sig_clusters" -> ((s, dir) =>
       Dedup.duplicateClusters(docs(s, dir), NumHashes, minSize = 2)),
 
-    // B2b: the df-cap's companion triage report (`hotShingles`
-    // driver-verified): the stop-shingles a capped ngramJaccard run drops,
-    // with frequency and a sample carrier — what an operator inspects
-    // before trusting the capped recall contract. Cap 4 here (below B2's
-    // production 64) so the report is non-empty at the gate scales.
+    // B2b: the df-cap's companion triage report
     "dedup_hot_shingles" -> ((s, dir) =>
       Dedup.hotShingles(docs(s, dir), maxDf = 4)),
 
-    // B3c: the maxBucket cap's companion triage (`bucketClusters`
-    // driver-verified): hot LSH band-buckets that pairwise expansion would
-    // skip — near-dup clusters land here even when full signatures differ
-    // (minSize 3 so the report is non-empty at gate scales)
+    // B3c: the maxBucket cap's companion triage
     "dedup_bucket_clusters" -> ((s, dir) =>
       Dedup.bucketClusters(docs(s, dir), NumHashes, Bands, minSize = 3)
         .selectExpr("CAST(band AS BIGINT) AS band", "bkey", "n_docs", "sample_doc"))
-  )
+  ) ++ Width.defsOf(twins)
 
-  /** The shared minhash-LSH candidate-pair CTE chain (ends in `pairs`),
-    * used verbatim by the pair entry and the clusters entry. */
+  /** The shared minhash-LSH candidate-pair CTE chain (ends in `pairs`). */
   private def minhashPairCtes(sigCols: String, bandSelects: String): String =
     s"""t AS (SELECT doc_id, $dTok AS tk FROM documents),
        |shj AS (SELECT doc_id, $dShingles AS s FROM t WHERE len(tk) >= 3),
@@ -359,9 +275,7 @@ object DedupQueries {
            |JOIN sizes sb ON sb.doc_id = b_id
            |WHERE CAST(floor((inter / (sa.n + sb.n - inter)) * 1000000.0 + 0.5) AS BIGINT) >= $JaccardTauScaled""".stripMargin,
 
-      // the prefix filter is LOSSLESS: the oracle is the plain uncapped
-      // all-pairs Jaccard join — any candidate the prefix stage pruned
-      // that the oracle keeps would hash-mismatch
+      // the prefix filter is LOSSLESS: the oracle is the plain uncapped all-pairs Jaccard join
       "dedup_jaccard_prefix" ->
         s"""WITH t AS (SELECT doc_id, $dTok AS tk FROM documents),
            |sh AS (SELECT doc_id, $dShingles AS s FROM t WHERE len(tk) >= 3),
@@ -383,8 +297,7 @@ object DedupQueries {
         s"""WITH ${minhashPairCtes(sigCols, bandSelects)}
            |SELECT a_id, b_id FROM pairs""".stripMargin,
 
-      // B38: per-allocation band/join/pair CTEs off ONE sig CTE; exact
-      // verification over the union of every allocation's candidates
+      // B38: per-allocation band/join/pair CTEs off ONE sig CTE
       "dedup_lsh_sweep" -> {
         val bandCtes = SweepBands.map { b =>
           val rows = NumHashes / b
@@ -408,10 +321,7 @@ object DedupQueries {
              |   JOIN jac j ON p.a_id = j.a_id AND p.b_id = j.b_id
              |   WHERE j.jac >= $SweepTauScaled) AS n_pos""".stripMargin
         }.mkString("\nUNION ALL\n")
-        // every CTE MATERIALIZED: sig feeds 5 bandings × up to 12 union
-        // arms and pairs$b is referenced three times — DuckDB's default
-        // inlining re-derives the whole minhash chain per reference
-        // (>5 min at sf0.001; 0.3 s materialized)
+        // every CTE MATERIALIZED
         s"""WITH t AS MATERIALIZED (SELECT doc_id, $dTok AS tk FROM documents),
            |shj AS MATERIALIZED (SELECT doc_id, $dShingles AS s FROM t WHERE len(tk) >= 3),
            |sig AS MATERIALIZED (SELECT doc_id,
@@ -440,10 +350,7 @@ object DedupQueries {
            |FROM stats s, den d""".stripMargin
       },
 
-      // recursive min-label fixpoint over the SAME pair CTEs: reach holds
-      // every (vertex, reachable-label); min per vertex = the component id.
-      // Both CC implementations (propagation + star contraction) must
-      // reproduce this one fixpoint.
+      // recursive min-label fixpoint over the SAME pair CTEs
       "dedup_clusters" -> clustersOracle(sigCols, bandSelects),
       "dedup_clusters_star" -> clustersOracle(sigCols, bandSelects),
 
@@ -454,8 +361,7 @@ object DedupQueries {
            |SELECT g, CAST(count(*) AS BIGINT) AS df, min(doc_id) AS sample_doc
            |FROM sh GROUP BY g HAVING count(*) > 4""".stripMargin,
 
-      // same sig/band/cap CTEs as the pair chain, but the join is
-      // INTER-set (arriving ≥ split vs existing < split)
+      // same sig/band/cap CTEs as the pair chain, but the join is INTER-set
       "dedup_incremental" ->
         s"""WITH t AS (SELECT doc_id, $dTok AS tk FROM documents),
            |shj AS (SELECT doc_id, $dShingles AS s FROM t WHERE len(tk) >= 3),
@@ -496,9 +402,7 @@ object DedupQueries {
            |FROM sg GROUP BY 1 HAVING count(*) >= 2""".stripMargin
       },
 
-      // B41b: per-b chunk compare + debias over the shared pair CTEs, one
-      // exact-verification block feeding every b — pre-validated in
-      // python/duckdb against a direct signature recomputation
+      // B41b: per-b chunk compare + debias over the shared pair CTEs
       "dedup_minhash_bbit_sweep" -> {
         def estB(b: Int): String = {
           val p = 1L << b
@@ -538,9 +442,7 @@ object DedupQueries {
            |$perB""".stripMargin
       },
 
-      // B41: B20's oracle + the packed parity word per doc and the
-      // debiased 1-bit estimate via bit_count(xor) — pre-validated in
-      // python/duckdb against a direct signature recomputation
+      // B41: B20's oracle + the packed parity word per doc and the debiased 1-bit estimate via
       "dedup_minhash_1bit" -> {
         val matchSum = (0 until NumHashes)
           .map(j => s"(CASE WHEN sa.m$j = sb.m$j THEN 1 ELSE 0 END)").mkString(" + ")
@@ -574,8 +476,7 @@ object DedupQueries {
            |JOIN pk pb ON pb.doc_id = e.b_id""".stripMargin
       },
 
-      // est vs exact Jaccard over the SAME pair CTEs; truncating integer
-      // division on both sides (never fp round at a .5 boundary)
+      // est vs exact Jaccard over the SAME pair CTEs
       "dedup_minhash_est" -> {
         val matchSum = (0 until NumHashes)
           .map(j => s"(CASE WHEN sa.m$j = sb.m$j THEN 1 ELSE 0 END)").mkString(" + ")
@@ -644,64 +545,7 @@ object DedupQueries {
            |WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= $SimhashMaxHamming""".stripMargin
       },
 
-      // mirrors Dedup.embeddingPairsAuto's count dispatch: the all-pairs
-      // branch is empty above the threshold, the bucketed branch below it
-      "dedup_embedding" -> {
-        def cs(a: String, b: String) =
-          s"CAST(floor(list_cosine_similarity(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])) * 10000 + 0.5) AS BIGINT)"
-        s"""WITH nr AS (SELECT count(*) AS c FROM embeddings),
-           |bk AS (SELECT vec_id, embedding,
-           |  ${DuckDialect.bucketSql("embedding", EmbNumPlanes, EmbDims)} AS bucket FROM embeddings)
-           |SELECT a.vec_id AS a_id, b.vec_id AS b_id, ${cs("a.embedding", "b.embedding")} AS cs
-           |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-           |WHERE ${cs("a.embedding", "b.embedding")} >= $CosineTauScaled
-           |  AND (SELECT c FROM nr) <= $EmbPairThreshold
-           |UNION ALL
-           |SELECT a.vec_id, b.vec_id, ${cs("a.embedding", "b.embedding")}
-           |FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-           |WHERE ${cs("a.embedding", "b.embedding")} >= $CosineTauScaled
-           |  AND (SELECT c FROM nr) > $EmbPairThreshold""".stripMargin
-      },
-
-      // B5b: the B5 dual-branch replay over the wide CTE — bucketSql
-      // draws its hyperplanes at dims=2048, matching planeWeights
-      "dedup_embedding_2048" -> {
-        def cs(a: String, b: String) =
-          s"CAST(floor(list_cosine_similarity(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])) * 10000 + 0.5) AS BIGINT)"
-        s"""WITH wide AS MATERIALIZED (SELECT vec_id,
-           |    ${HybridQueries.wideDuck} AS embedding FROM embeddings),
-           |nr AS (SELECT count(*) AS c FROM wide),
-           |bk AS (SELECT vec_id, embedding,
-           |  ${DuckDialect.bucketSql("embedding", EmbNumPlanes, HybridQueries.WideDims)} AS bucket FROM wide)
-           |SELECT a.vec_id AS a_id, b.vec_id AS b_id, ${cs("a.embedding", "b.embedding")} AS cs
-           |FROM wide a JOIN wide b ON a.vec_id < b.vec_id
-           |WHERE ${cs("a.embedding", "b.embedding")} >= $CosineTauScaled
-           |  AND (SELECT c FROM nr) <= $EmbPairThreshold
-           |UNION ALL
-           |SELECT a.vec_id, b.vec_id, ${cs("a.embedding", "b.embedding")}
-           |FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-           |WHERE ${cs("a.embedding", "b.embedding")} >= $CosineTauScaled
-           |  AND (SELECT c FROM nr) > $EmbPairThreshold""".stripMargin
-      },
-
-      // B35b: the B35 replay at width — lloydChain at dims=2048 assigns,
-      // the in-cluster cosine pair join runs over the wide vectors
-      "dedup_semdedup_2048" -> {
-        def cs(a: String, b: String) =
-          s"CAST(floor(list_cosine_similarity(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])) * 10000 + 0.5) AS BIGINT)"
-        s"""WITH wide AS MATERIALIZED (SELECT vec_id,
-           |    ${HybridQueries.wideDuck} AS embedding FROM embeddings),
-           |ed AS MATERIALIZED (SELECT vec_id, ${DuckDialect.quantizeVec("embedding")} AS q FROM wide),
-           |${DuckDialect.lloydChain(SemClusters, SemIters, HybridQueries.WideDims)},
-           |m AS (SELECT w.vec_id, w.embedding, a.cl FROM wide w JOIN af a USING (vec_id))
-           |SELECT a.cl AS cl, a.vec_id AS a_id, b.vec_id AS b_id,
-           |  ${cs("a.embedding", "b.embedding")} AS cs
-           |FROM m a JOIN m b ON a.cl = b.cl AND a.vec_id < b.vec_id
-           |WHERE ${cs("a.embedding", "b.embedding")} >= $CosineTauScaled""".stripMargin
-      },
-
-      // B36: the same gram hash on the DuckDB side — distinct-doc count
-      // per gram, joined back for the per-doc covered-position aggregate
+      // B36: the same gram hash on the DuckDB side
       "dedup_span_coverage" -> {
         val gram = s"array_to_string(tk[i+1:i+$SpanGram], ' ')"
         s"""WITH t AS (SELECT doc_id, $dTok AS tk FROM documents),
@@ -714,21 +558,7 @@ object DedupQueries {
            |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
            |    CAST(sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
            |  FROM g JOIN d USING (gh) GROUP BY doc_id)""".stripMargin
-      },
-
-      // B35: the Lloyd's chain (shared with knn_ivf_trained) assigns the
-      // clusters, then the cosine pair join runs within each cluster only
-      "dedup_semdedup" -> {
-        def cs(a: String, b: String) =
-          s"CAST(floor(list_cosine_similarity(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])) * 10000 + 0.5) AS BIGINT)"
-        s"""WITH ed AS (SELECT vec_id, ${DuckDialect.quantizeVec("embedding")} AS q FROM embeddings),
-           |${DuckDialect.lloydChain(SemClusters, SemIters)},
-           |m AS (SELECT e.vec_id, e.embedding, a.cl FROM embeddings e JOIN af a USING (vec_id))
-           |SELECT a.cl AS cl, a.vec_id AS a_id, b.vec_id AS b_id,
-           |  ${cs("a.embedding", "b.embedding")} AS cs
-           |FROM m a JOIN m b ON a.cl = b.cl AND a.vec_id < b.vec_id
-           |WHERE ${cs("a.embedding", "b.embedding")} >= $CosineTauScaled""".stripMargin
       }
-    )
+    ) ++ Width.oraclesOf(twins)
   }
 }

@@ -1,30 +1,23 @@
 package graft.queries
 
-/** DuckDB-dialect mirrors of the Spark fragments in `graft.operators.Dedup`.
-  * Single source of truth for the oracle side: a tokenizer/hash change must
-  * touch exactly one Spark fragment and one DuckDB fragment, keeping every
-  * oracle-compared query in lock-step. */
+/** DuckDB-dialect mirrors of the Spark fragments in `graft.operators.Dedup`. */
 object DuckDialect {
   val Tok = """list_filter(string_split_regex(text, '\s+'), x -> x != '')"""
   def hash(v: String) = s"CAST('0x'||substr(md5($v), 1, 15) AS BIGINT)"
-  /** 32-bit halves of the md5 (hex chars 1–8 / 9–16) — the 64-bit simhash
-    * sources. Mirrors operators.Dedup.simhashSignatures' h1/h2. */
+  /** 32-bit halves of the md5 (hex chars 1–8 / 9–16). */
   def hashLo(v: String) = s"CAST('0x'||substr(md5($v), 1, 8) AS BIGINT)"
   def hashHi(v: String) = s"CAST('0x'||substr(md5($v), 9, 8) AS BIGINT)"
   val Shingles =
     "list_distinct(list_transform(range(len(tk) - 2), i -> array_to_string(tk[i+1:i+3], ' ')))"
-  /** Multiset form (no distinct) — mirrors the raw `WordShingles` kernel
-    * for consumers that need repeat counts (B22 `text_repetition`). */
+  /** Multiset form (no distinct). */
   val ShinglesRaw =
     "list_transform(range(len(tk) - 2), i -> array_to_string(tk[i+1:i+3], ' '))"
 
-  /** Vector quantization to scaled BIGINTs — mirrors
-    * `graft.functions.quantizeVecSql` (floor(x·10⁴ + 0.5) per component). */
+  /** Vector quantization to scaled BIGINTs. */
   def quantizeVec(v: String): String =
     s"list_transform($v, x -> CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT))"
 
-  /** Per-cluster mean-vector table — mirrors operators.Ivf.centroids over
-    * source relation `src` (needs cols label, embedding FLOAT[64]). */
+  /** Per-cluster mean-vector table. */
   def centSql(src: String, dims: Int = 64): String =
     s"""SELECT label, CAST(list(cv ORDER BY dim) AS FLOAT[]) AS cent FROM (
        |    SELECT e.label AS label, d.dim AS dim, avg(CAST(e.embedding[d.dim + 1] AS DOUBLE)) AS cv
@@ -42,8 +35,7 @@ object DuckDialect {
     * ends_with separator anchor gives the identical non-overlapping merge
     * scan). Returns the comma-joined CTE bodies; callers embed them in a
     * WITH and read s<iters> / m1..m<iters>. */
-  /** The w0 word-guard mirror of operators.Bpe.WordGuardExpr — shared by
-    * every training-chain variant below. */
+  /** The w0 word-guard mirror of operators.Bpe.WordGuardExpr. */
   private val WordGuard =
     """WHERE NOT (contains(word, chr(29)) OR contains(word, chr(30))
       |    OR contains(word, chr(31)))""".stripMargin
@@ -76,21 +68,7 @@ object DuckDialect {
     sb.toString
   }
 
-  /** BATCHED BPE training unrolled as CTEs — mirrors operators.Bpe.
-    * trainBatched scan for scan. Per scan s: p_s recounts pairs over the
-    * previous state; c_s collects the top-`poolC` candidate rules (rank =
-    * the sequential trainer's (n DESC, l ASC, r ASC) total order) into ONE
-    * ordered list; a_s replays the driver's greedy accepted-only selection
-    * as a list_reduce whose accumulator is a framed string
-    * `rules␝blockedSymbols` (chr(29) frame, chr(30) rule separator,
-    * chr(31) l/r + blocked-symbol separator — the WordGuard filter keeps
-    * all three out of symbols); b_s/m_s decode the accepted rule list; and
-    * `batchM` NULL-tolerant fold steps t_s_1..t_s_M apply the accepted
-    * rules in order (an absent rule j leaves the state untouched via the
-    * rl[j] IS NULL branch). State CTEs are MATERIALIZED: each is
-    * referenced once, and inlining would nest scans·batchM folds into one
-    * expression. Callers read m1..m<scans> (bi, l, r) + p1..p<scans> for
-    * counts and t<scans>_<batchM> for the final state. */
+  /** BATCHED BPE training unrolled as CTEs. */
   def bpeBatchChain(scans: Int, batchM: Int, poolC: Int): String = {
     val rp = "string_split(acc, chr(29))[1]"
     val bp = "string_split(acc, chr(29))[2]"
@@ -119,9 +97,7 @@ object DuckDialect {
               |    row_number() OVER (ORDER BY n DESC, l ASC, r ASC) AS rk
               |  FROM p$s ORDER BY rk LIMIT $poolC))""".stripMargin
       val nr = s"(CASE WHEN $rp = '' THEN 0 ELSE len(string_split($rp, chr(30))) END)"
-      // NB: no emitted line may START with '||' — callers embed this chain
-      // inside their own stripMargin template, which would eat the first
-      // pipe as a margin char; concatenation operators trail instead
+      // NB: no emitted line may START with '||'
       p += s"""a$s AS (SELECT CASE WHEN len(cands) = 0 THEN chr(29)
               |    ELSE list_reduce(list_prepend(chr(29), cands), (acc, x) -> CASE
               |      WHEN $nr >= $batchM THEN acc
@@ -189,8 +165,7 @@ object DuckDialect {
     sb.toString
   }
 
-  /** Random-hyperplane LSH bucket id — mirrors operators.Lsh.bucketCol with
-    * the identical deterministic integer plane weights. */
+  /** Random-hyperplane LSH bucket id. */
   def bucketSql(vec: String, numPlanes: Int, dims: Int): String =
     (0 until numPlanes).map { j =>
       val plane = graft.operators.Lsh.planeWeights(j, dims)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{scaled, vectors}
@@ -29,59 +29,13 @@ object HybridQueries {
 
   private def bucketSql(vec: String): String = DuckDialect.bucketSql(vec, NumPlanes, Dims)
 
-  // the persisted-HNSW "ingest" (A35c): graphs build+serialize once per
-  // (JVM, sfDir) — the one-time index cost the repeated searches amortize,
-  // same contract as bucketed_join's layout memo. Memo AND on-disk path
-  // both key on the FULL dir (ADVICE r5: a basename-derived path under a
-  // full-dir memo let two dirs sharing a basename alternate into one
-  // location, silently rebuilding per switch — and a concurrent session
-  // could observe a mid-overwrite index).
-  private val hnswIndexFor = scala.collection.mutable.Map.empty[String, String]
-  private def dirKey(dir: String): String = graft.TmpDirs.dirKey(dir)
-  private def ensureHnswIndex(s: SparkSession, dir: String): String = synchronized {
-    hnswIndexFor.getOrElseUpdate(dir, {
-      val path = graft.TmpDirs.path("hnsw_index_" + dirKey(dir))
-      Hnsw.buildAndWrite(emb(s, dir).select("vec_id", "embedding"),
-        path, dims = Dims, numParts = 8)
-      path
-    })
-  }
-
-  // A45: the 2048-d GATE construction — the reference's actual
-  // dimensionality (reference acorn.py:30–40 builds at d=2048). The gate
-  // tables carry 64-d synthetic embeddings, so the r10 verdict's "does the
-  // scoring machinery survive d=2048" question was answered only with
-  // ScaleProbe timings; this derives a deterministic 2048-d FLOAT vector
-  // per row — wide[j] = base[((j%64)+(j div 64))%64] · ((j div 64)%5 +
-  // (j%64)%3 + 1), one float round — IDENTICALLY in both engines (integer
-  // index/multiplier arithmetic + IEEE round-to-nearest float cast), so
-  // the kernels are HASH-checked at the reference's width. Honest scope:
-  // values derive from 64-d data (no new gate table exists), but every one
-  // of the 2048 slots is computed, stored, and scored for real.
+  /** A45: the 2048-d frame at the reference's width, derived from the 64-d gate data in
+    * both engines: wide[j] = base[((j%64)+(j div 64))%64] · ((j div 64)%5 + (j%64)%3 + 1),
+    * one float round, run as the codegen'd WidenVec kernel. */
   private[graft] val WideDims = 2048
   private[graft] def wideEmbeddings(s: SparkSession, dir: String): DataFrame =
-    wideEmb(emb(s, dir))
-  // the derivation runs as the codegen'd WidenVec kernel (r12: the
-  // transform(sequence(0, 2047), ...) HOF form paid ~2048 boxed lambda
-  // calls per row per derivation, and every 2048-d entry derives the
-  // wide frame in several plan branches; arithmetic identical — float→
-  // double widen, integer multiplier, one float round — spec-pinned
-  // kernel ≡ HOF)
-  private def wideEmb(e: DataFrame): DataFrame =
-    e.select(col("vec_id"),
+    emb(s, dir).select(col("vec_id"),
       graft.functions.vectors.widen(col("embedding"), Dims, WideDims).as("embedding"))
-  /** The per-cluster WIDE centroid CTE (per-dim avg of the 2048 slots,
-    * cast to FLOAT[] — the Ivf.centroids contract at width) — ONE copy
-    * shared by every wide oracle with a probe prelude (A46f/A46g/A44b).
-    * Expects a `wide` CTE in scope. */
-  private[queries] val wideCentDuck: String =
-    """centw AS MATERIALIZED (
-      |  SELECT label, CAST(list(cv ORDER BY dim) AS FLOAT[]) AS cent FROM (
-      |    SELECT e.label AS label, d.dim AS dim,
-      |           avg(CAST(w.embedding[d.dim + 1] AS DOUBLE)) AS cv
-      |    FROM wide w JOIN embeddings e USING (vec_id) CROSS JOIN range(2048) d(dim)
-      |    GROUP BY e.label, d.dim)
-      |  GROUP BY label)""".stripMargin
 
   /** The same construction as a DuckDB expression over `embedding`. */
   private[queries] def wideDuck: String =
@@ -89,29 +43,23 @@ object HybridQueries {
       s"CAST((CAST(embedding AS DOUBLE[]))[((j % $Dims) + (j // $Dims)) % $Dims + 1]" +
       s" * CAST((j // $Dims) % 5 + (j % $Dims) % 3 + 1 AS DOUBLE) AS FLOAT)) AS FLOAT[])"
 
-  // A45b: persisted-HNSW lifecycle at the reference's width — graphs
-  // build+serialize once per (JVM, sfDir) over the WIDE vectors
-  private val hnswWideFor = scala.collection.mutable.Map.empty[String, String]
-  private def ensureHnswWideIndex(s: SparkSession, dir: String): String = synchronized {
-    hnswWideFor.getOrElseUpdate(dir, {
-      val path = graft.TmpDirs.path("hnsw_wide_index_" + dirKey(dir))
-      Hnsw.buildAndWrite(wideEmb(emb(s, dir)).select("vec_id", "embedding"),
-        path, dims = WideDims, numParts = 8)
-      path
-    })
-  }
+  /** A35c/A45b: the persisted per-partition HNSW graphs at width `w`, built once per
+    * (JVM, sfDir). */
+  private def hnswIndex(w: Width, s: SparkSession, dir: String): String =
+    w.persisted("hnsw_index", dir)(path => Hnsw.buildAndWrite(
+      w.frame(s, dir).select("vec_id", "embedding"), path, dims = w.dims, numParts = 8))
 
-  /** The ACORN corpus shape: every row indexed, the predicate as ONE
-    * relationally-computed bit (shared by the filtered entries and their
-    * recall row so they can never desynchronize). */
-  /** Pass-bit corpus for the filtered (ACORN) walks: the predicate's
-    * verdict rides WITH each (vec_id, embedding) row into its partition's
-    * graph. ONE construction path for any embedding frame — the d=64
-    * walks pass the base corpus, the A45c/A45d wide walks the derived
-    * 2048-d frame (the repartition(8) count is part of the per-partition
-    * graph contract, so it must not diverge between them). */
+  /** The base-half graphs of the append entries (the first IvfAppendSplit ids only). */
+  private[queries] def hnswBase(w: Width, s: SparkSession, dir: String): String =
+    w.persisted("hnsw_base", dir)(path => Hnsw.buildAndWrite(
+      w.frame(s, dir).filter(col("vec_id") < IvfAppendSplit).select("vec_id", "embedding"),
+      path, dims = w.dims, numParts = 8))
+
+  /** The ACORN corpus shape: every row of `src` indexed, the predicate's verdict riding
+    * with it as ONE relational bit into its partition's graph (the repartition(8) count is
+    * part of the per-partition graph contract). */
   private def passBitFrom(src: DataFrame, s: SparkSession, dir: String,
-                          pred: org.apache.spark.sql.Column, exclId: Long): DataFrame =
+                          pred: Column, exclId: Long): DataFrame =
     src.filter(col("vec_id") =!= exclId).select("vec_id", "embedding")
       .join(docs(s, dir).filter(pred).select(col("doc_id"), lit(true).as("pass")),
         col("vec_id") === col("doc_id"), "left")
@@ -119,40 +67,10 @@ object HybridQueries {
         coalesce(col("pass"), lit(false)).as("pass"))
       .repartition(8, col("vec_id"))
 
-  private def withPassBit(s: SparkSession, dir: String,
-                          pred: org.apache.spark.sql.Column, exclId: Long): DataFrame =
-    passBitFrom(emb(s, dir), s, dir, pred, exclId)
-
-  private def widePassBit(s: SparkSession, dir: String,
-                          pred: org.apache.spark.sql.Column, exclId: Long): DataFrame =
-    passBitFrom(wideEmb(emb(s, dir)), s, dir, pred, exclId)
-
-  /** The wide frame re-joined with its cluster column — the Spark twin of
-    * the oracle-side `wideLabeledCtes` `wl` CTE: every IVF-family width
-    * gate (probe/centroid arithmetic at d=2048) reads
-    * (vec_id, 2048-slot embedding, label). The cluster ASSIGNMENT is data
-    * (the corpus's label column), not derived from the wide vectors, so
-    * the join is a narrow broadcast-free id join against the base scan. */
-  private def wideLabeled(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
-    wideEmb(e).join(e.select("vec_id", "label"), "vec_id")
-      .select("vec_id", "embedding", "label")
-  }
-
-  /** The r13 vacuous-gate rule as ONE helper (r14 review: the guard was
-    * hand-inlined into a single entry while its twins stayed unguarded):
-    * a qid-parameterized entry whose query frame comes back empty would
-    * silently empty BOTH the entry and its oracle, and the hash gate
-    * would pass while checking nothing. Refuse loudly instead. Returns
-    * the frame so call sites stay expression-shaped. */
-  /** The collected-query-file form of the same rule (r15 review: the
-    * batch drivers hand-rolled this message three times). `expected` pins
-    * the FULL query-file size (ADVICE r15: a nonEmpty-only guard let a
-    * partially absent query file — 5 of 8 qids — silently shrink the gate
-    * on both entry and oracle sides; the single-qid requireQueryPresent
-    * convention refuses exactly this). */
-  private def requireQueriesPresent[T](qs: Seq[T], expected: Int,
-                                       who: String): Seq[T] = {
+  /** The vacuous-gate rule for a collected query file: a shrunken set would gate fewer
+    * rows on both entry and oracle sides (an empty one would pass vacuously). */
+  private[queries] def requireQueriesPresent[T](qs: Seq[T], expected: Int,
+                                                who: String): Seq[T] = {
     require(qs.length == expected,
       s"$who: query file holds ${qs.length} of $expected expected queries " +
         "— a shrunken set would gate fewer rows on both entry and oracle " +
@@ -161,25 +79,25 @@ object HybridQueries {
     qs
   }
 
-  private def requireQueryPresent(q: DataFrame, who: String): DataFrame = {
+  /** The vacuous-gate rule for one query: an absent query would empty both entry and
+    * oracle and the hash gate would pass while checking nothing. */
+  private[queries] def requireQueryPresent(q: DataFrame, who: String): DataFrame = {
     require(q.limit(1).count() == 1,
       s"$who: query vector absent from the corpus — the gate would pass " +
         "vacuously on two empty frames")
     q
   }
 
-  /** The README §3 evaluation-matrix body shared by the d=64 (A35h) and
-    * d=2048 (A48) gates (r14 review: the two entries duplicated ~55
-    * lines — the drift hazard pqServeDuck closes on the oracle side):
-    * selectivity class 1/2/3 × strategy {beam, acorn, post} at the
-    * reference's REAL constants (ef=200, largeK=200, metaSearch=100 —
-    * acorn.py:150–162) against the given persisted index, 8 queries per
-    * class, recall@10 hits SUMMED per (class, strategy) so one unlucky
-    * query cannot flip the gate, emitted as least(n_hit, floor) so the
-    * oracle's literal-floor assertion goes red exactly when measured
-    * recall drops below its knee. `frame` is the embedding frame the
-    * index was built over (base or derived-wide) — ground truths,
-    * queries, and walks all read it. */
+  /** The first row's vector of `frame` at `qid`, collected as query state. */
+  private def queryVec(frame: DataFrame, qid: Long, who: String): Array[Float] =
+    requireQueryPresent(frame.filter(col("vec_id") === qid), who)
+      .select("embedding").collect().head.getSeq[Float](0).toArray
+
+  /** The README §3 evaluation matrix (A35h/A48): selectivity class 1/2/3 × strategy
+    * {beam, acorn, post} at the reference's real constants (ef=200, largeK=200,
+    * metaSearch=100, acorn.py:150–162) against the persisted index built over `frame`, 8
+    * queries per class, recall@10 hits summed per cell so one unlucky query cannot flip
+    * the gate, emitted as least(n_hit, floor). */
   private def recallBeamMatrix(s: SparkSession, dir: String, frame: DataFrame,
                                path: String,
                                floors: Map[(String, String), Long]): DataFrame = {
@@ -215,11 +133,7 @@ object HybridQueries {
                           classes: Seq[(String, DataFrame, Seq[Long])],
                           floors: Map[(String, String), Long],
                           strategies: Seq[String], who: String): DataFrame = {
-    // classes are independent measurement cells: build them CONCURRENTLY
-    // (guide §2.6) — each class's construction blocks on a query-file
-    // collect plus up to two eager ground-truth localCheckpoints, and the
-    // sequential form left the executors idle between those small jobs.
-    // The union order below is the input order, so results are identical.
+    // classes are independent measurement cells: build them concurrently
     val rows = graft.Par.ordered(classes) { case (cls, passing, qids) =>
       val qs = requireQueriesPresent(
         frame.filter(col("vec_id").isin(qids: _*))
@@ -252,8 +166,7 @@ object HybridQueries {
             .agg(count(lit(1)).as("n_hit"))
             .select(lit(cls).as("cls"), lit("acorn").as("strategy"),
               least(col("n_hit"), lit(floors((cls, "acorn")))).as("n_hit_floor"))
-        // post-filter baseline (post-filter.py): unfiltered top-largeK
-        // beam, predicate applied afterwards, best 10 survivors per query
+        // post-filter baseline (post-filter.py)
         case "post" =>
           Hnsw.searchPersistedBatch(s, path, qs, 200, ef = 200)
             .join(passing, Seq("vec_id"))
@@ -274,34 +187,28 @@ object HybridQueries {
     rows.flatten.reduce(_ union _)
   }
 
-  /** A48 floor matrix — ONE copy shared by the entry and Wide2048Spec
-    * (ADVICE r14: the literals were triplicated; the oracle VALUES stays
-    * an independent replica by design — updating a floor means touching
-    * this Map AND the recall_hnsw_beam_2048 oracle). Floors sit 4–7 hits
-    * under the tri-scale min (sf0.001/0.01/0.1 measurements in SURVEY
-    * §8q): beam 80/80/80 all classes; acorn c1 80/80/53, c2 80/80/64,
-    * c3 80/80/62; post c1 73/77/74, c2 80/80/80, c3 80/80/80 — the
-    * metaSearch=100 budget knee (it bites at sf0.1's 250-row partitions,
-    * where the budget is finally smaller than the partition) and the
-    * post-filter collapse on the selective class both reproduce at the
-    * reference width. */
+  /** A35h/A48 recall-floor matrices per width, shared by the entries and the specs; the
+    * oracle VALUES stay an independent replica. Floors sit 4–7 hits under the tri-scale
+    * min (sf0.001/0.01/0.1, SURVEY §8q). d=64: beam 80/80/80 all classes; acorn c1 80/80/57,
+    * c2 80/80/63, c3 80/80/59; post c1 75/77/74, c2/c3 80/80/80. d=2048: beam 80/80/80;
+    * acorn c1 80/80/53, c2 80/80/64, c3 80/80/62; post c1 73/77/74, c2/c3 80/80/80. The
+    * acorn knee is the metaSearch=100 budget biting at sf0.1's 250-row partitions. */
+  private val RecallBeamFloors: Map[(String, String), Long] = Map(
+    ("c1", "beam") -> 76L, ("c1", "acorn") -> 50L, ("c1", "post") -> 68L,
+    ("c2", "beam") -> 76L, ("c2", "acorn") -> 56L, ("c2", "post") -> 76L,
+    ("c3", "beam") -> 76L, ("c3", "acorn") -> 52L, ("c3", "post") -> 76L)
   private[graft] val RecallBeam2048Floors: Map[(String, String), Long] = Map(
     ("c1", "beam") -> 76L, ("c1", "acorn") -> 48L, ("c1", "post") -> 68L,
     ("c2", "beam") -> 76L, ("c2", "acorn") -> 58L, ("c2", "post") -> 76L,
     ("c3", "beam") -> 76L, ("c3", "acorn") -> 56L, ("c3", "post") -> 76L)
 
-  /** A51 budget grid: (metaSearch budget, one-hop floor, two-hop floor,
-    * gain floor) — floors sit under the tri-scale min (sf0.001/0.01/0.1
-    * measurements in SURVEY §8r) with ≥2-hit margin where the min allows;
-    * gain floors pin two-hop ≥ one-hop (0 = "never loses", ≥1 = a
-    * measured strict win). ONE copy shared by the entry and HnswSpec;
-    * the oracle VALUES stays an independent replica by design. */
-  // measured (sf0.001/0.01/0.1, one ≡ two unless noted): b4 1/1/1,
-  // b8 1/1/1, b16 2/2/3, b32 6/5/3 (two-hop 6/6/3 — the one strict win,
-  // sf0.01), b64 9/10/5. Gain tri-scale min is 0 at every budget, so the
-  // gain floors pin the NEVER-LOSES half of the spec's claim (the strict
-  // win stays spec-level at its fixed corpus — a tri-scale floor above 0
-  // would be dishonest).
+  /** A51/A51b budget grids: (metaSearch budget, one-hop floor, two-hop floor, gain floor),
+    * shared by the entries and the specs; the oracle VALUES stay an independent replica.
+    * Floors sit under the tri-scale min (SURVEY §8r/§8s); gain floors pin two-hop ≥ one-hop.
+    * Measured d=64 (sf0.001/0.01/0.1): b4 1/1/1, b8 1/1/1, b16 2/2/3, b32 6/5/3 (two-hop
+    * 6/6/3), b64 9/10/5. Measured d=2048: b4 0/1/1, b8 0/1/1, b16 2/2/3, b32 6/5/3 (two-hop
+    * 6/6/3), b64 9/9/5. The gain min is 0 at every budget at both widths, so the gain
+    * floors pin the never-loses half of the claim. */
   private[graft] val TwoHopBudgets: Seq[(Int, Long, Long, Long)] = Seq(
     (4, 0L, 0L, 0L),
     (8, 0L, 0L, 0L),
@@ -309,18 +216,6 @@ object HybridQueries {
     (32, 2L, 2L, 0L),
     (64, 4L, 4L, 0L))
 
-  /** A51b budget grid at d=2048 — same (budget, one-hop floor, two-hop
-    * floor, gain floor) semantics as [[TwoHopBudgets]], re-measured
-    * tri-scale AT the wide configuration (SURVEY §8s — the r15 lesson:
-    * the two-hop gain is configuration-specific, so the width claim
-    * needs its own measured grid). ONE copy shared by the entry and
-    * Wide2048Spec; the oracle VALUES stays an independent replica. */
-  // measured (sf0.001/0.01/0.1, one ≡ two unless noted): b4 0/1/1,
-  // b8 0/1/1, b16 2/2/3, b32 6/5/3 (two-hop 6/6/3 — the one strict win,
-  // sf0.01 b32, the SAME cell that won at d=64), b64 9/9/5. Gain
-  // tri-scale min is 0 at every budget, so the gain floors pin the
-  // never-loses half (the TwoHopBudgets convention). Floors = tri-scale
-  // min − 1 where the min allows.
   private[graft] val TwoHopBudgets2048: Seq[(Int, Long, Long, Long)] = Seq(
     (4, 0L, 0L, 0L),
     (8, 0L, 0L, 0L),
@@ -350,12 +245,7 @@ object HybridQueries {
       .agg(count(lit(1)).as("n"), min("vec_id").as("min_member"))
   }
 
-  /** The A30b/A30c drift-rebuild body shared by both widths over any
-    * (vec_id, embedding, label) frame: base centroids, one narrow
-    * assignment projection for the arrivals, two label-keyed dispersion
-    * aggregates, the integer threshold verdict, and ONE conditional
-    * re-centering pass over only the verdict-rebuilt clusters' members
-    * (served_mean reads fresh centroids exactly where rebuild=1). */
+  /** The A30b/A30c drift-rebuild body over a (vec_id, embedding, label) frame. */
   private def ivfDriftRebuild(src: DataFrame): DataFrame = {
     val base = src.filter(col("vec_id") < IvfAppendSplit)
     val cent = Ivf.centroids(base)
@@ -382,12 +272,7 @@ object HybridQueries {
       .union(arrA.select("vec_id", "label")
         .join(src.select("vec_id", "embedding"), "vec_id")
         .select(col("vec_id"), col("label"), col("embedding")))
-    // Re-center ONLY the rebuilt clusters' members (r12 verdict note):
-    // the fresh frame's non-rebuilt rows were never read by the CASE
-    // dispatch below, so restricting the aggregate to verdict-rebuilt
-    // labels skips the pass entirely on drift-free days — output hash
-    // unchanged, the "one conditional re-centering pass" claim literal.
-    // The fresh join becomes LEFT (fcent null ⇔ rebuild=0, never read).
+    // Re-center ONLY the rebuilt clusters' members
     val fresh = Ivf.centroids(members
         .join(broadcast(verd.filter(col("rebuild") === 1).select("label")), "label")
         .select("vec_id", "label", "embedding"))
@@ -404,13 +289,7 @@ object HybridQueries {
       .select("label", "n_base", "n_new", "mean_base", "mean_new", "rebuild", "served_mean")
   }
 
-  /** The A51/A51b curve body shared by both widths: pass-bit corpus from
-    * the given embedding frame, exact prefilter ground truth over the
-    * same frame, ONE sweep pass (each partition's graph builds once and
-    * serves every (budget, flag) cell — r15 review: the per-call form
-    * rebuilt the graphs 10×), counts left-joined onto the literal grid
-    * (a zero-hit cell must still emit its row), least(n_hit, floor) mode
-    * rows plus per-budget least(two − one, gain_floor) `gain` rows. */
+  /** The A51/A51b curve body shared by both widths. */
   private def twoHopRecallCurve(s: SparkSession, dir: String, src: DataFrame,
                                 budgets: Seq[(Int, Long, Long, Long)],
                                 who: String): DataFrame = {
@@ -489,16 +368,7 @@ object HybridQueries {
     ("c2", "post") -> 76L,
     ("c3", "post") -> 76L)
 
-  /** The A15b ABO-shaped JSONL synthesis (nested value-structs, optional
-    * brand, optional other_image_id), deterministic from `documents` —
-    * ONE construction shared by listings_parse and the A50 end-to-end
-    * pipeline so their parse inputs can never desynchronize.
-    * The synthesis constants (doc_id % 5 brand gate, % 25 model_year,
-    * the coalesce defaults) live in THREE places by design — here, the
-    * acorn_pipeline_e2e oracle's SQL literals, and Wide2048Spec's
-    * plain-Scala reconstruction (oracle independence) — a change that
-    * misses one replica flips the gate red without a code bug, so edit
-    * all three in lockstep. */
+  /** The A15b ABO-shaped JSONL synthesis. */
   private def listingsJsonl(s: SparkSession, dir: String): DataFrame =
     docs(s, dir).select(concat(
       lit("{\"item_id\":\"item_"), col("doc_id"),
@@ -517,12 +387,7 @@ object HybridQueries {
       lit("}}],\"country\":\"C"), col("doc_id") % 7, lit("\"}")
     ).as("value"))
 
-  /** The A50 parse→attr stage shared by the capstone and its recall row:
-    * JSONL → typed parse → image-id explode → per-listing attr frame
-    * keyed back to the embedding id. Parse runs ONCE per entry (the
-    * frame is materialized): three class predicates read it, and without
-    * materialization each passing-set filter would re-run the whole
-    * JSONL parse — at 100 TB that is 3 corpus parses for 1 needed. */
+  /** The A50 parse→attr stage shared by the capstone and its recall row. */
   private def parsedListingAttrs(s: SparkSession, dir: String): DataFrame =
     graft.operators.Dedup.materialize(
       graft.sources.Listings.imageMetadata(
@@ -532,9 +397,7 @@ object HybridQueries {
             .cast("long").as("vec_id"),
           col("brand"), col("color"), col("model_year")))
 
-  /** The notebook's three query_metadata classes over the PARSED
-    * attributes — one copy shared by acorn_pipeline_e2e and its recall
-    * row so their pass sets can never desynchronize. */
+  /** The notebook's three query_metadata classes over the PARSED attributes. */
   private def pipelineClassPred(cls: String): org.apache.spark.sql.Column =
     cls match {
       case "c1" => col("brand").isNotNull && col("brand") === "src1"
@@ -542,11 +405,7 @@ object HybridQueries {
       case "c3" => col("model_year").isNotNull && col("model_year") <= 2010
     }
 
-  /** A14h: the clustered-layout export at a FIXED path (the A52
-    * convention — the DuckDB oracle read_parquets the layout itself, so
-    * the path must be static in the oracle SQL and must outlive this
-    * JVM, ruling out TmpDirs). Rebuilt whenever the (JVM, sfDir) pair
-    * changes so a scale switch never serves a stale corpus' layout. */
+  /** A14h: the clustered-layout export at a FIXED path. */
   private[queries] val ClusteredConsumerPath =
     "/root/repo/target/ivf_consumer/layout"
   private var clusteredConsumerBuiltFor: Option[String] = None
@@ -559,33 +418,493 @@ object HybridQueries {
       ClusteredConsumerPath
     }
 
-  // base-half index for the append entry (first IvfAppendSplit ids only)
-  private val hnswBaseFor = scala.collection.mutable.Map.empty[String, String]
-  private[queries] def ensureHnswBase(s: SparkSession, dir: String): String = synchronized {
-    hnswBaseFor.getOrElseUpdate(dir, {
-      val path = graft.TmpDirs.path("hnsw_base_" + dirKey(dir))
-      Hnsw.buildAndWrite(
-        emb(s, dir).filter(col("vec_id") < IvfAppendSplit).select("vec_id", "embedding"),
-        path, dims = Dims, numParts = 8)
-      path
-    })
+  /** A50c/A50d: the capstone's strategy matrix and recall table at the reference width. */
+  private val PipelineMatrix = Width.Wide.name("acorn_pipeline_e2e")
+  private val PipelineRecallTable = Width.Wide.name("acorn_pipeline_recall")
+
+  /** The persisted-graph serve's names: its reference-width twin is `knn_hnsw_2048`. */
+  private def hnswPersistedName(w: Width): String =
+    w.pick("knn_hnsw_persisted", w.name("knn_hnsw"))
+
+  /** The class-1 selective predicate of the ACORN walks and the recall rows. */
+  private val Class1Pred = MetaPredicate("lang" -> ("exact", "zh"), "n_chars" -> ("<", 150))
+  private val Class1Duck =
+    "d.lang IS NOT NULL AND d.lang = 'zh' AND d.n_chars IS NOT NULL AND d.n_chars < 150"
+
+  /** (n_ret, n_hit) of an approximate id set against its exact ground truth, one pass. */
+  private def hitCounts(approx: DataFrame, exact: DataFrame): DataFrame =
+    approx.join(exact.withColumn("_hit", lit(1)), Seq("vec_id"), "left")
+      .agg(count(lit(1)).as("n_ret"), count(col("_hit")).as("n_hit"))
+
+  /** The (vec_id, cluster, q) assignment of `qemb` to the integer centroids `cent`, and
+    * the centroids as a searchable frame (quantized components stay < 10⁵, exact in Float). */
+  private def centroidGraphInputs(s: SparkSession, cent: Seq[(Long, Array[Long])],
+                                  qemb: DataFrame): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val centDf = cent.map { case (cl, v) => (cl, v.map(_.toFloat)) }
+      .toDF("vec_id", "embedding").repartition(1)
+    val assigned = qemb.select(col("vec_id"),
+      graft.functions.centroids.nearestLong(col("q"), cent).getField("label").as("cluster"),
+      col("q"))
+    (centDf, assigned)
   }
 
-  // base-half WIDE index for the streaming wide append entry (C58f) —
-  // the ensureHnswBase construction over the derived 2048-d frame
-  private val hnswWideBaseFor = scala.collection.mutable.Map.empty[String, String]
-  private[queries] def ensureHnswWideBase(s: SparkSession, dir: String): String = synchronized {
-    hnswWideBaseFor.getOrElseUpdate(dir, {
-      val path = graft.TmpDirs.path("hnsw_wide_base_" + dirKey(dir))
-      Hnsw.buildAndWrite(
-        wideEmb(emb(s, dir)).filter(col("vec_id") < IvfAppendSplit)
-          .select("vec_id", "embedding"),
-        path, dims = WideDims, numParts = 8)
-      path
-    })
-  }
+  /** The search families defined once over their [[Width]]; each emits a d=64 entry and
+    * its `_2048` twin. */
+  private val twins: Seq[Seq[Width.Entry]] = Seq(
+    // A6/A45: brute-force L2 top-k (reference pre-filter.py ann_naive), self excluded
+    Width.twin("knn_exact_l2")(
+      w => (s, dir) => {
+        val e = w.frame(s, dir)
+        Knn.topK(e.filter(col("vec_id") =!= 0).select("vec_id", "embedding"),
+          e.filter(col("vec_id") === 0).select(col("embedding").as("q_vec")), 10, Knn.L2)
+          .select("vec_id", "score")
+      },
+      w => s"""${w.withTbl}SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
+              |FROM ${w.tbl} e CROSS JOIN (SELECT embedding FROM ${w.tbl} WHERE vec_id = 0) q
+              |WHERE e.vec_id <> 0 ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin),
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // A14d/A14e: IVF with an HNSW coarse quantizer; the centroid frame's graphs are walked
+    // at the saturating beam (exact), then the probed members score by integer sq-L2
+    Width.twin("knn_ivf_hnsw")(
+      w => (s, dir) => {
+        val e = w.frame(s, dir)
+        val (cent, qemb) = KMeans.fitInt(
+          e.filter(col("vec_id") =!= 21).select("vec_id", "embedding"), k = 10, iters = 3)
+        val qv = graft.operators.Pq.quantized(requireQueryPresent(
+            e.filter(col("vec_id") === 21), w.name("knn_ivf_hnsw")))
+          .select("q").head.getSeq[Long](0).toArray
+        val (centDf, assigned) = centroidGraphInputs(s, cent, qemb)
+        val probed = Hnsw.searchPerPartition(centDf, qv.map(_.toFloat), k = 3, ef = 0)
+          .select("vec_id").collect().map(_.getLong(0))
+        val qLit = s"array(${qv.map(v => s"${v}L").mkString(", ")})"
+        assigned.filter(col("cluster").isin(probed: _*))
+          .selectExpr("vec_id", graft.functions.sqDistLongSql("q", qLit) + " AS score")
+          .orderBy(col("score").asc, col("vec_id").asc).limit(10)
+      },
+      w => {
+        val qz = DuckDialect.quantizeVec("embedding")
+        // the probe ranks by the HNSW score contract, floor(sqrt(d²)·10⁴+0.5) with ties to
+        // the lower label, because that is the ranking the graph walk returns
+        s"""WITH ${w.cte}ed AS MATERIALIZED (SELECT vec_id, $qz AS q FROM ${w.tbl} WHERE vec_id <> 21),
+           |qq AS (SELECT $qz AS q FROM ${w.tbl} WHERE vec_id = 21),
+           |${DuckDialect.lloydChain(10, 3, w.dims)},
+           |probes AS (SELECT cl FROM (
+           |  SELECT c.cl, row_number() OVER (ORDER BY ${hnswScoreDuck(w, "c.cent", "q.q")} ASC,
+           |      c.cl ASC) AS rn
+           |  FROM c3 c CROSS JOIN qq q) WHERE rn <= 3)
+           |SELECT e.vec_id, ${sqdDuck(w, "e.q", "q.q")} AS score
+           |FROM ed e JOIN af USING (vec_id) JOIN probes p ON af.cl = p.cl CROSS JOIN qq q
+           |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin
+      }),
+
+    // A14f/A14g: the graph-searched coarse quantizer batched; trained once over the full
+    // corpus (queries are indexed, self-hits included), one pruned scan with k-heaps
+    Width.twin("knn_ivf_hnsw_batch")(
+      w => (s, dir) => {
+        val e = w.frame(s, dir)
+        val (cent, qemb) = KMeans.fitInt(e.select("vec_id", "embedding"), k = 10, iters = 3)
+        val qids = 0L until 8L
+        val qFrame = graft.operators.Pq.quantized(e.filter(col("vec_id").isin(qids: _*)))
+          .select(col("vec_id").as("q_id"), col("q").as("qq"))
+        val qvs = requireQueriesPresent(
+          qFrame.collect()
+            .map(r => (r.getLong(0), r.getSeq[Long](1).map(_.toFloat).toArray))
+            .toSeq.sortBy(_._1),
+          qids.length, w.name("knn_ivf_hnsw_batch"))
+        val (centDf, assigned) = centroidGraphInputs(s, cent, qemb)
+        // ≤ |Q|·nProbe rows of model state
+        val probeRel = Hnsw.searchPerPartitionBatch(centDf, qvs, k = 3, ef = 0)
+          .select(col("q_id"), col("vec_id").as("cluster"))
+        assigned.join(broadcast(probeRel), "cluster")
+          .join(broadcast(qFrame), "q_id")
+          .withColumn("score", vectors.sqDistLong(col("q"), col("qq")))
+          .groupBy("q_id")
+          .agg(graft.functions.aggs.topK(col("score"), col("vec_id"), 10,
+            asc = true).as("hits"))
+          .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
+          .select(col("q_id"), col("hit.id").as("vec_id"),
+            (col("pos") + 1).cast("long").as("rank"), col("hit.score").as("score"))
+      },
+      w => s"""WITH ${w.cte}ed AS MATERIALIZED (SELECT vec_id,
+              |  ${DuckDialect.quantizeVec("embedding")} AS q FROM ${w.tbl}),
+              |qs AS MATERIALIZED (SELECT vec_id AS q_id, q FROM ed WHERE vec_id < 8),
+              |${DuckDialect.lloydChain(10, 3, w.dims)},
+              |probes AS (SELECT q_id, cl FROM (
+              |  SELECT qs.q_id, c.cl, row_number() OVER (PARTITION BY qs.q_id ORDER BY
+              |      ${hnswScoreDuck(w, "c.cent", "qs.q")} ASC, c.cl ASC) AS rn
+              |  FROM c3 c CROSS JOIN qs) WHERE rn <= 3),
+              |scored AS (SELECT qs.q_id, e.vec_id, ${sqdDuck(w, "e.q", "qs.q")} AS score
+              |  FROM ed e JOIN af USING (vec_id)
+              |  JOIN probes p ON af.cl = p.cl
+              |  JOIN qs ON qs.q_id = p.q_id)
+              |SELECT q_id, vec_id, rank, score FROM (
+              |  SELECT q_id, vec_id, CAST(row_number() OVER (PARTITION BY q_id
+              |    ORDER BY score ASC, vec_id ASC) AS BIGINT) AS rank, score FROM scored)
+              |WHERE rank <= 10""".stripMargin),
+
+    // A31/A31b: multi-probe LSH, the query's bucket and every 1-flip Hamming neighbor
+    Width.twin("ann_lsh_multiprobe")(
+      w => (s, dir) => {
+        val e = w.frame(s, dir)
+        val q = requireQueryPresent(
+          e.filter(col("vec_id") === 3).select(col("embedding").as("q_vec")),
+          w.name("ann_lsh_multiprobe"))
+        Lsh.multiProbeSearch(e.filter(col("vec_id") =!= 3).select("vec_id", "embedding"), q, 5,
+          NumPlanes, w.dims, maxFlips = 1).select("vec_id", "score")
+      },
+      w => s"""WITH ${w.cte}b AS (SELECT vec_id, embedding,
+              |  ${DuckDialect.bucketSql("embedding", NumPlanes, w.dims)} AS bucket FROM ${w.tbl}),
+              |q AS (SELECT embedding, bucket FROM b WHERE vec_id = 3)
+              |SELECT e.vec_id, ${cosSql("e.embedding", "q.embedding")} AS score
+              |FROM b e CROSS JOIN q
+              |WHERE e.vec_id <> 3 AND bit_count(xor(e.bucket, q.bucket)) <= 1
+              |ORDER BY score DESC, e.vec_id ASC LIMIT 5""".stripMargin),
+
+    // A33/A33b: split the 3 hottest clusters around their min/max-id seeds
+    Width.twin("ivf_split_hot")(
+      w => (s, dir) => ivfSplitHot(w.labeled(s, dir)),
+      w => splitHotOracleSql(w)),
+
+    // A30/A30d: incremental append; arrivals assign to the existing centroids in one
+    // narrow projection (the NearestCentroid kernel)
+    Width.twin("knn_ivf_append")(
+      w => (s, dir) => {
+        val e = w.labeled(s, dir)
+        val cent = Ivf.centroids(e.filter(col("vec_id") < IvfAppendSplit))
+        Ivf.assignToNearest(e.filter(col("vec_id") >= IvfAppendSplit), cent)
+          .select(col("vec_id"), col("label").cast("long").as("label"), col("d"))
+      },
+      w => s"""WITH ${w.cte}cent AS MATERIALIZED (${DuckDialect.centSql(
+                s"(SELECT * FROM ${w.tbl} WHERE vec_id < $IvfAppendSplit)", w.dims)}),
+              |a AS (SELECT e.vec_id, c.label, ${l2Sql("e.embedding", "c.cent")} AS d,
+              |  row_number() OVER (PARTITION BY e.vec_id
+              |    ORDER BY ${l2Sql("e.embedding", "c.cent")} ASC, c.label ASC) AS rn
+              |  FROM ${w.tbl} e CROSS JOIN cent c WHERE e.vec_id >= $IvfAppendSplit)
+              |SELECT vec_id, CAST(label AS BIGINT) AS label, d FROM a WHERE rn = 1""".stripMargin),
+
+    // A30b/A30c: drift-triggered rebuild; both dispatch arms fire at the gate scales
+    // (6/10 rebuilt at sf0.001, 5/10 at sf0.01; SURVEY §8s at width)
+    Width.twin("ivf_drift_rebuild")(
+      w => (s, dir) => ivfDriftRebuild(w.labeled(s, dir)),
+      w => driftRebuildOracleSql(w)),
+
+    // A28/A28b: selectivity-dispatched search, one query per reference class
+    Width.twin("knn_auto")(
+      w => (s, dir) => {
+        val all = w.labeled(s, dir)
+        val d = docs(s, dir)
+        val corpus = all.filter(col("vec_id") =!= 5)
+        val q = requireQueryPresent(all.filter(col("vec_id") === 5), w.name("knn_auto"))
+          .select(col("embedding").as("q_vec"))
+        val cases = Seq(
+          ("c1", MetaPredicate("source" -> ("exact", "src1"))),
+          ("c2", MetaPredicate("lang" -> ("exact", "zh"))),
+          ("c3", MetaPredicate("n_chars" -> ("leq", 300))))
+        // each dispatch runs two selectivity counts: build the cases concurrently, union in
+        // input order
+        graft.Par.ordered(cases) { case (cls, pred) =>
+          Ivf.autoKnn(corpus, d, pred, q, k = 5)
+            .select(lit(cls).as("cls"), col("strategy"), col("vec_id"), col("score"))
+        }.reduce(_ union _)
+      },
+      w => autoKnnOracleSql(w)),
+
+    // A35c/A45b: the persisted-index lifecycle; the graphs build once, the serve restores
+    // and walks at the saturating beam (exact); query 13 is indexed, so rank 1 is itself
+    Width.named(hnswPersistedName)(
+      w => (s, dir) => Hnsw.searchPersisted(s, hnswIndex(w, s, dir),
+        queryVec(w.frame(s, dir), 13, hnswPersistedName(w)), 10, ef = 0),
+      w => s"""${w.withTbl}SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
+              |FROM ${w.tbl} e CROSS JOIN (SELECT embedding FROM ${w.tbl} WHERE vec_id = 13) q
+              |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin),
+
+    // A35b/A45c: the ACORN predicate-aware walk; saturated, it equals the exact prefilter
+    Width.twin("hybrid_knn_hnsw")(
+      w => (s, dir) => Hnsw.searchFilteredPerPartition(
+        passBitFrom(w.frame(s, dir), s, dir,
+          w.pick(Class1Pred, col("lang").isNotNull && col("lang") === "zh"), 11),
+        queryVec(w.frame(s, dir), 11, w.name("hybrid_knn_hnsw")), 10, metaSearch = 0),
+      w => prefilterL2Duck(w, qid = 11, w.pick(Class1Duck, "d.lang IS NOT NULL AND d.lang = 'zh'"))),
+
+    // A35g/A45d: the ACORN-γ two-hop walk; the flag changes budget-bound traversal order
+    // only, so the saturated walk is still exact
+    Width.twin("hybrid_knn_hnsw_2hop")(
+      w => (s, dir) => Hnsw.searchFilteredPerPartition(
+        passBitFrom(w.frame(s, dir), s, dir, Class1Pred, 17),
+        queryVec(w.frame(s, dir), 17, w.name("hybrid_knn_hnsw_2hop")), 10, metaSearch = 0,
+        twoHop = true),
+      w => prefilterL2Duck(w, qid = 17, Class1Duck)),
+
+    // A35f/A35i: the query file served from one restore pass per partition; self-hits
+    // included
+    Width.twin("knn_hnsw_batch")(
+      w => (s, dir) => {
+        val path = hnswIndex(w, s, dir)
+        val qs = requireQueriesPresent(
+          w.frame(s, dir).filter(col("vec_id") <= 4)
+            .select(col("vec_id"), col("embedding")).collect()
+            .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+            .sortBy(_._1),
+          5, w.name("knn_hnsw_batch"))
+        Hnsw.searchPersistedBatch(s, path, qs, 3, ef = 0)
+      },
+      w => s"""${w.withTbl}SELECT q_id, vec_id, rank, score FROM (
+              |  SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
+              |    CAST(row_number() OVER (PARTITION BY q.vec_id
+              |      ORDER BY ${l2Sql("e.embedding", "q.embedding")} ASC, e.vec_id ASC) AS BIGINT) AS rank,
+              |    ${l2Sql("e.embedding", "q.embedding")} AS score
+              |  FROM ${w.tbl} e CROSS JOIN (SELECT vec_id, embedding FROM ${w.tbl} WHERE vec_id <= 4) q
+              |) WHERE rank <= 3""".stripMargin),
+
+    // A35h/A48: README §3's class × strategy recall matrix at the reference's real
+    // constants, emitted as least(n_hit, floor); the oracle asserts the literal floors
+    Width.twin("recall_hnsw_beam")(
+      w => (s, dir) => recallBeamMatrix(s, dir, w.frame(s, dir), hnswIndex(w, s, dir),
+        w.pick(RecallBeamFloors, RecallBeam2048Floors)),
+      w => s"""SELECT cls, strategy, CAST(floor AS BIGINT) AS n_hit_floor FROM (VALUES
+              |  ${w.pick(
+                "('c1', 'beam', 76), ('c1', 'acorn', 50), ('c1', 'post', 68),\n" +
+                "  ('c2', 'beam', 76), ('c2', 'acorn', 56), ('c2', 'post', 76),\n" +
+                "  ('c3', 'beam', 76), ('c3', 'acorn', 52), ('c3', 'post', 76)",
+                "('c1', 'beam', 76), ('c1', 'acorn', 48), ('c1', 'post', 68),\n" +
+                "  ('c2', 'beam', 76), ('c2', 'acorn', 58), ('c2', 'post', 76),\n" +
+                "  ('c3', 'beam', 76), ('c3', 'acorn', 56), ('c3', 'post', 76)")}
+              |) AS t(cls, strategy, floor)""".stripMargin),
+
+    // A51/A51b: the two-hop recall curve over interior budgets; a `gain` row below its
+    // floor means the bridge lost recall at equal budget. The measured grids coincide at
+    // both widths, so one literal replica serves both oracles.
+    Width.twin("recall_hnsw_2hop")(
+      w => (s, dir) => twoHopRecallCurve(s, dir, w.frame(s, dir),
+        w.pick(TwoHopBudgets, TwoHopBudgets2048), w.name("recall_hnsw_2hop")),
+      _ => """SELECT CAST(budget AS BIGINT) AS budget, mode,
+             |  CAST(n_hit_floor AS BIGINT) AS n_hit_floor
+             |FROM (VALUES
+             |  (4, 'one', 0), (4, 'two', 0), (4, 'gain', 0),
+             |  (8, 'one', 0), (8, 'two', 0), (8, 'gain', 0),
+             |  (16, 'one', 1), (16, 'two', 1), (16, 'gain', 0),
+             |  (32, 'one', 2), (32, 'two', 2), (32, 'gain', 0),
+             |  (64, 'one', 4), (64, 'two', 4), (64, 'gain', 0)
+             |) t(budget, mode, n_hit_floor)""".stripMargin),
+
+    // A13b/A13d: README §3's recall collapse: post-filter and IVF-hybrid vs the exact
+    // pre-filter truth, one predicate per selectivity class; counts computed on both sides
+    Width.twin("recall_filtered")(
+      w => (s, dir) => {
+        val all = w.labeled(s, dir)
+        val e = all.filter(col("vec_id") =!= 11)
+        val q = requireQueryPresent(all.filter(col("vec_id") === 11), w.name("recall_filtered"))
+          .select(col("embedding").as("q_vec"))
+        val d = docs(s, dir)
+        val classes = Seq(
+          ("class1_selective", Class1Pred),
+          ("class2_mid", MetaPredicate("lang" -> ("exact", "zh"))),
+          ("class3_broad", MetaPredicate("n_chars" -> ("leq", 400))))
+        // the IVF index is class-independent: its centroids build once
+        val cent = Ivf.centroids(e).localCheckpoint(true)
+        classes.map { case (cls, pred) =>
+          val exact = Knn.prefilterKnn(e, d, pred, q, 10, Knn.Cosine).select("vec_id")
+            .localCheckpoint(true)
+          Seq(
+            "post" -> Knn.postfilterKnn(e, d, pred, q, 10, 50, Knn.Cosine).select("vec_id"),
+            "hybrid" -> Ivf.searchProbed(cent, e, d, pred, q, 10, 2, Knn.Cosine,
+              "vec_id", "doc_id", "embedding", "label").select("vec_id"))
+            .map { case (strat, approx) =>
+              hitCounts(approx, exact).select(lit(cls).as("cls"), lit(strat).as("strategy"),
+                col("n_ret"), col("n_hit"))
+            }.reduce(_ union _)
+        }.reduce(_ union _)
+      },
+      w => {
+        val preds = Seq(
+          ("class1_selective", Class1Duck),
+          ("class2_mid", "d.lang IS NOT NULL AND d.lang = 'zh'"),
+          ("class3_broad", "d.n_chars IS NOT NULL AND d.n_chars <= 400"))
+        val classCtes = preds.zipWithIndex.map { case ((_, p), i) =>
+          s"""exact$i AS (
+             |  SELECT e.vec_id FROM e JOIN documents d ON d.doc_id = e.vec_id CROSS JOIN q
+             |  WHERE $p ORDER BY ${cosSql("e.embedding", "q.embedding")} DESC, e.vec_id ASC LIMIT 10),
+             |post$i AS (
+             |  SELECT c.vec_id FROM cand c JOIN documents d ON d.doc_id = c.vec_id
+             |  WHERE $p ORDER BY c.score DESC, c.vec_id ASC LIMIT 10),
+             |hyb$i AS (
+             |  SELECT e.vec_id FROM e JOIN probes pr ON e.label = pr.label
+             |  JOIN documents d ON d.doc_id = e.vec_id CROSS JOIN q
+             |  WHERE $p ORDER BY ${cosSql("e.embedding", "q.embedding")} DESC, e.vec_id ASC LIMIT 10)"""
+            .stripMargin
+        }.mkString(",\n")
+        val rows = preds.zipWithIndex.flatMap { case ((cls, _), i) =>
+          Seq("post", "hybrid").map { strat =>
+            val t = if (strat == "post") s"post$i" else s"hyb$i"
+            s"""SELECT '$cls' AS cls, '$strat' AS strategy,
+               |  (SELECT count(*) FROM $t) AS n_ret,
+               |  (SELECT count(*) FROM $t JOIN exact$i USING (vec_id)) AS n_hit""".stripMargin
+          }
+        }.mkString("\nUNION ALL\n")
+        s"""WITH ${w.cte}q AS (SELECT embedding FROM ${w.tbl} WHERE vec_id = 11),
+           |e AS MATERIALIZED (SELECT vec_id, embedding, label FROM ${w.tbl} WHERE vec_id <> 11),
+           |cand AS (
+           |  SELECT e.vec_id, ${cosSql("e.embedding", "q.embedding")} AS score
+           |  FROM e CROSS JOIN q ORDER BY score DESC, e.vec_id ASC LIMIT 50),
+           |cent AS (${DuckDialect.centSql("e", w.dims)}),
+           |probes AS (
+           |  SELECT c.label FROM cent c CROSS JOIN q
+           |  ORDER BY ${cosSql("c.cent", "q.embedding")} DESC, c.label ASC LIMIT 2),
+           |$classCtes
+           |$rows""".stripMargin
+      }),
+
+    // A13c/A13e: the saturated ACORN walk vs the post-filter baseline on the class-1
+    // predicate; the oracle's 'acorn' row asserts perfect filtered recall
+    Width.twin("recall_hnsw_filtered")(
+      w => (s, dir) => {
+        val frame = w.frame(s, dir)
+        val d = docs(s, dir)
+        val all = frame.filter(col("vec_id") =!= 11).select("vec_id", "embedding")
+        val qDf = frame.filter(col("vec_id") === 11).select(col("embedding").as("q_vec"))
+        val qv = queryVec(frame, 11, w.name("recall_hnsw_filtered"))
+        val exact = Knn.prefilterKnn(all, d, Class1Pred, qDf, 10, Knn.L2).select("vec_id")
+          .localCheckpoint(true)
+        Seq(
+          "acorn" -> Hnsw.searchFilteredPerPartition(passBitFrom(frame, s, dir, Class1Pred, 11),
+            qv, 10, metaSearch = 0).select("vec_id"),
+          "post" -> Knn.postfilterKnn(all, d, Class1Pred, qDf, 10, 50, Knn.L2).select("vec_id"))
+          .map { case (strat, approx) =>
+            hitCounts(approx, exact).select(lit(strat).as("strategy"), col("n_ret"), col("n_hit"))
+          }.reduce(_ union _)
+      },
+      w => s"""WITH ${w.cte}q AS (SELECT embedding FROM ${w.tbl} WHERE vec_id = 11),
+              |e AS (SELECT vec_id, embedding FROM ${w.tbl} WHERE vec_id <> 11),
+              |exact AS (
+              |  SELECT e.vec_id FROM e JOIN documents d ON d.doc_id = e.vec_id CROSS JOIN q
+              |  WHERE $Class1Duck
+              |  ORDER BY ${l2Sql("e.embedding", "q.embedding")} ASC, e.vec_id ASC LIMIT 10),
+              |cand AS (
+              |  SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
+              |  FROM e CROSS JOIN q ORDER BY score ASC, e.vec_id ASC LIMIT 50),
+              |post AS (
+              |  SELECT c.vec_id FROM cand c JOIN documents d ON d.doc_id = c.vec_id
+              |  WHERE $Class1Duck
+              |  ORDER BY c.score ASC, c.vec_id ASC LIMIT 10)
+              |SELECT 'acorn' AS strategy, (SELECT count(*) FROM exact) AS n_ret,
+              |  (SELECT count(*) FROM exact) AS n_hit
+              |UNION ALL
+              |SELECT 'post' AS strategy, (SELECT count(*) FROM post) AS n_ret,
+              |  (SELECT count(*) FROM post JOIN exact USING (vec_id)) AS n_hit""".stripMargin),
+
+    // A11/A11c: the attribute-specific index, built only over attribute-present rows
+    Width.twin("attr_specific_knn")(
+      w => (s, dir) => {
+        val all = w.labeled(s, dir)
+        val sub = all
+          .join(docs(s, dir).filter(MetaPredicate("lang" -> ("exact", "zh"))),
+            col("vec_id") === col("doc_id"))
+          .select("vec_id", "embedding", "label")
+        val q = requireQueryPresent(all.filter(col("vec_id") === 7), w.name("attr_specific_knn"))
+          .select(col("embedding").as("q_vec"))
+        Ivf.hybridKnn(sub, docs(s, dir), col("doc_id") =!= 7, q, k = 5, nProbe = 2)
+          .select("vec_id", "score")
+      },
+      w => s"""WITH ${w.cte}sub AS MATERIALIZED (
+              |  SELECT e.vec_id, e.embedding, e.label FROM ${w.tbl} e
+              |  JOIN documents d ON d.doc_id = e.vec_id
+              |  WHERE d.lang IS NOT NULL AND d.lang = 'zh'),
+              |cent AS (${DuckDialect.centSql("sub", w.dims)}),
+              |q AS (SELECT embedding FROM ${w.tbl} WHERE vec_id = 7),
+              |probes AS (
+              |  SELECT c.label FROM cent c CROSS JOIN q
+              |  ORDER BY ${cosSql("c.cent", "q.embedding")} DESC, c.label ASC LIMIT 2)
+              |SELECT s.vec_id, ${cosSql("s.embedding", "q.embedding")} AS score
+              |FROM sub s JOIN probes p ON s.label = p.label CROSS JOIN q
+              |WHERE s.vec_id <> 7
+              |ORDER BY score DESC, s.vec_id ASC LIMIT 5""".stripMargin),
+
+    // A11b/A11d: the graph-native attribute-specific form; the graph indexes only
+    // attribute-present rows and the class-3 predicate runs as the saturated walk (k=3)
+    Width.twin("attr_specific_knn_hnsw")(
+      w => (s, dir) => {
+        val e = w.frame(s, dir)
+        val qv = queryVec(e, 9, w.name("attr_specific_knn_hnsw"))
+        val pred = MetaPredicate("n_chars" -> ("leq", 400), "lang" -> ("substring", "e"))
+        val corpus = e.filter(col("vec_id") =!= 9).select("vec_id", "embedding")
+          .join(docs(s, dir).filter(col("n_chars").isNotNull)
+              .select(col("doc_id"), pred.as("p0")),
+            col("vec_id") === col("doc_id"))
+          .select(col("vec_id"), col("embedding"),
+            coalesce(col("p0"), lit(false)).as("pass"))
+          .repartition(8, col("vec_id"))
+        Hnsw.searchFilteredPerPartition(corpus, qv, 3, metaSearch = 0)
+      },
+      w => s"""${w.withTbl}SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
+              |FROM ${w.tbl} e
+              |JOIN documents d ON d.doc_id = e.vec_id
+              |CROSS JOIN (SELECT embedding FROM ${w.tbl} WHERE vec_id = 9) q
+              |WHERE e.vec_id <> 9
+              |  AND d.n_chars IS NOT NULL
+              |  AND d.n_chars <= 400
+              |  AND d.lang IS NOT NULL AND position('e' IN d.lang) > 0
+              |ORDER BY score ASC, e.vec_id ASC LIMIT 3""".stripMargin),
+
+    // A10b/A10c: the reference's adaptive widening loop (acorn.py:162): double the probed
+    // clusters until ≥ k survivors; the oracle replays the loop's decision
+    Width.twin("hybrid_knn_adaptive")(
+      w => (s, dir) => {
+        val all = w.labeled(s, dir)
+        val q = requireQueryPresent(all.filter(col("vec_id") === 3), w.name("hybrid_knn_adaptive"))
+          .select(col("embedding").as("q_vec"))
+        Ivf.adaptiveHybridKnn(all, docs(s, dir),
+          MetaPredicate("lang" -> ("exact", "fr")) && (col("doc_id") =!= 3),
+          q, k = 10)
+          .select("vec_id", "score")
+      },
+      w => s"""WITH ${w.cte}q AS (SELECT embedding FROM ${w.tbl} WHERE vec_id = 3),
+              |cent AS (${DuckDialect.centSql(w.tbl, w.dims)}),
+              |ranked AS (
+              |  SELECT c.label AS label, row_number() OVER (
+              |    ORDER BY ${cosSql("c.cent", "q.embedding")} DESC, c.label ASC) AS pr
+              |  FROM cent c CROSS JOIN q),
+              |nc AS (SELECT count(*) AS n FROM cent),
+              |nps AS (
+              |  SELECT DISTINCT LEAST(p.v, nc.n) AS np
+              |  FROM (SELECT unnest([1,2,4,8,16,32,64,128,256,512,1024,2048,4096,
+              |                       8192,16384,32768,65536]) AS v) p CROSS JOIN nc),
+              |surv AS (
+              |  SELECT n.np AS np, count(*) AS cnt
+              |  FROM nps n JOIN ranked r ON r.pr <= n.np
+              |  JOIN ${w.tbl} e ON e.label = r.label
+              |  JOIN documents d ON d.doc_id = e.vec_id
+              |  WHERE d.lang IS NOT NULL AND d.lang = 'fr' AND d.doc_id <> 3
+              |  GROUP BY n.np),
+              |chosen AS (
+              |  SELECT COALESCE((SELECT min(np) FROM surv WHERE cnt >= 10),
+              |                  (SELECT max(np) FROM nps)) AS np)
+              |SELECT e.vec_id, ${cosSql("e.embedding", "q.embedding")} AS score
+              |FROM ${w.tbl} e JOIN ranked r ON e.label = r.label CROSS JOIN chosen ch
+              |JOIN documents d ON d.doc_id = e.vec_id CROSS JOIN q
+              |WHERE r.pr <= ch.np AND d.lang IS NOT NULL AND d.lang = 'fr' AND d.doc_id <> 3
+              |ORDER BY score DESC, e.vec_id ASC LIMIT 10""".stripMargin)
+  )
+
+  /** Integer squared L2 of two quantized vectors at width `w`. */
+  private def sqdDuck(w: Width, a: String, b: String): String =
+    s"CAST(list_sum(list_transform(range(1, ${w.dims + 1}), i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))) AS BIGINT)"
+
+  /** The HNSW score of an integer squared distance: floor(sqrt(d²)·10⁴+0.5). */
+  private def hnswScoreDuck(w: Width, a: String, b: String): String =
+    s"CAST(floor(sqrt(CAST(${sqdDuck(w, a, b)} AS DOUBLE)) * 10000 + 0.5) AS BIGINT)"
+
+  /** The exact L2 prefilter top 10 for query `qid` (self excluded) under predicate `pred`
+    * over documents `d`: what a saturated ACORN walk must return. */
+  private def prefilterL2Duck(w: Width, qid: Int, pred: String): String =
+    s"""${w.withTbl}SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
+       |FROM ${w.tbl} e
+       |JOIN documents d ON d.doc_id = e.vec_id
+       |CROSS JOIN (SELECT embedding FROM ${w.tbl} WHERE vec_id = $qid) q
+       |WHERE e.vec_id <> $qid AND $pred
+       |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin
+
+  val defs: Map[String, (SparkSession, String) => DataFrame] = Map[String, Width.Run](
     // A14: IVF index build — per-cluster centroids, one shuffle on (label,dim)
     "ivf_build" -> ((s, dir) =>
       emb(s, dir)
@@ -629,177 +948,7 @@ object HybridQueries {
         .orderBy(col("score").asc, col("vec_id").asc).limit(10)
     }),
 
-    // A14d: IVF with an HNSW COARSE QUANTIZER — the FAISS IVF_HNSW shape
-    // (faiss IndexHNSW as the coarse quantizer of an IndexIVF; Douze et
-    // al., The Faiss library, 2024 §4.3). At 100 TB the centroid table
-    // itself is search-scale (√n ≈ 10⁶ centroids of a 10¹² corpus):
-    // ranking ALL centroids per query — what A14c's driver-side probe and
-    // C9's nearestLong kernel both do — becomes the bottleneck, so probe
-    // selection runs as a graph walk over per-partition HNSW graphs built
-    // on the CENTROID frame (O(log C) per query vs O(C)). Here ef=0 is
-    // the saturating sentinel (exact at any sf, the A35 contract), and
-    // the oracle replays the probe ranking under the HNSW score contract
-    // — floor(sqrt(d²)·10⁴+0.5), ties to the lower label — which can
-    // collapse near-tied centroids a raw-d² ranking would split, so the
-    // oracle ranks by the SAME scaled score, not raw d². Quantized
-    // integer coords (≤~10⁵) are exact in Float and their Double
-    // distance sums exact (< 2⁵³), so the graph's float math IS the
-    // integer ranking. Members of the probed clusters then score by
-    // exact integer squared L2 (the A14c tail).
-    "knn_ivf_hnsw" -> ((s, dir) => {
-      import s.implicits._
-      val corpus = emb(s, dir).select("vec_id", "embedding")
-        .filter(col("vec_id") =!= 21)
-      val (cent, qemb) = KMeans.fitInt(corpus, k = 10, iters = 3)
-      val qv = graft.operators.Pq.quantized(requireQueryPresent(
-          emb(s, dir).filter(col("vec_id") === 21), "knn_ivf_hnsw"))
-        .select("q").head.getSeq[Long](0).toArray
-      // the k·d model state as a SEARCHABLE frame — at 10⁶ centroids this
-      // is a real table and the per-partition graphs are the index
-      val centDf = cent.map { case (cl, v) => (cl, v.map(_.toFloat)) }
-        .toDF("vec_id", "embedding").repartition(1)
-      val probed = Hnsw.searchPerPartition(centDf, qv.map(_.toFloat), k = 3, ef = 0)
-        .select("vec_id").collect().map(_.getLong(0))  // ≤ nProbe rows
-      val qLit = s"array(${qv.map(v => s"${v}L").mkString(", ")})"
-      qemb.select(col("vec_id"),
-          graft.functions.centroids.nearestLong(col("q"), cent)
-            .getField("label").as("cluster"), col("q"))
-        .filter(col("cluster").isin(probed: _*))
-        .selectExpr("vec_id", graft.functions.sqDistLongSql("q", qLit) + " AS score")
-        .orderBy(col("score").asc, col("vec_id").asc).limit(10)
-    }),
-
-    // A14f: the IVF×HNSW coarse quantizer BATCHED (r14 verdict "also
-    // open" — the one serving family composition without a batch form):
-    // the reference's query-file loop against the graph-searched coarse
-    // quantizer. The index trains ONCE over the FULL corpus (queries
-    // arrive later — the persisted-serving convention, self-hits
-    // included, unlike A14d's single-query exclude-then-train), the
-    // centroid frame's per-partition graphs answer the WHOLE broadcast
-    // query file in one pass (searchPerPartitionBatch — at 10⁶ centroids
-    // a per-query graph rebuild would dominate the serve), and ONE
-    // pruned scan joins the (q_id, cluster) probe relation against the
-    // assigned members with per-query map-side k-heaps. Saturating beam
-    // ⇒ the probe ranking is exact and the oracle replays Lloyd's, the
-    // per-query probe windows, and the pruned integer scan.
-    "knn_ivf_hnsw_batch" -> ((s, dir) => {
-      import s.implicits._
-      val e = emb(s, dir)
-      val (cent, qemb) = KMeans.fitInt(e.select("vec_id", "embedding"),
-        k = 10, iters = 3)
-      val qids = (0L until 8L)
-      val qFrame = graft.operators.Pq.quantized(
-          e.filter(col("vec_id").isin(qids: _*)))
-        .select(col("vec_id").as("q_id"), col("q").as("qq"))
-      val qvs = requireQueriesPresent(
-        qFrame.collect()
-          .map(r => (r.getLong(0), r.getSeq[Long](1).map(_.toFloat).toArray))
-          .toSeq.sortBy(_._1),
-        qids.length, "knn_ivf_hnsw_batch")
-      val centDf = cent.map { case (cl, v) => (cl, v.map(_.toFloat)) }
-        .toDF("vec_id", "embedding").repartition(1)
-      // ≤ |Q|·nProbe rows of model state — the A14d probed-label contract
-      val probeRel = Hnsw.searchPerPartitionBatch(centDf, qvs, k = 3, ef = 0)
-        .select(col("q_id"), col("vec_id").as("cluster"))
-      qemb.select(col("vec_id"),
-          graft.functions.centroids.nearestLong(col("q"), cent)
-            .getField("label").as("cluster"), col("q"))
-        .join(broadcast(probeRel), "cluster")
-        .join(broadcast(qFrame), "q_id")
-        .withColumn("score", graft.functions.vectors.sqDistLong(col("q"), col("qq")))
-        .groupBy("q_id")
-        .agg(graft.functions.aggs.topK(col("score"), col("vec_id"), 10,
-          asc = true).as("hits"))
-        .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-        .select(col("q_id"), col("hit.id").as("vec_id"),
-          (col("pos") + 1).cast("long").as("rank"), col("hit.score").as("score"))
-    }),
-
-    // A14e: IVF×HNSW at the REFERENCE width — the A14d composition (the
-    // coarse quantizer ITSELF is graph-searched: at 10⁶ centroids the
-    // probe step is its own ANN problem, faiss's IVF_HNSW/quantizer
-    // pattern) with every distance at d=2048: integer Lloyd's over the
-    // wide frame (NearestCentroidLong E-step, floor-mean M-step), the
-    // k·d centroid table walked by the HNSW graph at the saturating beam
-    // (exact ⇒ oracle-replayable), then pruned exact integer search over
-    // the probed clusters' members. The kmeans/graph/scan arithmetic is
-    // width-dependent end to end; the oracle unrolls the wide Lloyd
-    // chain (lloydChain at dims=2048) and replays probe + scan.
-    "knn_ivf_hnsw_2048" -> ((s, dir) => {
-      import s.implicits._
-      val w = wideEmb(emb(s, dir))
-      val corpus = w.filter(col("vec_id") =!= 21).select("vec_id", "embedding")
-      val (cent, qemb) = KMeans.fitInt(corpus, k = 10, iters = 3)
-      val qv = graft.operators.Pq.quantized(requireQueryPresent(
-          w.filter(col("vec_id") === 21), "knn_ivf_hnsw_2048"))
-        .select("q").head.getSeq[Long](0).toArray
-      // quantized components stay < 10⁵ ⇒ exactly representable as Float
-      val centDf = cent.map { case (cl, v) => (cl, v.map(_.toFloat)) }
-        .toDF("vec_id", "embedding").repartition(1)
-      val probed = Hnsw.searchPerPartition(centDf, qv.map(_.toFloat), k = 3, ef = 0)
-        .select("vec_id").collect().map(_.getLong(0))
-      val qLit = s"array(${qv.map(v => s"${v}L").mkString(", ")})"
-      qemb.select(col("vec_id"),
-          graft.functions.centroids.nearestLong(col("q"), cent)
-            .getField("label").as("cluster"), col("q"))
-        .filter(col("cluster").isin(probed: _*))
-        .selectExpr("vec_id", graft.functions.sqDistLongSql("q", qLit) + " AS score")
-        .orderBy(col("score").asc, col("vec_id").asc).limit(10)
-    }),
-
-    // A14g: the batched graph-searched coarse quantizer AT THE REFERENCE
-    // WIDTH (r15 verdict next #2 — A14f × A14e: the reference's query-file
-    // loop, acorn.py `__main__`, runs against the d=2048 index it builds
-    // at :35–49, and the batched-probe arithmetic — per-partition centroid
-    // walks + per-query probe windows — is width-dependent end to end).
-    // The wide integer Lloyd's chain trains ONCE over the FULL derived
-    // corpus (the A14f persisted-serving convention — queries are indexed,
-    // self-hits included), the d=2048 centroid frame's per-partition
-    // graphs answer the whole broadcast query file in one pass
-    // (searchPerPartitionBatch at the saturating beam — exact ⇒ the probe
-    // ranking is oracle-replayable), and ONE pruned scan joins the
-    // (q_id, cluster) probe relation against the assigned members with
-    // per-query map-side k-heaps — ≤ |Q|·k rows cross the shuffle. The
-    // oracle unrolls the wide Lloyd chain (lloydChain at dims=2048),
-    // replays the per-query probe windows under the HNSW score contract,
-    // and re-runs the pruned integer scan.
-    "knn_ivf_hnsw_batch_2048" -> ((s, dir) => {
-      import s.implicits._
-      val w = wideEmb(emb(s, dir))
-      val (cent, qemb) = KMeans.fitInt(w.select("vec_id", "embedding"),
-        k = 10, iters = 3)
-      val qids = (0L until 8L)
-      val qFrame = graft.operators.Pq.quantized(
-          w.filter(col("vec_id").isin(qids: _*)))
-        .select(col("vec_id").as("q_id"), col("q").as("qq"))
-      val qvs = requireQueriesPresent(
-        qFrame.collect()
-          .map(r => (r.getLong(0), r.getSeq[Long](1).map(_.toFloat).toArray))
-          .toSeq.sortBy(_._1),
-        qids.length, "knn_ivf_hnsw_batch_2048")
-      // quantized wide components stay < 7·10⁴ ⇒ exactly representable as
-      // Float (the A14e contract); the k·2048 model state as a frame
-      val centDf = cent.map { case (cl, v) => (cl, v.map(_.toFloat)) }
-        .toDF("vec_id", "embedding").repartition(1)
-      // ≤ |Q|·nProbe rows of model state — the A14d probed-label contract
-      val probeRel = Hnsw.searchPerPartitionBatch(centDf, qvs, k = 3, ef = 0)
-        .select(col("q_id"), col("vec_id").as("cluster"))
-      qemb.select(col("vec_id"),
-          graft.functions.centroids.nearestLong(col("q"), cent)
-            .getField("label").as("cluster"), col("q"))
-        .join(broadcast(probeRel), "cluster")
-        .join(broadcast(qFrame), "q_id")
-        .withColumn("score", graft.functions.vectors.sqDistLong(col("q"), col("qq")))
-        .groupBy("q_id")
-        .agg(graft.functions.aggs.topK(col("score"), col("vec_id"), 10,
-          asc = true).as("hits"))
-        .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-        .select(col("q_id"), col("hit.id").as("vec_id"),
-          (col("pos") + 1).cast("long").as("rank"), col("hit.score").as("score"))
-    }),
-
-    // A10: ACORN-style hybrid search — probe 2 nearest clusters, metadata
-    // predicate pushed into the pruned scan
+    // A10: ACORN-style hybrid search
     "hybrid_knn" -> ((s, dir) => {
       val q = emb(s, dir).filter(col("vec_id") === 5).select(col("embedding").as("q_vec"))
       Ivf.hybridKnn(
@@ -809,26 +958,13 @@ object HybridQueries {
         .select("vec_id", "score")
     }),
 
-    // A12b: the reference's per-query main loop as ONE batched plan —
-    // per-query probes and per-query top-k both via TopKHits k-heaps
+    // A12b: the reference's per-query main loop as ONE batched plan
     "hybrid_knn_batch" -> ((s, dir) => {
       val e = emb(s, dir)
       val qs = e.filter(col("vec_id") <= 4)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       Ivf.hybridBatchKnn(e, docs(s, dir),
         MetaPredicate("n_chars" -> ("leq", 400)), qs, k = 5, nProbe = 2)
-    }),
-
-    // A11: attribute-specific index — the clustered index is built ONLY
-    // over rows possessing the attribute (reference: model_year subset)
-    "attr_specific_knn" -> ((s, dir) => {
-      val sub = emb(s, dir)
-        .join(docs(s, dir).filter(MetaPredicate("lang" -> ("exact", "zh"))),
-          col("vec_id") === col("doc_id"))
-        .select("vec_id", "embedding", "label")
-      val q = emb(s, dir).filter(col("vec_id") === 7).select(col("embedding").as("q_vec"))
-      Ivf.hybridKnn(sub, docs(s, dir), col("doc_id") =!= 7, q, k = 5, nProbe = 2)
-        .select("vec_id", "score")
     }),
 
     // B6: LSH-bucketed ANN — deterministic hyperplanes, in-bucket search
@@ -840,42 +976,7 @@ object HybridQueries {
       Lsh.annSearch(corpus, q, 5, NumPlanes, Dims).select("vec_id", "score")
     }),
 
-    // A31: multi-probe LSH — probe the query's bucket AND every 1-flip
-    // Hamming neighbor (Lv et al.): recovers the neighbors a single-bucket
-    // probe loses across one hyperplane, without more hash tables. The
-    // probe set is (numPlanes+1) buckets via an integer bit_count test.
-    "ann_lsh_multiprobe" -> ((s, dir) => {
-      val corpus = emb(s, dir).filter(col("vec_id") =!= 3).select("vec_id", "embedding")
-      val q = requireQueryPresent(
-        emb(s, dir).filter(col("vec_id") === 3).select(col("embedding").as("q_vec")),
-        "ann_lsh_multiprobe")
-      Lsh.multiProbeSearch(corpus, q, 5, NumPlanes, Dims, maxFlips = 1)
-        .select("vec_id", "score")
-    }),
-
-    // A31b: multi-probe LSH at the REFERENCE width (r13 verdict next #5):
-    // the hyperplane/recall trade is width-dependent — each plane test
-    // pays a 2048-term dot product and the hash geometry changes with
-    // dimensionality, so the d=64 gate never exercises the wide sign
-    // arithmetic. Same deterministic integer plane weights (md5-derived,
-    // exactly representable as Float) derived AT d=2048 over the A45
-    // wide frame; the 1-flip Hamming ball still prunes the scan to
-    // (numPlanes+1) of 2^numPlanes buckets. The oracle re-derives the
-    // buckets from the identical plane constants embedded as literals.
-    // Wide2048Spec pins the candidate-superset law at width.
-    "ann_lsh_multiprobe_2048" -> ((s, dir) => {
-      val w = wideEmb(emb(s, dir))
-      val corpus = w.filter(col("vec_id") =!= 3).select("vec_id", "embedding")
-      val q = requireQueryPresent(
-        w.filter(col("vec_id") === 3).select(col("embedding").as("q_vec")),
-        "ann_lsh_multiprobe_2048")
-      Lsh.multiProbeSearch(corpus, q, 5, NumPlanes, WideDims, maxFlips = 1)
-        .select("vec_id", "score")
-    }),
-
-    // A13: recall@10 of the probe-2 IVF search vs exact kNN, queries 0..4.
-    // Both rankings use the TopKHits aggregate (map-side k-heaps) — no
-    // full-shuffle window over the scored corpus on either path.
+    // A13: recall@10 of the probe-2 IVF search vs exact kNN, queries 0..4
     "recall_eval" -> ((s, dir) => {
       val e = emb(s, dir)
       val qs = e.filter(col("vec_id") <= 4)
@@ -901,26 +1002,14 @@ object HybridQueries {
         .select(col("q_id"), coalesce(col("h"), lit(0L)).as("n_hit"))
     }),
 
-    // A34: embedding drift / domain-dispersion monitor — per metadata
-    // group (source), the embedding centroid and the members' mean/max
-    // SQUARED L2 to it: the dashboard a training pipeline watches to catch
-    // a domain collapsing to near-duplicates or a crawler's embedding
-    // distribution shifting between snapshots. INTEGER-EXACT end to end
-    // (the r2 hash-red fix): components quantize to scaled integers BEFORE
-    // averaging, the centroid is an element-wise integer floor-mean
-    // (VecSumLong — order-independent, unlike float accumulation), and the
-    // dispersion is the squared L2 in quantized units (no libm sqrt).
-    // Shape: one VecSumLong centroid aggregate (groups×d values cross the
-    // shuffle, never n×d rows), centroids broadcast back, one narrow
-    // integer distance scan; the mean is an integer sum-div-count.
+    // A34: embedding drift / domain-dispersion monitor
     "embedding_drift" -> ((s, dir) => {
       val ed = emb(s, dir).join(docs(s, dir), col("vec_id") === col("doc_id"))
         .select(col("source"),
           graft.functions.vectors.quantize(col("embedding")).as("q"))
       val cent = ed.groupBy("source")
         .agg(graft.functions.aggs.vecSumLong(col("q")).as("sv"), count(lit(1)).as("cnt"))
-        // element-wise floor-mean; components can be negative, so floor
-        // division is spelled via the pmod identity (div truncates)
+        // element-wise floor-mean
         .select(col("source"),
           expr(graft.functions.floorMeanVecSql("sv", "cnt")).as("cent"))
       ed.join(broadcast(cent), "source")
@@ -949,29 +1038,6 @@ object HybridQueries {
         emb(s, dir).select("embedding"), iters = 4, dims = 64)
       v.zipWithIndex.map { case (x, i) => (i.toLong, x) }.toSeq
         .toDF("dim", "loading")
-    }),
-
-    // A33: index maintenance — split the hottest clusters (the rebalance
-    // sibling of A30's append): the top-3 most-populated clusters are
-    // split in place, each member reassigned to the nearer of two
-    // deterministic seed members (the cluster's min-id and max-id vectors
-    // — a seeded stand-in for one k=2 Lloyd's step, the ivf_build
-    // determinism trade). One size aggregate + a broadcast of 3×2 seed
-    // vectors + one narrow argmin over ONLY the hot clusters' members. At
-    // 100 TB this is the periodic rebalance that keeps probe fan-out
-    // uniform while the append path (A30) keeps ingesting.
-    "ivf_split_hot" -> ((s, dir) => ivfSplitHot(emb(s, dir))),
-
-    // A33b: hot-cluster splitting at the REFERENCE WIDTH — the last
-    // maintenance-family member gated only at d=64 (A30c/A30d closed the
-    // other two this round): the seed distances and the two-way re-
-    // assignment are width-dependent, so the wide geometry can split a
-    // hot cluster DIFFERENTLY than the 64-d frame does. Same body via
-    // the shared helper; the oracle replays hot selection, min/max seeds,
-    // and the tie-to-lo assignment over the wide CTEs.
-    "ivf_split_hot_2048" -> ((s, dir) => {
-      val e = emb(s, dir)
-      ivfSplitHot(wideEmb(e).join(e.select("vec_id", "label"), "vec_id"))
     }),
 
     // A32: recall of single-bucket vs 1-flip multi-probe LSH against the
@@ -1006,72 +1072,6 @@ object HybridQueries {
         .join(hitsOf(1, "h1"), Seq("q_id"), "left")
         .select(col("q_id"), coalesce(col("h0"), lit(0L)).as("n_hit_single"),
           coalesce(col("h1"), lit(0L)).as("n_hit_multi"))
-    }),
-
-    // A30: incremental index APPEND (FAISS add() analogue, the vector
-    // sibling of B24): arriving vectors (vec_id ≥ 400) are assigned to the
-    // nearest centroid of the EXISTING index — no retrain; the k·d
-    // centroid table compiles into the `NearestCentroid` codegen kernel,
-    // so assignment is ONE NARROW PROJECTION (zero shuffle — the r2 form
-    // crossJoined to n·k rows and shuffled them through an argmin
-    // aggregate). Integer-scaled distance, label tie-break — same
-    // determinism contract as every ranked oracle. At 100 TB this is the
-    // ingest path: batch arrives, assigns, appends to its cluster's
-    // partition; centroid drift is handled by periodic rebuild (A14c)
-    "knn_ivf_append" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val cent = Ivf.centroids(e.filter(col("vec_id") < IvfAppendSplit))
-      Ivf.assignToNearest(e.filter(col("vec_id") >= IvfAppendSplit), cent)
-        .select(col("vec_id"), col("label").cast("long").as("label"), col("d"))
-    }),
-
-    // A30d: the A30 ingest path at the REFERENCE WIDTH — the other half
-    // of the r15 verdict's maintenance-at-width leftover (A30c gates the
-    // rebuild DECISION; this gates the plain add_items assignment,
-    // acorn.py:40–49, at the d=2048 the reference runs it). The
-    // NearestCentroid kernel compiles the 10×2048 centroid table as
-    // literal state, so assignment stays ONE narrow projection — width
-    // grows the literal, not the plan.
-    "knn_ivf_append_2048" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val w = wideEmb(e).join(e.select("vec_id", "label"), "vec_id")
-      val cent = Ivf.centroids(w.filter(col("vec_id") < IvfAppendSplit))
-      Ivf.assignToNearest(w.filter(col("vec_id") >= IvfAppendSplit), cent)
-        .select(col("vec_id"), col("label").cast("long").as("label"), col("d"))
-    }),
-
-    // A30b: DRIFT-TRIGGERED REBUILD (r11 verdict next #6): A30/A21f/A35d
-    // all say "drift is handled by periodic rebuild" — this entry DECIDES
-    // one, composing A34's dispersion monitor over the appended index.
-    // Per stale cluster: base members' mean scaled-L2 to the stale
-    // centroid vs the arriving members' (assigned by the A30 kernel);
-    // verdict REBUILD when arrivals disperse >1.2× the base (integer
-    // cross-multiplication — no division) OR make up ≥20% of the cluster.
-    // The decision is CONSEQUENTIAL in the output: `served_mean` is every
-    // member's mean distance to the centroid the verdict serves (fresh
-    // = recomputed over base ∪ arrivals for rebuilt clusters, stale
-    // otherwise) — the oracle replays threshold AND dispatch. Both arms
-    // fire at the gate scales (6/10 rebuilt at sf0.001, 5/10 at sf0.01).
-    // At 100 TB this is the maintenance planner's query: one narrow
-    // assignment projection, two label-keyed aggregates, one conditional
-    // re-centering pass over only the members' vectors.
-    "ivf_drift_rebuild" -> ((s, dir) => ivfDriftRebuild(emb(s, dir))),
-
-    // A30c: the drift-triggered rebuild AT THE REFERENCE WIDTH (r15
-    // verdict next #6 — the maintenance family's kernels are
-    // width-parametric, but the add-while-serving path the reference
-    // actually runs, acorn.py:40–49 add_items, happens at the d=2048 it
-    // builds; this gates the assign kernel, the dispersion monitor, and
-    // the conditional re-centering over 2048-slot vectors). Same body as
-    // A30b through the shared helper; the oracle re-derives the
-    // assignment CTEs, drift stats, verdict, and dispatch over the wide
-    // frame (centSql at dims=2048). Both dispatch arms fire at the gate
-    // scales (measured in SURVEY §8s).
-    "ivf_drift_rebuild_2048" -> ((s, dir) => {
-      val e = emb(s, dir)
-      // the derived-wide frame carries no cluster column — join the
-      // seeded label back (the C66f convention)
-      ivfDriftRebuild(wideEmb(e).join(e.select("vec_id", "label"), "vec_id"))
     }),
 
     // A28: the recall/cost KNOB curve (reference acorn.py trades nprobe/
@@ -1115,88 +1115,20 @@ object HybridQueries {
       }.reduce(_ union _)
     }),
 
-    // A13b: the reference's HEADLINE experiment (README §3 evaluation table):
-    // recall of post-filter and hybrid search vs the exact PRE-FILTER ground
-    // truth, under one predicate per selectivity class. The expected shape is
-    // the reference's: post-filter recall collapses as the filter gets more
-    // selective; hybrid holds up by pushing the predicate into the probe.
-    "recall_filtered" -> ((s, dir) => {
-      val all = emb(s, dir)
-      val e = all.filter(col("vec_id") =!= 11)
-      val q = all.filter(col("vec_id") === 11).select(col("embedding").as("q_vec"))
-      val d = docs(s, dir)
-      val classes = Seq(
-        ("class1_selective",
-          MetaPredicate("lang" -> ("exact", "zh"), "n_chars" -> ("<", 150))),
-        ("class2_mid", MetaPredicate("lang" -> ("exact", "zh"))),
-        ("class3_broad", MetaPredicate("n_chars" -> ("leq", 400))))
-      // the IVF index is class-independent: build its centroids ONCE (C
-      // tiny rows, eagerly materialized) instead of once per class
-      val cent = Ivf.centroids(e).localCheckpoint(true)
-      classes.map { case (cls, pred) =>
-        // ≤10-row ground truth, materialized once and reused by both
-        // strategies' hit joins (localCheckpoint avoids re-running the
-        // pre-filter scan per reference)
-        val exact = Knn.prefilterKnn(e, d, pred, q, 10, Knn.Cosine).select("vec_id")
-          .localCheckpoint(true)
-        val strategies = Seq(
-          "post" -> Knn.postfilterKnn(e, d, pred, q, 10, 50, Knn.Cosine).select("vec_id"),
-          "hybrid" -> Ivf.searchProbed(cent, e, d, pred, q, 10, 2, Knn.Cosine,
-            "vec_id", "doc_id", "embedding", "label").select("vec_id"))
-        strategies.map { case (strat, approx) =>
-          // single pass over approx: left-join the ground truth, count
-          // returned rows and hits in one aggregate
-          approx.join(exact.withColumn("_hit", lit(1)), Seq("vec_id"), "left")
-            .agg(count(lit(1)).as("n_ret"), count(col("_hit")).as("n_hit"))
-            .select(lit(cls).as("cls"), lit(strat).as("strategy"),
-              col("n_ret"), col("n_hit"))
-        }.reduce(_ union _)
-      }.reduce(_ union _)
-    }),
-
-    // A10b: the reference's adaptive widening loop (acorn.py:162
-    // `while visits <= meta_search`): double the probed cluster count until
-    // >= k filter-passing survivors. lang='fr' leaves ~6 survivors per
-    // cluster at sf0.01, so probe-1 genuinely fails and the loop widens.
-    "hybrid_knn_adaptive" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val q = e.filter(col("vec_id") === 3).select(col("embedding").as("q_vec"))
-      Ivf.adaptiveHybridKnn(e, docs(s, dir),
-        MetaPredicate("lang" -> ("exact", "fr")) && (col("doc_id") =!= 3),
-        q, k = 10)
-        .select("vec_id", "score")
-    }),
-
-    // A14b: the 100 TB index LAYOUT, driver-verified end-to-end — write the
-    // corpus partitioned by cluster id, probe the 2 nearest clusters, and
-    // read back through partition pruning (the scan's PartitionFilters skip
-    // the other C-2 directories before any IO; asserted in
-    // ClusteredLayoutSpec over this very entry).
+    // A14b: the 100 TB index LAYOUT, oracle-verified end-to-end
     "clustered_probe" -> ((s, dir) => {
       val e = emb(s, dir)
       val path = "/root/repo/target/clustered/" + new java.io.File(dir).getName
       Ivf.writeClustered(e, path)
       val q = e.filter(col("vec_id") === 4).select(col("embedding").as("q_vec"))
-      // 2 probed labels are k·1 driver-side model state (same contract as
-      // buildAndRegisterIndex), not a data collect
+      // 2 probed labels are k·1 model state (same contract as buildAndRegisterIndex)
       val probed = Ivf.probe(Ivf.centroids(e), q, 2).collect().map(_.getInt(0)).toSeq
       val pruned = Ivf.readProbed(s, path, probed).filter(col("vec_id") =!= 4)
       Knn.topK(pruned.select("vec_id", "embedding"), q, 10, Knn.Cosine)
         .select("vec_id", "score")
     }),
 
-    // A14h: the clustered layout's export contract proven FROM THE
-    // CONSUMER SIDE (the A52 symmetry for the second persisted-artifact
-    // family): the engine writes the partitioned layout + `_graft_meta`
-    // sidecar to the fixed export path and serves through readProbed
-    // (producer-side validation); the ORACLE is the consumer — DuckDB
-    // read_parquets the layout itself (hive partitioning recovers the
-    // cluster column from the directory names — the on-disk convention
-    // the sidecar records), validates the sidecar's (schema_version,
-    // cluster_col) row, replays the probe ranking from the LAYOUT's own
-    // rows, and serves the probed clusters. A missing/foreign/mis-keyed
-    // sidecar empties the oracle's gate CTE → zero rows → red gate:
-    // refusal on the consumer path is observable for this family too.
+    // A14h: the clustered layout's export contract proven FROM THE CONSUMER SIDE
     "clustered_probe_consumer" -> ((s, dir) => {
       val e = emb(s, dir)
       val path = ensureClusteredConsumerExport(s, dir)
@@ -1226,60 +1158,7 @@ object HybridQueries {
             |     WHEN (n_match * 1000000) div total >= 50000 THEN 'class2_mid'
             |     ELSE 'class1_selective' END AS cls""".stripMargin)),
 
-    // A28: selectivity-dispatched search — one query per reference class,
-    // each routed by Ivf.autoKnn: c1 (src1, ~5%) must pre-filter, c2
-    // (zh, ~15%) must probe the hybrid path, c3 (n_chars≤300, ~49%) must
-    // post-filter. The oracle recomputes the per-mille selectivity and
-    // guards each strategy branch with it, so the DISPATCH DECISION is
-    // hash-verified, not just the result rows.
-    "knn_auto" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val d = docs(s, dir)
-      val corpus = e.filter(col("vec_id") =!= 5)
-      val q = e.filter(col("vec_id") === 5).select(col("embedding").as("q_vec"))
-      val cases = Seq(
-        ("c1", MetaPredicate("source" -> ("exact", "src1"))),
-        ("c2", MetaPredicate("lang" -> ("exact", "zh"))),
-        ("c3", MetaPredicate("n_chars" -> ("leq", 300))))
-      // each case's dispatch runs two selectivity counts at construction:
-      // build the independent cases concurrently (guide §2.6), union in
-      // input order
-      graft.Par.ordered(cases) { case (cls, pred) =>
-        Ivf.autoKnn(corpus, d, pred, q, k = 5)
-          .select(lit(cls).as("cls"), col("strategy"), col("vec_id"), col("score"))
-      }.reduce(_ union _)
-    }),
-
-    // A28b: the selectivity DISPATCH at the REFERENCE width (the r16
-    // verdict's #6 named adaptive-or-auto; adaptive landed first, this
-    // closes the other arm so no A-row BEHAVIOR gates only at d=64):
-    // the routing decision itself is metadata-side (width-independent
-    // counts), but every strategy BODY it dispatches into — prefilter
-    // scan, probed hybrid, post-filter funnel — scores at d=2048 over
-    // the wide labeled frame. The oracle recomputes the per-mille
-    // selectivity and guards each strategy branch with it, so a wrong
-    // routing decision hash-fails at width exactly as at d=64.
-    "knn_auto_2048" -> ((s, dir) => {
-      val all = wideLabeled(s, dir)
-      val d = docs(s, dir)
-      val corpus = all.filter(col("vec_id") =!= 5)
-      val q = requireQueryPresent(all.filter(col("vec_id") === 5), "knn_auto_2048")
-        .select(col("embedding").as("q_vec"))
-      val cases = Seq(
-        ("c1", MetaPredicate("source" -> ("exact", "src1"))),
-        ("c2", MetaPredicate("lang" -> ("exact", "zh"))),
-        ("c3", MetaPredicate("n_chars" -> ("leq", 300))))
-      // each case's dispatch runs two selectivity counts at construction:
-      // build the independent cases concurrently (guide §2.6), union in
-      // input order
-      graft.Par.ordered(cases) { case (cls, pred) =>
-        Ivf.autoKnn(corpus, d, pred, q, k = 5)
-          .select(lit(cls).as("cls"), col("strategy"), col("vec_id"), col("score"))
-      }.reduce(_ union _)
-    }),
-
-    // A17: the whole kNN expressed in plain SQL against the registered
-    // vec_cosine function — proves the SQL surface is first-class
+    // A17: the whole kNN expressed in plain SQL against the registered vec_cosine function
     "sql_knn" -> ((s, dir) => {
       graft.GraftExtensions.register(s)
       emb(s, dir).createOrReplaceTempView("g_emb")
@@ -1291,14 +1170,7 @@ object HybridQueries {
           |ORDER BY score DESC, e.vec_id ASC LIMIT 10""".stripMargin)
     }),
 
-    // C16 driver-verified: the AnnProbeRewrite Catalyst rule end-to-end.
-    // A sibling session carries the graft extensions; an IVF index is
-    // built+registered (session-scoped) and the rewrite enabled; then the
-    // user-facing query is PLAIN brute-force SQL — `ORDER BY vec_cosine
-    // DESC LIMIT k` — which the rule turns into a probed scan (asserted on
-    // the plan in PlanAuditSpec). The oracle computes top-k within the 2
-    // clusters whose centroids are nearest the query, i.e. what the
-    // rewritten plan must return.
+    // C16: the AnnProbeRewrite Catalyst rule, oracle-verified end-to-end
     "sql_knn_indexed" -> ((s, dir) => {
       val ext = org.apache.spark.sql.graftbridge.Bridge
         .newSessionWithExtensions(s, e => new graft.GraftExtensions().apply(e))
@@ -1306,13 +1178,11 @@ object HybridQueries {
       Ivf.buildAndRegisterIndex(e, nProbe = 2)
       ext.conf.set(graft.plans.AnnIndexRegistry.EnabledConf, "true")
       e.createOrReplaceTempView("g_emb_ix")
-      // query vector inlined as a foldable literal (CAST of the exact
-      // Float.toString round-trips bit-exactly)
+      // query vector inlined as a foldable literal
       val qv = e.filter(col("vec_id") === 9).select("embedding")
         .collect().head.getSeq[Float](0)
       val qLit = qv.map(f => s"CAST('$f' AS FLOAT)").mkString("array(", ", ", ")")
-      // ORDER BY carries the kernel expression itself (not the alias):
-      // the rule rewrites sorts whose key IS a distance over the corpus
+      // ORDER BY carries the kernel expression itself (not the alias)
       ext.sql(
         s"""SELECT vec_id,
            |  CAST(floor(vec_cosine(embedding, $qLit) * 10000 + 0.5) AS BIGINT) AS score
@@ -1322,9 +1192,7 @@ object HybridQueries {
            |LIMIT 10""".stripMargin)
     }),
 
-    // C16b: the rewrite's OTHER probe-able metric, driver-verified — same
-    // contract as sql_knn_indexed but `ORDER BY vec_l2 ASC`: the rule
-    // probes by centroid L2 (not cosine) and must still inject the filter.
+    // C16b: the rewrite's OTHER probe-able metric, oracle-verified
     "sql_knn_indexed_l2" -> ((s, dir) => {
       val ext = org.apache.spark.sql.graftbridge.Bridge
         .newSessionWithExtensions(s, e => new graft.GraftExtensions().apply(e))
@@ -1344,17 +1212,7 @@ object HybridQueries {
            |LIMIT 10""".stripMargin)
     }),
 
-    // A15b: the FULL ABO listings ingest, driver-verified — ABO-shaped JSONL
-    // (nested value-structs, optional brand, optional other_image_id) is
-    // synthesized deterministically from `documents`, then round-tripped
-    // through the real parse path: sources.Listings typed from_json →
-    // image-id explode → flattened attrs (parse-json.py:41's image join).
-    // The oracle computes the expected projection directly, so any parse,
-    // explode, or null-handling defect hash-mismatches. Nullable source
-    // columns are coalesced IDENTICALLY on both sides (concat would
-    // otherwise null out the whole JSON line while the oracle kept the
-    // row); lang/source are alphanumeric by the testdata contract, so no
-    // JSON string escaping is needed.
+    // A15b: the FULL ABO listings ingest, oracle-verified
     "listings_parse" -> ((s, dir) => {
       val jsonl = listingsJsonl(s, dir)
       val im = graft.sources.Listings.imageMetadata(
@@ -1363,33 +1221,16 @@ object HybridQueries {
         col("item_weight").cast("long").as("item_weight"), col("country"))
     }),
 
-    // A50: the reference's WHOLE notebook flow as ONE gated plan (r13
-    // verdict next #7; reference 6400Project.ipynb end-to-end): ABO-shaped
-    // listings JSONL → sources.Listings typed parse → image-id explode →
-    // the per-listing embed slot at the reference width (the A45
-    // derived-wide frame keyed by the PARSED main-image ids — the honest
-    // d=2048 stand-in for ResNet-50, scope declared at wideEmbeddings) →
-    // the ONE persisted filter-agnostic wide HNSW index → class-1/2/3
-    // metadata predicates over the PARSED attributes (brand / color /
-    // model_year — the notebook's query_metadata classes) answered by the
-    // ACORN filtered walk, composed with zero driver-side glue between
-    // stages: the pass sets flow from the parse output into the cogrouped
-    // walk as relations. Saturating sentinel ⇒ each class's top-10 is
-    // exact, so the oracle replays the COMPOSITION: attribute derivation,
-    // predicate, wide vectors, prefilter top-k. Queries stay in the
-    // corpus (persisted-serving convention) — whether a query's own
-    // listing passes its class predicate is decided identically on both
-    // sides.
+    // A50: the reference's WHOLE notebook flow as ONE gated plan
     "acorn_pipeline_e2e" -> ((s, dir) => {
       val attrs = parsedListingAttrs(s, dir)
-      val path = ensureHnswWideIndex(s, dir)
-      val w = wideEmb(emb(s, dir))
+      val path = hnswIndex(Width.Wide, s, dir)
+      val w = Width.Wide.frame(s, dir)
       val classes = Seq(
         ("c1", pipelineClassPred("c1"), 3L),
         ("c2", pipelineClassPred("c2"), 11L),
         ("c3", pipelineClassPred("c3"), 17L))
-      // independent per-class cells: construct concurrently (guide §2.6,
-      // the recallCells convention) — union order is the input order
+      // independent per-class cells
       graft.Par.ordered(classes) { case (cls, pred, qid) =>
         val qv = w.filter(col("vec_id") === qid).select("embedding")
           .collect().head.getSeq[Float](0).toArray
@@ -1420,10 +1261,9 @@ object HybridQueries {
     // measured knee.
     "acorn_pipeline_recall" -> ((s, dir) => {
       val attrs = parsedListingAttrs(s, dir)
-      val path = ensureHnswWideIndex(s, dir)
-      val w = wideEmb(emb(s, dir))
-      // independent per-class cells: construct concurrently (guide §2.6,
-      // the recallCells convention) — union order is the input order
+      val path = hnswIndex(Width.Wide, s, dir)
+      val w = Width.Wide.frame(s, dir)
+      // independent per-class cells
       graft.Par.ordered(PipelineRecallQids) { case (cls, qids) =>
         val passing = attrs.filter(pipelineClassPred(cls)).select("vec_id")
         require(passing.limit(1).count() >= 1,
@@ -1451,39 +1291,24 @@ object HybridQueries {
       }.reduce(_ union _)
     }),
 
-    // A50c: the capstone's STRATEGY MATRIX (r16 verdict next #2 — the
-    // reference's entire headline experiment is parse → embed → index →
-    // {pre, post, ACORN} per selectivity class, README §3's table +
-    // acorn.py `__main__`; A50 gated the composed pipeline's ACORN arm
-    // only). Per parsed-attribute class: `pre` = exact prefilter top-10
-    // over the passing set (the ground-truth strategy, computed by the
-    // ENGINE through the parse→attr→filter→scan composition and replayed
-    // independently by the oracle from raw documents); `acorn` = the
-    // saturated filtered walk over the ONE persisted wide index (exact ⇒
-    // must land on the SAME rows — the walk≡scan identity per class is
-    // itself the gate); `post` = the unfiltered wide top-50 filtered
-    // afterwards (post-filter.py), deterministic and replayed verbatim —
-    // on the selective classes it visibly returns the collapsed tail.
-    // All three at d=2048 over the parsed pass sets; queries stay in the
-    // corpus (the A50 convention).
-    "acorn_pipeline_e2e_2048" -> ((s, dir) => {
+    // A50c: the capstone's STRATEGY MATRIX
+    PipelineMatrix -> ((s, dir) => {
       val attrs = parsedListingAttrs(s, dir)
-      val path = ensureHnswWideIndex(s, dir)
-      val w = wideEmb(emb(s, dir))
+      val path = hnswIndex(Width.Wide, s, dir)
+      val w = Width.Wide.frame(s, dir)
       val classes = Seq(
         ("c1", pipelineClassPred("c1"), 3L),
         ("c2", pipelineClassPred("c2"), 11L),
         ("c3", pipelineClassPred("c3"), 17L))
-      // independent per-class cells: construct concurrently (guide §2.6,
-      // the recallCells convention) — union order is the input order
+      // independent per-class cells
       graft.Par.ordered(classes) { case (cls, pred, qid) =>
         val qRows = requireQueryPresent(w.filter(col("vec_id") === qid),
-          s"acorn_pipeline_e2e_2048 class $cls")
+          s"$PipelineMatrix class $cls")
         val qv = qRows.select("embedding").collect().head.getSeq[Float](0).toArray
         val qDf = w.filter(col("vec_id") === qid).select(col("embedding").as("q_vec"))
         val passing = attrs.filter(pred).select("vec_id")
         require(passing.limit(1).count() >= 1,
-          s"acorn_pipeline_e2e_2048: class $cls predicate matches no parsed " +
+          s"$PipelineMatrix: class $cls predicate matches no parsed " +
             "listings — its cells would gate vacuously")
         val pre = Knn.topK(w.select("vec_id", "embedding").join(passing, "vec_id"),
             qDf, 10, Knn.L2)
@@ -1514,19 +1339,19 @@ object HybridQueries {
     // PipelineRecallQids + PipelineRecallFloors); `pre` is the ground
     // truth itself (recall ≡ 80 by construction) and is deliberately not
     // emitted as a row — asserting it would gate nothing.
-    "acorn_pipeline_recall_2048" -> ((s, dir) => {
+    PipelineRecallTable -> ((s, dir) => {
       val attrs = parsedListingAttrs(s, dir)
-      val path = ensureHnswWideIndex(s, dir)
-      val w = wideEmb(emb(s, dir))
+      val path = hnswIndex(Width.Wide, s, dir)
+      val w = Width.Wide.frame(s, dir)
       val classes = PipelineRecallQids.map { case (cls, qids) =>
         val passing = attrs.filter(pipelineClassPred(cls)).select("vec_id")
         require(passing.limit(1).count() >= 1,
-          s"acorn_pipeline_recall_2048: class $cls predicate matches no " +
+          s"$PipelineRecallTable: class $cls predicate matches no " +
             "parsed listings — its cells would gate vacuously")
         (cls, passing, qids)
       }
       recallCells(s, w, path, classes, PipelineMatrixFloors,
-        Seq("acorn", "post"), "acorn_pipeline_recall_2048")
+        Seq("acorn", "post"), PipelineRecallTable)
     }),
 
     // A15: JSONL metadata ingest — typed from_json (parse-json.py analogue)
@@ -1539,13 +1364,7 @@ object HybridQueries {
             .getField("k").as("k"))
         .filter(col("k").isNotNull)),
 
-    // A35 driver-verified: per-partition HNSW graph search, exact-rescored
-    // global merge. The graph is deterministic (ascending-id insertion,
-    // md5-derived levels) and the partitioning pinned, so the result is
-    // bit-stable; ef=0 is the saturating sentinel (beam widens to each
-    // partition's size), so the local result is exact at ANY sf and the
-    // brute-force SQL oracle replays the answer. Realistic bounded-beam
-    // recall lives in HnswSpec.
+    // A35: per-partition HNSW graph search, exact-rescored global merge
     "knn_hnsw" -> ((s, dir) => {
       val e = emb(s, dir)
       // query vector is k·d driver-side model state (clustered_probe contract)
@@ -1557,124 +1376,6 @@ object HybridQueries {
         qv, 10, ef = 0)
     }),
 
-    // The reference's NAMESAKE algorithm driver-verified: ACORN-1
-    // predicate-aware graph traversal (/root/reference/acorn.py:149
-    // acorn_search) under the class-1 selective predicate. One
-    // filter-agnostic graph indexes ALL rows; the walk blocks
-    // filter-failing nodes (traversable but unreturnable) under a growing
-    // visit budget with the +1/+10 schedule and anti-stall set.
-    // metaSearch=0 is the saturating sentinel (budget/beam/cut widen to
-    // each partition's size), so the survivor set is exactly the filtered
-    // neighborhood at ANY sf and the prefilter SQL oracle replays the
-    // top-k; a positive budget is the recall/cost knob (HnswSpec sweeps
-    // it and proves survivor-set nesting).
-    "hybrid_knn_hnsw" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val d = docs(s, dir)
-      val qv = e.filter(col("vec_id") === 11).select("embedding")
-        .collect().head.getSeq[Float](0).toArray
-      val pred = MetaPredicate("lang" -> ("exact", "zh"), "n_chars" -> ("<", 150))
-      Hnsw.searchFilteredPerPartition(withPassBit(s, dir, pred, 11), qv, 10,
-        metaSearch = 0)
-    }),
-
-    // A35g: the ACORN-γ predicate-subgraph walk (r12 verdict next #4):
-    // the reference works around blocked-walk stalls by doubling M
-    // ("M 64 … so the one-hop doesn't block us", acorn.py:34); the
-    // ACORN paper's principled fix is TWO-HOP neighbor expansion — each
-    // bounded round bridges through predicate-failing neighbors (their
-    // layer-0 neighbors join the same expansion, visit-counted), so the
-    // walk traverses the predicate-induced subgraph instead of paying a
-    // dequeue per dead end. At the saturating sentinel the walk is exact
-    // (same sweep guarantee — the flag changes budget-bound traversal
-    // order only), so the class-1 prefilter oracle replays it; HnswSpec
-    // pins recall ≥ the one-hop walk at EQUAL visit budgets, which is
-    // where the flag earns its keep at 100 TB.
-    "hybrid_knn_hnsw_2hop" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val qv = e.filter(col("vec_id") === 17).select("embedding")
-        .collect().head.getSeq[Float](0).toArray
-      val pred = MetaPredicate("lang" -> ("exact", "zh"), "n_chars" -> ("<", 150))
-      Hnsw.searchFilteredPerPartition(withPassBit(s, dir, pred, 17), qv, 10,
-        metaSearch = 0, twoHop = true)
-    }),
-
-    // A35c: the persisted-index LIFECYCLE driver-verified — the reference
-    // builds its hnswlib index once (acorn.py:61 add_items; README prices
-    // build at 51 s, query at 3.5 ms) and serves every query from it. The
-    // graphs here build+serialize once per (JVM, sfDir); the timed body
-    // restores nodes verbatim and beam-searches only. Query id 13 stays IN
-    // the corpus (query-by-indexed-item), so rank 1 is the self-hit at
-    // distance 0 on both sides.
-    "knn_hnsw_persisted" -> ((s, dir) => {
-      val path = ensureHnswIndex(s, dir)
-      val qv = emb(s, dir).filter(col("vec_id") === 13).select("embedding")
-        .collect().head.getSeq[Float](0).toArray
-      Hnsw.searchPersisted(s, path, qv, 10, ef = 0)
-    }),
-
-    // A45: brute-force L2 top-k at the REFERENCE's dimensionality — the
-    // A6 operator run through 2048-d vectors (wideEmb construction above),
-    // so the codegen'd L2 kernel's sequential float→double accumulation is
-    // oracle-HASH-checked at d=2048, not just probed for timings
-    // (r10 verdict "What's missing" #2). Self excluded, the A6 convention.
-    "knn_exact_l2_2048" -> ((s, dir) => {
-      val w = wideEmb(emb(s, dir))
-      Knn.topK(w.filter(col("vec_id") =!= 0).select("vec_id", "embedding"),
-        w.filter(col("vec_id") === 0).select(col("embedding").as("q_vec")),
-        10, Knn.L2).select("vec_id", "score")
-    }),
-
-    // A45b: the persisted-HNSW serve at 2048-d — build+serialize the
-    // per-partition graphs over the WIDE vectors once, restore and walk at
-    // the saturating beam (exact ⇒ the brute-force oracle replays it;
-    // self-hits included, the A35c convention). Closes the lifecycle leg
-    // of the width question: graph build, parquet round-trip, restore, and
-    // walk all at the reference's d=2048 under the standard hash gate.
-    "knn_hnsw_2048" -> ((s, dir) => {
-      val path = ensureHnswWideIndex(s, dir)
-      val qv = wideEmb(emb(s, dir)).filter(col("vec_id") === 13).select("embedding")
-        .collect().head.getSeq[Float](0).toArray
-      Hnsw.searchPersisted(s, path, qv, 10, ef = 0)
-    }),
-
-    // A45c: the ACORN filtered walk at the REFERENCE width — the
-    // reference's NAMESAKE operation (predicate + graph walk over the one
-    // filter-agnostic index, acorn.py) ran at d=2048 only unfiltered
-    // (A45b); the filtered traversal's visit arithmetic is width-
-    // dependent (every hop pays a 2048-d distance). Same construction as
-    // A35b over the derived-wide frame: pass bits from the metadata
-    // predicate ride WITH the vectors into each partition's graph, the
-    // walk visits the full graph but collects only predicate-passing
-    // nodes; at the saturating sentinel (metaSearch=0) the walk is exact,
-    // so the prefilter oracle replays it over the wide vectors.
-    "hybrid_knn_hnsw_2048" -> ((s, dir) => {
-      val w = wideEmb(emb(s, dir))
-      val qv = w.filter(col("vec_id") === 11).select("embedding")
-        .collect().head.getSeq[Float](0).toArray
-      Hnsw.searchFilteredPerPartition(
-        widePassBit(s, dir, col("lang").isNotNull && col("lang") === "zh", 11),
-        qv, 10, metaSearch = 0)
-    }),
-
-    // A45d: the ACORN-γ TWO-HOP walk at the reference width — A35g's
-    // predicate-subgraph bridge, whose per-round budget economics are
-    // width-dependent (every bridged hop at d=2048 pays a 32× costlier
-    // distance than at d=64, so the flag's earn-rate must be re-measured
-    // at the width the reference actually builds). Saturating sentinel ⇒
-    // exact under both flags (the bridge changes budget-bound traversal
-    // order only), so the class-1 wide prefilter oracle replays it;
-    // Wide2048Spec measures the recall curve vs the one-hop walk at
-    // equal budgets at width.
-    "hybrid_knn_hnsw_2hop_2048" -> ((s, dir) => {
-      val w = wideEmb(emb(s, dir))
-      val qv = w.filter(col("vec_id") === 17).select("embedding")
-        .collect().head.getSeq[Float](0).toArray
-      val pred = MetaPredicate("lang" -> ("exact", "zh"), "n_chars" -> ("<", 150))
-      Hnsw.searchFilteredPerPartition(widePassBit(s, dir, pred, 17),
-        qv, 10, metaSearch = 0, twoHop = true)
-    }),
-
     // A30's graph form: APPEND into the live persisted index (the
     // reference add_items()s while serving). The first 400 ids are the
     // persisted base; the rest arrive, route to their graph by replaying
@@ -1683,7 +1384,7 @@ object HybridQueries {
     // (HnswSpec), so the saturating-beam result is the full-corpus exact
     // top-k and the brute-force oracle replays it.
     "knn_hnsw_append" -> ((s, dir) => {
-      val path = ensureHnswBase(s, dir)
+      val path = hnswBase(Width.Base, s, dir)
       val e = emb(s, dir)
       val qv = e.filter(col("vec_id") === 2).select("embedding")
         .collect().head.getSeq[Float](0).toArray
@@ -1692,15 +1393,9 @@ object HybridQueries {
         numParts = 8, qv, 10, ef = 0)
     }),
 
-    // The reference's full SERVING path: the ONE persisted filter-agnostic
-    // index (A35c's) answering a predicate-aware query — ACORN's point is
-    // exactly that no per-predicate index exists; the passing-id set is
-    // computed relationally at query time and cogrouped to the graphs.
-    // Class-2 predicate (lang = zh) to complement hybrid_knn_hnsw's
-    // class-1; the saturating sentinel keeps the oracle replayable at
-    // any sf.
+    // The reference's full SERVING path
     "hybrid_knn_hnsw_persisted" -> ((s, dir) => {
-      val path = ensureHnswIndex(s, dir)
+      val path = hnswIndex(Width.Base, s, dir)
       val e = emb(s, dir)
       val qv = e.filter(col("vec_id") === 11).select("embedding")
         .collect().head.getSeq[Float](0).toArray
@@ -1711,57 +1406,10 @@ object HybridQueries {
         metaSearch = 0)
     }),
 
-    // A12's persisted-graph form: the whole query set served from ONE
-    // restore pass per partition (the reference's evaluation loop — one
-    // index, a query file). Output shape mirrors knn_batch; self-hits
-    // included (queries are indexed items).
-    "knn_hnsw_batch" -> ((s, dir) => {
-      val path = ensureHnswIndex(s, dir)
-      val qs = requireQueriesPresent(
-        emb(s, dir).filter(col("vec_id") <= 4)
-          .select(col("vec_id"), col("embedding")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-          .sortBy(_._1),
-        5, "knn_hnsw_batch")
-      Hnsw.searchPersistedBatch(s, path, qs, 3, ef = 0)
-    }),
-
-    // A35i: the persisted-graph BATCH serve at the REFERENCE width (r14
-    // verdict next #2 — the one serving family whose batch form gated
-    // only at d=64): the reference's main loop serves a query FILE
-    // against the d=2048 index it builds (acorn.py `__main__` × :30–40).
-    // A35f's machinery over A45b's persisted wide graphs — restore ONCE
-    // per partition, answer the whole broadcast query set, ≤ P·|Q|·k
-    // rows into the k-heap merge — at the saturating beam (exact ⇒ the
-    // windowed brute-force wide oracle replays it). Self-hits included,
-    // the A35f convention. Non-empty query-set guard: an empty collect
-    // would empty BOTH sides and the gate would pass vacuously.
-    "knn_hnsw_batch_2048" -> ((s, dir) => {
-      val path = ensureHnswWideIndex(s, dir)
-      val qs = requireQueriesPresent(
-        wideEmb(emb(s, dir)).filter(col("vec_id") <= 4)
-          .select(col("vec_id"), col("embedding")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
-          .sortBy(_._1),
-        5, "knn_hnsw_batch_2048")
-      Hnsw.searchPersistedBatch(s, path, qs, 3, ef = 0)
-    }),
-
-    // A49: EXTERNAL query through the persisted WIDE graph (r14 verdict
-    // next #7 — the A47c external construction pinned only the PQ
-    // family; the HNSW walks took only indexed queries at d=2048, so no
-    // width gate proved the graph serve never secretly assumes an
-    // indexed query). The reference's actual demo embeds a NON-corpus
-    // query (query.jpg, acorn.py `__main__`) and walks the d=2048 index
-    // it builds. One external midpoint query derived from the first WIDE
-    // vector pair ((w0+w1)/2, one float round per component — both
-    // engines derive the identical non-indexed vector with no new
-    // table); the saturating beam makes the walk exact, so the wide
-    // brute-force oracle replays it with NO self-exclusion — an external
-    // query has no corpus row to exclude.
+    // A49: EXTERNAL query through the persisted WIDE graph
     "knn_hnsw_external_2048" -> ((s, dir) => {
-      val path = ensureHnswWideIndex(s, dir)
-      val pair = wideEmb(emb(s, dir)).filter(col("vec_id") <= 1)
+      val path = hnswIndex(Width.Wide, s, dir)
+      val pair = Width.Wide.frame(s, dir).filter(col("vec_id") <= 1)
         .select("vec_id", "embedding").collect().sortBy(_.getLong(0))
       require(pair.length == 2,
         "knn_hnsw_external_2048: corpus rows 0 and 1 must exist to derive " +
@@ -1772,273 +1420,13 @@ object HybridQueries {
       val qv = Array.tabulate(a.length)(i =>
         ((a(i).toDouble + b(i).toDouble) * 0.5).toFloat)
       Hnsw.searchPersisted(s, path, qv, 10, ef = 0)
-    }),
-
-    // A11's graph-native form (acorn_attribute_specific.py:48–78): the
-    // graph indexes ONLY attribute-present rows (the reference keeps just
-    // images carrying model_year — index membership is itself a filter),
-    // and the query-time class-3 predicate runs as the ACORN walk over
-    // that narrower graph. k=3 and a leq+substring predicate, like the
-    // reference's query_metadata_class_3.
-    "attr_specific_knn_hnsw" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val qv = e.filter(col("vec_id") === 9).select("embedding")
-        .collect().head.getSeq[Float](0).toArray
-      val pred = MetaPredicate("n_chars" -> ("leq", 400), "lang" -> ("substring", "e"))
-      val corpus = e.filter(col("vec_id") =!= 9).select("vec_id", "embedding")
-        .join(docs(s, dir).filter(col("n_chars").isNotNull)
-            .select(col("doc_id"), pred.as("p0")),
-          col("vec_id") === col("doc_id"))
-        .select(col("vec_id"), col("embedding"),
-          coalesce(col("p0"), lit(false)).as("pass"))
-        .repartition(8, col("vec_id"))
-      Hnsw.searchFilteredPerPartition(corpus, qv, 3, metaSearch = 0)
-    }),
-
-    // The APPROXIMATE HNSW path, CORRECTNESS-gated (r5 verdict "Next
-    // round" #1: every other HNSW entry runs the saturating sentinel, so
-    // a realistic-beam regression — e.g. a beam-prune bug that only bites
-    // when `results.size >= ef` fires — would pass the driver). This entry
-    // runs the REFERENCE'S real constants (ef=200, largeK=200,
-    // metaSearch=100 — /root/reference/acorn.py:150–162) against the
-    // persisted index, computes recall@10 vs the in-engine brute-force
-    // ground truth as a NUMBER, and emits `least(n_hit, FLOOR)`: the
-    // DuckDB oracle asserts the FLOOR literal, so the row goes red exactly
-    // when realistic-beam recall drops below the measured knee. Floors
-    // (beam 36/40, acorn 7/10) sit under the min measured across
-    // sf0.001/0.01/0.1 with margin for testdata regeneration; the graph
-    // and walk are deterministic, so at fixed data the number is exact.
-    "recall_hnsw_beam" -> ((s, dir) => {
-      // floors: tri-scale measured min − ≥2-hit margin (SURVEY §8 records
-      // the measured values); the oracle asserts the literals, so a cell
-      // goes red exactly when summed recall drops below its knee
-      // measured (sf0.001/0.01/0.1): beam 80/80/80 all classes;
-      // acorn c1 80/80/57, c2 80/80/63, c3 80/80/59 (the metaSearch=100
-      // budget knee at 250-row partitions — the reference's trade-off);
-      // post c1 75/77/74, c2 80/80/80, c3 80/80/80. Floors sit 4-7 hits
-      // under the tri-scale min. Matrix body shared with A48
-      // (recallBeamMatrix above).
-      recallBeamMatrix(s, dir, emb(s, dir), ensureHnswIndex(s, dir), Map(
-        ("c1", "beam") -> 76L, ("c1", "acorn") -> 50L, ("c1", "post") -> 68L,
-        ("c2", "beam") -> 76L, ("c2", "acorn") -> 56L, ("c2", "post") -> 76L,
-        ("c3", "beam") -> 76L, ("c3", "acorn") -> 52L, ("c3", "post") -> 76L))
-    }),
-
-    // A48: the reference's HEADLINE evaluation matrix AT THE REFERENCE
-    // WIDTH (r13 verdict next #1 — README §3's central table is measured
-    // at the d=2048 the reference actually builds, README.md:229–232;
-    // until now the class × strategy matrix gated only over the 64-d
-    // frame): selectivity class 1/2/3 × strategy {beam, acorn, post} at
-    // the real constants (ef=200, largeK=200, metaSearch=100 —
-    // acorn.py:150–162) against the PERSISTED d=2048 graphs, 8 queries
-    // per class, recall@10 hits SUMMED per (class, strategy), emitted as
-    // least(n_hit, FLOOR) so the oracle's literal-floor assertion goes
-    // red exactly when wide realistic-beam recall drops below its
-    // measured knee. Floors sit 4–7 hits under the tri-scale min
-    // (sf0.001/0.01/0.1 measurements in SURVEY §8q): beam 80/80/80 all
-    // classes; acorn c1 80/80/53, c2 80/80/64, c3 80/80/62; post
-    // c1 73/77/74, c2 80/80/80, c3 80/80/80 — the metaSearch=100 budget
-    // knee (it bites at sf0.1's 250-row partitions, where the budget is
-    // finally smaller than the partition) and the post-filter collapse
-    // on the selective class both reproduce at the reference width.
-    "recall_hnsw_beam_2048" -> ((s, dir) =>
-      recallBeamMatrix(s, dir, wideEmb(emb(s, dir)), ensureHnswWideIndex(s, dir),
-        RecallBeam2048Floors)),
-
-    // A51: the ACORN-γ two-hop recall CURVE as a driver entry (r14
-    // verdict next #4 — the bridge's value claim lived only in HnswSpec):
-    // the reference doubles M to keep the one-hop walk from blocking
-    // (acorn.py:34); the two-hop predicate-subgraph expansion is the
-    // ACORN paper's principled fix, and its worth is a BUDGET question —
-    // at equal interior metaSearch budgets the bridged walk must reach
-    // at least as much of the exact filtered answer. HnswSpec's EXACT
-    // configuration, driver-gated: query 17, the class-1 selective
-    // two-attr predicate, the per-partition pass-bit walk
-    // (searchFilteredPerPartition — the two walks differ only in the
-    // twoHop flag), interior budgets × {one, two}, recall@10 vs the
-    // exact prefilter ground truth, emitted as least(n_hit, FLOOR); per
-    // budget a third `gain` row emits least(two − one, GAIN_FLOOR), so
-    // the entry goes red if the bridge ever LOSES recall at equal budget
-    // on the measured grid. Floors sit under the tri-scale min (§8r).
-    "recall_hnsw_2hop" -> ((s, dir) =>
-      twoHopRecallCurve(s, dir, emb(s, dir), TwoHopBudgets,
-        "recall_hnsw_2hop")),
-
-    // A51b: the two-hop budget curve AT THE REFERENCE WIDTH (r15 verdict
-    // next #4 — the one measured two-hop claim not gated at d=2048, and
-    // the r15 floors lesson says the gain is CONFIGURATION-specific, so
-    // the width configuration deserves its own measured grid). The same
-    // one-pass sweep over the derived-wide pass-bit corpus; floors
-    // re-measured tri-scale AT width (§8s) — the wide geometry changes
-    // the knee, not the never-loses claim.
-    "recall_hnsw_2hop_2048" -> ((s, dir) =>
-      twoHopRecallCurve(s, dir, wideEmb(emb(s, dir)), TwoHopBudgets2048,
-        "recall_hnsw_2hop_2048")),
-
-    // A13c: recall row beside recall_filtered — the ACORN walk vs the
-    // post-filter baseline on the class-1 selective predicate, both scored
-    // against the exact pre-filter ground truth. Post-filter collapses
-    // (its unfiltered top-50 rarely contains the survivors); the
-    // predicate-aware walk holds recall — the reference README's headline
-    // comparison, here as a driver-checked assertion.
-    "recall_hnsw_filtered" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val d = docs(s, dir)
-      val all = e.filter(col("vec_id") =!= 11).select("vec_id", "embedding")
-      val qDf = e.filter(col("vec_id") === 11).select(col("embedding").as("q_vec"))
-      val qv = e.filter(col("vec_id") === 11).select("embedding")
-        .collect().head.getSeq[Float](0).toArray
-      val pred = MetaPredicate("lang" -> ("exact", "zh"), "n_chars" -> ("<", 150))
-      val exact = Knn.prefilterKnn(all, d, pred, qDf, 10, Knn.L2).select("vec_id")
-        .localCheckpoint(true)
-      val strategies = Seq(
-        "acorn" -> Hnsw.searchFilteredPerPartition(withPassBit(s, dir, pred, 11),
-          qv, 10, metaSearch = 0).select("vec_id"),
-        "post" -> Knn.postfilterKnn(all, d, pred, qDf, 10, 50, Knn.L2).select("vec_id"))
-      strategies.map { case (strat, approx) =>
-        approx.join(exact.withColumn("_hit", lit(1)), Seq("vec_id"), "left")
-          .agg(count(lit(1)).as("n_ret"), count(col("_hit")).as("n_hit"))
-          .select(lit(strat).as("strategy"), col("n_ret"), col("n_hit"))
-      }.reduce(_ union _)
-    }),
-
-    // A13d: the README §3 recall-collapse table AT THE REFERENCE WIDTH
-    // (r16 verdict next #3 — the reference's central empirical claim is
-    // measured at the d=2048 it builds, README.md:229–232; A13b gated the
-    // post-vs-hybrid collapse only over the 64-d frame): per selectivity
-    // class, post-filter and IVF-hybrid recall vs the exact PRE-FILTER
-    // ground truth, every distance/centroid/probe at d=2048 over the
-    // wide labeled frame. Both strategies are fully deterministic, so
-    // n_ret/n_hit are COMPUTED on both sides (no floors) — the expected
-    // shape (post collapses on the selective class, hybrid holds) is
-    // hash-gated via the honest counts.
-    "recall_filtered_2048" -> ((s, dir) => {
-      val all = wideLabeled(s, dir)
-      val e = all.filter(col("vec_id") =!= 11)
-      val q = requireQueryPresent(all.filter(col("vec_id") === 11),
-          "recall_filtered_2048")
-        .select(col("embedding").as("q_vec"))
-      val d = docs(s, dir)
-      val classes = Seq(
-        ("class1_selective",
-          MetaPredicate("lang" -> ("exact", "zh"), "n_chars" -> ("<", 150))),
-        ("class2_mid", MetaPredicate("lang" -> ("exact", "zh"))),
-        ("class3_broad", MetaPredicate("n_chars" -> ("leq", 400))))
-      // the wide centroid table is class-independent: ONE wide per-label
-      // mean pass (the A13b shape at 32× the vector bytes), materialized
-      val cent = Ivf.centroids(e).localCheckpoint(true)
-      classes.map { case (cls, pred) =>
-        val exact = Knn.prefilterKnn(e, d, pred, q, 10, Knn.Cosine).select("vec_id")
-          .localCheckpoint(true)
-        val strategies = Seq(
-          "post" -> Knn.postfilterKnn(e, d, pred, q, 10, 50, Knn.Cosine).select("vec_id"),
-          "hybrid" -> Ivf.searchProbed(cent, e, d, pred, q, 10, 2, Knn.Cosine,
-            "vec_id", "doc_id", "embedding", "label").select("vec_id"))
-        strategies.map { case (strat, approx) =>
-          approx.join(exact.withColumn("_hit", lit(1)), Seq("vec_id"), "left")
-            .agg(count(lit(1)).as("n_ret"), count(col("_hit")).as("n_hit"))
-            .select(lit(cls).as("cls"), lit(strat).as("strategy"),
-              col("n_ret"), col("n_hit"))
-        }.reduce(_ union _)
-      }.reduce(_ union _)
-    }),
-
-    // A13e: the graph-native collapse row at width (A13c × d=2048): the
-    // saturated ACORN walk over the wide pass-bit corpus vs the
-    // post-filter baseline on the class-1 selective predicate, both
-    // scored against the exact wide pre-filter ground truth. The walk's
-    // beam/visit arithmetic pays 2048-term distances per hop — the d=64
-    // gate never exercises the wide walk's scoring path through the
-    // recall comparison.
-    "recall_hnsw_filtered_2048" -> ((s, dir) => {
-      val w = wideEmb(emb(s, dir))
-      val d = docs(s, dir)
-      val all = w.filter(col("vec_id") =!= 11).select("vec_id", "embedding")
-      val qRows = requireQueryPresent(w.filter(col("vec_id") === 11),
-        "recall_hnsw_filtered_2048")
-      val qDf = qRows.select(col("embedding").as("q_vec"))
-      val qv = qRows.select("embedding").collect().head.getSeq[Float](0).toArray
-      val pred = MetaPredicate("lang" -> ("exact", "zh"), "n_chars" -> ("<", 150))
-      val exact = Knn.prefilterKnn(all, d, pred, qDf, 10, Knn.L2).select("vec_id")
-        .localCheckpoint(true)
-      val strategies = Seq(
-        "acorn" -> Hnsw.searchFilteredPerPartition(widePassBit(s, dir, pred, 11),
-          qv, 10, metaSearch = 0).select("vec_id"),
-        "post" -> Knn.postfilterKnn(all, d, pred, qDf, 10, 50, Knn.L2).select("vec_id"))
-      strategies.map { case (strat, approx) =>
-        approx.join(exact.withColumn("_hit", lit(1)), Seq("vec_id"), "left")
-          .agg(count(lit(1)).as("n_ret"), count(col("_hit")).as("n_hit"))
-          .select(lit(strat).as("strategy"), col("n_ret"), col("n_hit"))
-      }.reduce(_ union _)
-    }),
-
-    // A11c: the attribute-restricted clustered index at width
-    // (acorn_attribute_specific.py:48–78 builds its attribute-specific
-    // index at d=2048): the index is built ONLY over attribute-present
-    // rows — membership is itself a filter — and probe/centroid/search
-    // arithmetic all run over the wide labeled sub-frame.
-    "attr_specific_knn_2048" -> ((s, dir) => {
-      val sub = wideLabeled(s, dir)
-        .join(docs(s, dir).filter(MetaPredicate("lang" -> ("exact", "zh"))),
-          col("vec_id") === col("doc_id"))
-        .select("vec_id", "embedding", "label")
-      val q = requireQueryPresent(
-          wideEmb(emb(s, dir)).filter(col("vec_id") === 7),
-          "attr_specific_knn_2048")
-        .select(col("embedding").as("q_vec"))
-      Ivf.hybridKnn(sub, docs(s, dir), col("doc_id") =!= 7, q, k = 5, nProbe = 2)
-        .select("vec_id", "score")
-    }),
-
-    // A11d: the graph-native attribute-specific form at width — the wide
-    // graph indexes ONLY attribute-present rows (n_chars present, the
-    // reference's model_year-subset convention) and the query-time
-    // class-3 predicate runs as the saturated ACORN walk over that
-    // narrower wide graph; k=3 like acorn_attribute_specific.py's
-    // query_metadata_class_3.
-    "attr_specific_knn_hnsw_2048" -> ((s, dir) => {
-      val w = wideEmb(emb(s, dir))
-      val qv = requireQueryPresent(w.filter(col("vec_id") === 9),
-          "attr_specific_knn_hnsw_2048")
-        .select("embedding").collect().head.getSeq[Float](0).toArray
-      val pred = MetaPredicate("n_chars" -> ("leq", 400), "lang" -> ("substring", "e"))
-      val corpus = w.filter(col("vec_id") =!= 9).select("vec_id", "embedding")
-        .join(docs(s, dir).filter(col("n_chars").isNotNull)
-            .select(col("doc_id"), pred.as("p0")),
-          col("vec_id") === col("doc_id"))
-        .select(col("vec_id"), col("embedding"),
-          coalesce(col("p0"), lit(false)).as("pass"))
-        .repartition(8, col("vec_id"))
-      Hnsw.searchFilteredPerPartition(corpus, qv, 3, metaSearch = 0)
-    }),
-
-    // A10c: the reference's adaptive widening loop AT THE REFERENCE WIDTH
-    // (r16 verdict next #6 — acorn.py:162's `while visits <= meta_search`
-    // doubling runs against the d=2048 index it builds; the loop's
-    // survivor counts, probe ranking, and final scoring are all
-    // width-dependent). Probe-1 genuinely fails on lang='fr' and the
-    // driver-side log2(C)-bounded loop widens until ≥ k survivors; the
-    // oracle replays the min-sufficient-probe choice over the wide
-    // centroid ranking, so the LOOP'S DECISION is hash-gated at width,
-    // not just the final rows.
-    "hybrid_knn_adaptive_2048" -> ((s, dir) => {
-      val all = wideLabeled(s, dir)
-      val q = requireQueryPresent(all.filter(col("vec_id") === 3),
-          "hybrid_knn_adaptive_2048")
-        .select(col("embedding").as("q_vec"))
-      Ivf.adaptiveHybridKnn(all, docs(s, dir),
-        MetaPredicate("lang" -> ("exact", "fr")) && (col("doc_id") =!= 3),
-        q, k = 10)
-        .select("vec_id", "score")
     })
-  )
+  ) ++ Width.defsOf(twins)
 
-  /** A28/A28b: the dispatch-guarded auto-kNN replay, width-parametric —
-    * ONE composer for both oracles (the d=64 text is unchanged modulo
-    * the corp/q/cent prelude): each class's three strategy CTEs are
-    * guarded by the SAME per-mille selectivity the Spark dispatch
-    * computes, so the ROUTING DECISION hash-fails, not just the rows. */
-  private def autoKnnOracleSql(wide: Boolean): String = {
+  /** A28/A28b: the auto-kNN replay; each class's strategy CTEs are guarded by the same
+    * per-mille selectivity the Spark dispatch computes, so a wrong routing decision
+    * hash-fails, not just the rows. */
+  private def autoKnnOracleSql(w: Width): String = {
     val preds = Seq(
       ("c1", "d.source IS NOT NULL AND d.source = 'src1'"),
       ("c2", "d.lang IS NOT NULL AND d.lang = 'zh'"),
@@ -2070,17 +1458,10 @@ object HybridQueries {
     val selects = preds.map { case (cls, _) =>
       s"SELECT * FROM ${cls}pre UNION ALL SELECT * FROM ${cls}hyb UNION ALL SELECT * FROM ${cls}post"
     }.mkString("\nUNION ALL\n")
-    val prelude =
-      if (wide)
-        s"""${wideLabeledCtes}corp AS MATERIALIZED (
-           |  SELECT vec_id, embedding, label FROM wl WHERE vec_id <> 5),
-           |q AS (SELECT embedding FROM wide WHERE vec_id = 5),
-           |cent AS (${DuckDialect.centSql("corp", WideDims)}),""".stripMargin
-      else
-        s"""corp AS (SELECT * FROM embeddings WHERE vec_id <> 5),
-           |q AS (SELECT embedding FROM embeddings WHERE vec_id = 5),
-           |cent AS (${centSql("corp")}),""".stripMargin
-    s"""WITH $prelude
+    s"""WITH ${w.cte}corp AS MATERIALIZED (
+       |  SELECT vec_id, embedding, label FROM ${w.tbl} WHERE vec_id <> 5),
+       |q AS (SELECT embedding FROM ${w.tbl} WHERE vec_id = 5),
+       |cent AS (${DuckDialect.centSql("corp", w.dims)}),
        |probes AS (
        |  SELECT c.label FROM cent c CROSS JOIN q
        |  ORDER BY ${cosSql("c.cent", "q.embedding")} DESC, c.label ASC LIMIT 2),
@@ -2092,23 +1473,12 @@ object HybridQueries {
        |$selects""".stripMargin
   }
 
-  /** The wide frame JOINED with its cluster column, as oracle CTEs —
-    * shared by every wide replay whose arithmetic needs
-    * (vec_id, label, 2048-slot embedding) (A30c / A30d). */
-  private val wideLabeledCtes: String =
-    s"""wide AS MATERIALIZED (SELECT vec_id, $wideDuck AS embedding FROM embeddings),
-       |wl AS MATERIALIZED (SELECT w.vec_id, e.label, w.embedding
-       |  FROM wide w JOIN embeddings e USING (vec_id)),
-       |""".stripMargin
-
-  /** A33/A33b oracle body over a source relation `src` exposing
-    * (vec_id, label, embedding): hot selection, min/max seeds, tie-to-lo
-    * two-way re-assignment. `prelude` contributes the wide CTEs ("" at
-    * d=64). */
-  private def splitHotOracleSql(src: String, prelude: String): String = {
-    def l2s(a: String, b: String) =
-      s"CAST(floor(list_distance(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])) * 10000 + 0.5) AS BIGINT)"
-    s"""WITH ${prelude}hot AS (SELECT label FROM $src GROUP BY label
+  /** A33/A33b oracle at width `w`: hot selection, min/max seeds, tie-to-lo two-way
+    * re-assignment. */
+  private def splitHotOracleSql(w: Width): String = {
+    val src = w.tbl
+    def l2s(a: String, b: String) = l2Sql(a, b)
+    s"""WITH ${w.cte}hot AS (SELECT label FROM $src GROUP BY label
        |  ORDER BY count(*) DESC, label LIMIT 3),
        |seeds AS (SELECT e.label, min(e.vec_id) AS lo_id, max(e.vec_id) AS hi_id
        |  FROM $src e JOIN hot USING (label) GROUP BY e.label),
@@ -2124,21 +1494,15 @@ object HybridQueries {
        |FROM m GROUP BY 1, 2""".stripMargin
   }
 
-  /** A30b/A30c oracle body over a source relation `src` exposing
-    * (vec_id, label, embedding at `dims`): the assignment CTEs,
-    * per-cluster drift stats, the integer threshold verdict, and the
-    * dispatch — served_mean re-scores every member against the
-    * verdict-chosen centroid. `prelude` contributes the wide CTEs for
-    * the width gate ("" at d=64). Sums CAST to BIGINT (DuckDB sums
-    * BIGINT into HUGEINT); all cuts integer. The oracle's `fresh` CTE
-    * recomputes centroids over ALL members (an independent replica —
-    * only verdict-rebuilt rows are ever read by the CASE dispatch, so
-    * the values agree with the engine's restricted pass). */
-  private def driftRebuildOracleSql(src: String, dims: Int,
-                                    prelude: String): String = {
-    def l2s(a: String, b: String) =
-      s"CAST(floor(list_distance(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])) * 10000 + 0.5) AS BIGINT)"
-    s"""WITH ${prelude}cent AS MATERIALIZED (${DuckDialect.centSql(s"(SELECT * FROM $src WHERE vec_id < $IvfAppendSplit)", dims)}),
+  /** A30b/A30c oracle at width `w`: the assignment CTEs, per-cluster drift stats, the
+    * integer threshold verdict, and the dispatch (served_mean re-scores every member
+    * against the verdict-chosen centroid). Sums CAST to BIGINT (DuckDB sums BIGINT into
+    * HUGEINT). `fresh` recomputes centroids over ALL members: only verdict-rebuilt rows
+    * are read by the dispatch, so the values agree with the engine's restricted pass. */
+  private def driftRebuildOracleSql(w: Width): String = {
+    val (src, dims) = (w.tbl, w.dims)
+    def l2s(a: String, b: String) = l2Sql(a, b)
+    s"""WITH ${w.cte}cent AS MATERIALIZED (${DuckDialect.centSql(s"(SELECT * FROM $src WHERE vec_id < $IvfAppendSplit)", dims)}),
        |arr AS MATERIALIZED (SELECT vec_id, CAST(label AS BIGINT) AS label, d FROM (
        |  SELECT e.vec_id, c.label, ${l2s("e.embedding", "c.cent")} AS d,
        |    row_number() OVER (PARTITION BY e.vec_id
@@ -2197,15 +1561,6 @@ object HybridQueries {
          |WHERE d.n_chars IS NOT NULL AND d.n_chars <= 400 AND d.doc_id <> 5
          |ORDER BY score DESC, e.vec_id ASC LIMIT 5""".stripMargin,
 
-    // every strategy branch is guarded by the SAME per-mille selectivity
-    // the Spark dispatch computes — a wrong routing decision hash-fails
-    "knn_auto" -> autoKnnOracleSql(wide = false),
-
-    // A28b: the same dispatch-guarded replay with every strategy body's
-    // scoring (prefilter scan, probed hybrid, post-filter candidates)
-    // and the centroid/probe prelude over the wide labeled frame
-    "knn_auto_2048" -> autoKnnOracleSql(wide = true),
-
     "hybrid_knn_batch" ->
       s"""WITH qs AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings WHERE vec_id <= 4),
          |cent AS (${centSql("embeddings")}),
@@ -2225,21 +1580,6 @@ object HybridQueries {
          |  JOIN documents d ON d.doc_id = e.vec_id
          |  WHERE d.n_chars IS NOT NULL AND d.n_chars <= 400 AND e.vec_id <> q.q_id
          |) WHERE rank <= 5""".stripMargin,
-
-    "attr_specific_knn" ->
-      s"""WITH sub AS (
-         |  SELECT e.vec_id, e.embedding, e.label FROM embeddings e
-         |  JOIN documents d ON d.doc_id = e.vec_id
-         |  WHERE d.lang IS NOT NULL AND d.lang = 'zh'),
-         |cent AS (${centSql("sub")}),
-         |q AS (SELECT embedding FROM embeddings WHERE vec_id = 7),
-         |probes AS (
-         |  SELECT c.label FROM cent c CROSS JOIN q
-         |  ORDER BY ${cosSql("c.cent", "q.embedding")} DESC, c.label ASC LIMIT 2)
-         |SELECT s.vec_id, ${cosSql("s.embedding", "q.embedding")} AS score
-         |FROM sub s JOIN probes p ON s.label = p.label CROSS JOIN q
-         |WHERE s.vec_id <> 7
-         |ORDER BY score DESC, s.vec_id ASC LIMIT 5""".stripMargin,
 
     "ann_lsh" ->
       s"""WITH b AS (
@@ -2277,43 +1617,15 @@ object HybridQueries {
          |  CAST(coalesce(h1.n, 0) AS BIGINT) AS n_hit_multi
          |FROM qs q LEFT JOIN h0 ON h0.q_id = q.q_id LEFT JOIN h1 ON h1.q_id = q.q_id""".stripMargin,
 
-    "ann_lsh_multiprobe" ->
-      s"""WITH b AS (
-         |  SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket FROM embeddings),
-         |q AS (SELECT embedding, bucket FROM b WHERE vec_id = 3)
-         |SELECT e.vec_id, ${cosSql("e.embedding", "q.embedding")} AS score
-         |FROM b e CROSS JOIN q
-         |WHERE e.vec_id <> 3 AND bit_count(xor(e.bucket, q.bucket)) <= 1
-         |ORDER BY score DESC, e.vec_id ASC LIMIT 5""".stripMargin,
-
-    // A31b: the same 1-flip Hamming-ball replay with the plane constants
-    // derived at d=2048 over the wide CTE (the dot products and the sign
-    // tests are sequential double accumulation in both engines)
-    "ann_lsh_multiprobe_2048" ->
-      s"""WITH wide AS MATERIALIZED (
-         |  SELECT vec_id, $wideDuck AS embedding FROM embeddings),
-         |b AS (SELECT vec_id, embedding,
-         |  ${DuckDialect.bucketSql("embedding", NumPlanes, WideDims)} AS bucket FROM wide),
-         |q AS (SELECT embedding, bucket FROM b WHERE vec_id = 3)
-         |SELECT e.vec_id, ${cosSql("e.embedding", "q.embedding")} AS score
-         |FROM b e CROSS JOIN q
-         |WHERE e.vec_id <> 3 AND bit_count(xor(e.bucket, q.bucket)) <= 1
-         |ORDER BY score DESC, e.vec_id ASC LIMIT 5""".stripMargin,
-
-    // A50: the composition replay — attribute derivation (the JSONL
-    // synthesis collapsed to its attr projection), class predicate, wide
-    // vectors, exact prefilter top-10 per class (the saturated walk is
-    // exact, so parse → embed slot → persisted index → filtered serve
-    // must land on these rows bit-for-bit)
+    // A50: the composition replay
     "acorn_pipeline_e2e" -> {
       def clsSql(cls: String, qid: Long, pred: String) =
-        s"""$cls AS (SELECT '$cls' AS cls, e.vec_id, ${l2Sql("e.w", "q.w")} AS score
+        s"""$cls AS (SELECT '$cls' AS cls, e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
            |  FROM wide e JOIN attrs a USING (vec_id)
-           |  CROSS JOIN (SELECT w FROM wide WHERE vec_id = $qid) q
+           |  CROSS JOIN (SELECT embedding FROM wide WHERE vec_id = $qid) q
            |  WHERE $pred
            |  ORDER BY score ASC, e.vec_id ASC LIMIT 10)""".stripMargin
-      s"""WITH wide AS MATERIALIZED (SELECT vec_id, $wideDuck AS w FROM embeddings),
-         |attrs AS (SELECT doc_id AS vec_id,
+      s"""WITH ${Width.Wide.cte}attrs AS (SELECT doc_id AS vec_id,
          |  CASE WHEN doc_id % 5 <> 0 THEN coalesce(source, 'unknown') END AS brand,
          |  coalesce(lang, 'und') AS color,
          |  2000 + doc_id % 25 AS model_year
@@ -2324,24 +1636,20 @@ object HybridQueries {
          |SELECT * FROM c1 UNION ALL SELECT * FROM c2 UNION ALL SELECT * FROM c3""".stripMargin
     },
 
-    // A50c: the composition replay per (class, strategy) — `pre` is the
-    // exact prefilter top-10 from raw documents (attribute derivation +
-    // predicate + wide vectors); `acorn` asserts the SAME rows (the
-    // saturated persisted walk is exact — walk ≡ scan is the gate);
-    // `post` replays the deterministic top-50-then-filter funnel
-    "acorn_pipeline_e2e_2048" -> {
+    // A50c: the composition replay per (class, strategy)
+    PipelineMatrix -> {
       val classes = Seq(
         ("c1", 3L, "a.brand IS NOT NULL AND a.brand = 'src1'"),
         ("c2", 11L, "a.color IS NOT NULL AND a.color = 'zh'"),
         ("c3", 17L, "a.model_year IS NOT NULL AND a.model_year <= 2010"))
       val classCtes = classes.map { case (cls, qid, pred) =>
-        s"""pre_$cls AS (SELECT e.vec_id, ${l2Sql("e.w", "q.w")} AS score
+        s"""pre_$cls AS (SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
            |  FROM wide e JOIN attrs a USING (vec_id)
-           |  CROSS JOIN (SELECT w FROM wide WHERE vec_id = $qid) q
+           |  CROSS JOIN (SELECT embedding FROM wide WHERE vec_id = $qid) q
            |  WHERE $pred
            |  ORDER BY score ASC, e.vec_id ASC LIMIT 10),
-           |cand_$cls AS (SELECT e.vec_id, ${l2Sql("e.w", "q.w")} AS score
-           |  FROM wide e CROSS JOIN (SELECT w FROM wide WHERE vec_id = $qid) q
+           |cand_$cls AS (SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
+           |  FROM wide e CROSS JOIN (SELECT embedding FROM wide WHERE vec_id = $qid) q
            |  ORDER BY score ASC, e.vec_id ASC LIMIT 50),
            |post_$cls AS (SELECT c.vec_id, c.score FROM cand_$cls c
            |  JOIN attrs a USING (vec_id)
@@ -2356,8 +1664,7 @@ object HybridQueries {
            |SELECT '$cls' AS cls, 'post' AS strategy, vec_id, score FROM post_$cls"""
           .stripMargin
       }.mkString("\nUNION ALL\n")
-      s"""WITH wide AS MATERIALIZED (SELECT vec_id, $wideDuck AS w FROM embeddings),
-         |attrs AS (SELECT doc_id AS vec_id,
+      s"""WITH ${Width.Wide.cte}attrs AS (SELECT doc_id AS vec_id,
          |  CASE WHEN doc_id % 5 <> 0 THEN coalesce(source, 'unknown') END AS brand,
          |  coalesce(lang, 'und') AS color,
          |  2000 + doc_id % 25 AS model_year
@@ -2393,8 +1700,7 @@ object HybridQueries {
          |  FROM approx a JOIN exact x ON a.q_id = x.q_id AND a.vec_id = x.vec_id
          |  GROUP BY a.q_id) h ON q.q_id = h.q_id""".stripMargin,
 
-    // integer-exact mirror: quantize → integer floor-mean centroid →
-    // squared-L2 in quantized units (all-BIGINT, no fp accumulation order)
+    // integer-exact mirror: quantize → integer floor-mean centroid → squared-L2 in quantized units
     "embedding_drift" ->
       s"""WITH ed AS (SELECT d.source, ${DuckDialect.quantizeVec("e.embedding")} AS q
          |  FROM embeddings e JOIN documents d ON d.doc_id = e.vec_id),
@@ -2444,9 +1750,7 @@ object HybridQueries {
          |SELECT dim, CAST(v AS BIGINT) AS loading FROM v4""".stripMargin
     },
 
-    // integer-exact Lloyd's replayed as unrolled per-iteration CTEs:
-    // quantize → seeds (k lowest ids) → [assign → floor-mean centroid]×3 →
-    // probe 3 by integer squared L2 → exact integer search over members
+    // integer-exact Lloyd's replayed as unrolled per-iteration CTEs
     "knn_ivf_trained" -> {
       val k = 10; val iters = 3; val np = 3
       def dsq(a: String, b: String) =
@@ -2461,149 +1765,6 @@ object HybridQueries {
          |SELECT e.vec_id, ${dsq("e.q", "q.q")} AS score
          |FROM ed e JOIN af USING (vec_id) JOIN probes p ON af.cl = p.cl CROSS JOIN qq q
          |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin
-    },
-
-    // A14d: same Lloyd chain as A14c; the probe CTE ranks by the HNSW
-    // score contract (floor(sqrt(d²)·10⁴+0.5), ties lower label) because
-    // that is the ranking the engine's graph walk actually returns
-    "knn_ivf_hnsw" -> {
-      val k = 10; val iters = 3; val np = 3
-      def dsq(a: String, b: String) =
-        s"CAST(list_sum(list_transform(range(1, 65), i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))) AS BIGINT)"
-      val qz = DuckDialect.quantizeVec("embedding")
-      s"""WITH ed AS (SELECT vec_id, $qz AS q FROM embeddings WHERE vec_id <> 21),
-         |qq AS (SELECT $qz AS q FROM embeddings WHERE vec_id = 21),
-         |${DuckDialect.lloydChain(k, iters)},
-         |probes AS (SELECT cl FROM (
-         |  SELECT c.cl, row_number() OVER (ORDER BY
-         |      CAST(floor(sqrt(CAST(${dsq("c.cent", "q.q")} AS DOUBLE)) * 10000 + 0.5) AS BIGINT) ASC,
-         |      c.cl ASC) AS rn
-         |  FROM c$iters c CROSS JOIN qq q) WHERE rn <= $np)
-         |SELECT e.vec_id, ${dsq("e.q", "q.q")} AS score
-         |FROM ed e JOIN af USING (vec_id) JOIN probes p ON af.cl = p.cl CROSS JOIN qq q
-         |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin
-    },
-
-    // A14f: the A14d oracle batched — the Lloyd chain trains on the FULL
-    // corpus (queries are indexed; self-hits included), the probe CTE
-    // ranks per q_id under the HNSW score contract, the scan joins the
-    // (q_id, cl) probe relation, per-query window cuts
-    "knn_ivf_hnsw_batch" -> {
-      val k = 10; val iters = 3; val np = 3
-      def dsq(a: String, b: String) =
-        s"CAST(list_sum(list_transform(range(1, 65), i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))) AS BIGINT)"
-      val qz = DuckDialect.quantizeVec("embedding")
-      s"""WITH ed AS (SELECT vec_id, $qz AS q FROM embeddings),
-         |qs AS (SELECT vec_id AS q_id, $qz AS q FROM embeddings WHERE vec_id < 8),
-         |${DuckDialect.lloydChain(k, iters)},
-         |probes AS (SELECT q_id, cl FROM (
-         |  SELECT qs.q_id, c.cl, row_number() OVER (PARTITION BY qs.q_id ORDER BY
-         |      CAST(floor(sqrt(CAST(${dsq("c.cent", "qs.q")} AS DOUBLE)) * 10000 + 0.5) AS BIGINT) ASC,
-         |      c.cl ASC) AS rn
-         |  FROM c$iters c CROSS JOIN qs) WHERE rn <= $np),
-         |scored AS (SELECT qs.q_id, e.vec_id, ${dsq("e.q", "qs.q")} AS score
-         |  FROM ed e JOIN af USING (vec_id)
-         |  JOIN probes p ON af.cl = p.cl
-         |  JOIN qs ON qs.q_id = p.q_id)
-         |SELECT q_id, vec_id, rank, score FROM (
-         |  SELECT q_id, vec_id, CAST(row_number() OVER (PARTITION BY q_id
-         |    ORDER BY score ASC, vec_id ASC) AS BIGINT) AS rank, score FROM scored)
-         |WHERE rank <= $k""".stripMargin
-    },
-
-    // A14e: the A14d oracle with the Lloyd chain, probe ranking, and scan
-    // re-derived over the wide frame (lloydChain at dims=2048); ed is
-    // MATERIALIZED — the chain references it once per iteration
-    "knn_ivf_hnsw_2048" -> {
-      val k = 10; val iters = 3; val np = 3; val dims = 2048
-      def dsq(a: String, b: String) =
-        s"CAST(list_sum(list_transform(range(1, ${dims + 1}), i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))) AS BIGINT)"
-      val qz = DuckDialect.quantizeVec("embedding")
-      s"""WITH wide AS MATERIALIZED (SELECT vec_id, $wideDuck AS embedding FROM embeddings),
-         |ed AS MATERIALIZED (SELECT vec_id, $qz AS q FROM wide WHERE vec_id <> 21),
-         |qq AS (SELECT $qz AS q FROM wide WHERE vec_id = 21),
-         |${DuckDialect.lloydChain(k, iters, dims)},
-         |probes AS (SELECT cl FROM (
-         |  SELECT c.cl, row_number() OVER (ORDER BY
-         |      CAST(floor(sqrt(CAST(${dsq("c.cent", "q.q")} AS DOUBLE)) * 10000 + 0.5) AS BIGINT) ASC,
-         |      c.cl ASC) AS rn
-         |  FROM c$iters c CROSS JOIN qq q) WHERE rn <= $np)
-         |SELECT e.vec_id, ${dsq("e.q", "q.q")} AS score
-         |FROM ed e JOIN af USING (vec_id) JOIN probes p ON af.cl = p.cl CROSS JOIN qq q
-         |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin
-    },
-
-    // A14g: the A14f batch oracle with the Lloyd chain, per-query probe
-    // windows, and pruned scan re-derived over the wide frame (lloydChain
-    // at dims=2048); wide/ed MATERIALIZED — the chain references ed once
-    // per iteration, and qs reuses ed's quantization (the batch trains on
-    // the full corpus, so every query row is already in ed)
-    "knn_ivf_hnsw_batch_2048" -> {
-      val k = 10; val iters = 3; val np = 3; val dims = 2048
-      def dsq(a: String, b: String) =
-        s"CAST(list_sum(list_transform(range(1, ${dims + 1}), i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))) AS BIGINT)"
-      val qz = DuckDialect.quantizeVec("embedding")
-      s"""WITH wide AS MATERIALIZED (SELECT vec_id, $wideDuck AS embedding FROM embeddings),
-         |ed AS MATERIALIZED (SELECT vec_id, $qz AS q FROM wide),
-         |qs AS MATERIALIZED (SELECT vec_id AS q_id, q FROM ed WHERE vec_id < 8),
-         |${DuckDialect.lloydChain(k, iters, dims)},
-         |probes AS (SELECT q_id, cl FROM (
-         |  SELECT qs.q_id, c.cl, row_number() OVER (PARTITION BY qs.q_id ORDER BY
-         |      CAST(floor(sqrt(CAST(${dsq("c.cent", "qs.q")} AS DOUBLE)) * 10000 + 0.5) AS BIGINT) ASC,
-         |      c.cl ASC) AS rn
-         |  FROM c$iters c CROSS JOIN qs) WHERE rn <= $np),
-         |scored AS (SELECT qs.q_id, e.vec_id, ${dsq("e.q", "qs.q")} AS score
-         |  FROM ed e JOIN af USING (vec_id)
-         |  JOIN probes p ON af.cl = p.cl
-         |  JOIN qs ON qs.q_id = p.q_id)
-         |SELECT q_id, vec_id, rank, score FROM (
-         |  SELECT q_id, vec_id, CAST(row_number() OVER (PARTITION BY q_id
-         |    ORDER BY score ASC, vec_id ASC) AS BIGINT) AS rank, score FROM scored)
-         |WHERE rank <= $k""".stripMargin
-    },
-
-    "ivf_split_hot" -> splitHotOracleSql("embeddings", ""),
-
-    // A33b: the same replay over the wide CTEs (wl = wide frame + label)
-    "ivf_split_hot_2048" -> splitHotOracleSql("wl", wideLabeledCtes),
-
-    "knn_ivf_append" -> {
-      def l2s(a: String, b: String) =
-        s"CAST(floor(list_distance(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])) * 10000 + 0.5) AS BIGINT)"
-      s"""WITH cent AS (${centSql(s"(SELECT * FROM embeddings WHERE vec_id < $IvfAppendSplit)")}),
-         |a AS (SELECT e.vec_id, c.label, ${l2s("e.embedding", "c.cent")} AS d,
-         |  row_number() OVER (PARTITION BY e.vec_id
-         |    ORDER BY ${l2s("e.embedding", "c.cent")} ASC, c.label ASC) AS rn
-         |  FROM embeddings e CROSS JOIN cent c WHERE e.vec_id >= $IvfAppendSplit)
-         |SELECT vec_id, CAST(label AS BIGINT) AS label, d FROM a WHERE rn = 1""".stripMargin
-    },
-
-    // A30b: the A30 assignment CTEs + per-cluster drift stats, the
-    // integer threshold verdict, and the dispatch — served_mean re-scores
-    // every member against the verdict-chosen centroid (fresh over
-    // base ∪ arrivals when rebuilt, stale otherwise). Sums CAST to
-    // BIGINT (DuckDB sums BIGINT into HUGEINT); all cuts integer.
-    // Pre-validated standalone in python/duckdb at sf0.001/sf0.01
-    // (6/10 and 5/10 clusters rebuild — both arms fire).
-    "ivf_drift_rebuild" -> driftRebuildOracleSql("embeddings", 64, ""),
-
-    // A30c: the same replay over the derived-wide frame — `wl` carries
-    // (vec_id, label, 2048-slot embedding), centSql at dims=2048
-    "ivf_drift_rebuild_2048" -> driftRebuildOracleSql("wl", 2048,
-      wideLabeledCtes),
-
-    // A30d: the A30 assignment replay over the wide frame — centroids of
-    // the wide base (centSql at dims=2048), per-arrival argmin under the
-    // same (scaled-L2 asc, label asc) contract
-    "knn_ivf_append_2048" -> {
-      def l2s(a: String, b: String) =
-        s"CAST(floor(list_distance(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])) * 10000 + 0.5) AS BIGINT)"
-      s"""WITH ${wideLabeledCtes}cent AS MATERIALIZED (${DuckDialect.centSql(s"(SELECT * FROM wl WHERE vec_id < $IvfAppendSplit)", 2048)}),
-         |a AS (SELECT e.vec_id, c.label, ${l2s("e.embedding", "c.cent")} AS d,
-         |  row_number() OVER (PARTITION BY e.vec_id
-         |    ORDER BY ${l2s("e.embedding", "c.cent")} ASC, c.label ASC) AS rn
-         |  FROM wl e CROSS JOIN cent c WHERE e.vec_id >= $IvfAppendSplit)
-         |SELECT vec_id, CAST(label AS BIGINT) AS label, d FROM a WHERE rn = 1""".stripMargin
     },
 
     "recall_probe_sweep" -> {
@@ -2638,47 +1799,6 @@ object HybridQueries {
          |$perNp""".stripMargin
     },
 
-    "recall_filtered" -> {
-      val preds = Seq(
-        ("class1_selective",
-          "d.lang IS NOT NULL AND d.lang = 'zh' AND d.n_chars IS NOT NULL AND d.n_chars < 150"),
-        ("class2_mid", "d.lang IS NOT NULL AND d.lang = 'zh'"),
-        ("class3_broad", "d.n_chars IS NOT NULL AND d.n_chars <= 400"))
-      val classCtes = preds.zipWithIndex.map { case ((_, p), i) =>
-        s"""exact$i AS (
-           |  SELECT e.vec_id FROM e JOIN documents d ON d.doc_id = e.vec_id CROSS JOIN q
-           |  WHERE $p ORDER BY ${cosSql("e.embedding", "q.embedding")} DESC, e.vec_id ASC LIMIT 10),
-           |post$i AS (
-           |  SELECT c.vec_id FROM cand c JOIN documents d ON d.doc_id = c.vec_id
-           |  WHERE $p ORDER BY c.score DESC, c.vec_id ASC LIMIT 10),
-           |hyb$i AS (
-           |  SELECT e.vec_id FROM e JOIN probes pr ON e.label = pr.label
-           |  JOIN documents d ON d.doc_id = e.vec_id CROSS JOIN q
-           |  WHERE $p ORDER BY ${cosSql("e.embedding", "q.embedding")} DESC, e.vec_id ASC LIMIT 10)"""
-          .stripMargin
-      }.mkString(",\n")
-      val rows = preds.zipWithIndex.flatMap { case ((cls, _), i) =>
-        Seq(
-          s"""SELECT '$cls' AS cls, 'post' AS strategy,
-             |  (SELECT count(*) FROM post$i) AS n_ret,
-             |  (SELECT count(*) FROM post$i JOIN exact$i USING (vec_id)) AS n_hit""".stripMargin,
-          s"""SELECT '$cls' AS cls, 'hybrid' AS strategy,
-             |  (SELECT count(*) FROM hyb$i) AS n_ret,
-             |  (SELECT count(*) FROM hyb$i JOIN exact$i USING (vec_id)) AS n_hit""".stripMargin)
-      }.mkString("\nUNION ALL\n")
-      s"""WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 11),
-         |e AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id <> 11),
-         |cand AS (
-         |  SELECT e.vec_id, ${cosSql("e.embedding", "q.embedding")} AS score
-         |  FROM e CROSS JOIN q ORDER BY score DESC, e.vec_id ASC LIMIT 50),
-         |cent AS (${centSql("e")}),
-         |probes AS (
-         |  SELECT c.label FROM cent c CROSS JOIN q
-         |  ORDER BY ${cosSql("c.cent", "q.embedding")} DESC, c.label ASC LIMIT 2),
-         |$classCtes
-         |$rows""".stripMargin
-    },
-
     "clustered_probe" ->
       s"""WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 4),
          |cent AS (${centSql("embeddings")}),
@@ -2690,13 +1810,7 @@ object HybridQueries {
          |WHERE e.vec_id <> 4
          |ORDER BY score DESC, e.vec_id ASC LIMIT 10""".stripMargin,
 
-    // A14h: the CONSUMER oracle for the clustered layout — every CTE
-    // reads the persisted artifacts, not the source table: `lay` is the
-    // hive-partitioned layout itself (the directory names ARE the
-    // cluster column), `meta` the sidecar, `ok` the consumer's contract
-    // gate (exactly one row, the expected vintage, the expected
-    // partition column — a bad sidecar empties it and the serve returns
-    // zero rows), and the probe ranking replays from the layout's rows
+    // A14h: the CONSUMER oracle for the clustered layout
     "clustered_probe_consumer" ->
       s"""WITH lay AS MATERIALIZED (
          |  SELECT CAST(label AS BIGINT) AS label, vec_id, embedding
@@ -2720,34 +1834,6 @@ object HybridQueries {
          |SELECT e.vec_id, ${cosSql("e.embedding", "q.embedding")} AS score
          |FROM lay e JOIN probes p ON e.label = p.label CROSS JOIN q CROSS JOIN ok
          |WHERE e.vec_id <> 6
-         |ORDER BY score DESC, e.vec_id ASC LIMIT 10""".stripMargin,
-
-    "hybrid_knn_adaptive" ->
-      s"""WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 3),
-         |cent AS (${centSql("embeddings")}),
-         |ranked AS (
-         |  SELECT c.label AS label, row_number() OVER (
-         |    ORDER BY ${cosSql("c.cent", "q.embedding")} DESC, c.label ASC) AS pr
-         |  FROM cent c CROSS JOIN q),
-         |nc AS (SELECT count(*) AS n FROM cent),
-         |nps AS (
-         |  SELECT DISTINCT LEAST(p.v, nc.n) AS np
-         |  FROM (SELECT unnest([1,2,4,8,16,32,64,128,256,512,1024,2048,4096,
-         |                       8192,16384,32768,65536]) AS v) p CROSS JOIN nc),
-         |surv AS (
-         |  SELECT n.np AS np, count(*) AS cnt
-         |  FROM nps n JOIN ranked r ON r.pr <= n.np
-         |  JOIN embeddings e ON e.label = r.label
-         |  JOIN documents d ON d.doc_id = e.vec_id
-         |  WHERE d.lang IS NOT NULL AND d.lang = 'fr' AND d.doc_id <> 3
-         |  GROUP BY n.np),
-         |chosen AS (
-         |  SELECT COALESCE((SELECT min(np) FROM surv WHERE cnt >= 10),
-         |                  (SELECT max(np) FROM nps)) AS np)
-         |SELECT e.vec_id, ${cosSql("e.embedding", "q.embedding")} AS score
-         |FROM embeddings e JOIN ranked r ON e.label = r.label CROSS JOIN chosen ch
-         |JOIN documents d ON d.doc_id = e.vec_id CROSS JOIN q
-         |WHERE r.pr <= ch.np AND d.lang IS NOT NULL AND d.lang = 'fr' AND d.doc_id <> 3
          |ORDER BY score DESC, e.vec_id ASC LIMIT 10""".stripMargin,
 
     "selectivity_classes" ->
@@ -2831,79 +1917,6 @@ object HybridQueries {
          |FROM embeddings e CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 7) q
          |WHERE e.vec_id <> 7 ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
 
-    // saturated ACORN walk == exact pre-filter result
-    "hybrid_knn_hnsw" ->
-      s"""SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
-         |FROM embeddings e
-         |JOIN documents d ON d.doc_id = e.vec_id
-         |CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 11) q
-         |WHERE e.vec_id <> 11
-         |  AND d.lang IS NOT NULL AND d.lang = 'zh'
-         |  AND d.n_chars IS NOT NULL AND d.n_chars < 150
-         |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
-
-    // A35g: the saturated two-hop walk is exact under the same sweep
-    // guarantee (the flag changes budget-bound traversal order only), so
-    // the class-1 prefilter replays it at query id 17
-    "hybrid_knn_hnsw_2hop" ->
-      s"""SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
-         |FROM embeddings e
-         |JOIN documents d ON d.doc_id = e.vec_id
-         |CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 17) q
-         |WHERE e.vec_id <> 17
-         |  AND d.lang IS NOT NULL AND d.lang = 'zh'
-         |  AND d.n_chars IS NOT NULL AND d.n_chars < 150
-         |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
-
-    // persisted restore+search == fresh build+search == exact at the
-    // saturating beam (exact at any sf); self-hit included (no exclusion)
-    "knn_hnsw_persisted" ->
-      s"""SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
-         |FROM embeddings e CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 13) q
-         |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
-
-    // the 2048-d construction replayed with integer index/multiplier
-    // arithmetic + one float cast — bit-identical in both engines; then
-    // the standard L2 convention over the wide vectors, self excluded
-    "knn_exact_l2_2048" ->
-      s"""WITH wide AS (SELECT vec_id, $wideDuck AS w FROM embeddings)
-         |SELECT e.vec_id, ${l2Sql("e.w", "q.w")} AS score
-         |FROM wide e CROSS JOIN (SELECT w FROM wide WHERE vec_id = 0) q
-         |WHERE e.vec_id <> 0 ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
-
-    // saturated persisted-graph walk at 2048-d == exact; self-hits
-    // included (query id 13 is an indexed item)
-    "knn_hnsw_2048" ->
-      s"""WITH wide AS (SELECT vec_id, $wideDuck AS w FROM embeddings)
-         |SELECT e.vec_id, ${l2Sql("e.w", "q.w")} AS score
-         |FROM wide e CROSS JOIN (SELECT w FROM wide WHERE vec_id = 13) q
-         |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
-
-    // A45c: saturated ACORN walk at 2048-d == exact pre-filter result
-    // over the wide vectors (self excluded, the A35b convention)
-    "hybrid_knn_hnsw_2048" ->
-      s"""WITH wide AS (SELECT vec_id, $wideDuck AS w FROM embeddings)
-         |SELECT e.vec_id, ${l2Sql("e.w", "q.w")} AS score
-         |FROM wide e
-         |JOIN documents d ON d.doc_id = e.vec_id
-         |CROSS JOIN (SELECT w FROM wide WHERE vec_id = 11) q
-         |WHERE e.vec_id <> 11
-         |  AND d.lang IS NOT NULL AND d.lang = 'zh'
-         |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
-
-    // A45d: the saturated two-hop walk at width is exact under the same
-    // sweep guarantee, so the class-1 wide prefilter replays it
-    "hybrid_knn_hnsw_2hop_2048" ->
-      s"""WITH wide AS (SELECT vec_id, $wideDuck AS w FROM embeddings)
-         |SELECT e.vec_id, ${l2Sql("e.w", "q.w")} AS score
-         |FROM wide e
-         |JOIN documents d ON d.doc_id = e.vec_id
-         |CROSS JOIN (SELECT w FROM wide WHERE vec_id = 17) q
-         |WHERE e.vec_id <> 17
-         |  AND d.lang IS NOT NULL AND d.lang = 'zh'
-         |  AND d.n_chars IS NOT NULL AND d.n_chars < 150
-         |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
-
     // appended index == fresh full build == exact at the saturating beam
     "knn_hnsw_append" ->
       s"""SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
@@ -2911,8 +1924,6 @@ object HybridQueries {
          |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
 
     // saturated ACORN over the persisted index == exact pre-filter result
-    // (no self-exclusion: query id 11 is an indexed item; the predicate
-    // decides whether it appears, identically on both sides)
     "hybrid_knn_hnsw_persisted" ->
       s"""SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
          |FROM embeddings e
@@ -2921,70 +1932,14 @@ object HybridQueries {
          |WHERE d.lang IS NOT NULL AND d.lang = 'zh'
          |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
 
-    // batch-served persisted graphs == per-query exact at the saturating
-    // beam; self-hits included
-    "knn_hnsw_batch" ->
-      s"""SELECT q_id, vec_id, rank, score FROM (
-         |  SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-         |    CAST(row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${l2Sql("e.embedding", "q.embedding")} ASC, e.vec_id ASC) AS BIGINT) AS rank,
-         |    ${l2Sql("e.embedding", "q.embedding")} AS score
-         |  FROM embeddings e CROSS JOIN (SELECT vec_id, embedding FROM embeddings WHERE vec_id <= 4) q
-         |) WHERE rank <= 3""".stripMargin,
-
-    // A35i: batch-served persisted WIDE graphs == per-query exact over
-    // the wide vectors at the saturating beam; self-hits included
-    "knn_hnsw_batch_2048" ->
-      s"""WITH wide AS MATERIALIZED (SELECT vec_id, $wideDuck AS w FROM embeddings)
-         |SELECT q_id, vec_id, rank, score FROM (
-         |  SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
-         |    CAST(row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${l2Sql("e.w", "q.w")} ASC, e.vec_id ASC) AS BIGINT) AS rank,
-         |    ${l2Sql("e.w", "q.w")} AS score
-         |  FROM wide e CROSS JOIN (SELECT vec_id, w FROM wide WHERE vec_id <= 4) q
-         |) WHERE rank <= 3""".stripMargin,
-
-    // A49: saturated persisted-graph walk at width == exact over the
-    // wide vectors; the qs CTE derives the external midpoint ((w0+w1)/2,
-    // one float round per component — the A47c derivation at |Q|=1) and
-    // there is NO self-exclusion: an external query has no corpus row
+    // A49: saturated persisted-graph walk at width == exact over the wide vectors
     "knn_hnsw_external_2048" ->
-      s"""WITH wide AS MATERIALIZED (SELECT vec_id, $wideDuck AS w FROM embeddings),
-         |q AS (SELECT list_transform(range(1, ${WideDims + 1}),
-         |    i -> CAST(CAST(((CAST(a.w AS DOUBLE[]))[i] + (CAST(b.w AS DOUBLE[]))[i]) * 0.5 AS FLOAT) AS DOUBLE)) AS w
+      s"""WITH ${Width.Wide.cte}q AS (SELECT list_transform(range(1, ${WideDims + 1}),
+         |    i -> CAST(CAST(((CAST(a.embedding AS DOUBLE[]))[i] + (CAST(b.embedding AS DOUBLE[]))[i]) * 0.5 AS FLOAT) AS DOUBLE)) AS embedding
          |  FROM wide a JOIN wide b ON a.vec_id = 0 AND b.vec_id = 1)
-         |SELECT e.vec_id, ${l2Sql("e.w", "q.w")} AS score
+         |SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
          |FROM wide e CROSS JOIN q
          |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
-
-    // A51: the two-hop budget curve's literal floors — the oracle
-    // asserts the measured knee (tri-scale min − margin, SURVEY §8r);
-    // a `gain` row below its floor means the bridge LOST recall at
-    // equal budget
-    "recall_hnsw_2hop" ->
-      """SELECT CAST(budget AS BIGINT) AS budget, mode,
-        |  CAST(n_hit_floor AS BIGINT) AS n_hit_floor
-        |FROM (VALUES
-        |  (4, 'one', 0), (4, 'two', 0), (4, 'gain', 0),
-        |  (8, 'one', 0), (8, 'two', 0), (8, 'gain', 0),
-        |  (16, 'one', 1), (16, 'two', 1), (16, 'gain', 0),
-        |  (32, 'one', 2), (32, 'two', 2), (32, 'gain', 0),
-        |  (64, 'one', 4), (64, 'two', 4), (64, 'gain', 0)
-        |) t(budget, mode, n_hit_floor)""".stripMargin,
-
-    // A51b: the wide curve's literal floors — re-measured AT the d=2048
-    // configuration (§8s); the grid happens to coincide with the d=64
-    // knee, but it is its own measurement, not a copy
-    "recall_hnsw_2hop_2048" ->
-      """SELECT CAST(budget AS BIGINT) AS budget, mode,
-        |  CAST(n_hit_floor AS BIGINT) AS n_hit_floor
-        |FROM (VALUES
-        |  (4, 'one', 0), (4, 'two', 0), (4, 'gain', 0),
-        |  (8, 'one', 0), (8, 'two', 0), (8, 'gain', 0),
-        |  (16, 'one', 1), (16, 'two', 1), (16, 'gain', 0),
-        |  (32, 'one', 2), (32, 'two', 2), (32, 'gain', 0),
-        |  (64, 'one', 4), (64, 'two', 4), (64, 'gain', 0)
-        |) t(budget, mode, n_hit_floor)""".stripMargin,
 
     // A50b: the capstone recall row's literal floors (A35h convention)
     "acorn_pipeline_recall" ->
@@ -2995,202 +1950,12 @@ object HybridQueries {
     // A50d: the pipeline matrix's literal floors — acorn cells are the
     // A50b measurement (same configuration); post cells measured
     // tri-scale over the parsed pass sets (§8t)
-    "acorn_pipeline_recall_2048" ->
+    PipelineRecallTable ->
       """SELECT cls, strategy, CAST(n_hit_floor AS BIGINT) AS n_hit_floor
         |FROM (VALUES
         |  ('c1', 'acorn', 48), ('c1', 'post', 68),
         |  ('c2', 'acorn', 58), ('c2', 'post', 76),
         |  ('c3', 'acorn', 55), ('c3', 'post', 76)
-        |) t(cls, strategy, n_hit_floor)""".stripMargin,
-
-    // attribute-specific graph: membership (attr present) AND the
-    // query-time predicate both apply; saturated walk == exact
-    "attr_specific_knn_hnsw" ->
-      s"""SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
-         |FROM embeddings e
-         |JOIN documents d ON d.doc_id = e.vec_id
-         |CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 9) q
-         |WHERE e.vec_id <> 9
-         |  AND d.n_chars IS NOT NULL
-         |  AND d.n_chars <= 400
-         |  AND d.lang IS NOT NULL AND position('e' IN d.lang) > 0
-         |ORDER BY score ASC, e.vec_id ASC LIMIT 3""".stripMargin,
-
-    // the oracle asserts the recall FLOOR: the engine emits
-    // least(n_hit, floor), so equality holds iff measured recall ≥ floor —
-    // a realistic-beam regression turns this row red (r5 verdict #1)
-    "recall_hnsw_beam" ->
-      """SELECT cls, strategy, CAST(floor AS BIGINT) AS n_hit_floor FROM (VALUES
-        |  ('c1', 'beam', 76), ('c1', 'acorn', 50), ('c1', 'post', 68),
-        |  ('c2', 'beam', 76), ('c2', 'acorn', 56), ('c2', 'post', 76),
-        |  ('c3', 'beam', 76), ('c3', 'acorn', 52), ('c3', 'post', 76)
-        |) AS t(cls, strategy, floor)""".stripMargin,
-
-    // A48: the width matrix's floors — same least(n_hit, floor) contract,
-    // measured over the d=2048 persisted graphs (SURVEY §8q)
-    "recall_hnsw_beam_2048" ->
-      """SELECT cls, strategy, CAST(floor AS BIGINT) AS n_hit_floor FROM (VALUES
-        |  ('c1', 'beam', 76), ('c1', 'acorn', 48), ('c1', 'post', 68),
-        |  ('c2', 'beam', 76), ('c2', 'acorn', 58), ('c2', 'post', 76),
-        |  ('c3', 'beam', 76), ('c3', 'acorn', 56), ('c3', 'post', 76)
-        |) AS t(cls, strategy, floor)""".stripMargin,
-
-    // the 'acorn' row ASSERTS perfect filtered recall (n_hit = n_ret =
-    // |exact|); the 'post' row is computed honestly and collapses
-    "recall_hnsw_filtered" ->
-      s"""WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 11),
-         |e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id <> 11),
-         |exact AS (
-         |  SELECT e.vec_id FROM e JOIN documents d ON d.doc_id = e.vec_id CROSS JOIN q
-         |  WHERE d.lang IS NOT NULL AND d.lang = 'zh'
-         |    AND d.n_chars IS NOT NULL AND d.n_chars < 150
-         |  ORDER BY ${l2Sql("e.embedding", "q.embedding")} ASC, e.vec_id ASC LIMIT 10),
-         |cand AS (
-         |  SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
-         |  FROM e CROSS JOIN q ORDER BY score ASC, e.vec_id ASC LIMIT 50),
-         |post AS (
-         |  SELECT c.vec_id FROM cand c JOIN documents d ON d.doc_id = c.vec_id
-         |  WHERE d.lang IS NOT NULL AND d.lang = 'zh'
-         |    AND d.n_chars IS NOT NULL AND d.n_chars < 150
-         |  ORDER BY c.score ASC, c.vec_id ASC LIMIT 10)
-         |SELECT 'acorn' AS strategy, (SELECT count(*) FROM exact) AS n_ret,
-         |  (SELECT count(*) FROM exact) AS n_hit
-         |UNION ALL
-         |SELECT 'post' AS strategy, (SELECT count(*) FROM post) AS n_ret,
-         |  (SELECT count(*) FROM post JOIN exact USING (vec_id)) AS n_hit""".stripMargin,
-
-    // A13d: the A13b replay with every CTE at width — wide labeled frame,
-    // top-50 candidates by wide cosine, per-label 2048-slot centroids,
-    // probe-2 by wide cosine; per class the exact/post/hybrid counts are
-    // computed honestly on both sides
-    "recall_filtered_2048" -> {
-      val preds = Seq(
-        ("class1_selective",
-          "d.lang IS NOT NULL AND d.lang = 'zh' AND d.n_chars IS NOT NULL AND d.n_chars < 150"),
-        ("class2_mid", "d.lang IS NOT NULL AND d.lang = 'zh'"),
-        ("class3_broad", "d.n_chars IS NOT NULL AND d.n_chars <= 400"))
-      val classCtes = preds.zipWithIndex.map { case ((_, p), i) =>
-        s"""exact$i AS (
-           |  SELECT e.vec_id FROM e JOIN documents d ON d.doc_id = e.vec_id CROSS JOIN q
-           |  WHERE $p ORDER BY ${cosSql("e.embedding", "q.embedding")} DESC, e.vec_id ASC LIMIT 10),
-           |post$i AS (
-           |  SELECT c.vec_id FROM cand c JOIN documents d ON d.doc_id = c.vec_id
-           |  WHERE $p ORDER BY c.score DESC, c.vec_id ASC LIMIT 10),
-           |hyb$i AS (
-           |  SELECT e.vec_id FROM e JOIN probes pr ON e.label = pr.label
-           |  JOIN documents d ON d.doc_id = e.vec_id CROSS JOIN q
-           |  WHERE $p ORDER BY ${cosSql("e.embedding", "q.embedding")} DESC, e.vec_id ASC LIMIT 10)"""
-          .stripMargin
-      }.mkString(",\n")
-      val rows = preds.zipWithIndex.flatMap { case ((cls, _), i) =>
-        Seq(
-          s"""SELECT '$cls' AS cls, 'post' AS strategy,
-             |  (SELECT count(*) FROM post$i) AS n_ret,
-             |  (SELECT count(*) FROM post$i JOIN exact$i USING (vec_id)) AS n_hit""".stripMargin,
-          s"""SELECT '$cls' AS cls, 'hybrid' AS strategy,
-             |  (SELECT count(*) FROM hyb$i) AS n_ret,
-             |  (SELECT count(*) FROM hyb$i JOIN exact$i USING (vec_id)) AS n_hit""".stripMargin)
-      }.mkString("\nUNION ALL\n")
-      s"""WITH ${wideLabeledCtes}q AS (SELECT embedding FROM wide WHERE vec_id = 11),
-         |e AS MATERIALIZED (SELECT vec_id, embedding, label FROM wl WHERE vec_id <> 11),
-         |cand AS (
-         |  SELECT e.vec_id, ${cosSql("e.embedding", "q.embedding")} AS score
-         |  FROM e CROSS JOIN q ORDER BY score DESC, e.vec_id ASC LIMIT 50),
-         |cent AS (${DuckDialect.centSql("e", WideDims)}),
-         |probes AS (
-         |  SELECT c.label FROM cent c CROSS JOIN q
-         |  ORDER BY ${cosSql("c.cent", "q.embedding")} DESC, c.label ASC LIMIT 2),
-         |$classCtes
-         |$rows""".stripMargin
-    },
-
-    // A13e: the A13c replay at width — the 'acorn' row ASSERTS perfect
-    // filtered recall over the wide vectors (the saturated wide walk is
-    // exact); the 'post' row is computed honestly and collapses
-    "recall_hnsw_filtered_2048" ->
-      s"""WITH wide AS MATERIALIZED (SELECT vec_id, $wideDuck AS embedding FROM embeddings),
-         |q AS (SELECT embedding FROM wide WHERE vec_id = 11),
-         |e AS (SELECT vec_id, embedding FROM wide WHERE vec_id <> 11),
-         |exact AS (
-         |  SELECT e.vec_id FROM e JOIN documents d ON d.doc_id = e.vec_id CROSS JOIN q
-         |  WHERE d.lang IS NOT NULL AND d.lang = 'zh'
-         |    AND d.n_chars IS NOT NULL AND d.n_chars < 150
-         |  ORDER BY ${l2Sql("e.embedding", "q.embedding")} ASC, e.vec_id ASC LIMIT 10),
-         |cand AS (
-         |  SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
-         |  FROM e CROSS JOIN q ORDER BY score ASC, e.vec_id ASC LIMIT 50),
-         |post AS (
-         |  SELECT c.vec_id FROM cand c JOIN documents d ON d.doc_id = c.vec_id
-         |  WHERE d.lang IS NOT NULL AND d.lang = 'zh'
-         |    AND d.n_chars IS NOT NULL AND d.n_chars < 150
-         |  ORDER BY c.score ASC, c.vec_id ASC LIMIT 10)
-         |SELECT 'acorn' AS strategy, (SELECT count(*) FROM exact) AS n_ret,
-         |  (SELECT count(*) FROM exact) AS n_hit
-         |UNION ALL
-         |SELECT 'post' AS strategy, (SELECT count(*) FROM post) AS n_ret,
-         |  (SELECT count(*) FROM post JOIN exact USING (vec_id)) AS n_hit""".stripMargin,
-
-    // A11c: the attr_specific_knn replay at width — membership restricts
-    // the sub-frame, centroids/probes/scoring all over the 2048 slots
-    "attr_specific_knn_2048" ->
-      s"""WITH ${wideLabeledCtes}sub AS MATERIALIZED (
-         |  SELECT w.vec_id, w.embedding, w.label FROM wl w
-         |  JOIN documents d ON d.doc_id = w.vec_id
-         |  WHERE d.lang IS NOT NULL AND d.lang = 'zh'),
-         |cent AS (${DuckDialect.centSql("sub", WideDims)}),
-         |q AS (SELECT embedding FROM wide WHERE vec_id = 7),
-         |probes AS (
-         |  SELECT c.label FROM cent c CROSS JOIN q
-         |  ORDER BY ${cosSql("c.cent", "q.embedding")} DESC, c.label ASC LIMIT 2)
-         |SELECT s.vec_id, ${cosSql("s.embedding", "q.embedding")} AS score
-         |FROM sub s JOIN probes p ON s.label = p.label CROSS JOIN q
-         |WHERE s.vec_id <> 7
-         |ORDER BY score DESC, s.vec_id ASC LIMIT 5""".stripMargin,
-
-    // A11d: attribute-specific wide graph — membership (attr present) AND
-    // the query-time predicate both apply; the saturated wide walk == exact
-    "attr_specific_knn_hnsw_2048" ->
-      s"""WITH wide AS MATERIALIZED (SELECT vec_id, $wideDuck AS embedding FROM embeddings)
-         |SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
-         |FROM wide e
-         |JOIN documents d ON d.doc_id = e.vec_id
-         |CROSS JOIN (SELECT embedding FROM wide WHERE vec_id = 9) q
-         |WHERE e.vec_id <> 9
-         |  AND d.n_chars IS NOT NULL
-         |  AND d.n_chars <= 400
-         |  AND d.lang IS NOT NULL AND position('e' IN d.lang) > 0
-         |ORDER BY score ASC, e.vec_id ASC LIMIT 3""".stripMargin,
-
-    // A10c: the adaptive-widening replay at width — the probe ranking,
-    // the per-level survivor counts, the min-sufficient-probe choice, and
-    // the final scoring all over the wide labeled frame; the chosen CTE
-    // hash-gates the LOOP'S DECISION at d=2048
-    "hybrid_knn_adaptive_2048" ->
-      s"""WITH ${wideLabeledCtes}q AS (SELECT embedding FROM wide WHERE vec_id = 3),
-         |cent AS (${DuckDialect.centSql("wl", WideDims)}),
-         |ranked AS (
-         |  SELECT c.label AS label, row_number() OVER (
-         |    ORDER BY ${cosSql("c.cent", "q.embedding")} DESC, c.label ASC) AS pr
-         |  FROM cent c CROSS JOIN q),
-         |nc AS (SELECT count(*) AS n FROM cent),
-         |nps AS (
-         |  SELECT DISTINCT LEAST(p.v, nc.n) AS np
-         |  FROM (SELECT unnest([1,2,4,8,16,32,64,128,256,512,1024,2048,4096,
-         |                       8192,16384,32768,65536]) AS v) p CROSS JOIN nc),
-         |surv AS (
-         |  SELECT n.np AS np, count(*) AS cnt
-         |  FROM nps n JOIN ranked r ON r.pr <= n.np
-         |  JOIN wl e ON e.label = r.label
-         |  JOIN documents d ON d.doc_id = e.vec_id
-         |  WHERE d.lang IS NOT NULL AND d.lang = 'fr' AND d.doc_id <> 3
-         |  GROUP BY n.np),
-         |chosen AS (
-         |  SELECT COALESCE((SELECT min(np) FROM surv WHERE cnt >= 10),
-         |                  (SELECT max(np) FROM nps)) AS np)
-         |SELECT e.vec_id, ${cosSql("e.embedding", "q.embedding")} AS score
-         |FROM wl e JOIN ranked r ON e.label = r.label CROSS JOIN chosen ch
-         |JOIN documents d ON d.doc_id = e.vec_id CROSS JOIN q
-         |WHERE r.pr <= ch.np AND d.lang IS NOT NULL AND d.lang = 'fr' AND d.doc_id <> 3
-         |ORDER BY score DESC, e.vec_id ASC LIMIT 10""".stripMargin
-  )
+        |) t(cls, strategy, n_hit_floor)""".stripMargin
+  ) ++ Width.oraclesOf(twins)
 }

@@ -9,9 +9,7 @@ import graft.sources.Multimodal
 /** §2.B11 + C6 — multimodal ingest plumbing and gap-based sessionization. */
 object PipelineQueries {
 
-  // the multimodal persisted index builds once per (JVM, sfDir); keyed by
-  // the FULL dir (ADVICE r5: a basename-keyed path under a full-dir memo
-  // lets two dirs sharing a basename alternate into one location)
+  // the multimodal persisted index builds once per (JVM, sfDir)
   private val mmIndexFor = scala.collection.mutable.Map.empty[String, String]
   private val MmQueryId = 5L
 
@@ -20,11 +18,7 @@ object PipelineQueries {
     val media = Multimodal.asMedia(s,
       docsDf(Tables(s, dir, "documents").filter(col("text").isNotNull)))
     val model = Multimodal.EmbedModels.forSession(s) // SignalFeatureModel here
-    // storage quantization to floor(x·10⁴ + 0.5) — the engine's
-    // integer-exact convention (KMeans.fitInt precedent): both engines
-    // agree on the quantized components bit-for-bit, so every distance
-    // downstream is exact and the DuckDB oracle can replay the whole
-    // serving path
+    // storage quantization to floor(x·10⁴ + 0.5)
     Multimodal.embedWith(s, media, model).toDF()
       .select(col("media_id").cast("long").as("vec_id"),
         expr("transform(embedding, x -> CAST(CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT) / 10000.0 AS FLOAT))")
@@ -40,21 +34,15 @@ object PipelineQueries {
     })
   }
 
-  // ---- learned-checkpoint NN arm (B11f) --------------------------------
-  // Training sample: the first CkptTrainCap doc_ids (a FIXED bounded
-  // sample — at 100 TB you train the readout on a sample and serve
-  // everywhere; the sample size never scales with the corpus), in
-  // ascending doc_id order because the perceptron update sequence is
-  // order-sensitive and the oracle replays the identical sequence.
+  // ---- learned-checkpoint NN arm (B11f): the readout trains on the first CkptTrainCap
+  // doc_ids, a fixed bounded sample in ascending doc_id order
   private val nnCkptFor = scala.collection.mutable.Map.empty[String, String]
   private val CkptTrainCap = 256L
   private val CkptEpochs = 2
 
   private def ckptTrainSamples(s: SparkSession, dir: String): Seq[(Long, Array[Long], String)] = {
     import s.implicits._
-    // featurization runs DISTRIBUTED (the same per-partition shape the
-    // embed path uses); only the ≤CkptTrainCap (id, g, label) rows — model
-    // state, 16 longs each — come back to the trainer
+    // featurization runs DISTRIBUTED (the same per-partition shape the embed path uses)
     Tables(s, dir, "documents")
       .filter(col("text").isNotNull && col("lang").isNotNull &&
         col("doc_id") < CkptTrainCap)
@@ -77,22 +65,10 @@ object PipelineQueries {
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // The reference's own demo composition (acorn.py __main__: load query
-    // image → ResNet embed → filtered search against the one persisted
-    // index; vector_embeddings.py builds the corpus), r5 verdict #5:
-    // binary media column → EmbedModels.forSession (the SignalFeatureModel
-    // arm in this runtime-less container — real histogram+DCT features
-    // over content) → persisted filter-agnostic HNSW → ACORN filtered walk
-    // under a MIME predicate, end-to-end as ONE driver entry. The
-    // saturating sentinel keeps the brute-force oracle replayable; the
-    // featurization is content-deterministic so DuckDB recomputes the
-    // embeddings themselves (histogram bins + DCT + L2 norm + the same
-    // float truncation points), not just the search.
+    // The reference's own demo composition
     "multimodal_search" -> ((s, dir) => {
       val path = ensureMmIndex(s, dir)
-      // embed ONLY the query doc (a filter above mapPartitions cannot
-      // prune through it — filtering the scan side embeds one blob, not
-      // the corpus; per-item-pure model so the vector is identical)
+      // embed ONLY the query doc
       val qv = mediaEmbeddings(s, dir, _.filter(col("doc_id") === MmQueryId))
         .select("embedding").collect().head.getSeq[Float](0).toArray
       val passing = Multimodal.asMedia(s,
@@ -102,19 +78,7 @@ object PipelineQueries {
       graft.operators.Hnsw.searchFilteredPersisted(s, path, passing,
         numParts = 8, qv, 10, metaSearch = 0)
     }),
-    // B11e: a GENUINE neural forward pass, oracle-gated (r11 verdict
-    // "what's missing" #1 — "no neural network runs anywhere", closed in
-    // its offline-feasible form): the fixed-weight integer MLP
-    // (Multimodal.IntMlpEmbedModel — md5-seeded weights, ReLU,
-    // floor-div-64 activation requantize, the arithmetic every
-    // int8-quantized deployment runs) embeds the binary payloads through
-    // the SAME pluggable EmbedModel slot the reference's ResNet-50 fills
-    // (vector_embeddings.py:14–33), then an integer squared-L2 filtered
-    // top-10 serves the query doc's vector. The oracle replays the
-    // forward pass ITSELF — weights from md5, the matmuls, the ReLU, the
-    // requantize — not just the search; every value is integer so the
-    // hash gate is exact. Query from the full table (the ACORN
-    // convention: the filter qualifies candidates, never who may ask).
+    // B11e: a GENUINE neural forward pass, oracle-gated
     "multimodal_search_nn" -> ((s, dir) => {
       val docsNn = Tables(s, dir, "documents").filter(col("text").isNotNull)
       val model = new Multimodal.IntMlpEmbedModel
@@ -122,8 +86,7 @@ object PipelineQueries {
         Multimodal.embedWith(s, Multimodal.asMedia(s, df), model).toDF()
           .select(col("media_id").as("vec_id"),
             expr("CAST(embedding AS ARRAY<BIGINT>)").as("y"))
-      // embed ONLY the query doc (a filter cannot prune through
-      // mapPartitions; per-item-pure model ⇒ identical vector)
+      // embed ONLY the query doc
       val qv = embed(docsNn.filter(col("doc_id") === MmQueryId))
         .select(col("y").as("qy"))
       val corpus = embed(
@@ -133,23 +96,7 @@ object PipelineQueries {
         .orderBy(col("dist").asc, col("vec_id").asc).limit(10)
     }),
 
-    // B11f: the LEARNED-weights NN arm, weights-as-data (r12 verdict next
-    // #2, closing "what's missing" #1 in full): a one-vs-rest integer
-    // perceptron readout — a real optimizer run: `if y·(w·g+b) ≤ 0 then
-    // w += y·g` over 2 deterministic epochs of a bounded doc_id-ordered
-    // sample — is trained over the fixed md5-seeded hidden layer (the
-    // extreme-learning-machine shape: random features, learned readout),
-    // CHECKPOINTED as a parquet weight table, then LOADED at serve time
-    // (restore validates the layout, the Pq.restoreCodebook convention)
-    // — the deployment shape where the reference's ResNet-50 weights ship
-    // as a file the serving process reads (vector_embeddings.py:14–33).
-    // The embedding is the learned class logits; the filtered top-10
-    // integer sq-L2 serves the query doc. The oracle replays ALL of it —
-    // featurize, hidden layer, the perceptron TRAINING FOLD itself
-    // (list_reduce over the identical sample sequence), the checkpoint
-    // round-trip (weights recomputed ≡ weights stored ≡ weights served,
-    // spec-pinned), forward pass, and search — every value integer, so
-    // the hash gate is exact.
+    // B11f: the LEARNED-weights NN arm, weights-as-data
     "multimodal_search_ckpt" -> ((s, dir) => {
       val path = ensureNnCkpt(s, dir)
       val (_, w) = Multimodal.restoreCheckpoint(s, path)
@@ -169,17 +116,14 @@ object PipelineQueries {
         .orderBy(col("dist").asc, col("vec_id").asc).limit(10)
     }),
 
-    // B11: binary media column → sha256 identity + stub decode via typed
-    // mapPartitions (schema/partitioning/batching real; decode stubbed)
+    // B11: binary media column → sha256 identity + stub decode via typed mapPartitions
     "multimodal_ingest" -> ((s, dir) => {
       val media = Multimodal.asMedia(s, Tables(s, dir, "documents").filter(col("text").isNotNull))
       Multimodal.decode(s, media).toDF()
         .select("media_id", "content_sha", "n_bytes", "width", "height", "mime")
     }),
 
-    // B11b: stub feature extraction — content-deterministic pseudo-vectors
-    // through the real mapPartitions/Encoder path; output as integer
-    // weights per (media, dim) so the oracle compare is exact
+    // B11b: stub feature extraction
     "multimodal_embed" -> ((s, dir) => {
       val media = Multimodal.asMedia(s, Tables(s, dir, "documents"))
       val emb = Multimodal.embedStub(s, Multimodal.decode(s, media))
@@ -189,15 +133,12 @@ object PipelineQueries {
           floor(col("v") * 1000 + lit(0.5)).cast("long").as("w"))
     }),
 
-    // C6: sessionize events per user on 30-minute inactivity gaps —
-    // lag + cumulative sum over a (user_id, ts) window; one shuffle keyed
-    // by user_id (the natural partitioning for clickstream state)
+    // C6: sessionize events per user on 30-minute inactivity gaps
     "events_sessionize" -> ((s, dir) => {
       val byUser = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
       Tables(s, dir, "events")
         .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-        // gap computed at microsecond precision (unix_timestamp would floor
-        // to seconds and merge gaps up to 1s past the boundary)
+        // gap computed at microsecond precision
         .withColumn("new_sess",
           when(col("prev_ts").isNull ||
             unix_micros(col("ts")) - unix_micros(col("prev_ts")) > 1800000000L, 1L).otherwise(0L))
@@ -205,8 +146,7 @@ object PipelineQueries {
           Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .groupBy("user_id", "sess_idx")
-        // session bounds as integer epoch seconds, not formatted strings —
-        // date formatting is engine/version sensitive (SURVEY §6)
+        // session bounds as integer epoch seconds, not formatted strings
         .agg(count(lit(1)).as("n_events"),
           expr("unix_micros(min(ts)) div 1000000").as("sess_start"),
           expr("unix_micros(max(ts)) div 1000000").as("sess_end"))
@@ -214,18 +154,7 @@ object PipelineQueries {
   )
 
   val oracle: Map[String, String] = Map(
-    // replays the WHOLE serving path: SignalFeatureModel's histogram+DCT
-    // featurization over the utf8 bytes (with the engine's exact float
-    // truncation points), L2 normalization, the floor(x·10⁴+0.5) storage
-    // quantization, then the brute-force filtered top-10 the saturating
-    // ACORN walk must equal. Byte access = hex(blob) pairs (DuckDB's
-    // range() can't lateral-correlate; unnest(range(n)) in the SELECT
-    // list can). Float reductions (DCT tap sums, norms, squared dists)
-    // fold ORDERED lists — list_aggregate(list(x ORDER BY j), 'sum') —
-    // not parallel SUM() (ADVICE r6: SUM's accumulation order is not
-    // guaranteed, so a knife-edge value at the floor(x·10⁴+0.5) boundary
-    // could flake run-to-run; the engine sums sequentially in index
-    // order, which the ordered-list fold mirrors).
+    // replays the WHOLE serving path
     "multimodal_search" ->
       """WITH base AS (
         |  SELECT doc_id, lang, octet_length(CAST(text AS BLOB)) AS n,
@@ -343,15 +272,7 @@ object PipelineQueries {
         |WHERE 'application/x-' || b.lang = 'application/x-en'
         |ORDER BY dist ASC, vec_id ASC LIMIT 10""".stripMargin,
 
-    // B11f: replays featurize → fixed hidden layer → the perceptron
-    // TRAINING FOLD (list_reduce left-fold over the doc_id-ordered sample
-    // sequence, 2 epochs = smps || smps; the struct_pack seed/element
-    // wrapper unifies the accumulator and element types for the seeded
-    // fold) → forward pass → filtered search. The margin test inside the
-    // fold reads the PRE-update state for every position (list_transform
-    // over acc.st), exactly the engine's compute-margin-then-update order.
-    // CTEs referenced repeatedly are MATERIALIZED (the dedup_lsh_sweep
-    // lesson: DuckDB inlines single-reference CTEs and re-folds).
+    // B11f: replays featurize → fixed hidden layer → the perceptron TRAINING FOLD
     "multimodal_search_ckpt" ->
       """WITH base AS MATERIALIZED (
         |  SELECT doc_id, lang, octet_length(CAST(text AS BLOB)) AS n,

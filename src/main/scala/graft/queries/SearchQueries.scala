@@ -6,12 +6,8 @@ import graft.Tables
 import graft.functions.scaled
 import graft.operators.{Knn, MetaPredicate}
 
-/** §2.A — the reference's hybrid-vector-search surface.
-  * Data mapping (SURVEY.md §3): embeddings.vec_id joins documents.doc_id;
-  * documents(lang, source, n_chars) stand in for the ABO metadata attrs.
-  * Reference anchors: metadata survey /root/reference/survey_metadata.py:27;
-  * predicate semantics /root/reference/pre-filter.py:102 `metadata_matches`;
-  * query classes /root/reference/acorn.py:296. */
+/** §2.A — the reference's hybrid-vector-search surface (metadata predicates, exact and
+  * filtered kNN). */
 object SearchQueries {
 
   private def emb(s: SparkSession, dir: String): DataFrame = Tables(s, dir, "embeddings")
@@ -65,11 +61,6 @@ object SearchQueries {
           "doc_id" -> (">", 10), "doc_id" -> ("leq", 400)))
         .select("doc_id", "n_chars")),
 
-    // A6: brute-force L2 top-k (reference pre-filter.py ann_naive, unfiltered)
-    "knn_exact_l2" -> ((s, dir) =>
-      Knn.topK(corpusExcl(s, dir, 0), queryVec(s, dir, 0), 10, Knn.L2)
-        .select("vec_id", "score")),
-
     // A7: brute-force cosine top-k
     "knn_exact_cosine" -> ((s, dir) =>
       Knn.topK(corpusExcl(s, dir, 0), queryVec(s, dir, 0), 10, Knn.Cosine)
@@ -88,12 +79,7 @@ object SearchQueries {
         queryVec(s, dir, 1), 10, Knn.Cosine)
         .select("vec_id", "score")),
 
-    // A8b: the reference's user-facing result shape — each hit carries its
-    // metadata dict (the reference prints {color, brand, …} per result;
-    // here the analogue attrs lang/source/n_chars). The metadata join-back
-    // runs AFTER the top-k (k rows join the docs table, broadcast-side
-    // k-row probe), never before — enriching the full corpus and then
-    // keeping k would drag every column through the scan and heap.
+    // A8b: the reference's user-facing result shape
     "knn_with_metadata" -> ((s, dir) =>
       Knn.prefilterKnn(
         corpusExcl(s, dir, 1), docs(s, dir),
@@ -125,15 +111,7 @@ object SearchQueries {
       Knn.batchKnn(emb(s, dir).select("vec_id", "embedding"), queries, 3, Knn.Cosine)
     }),
 
-    // B30: hard-negative mining for contrastive training — for each anchor,
-    // the top-k most-similar vectors whose metadata CLASS differs (here:
-    // language ≠ anchor's language): near the anchor in embedding space,
-    // wrong by label — exactly the negatives a contrastive/embedding
-    // trainer wants. The per-anchor predicate depends on the anchor row, so
-    // it lives INSIDE the broadcast join (a pre-filter can't express it);
-    // shape is knn_batch's: anchors broadcast, per-anchor k-heaps partial-
-    // aggregate map-side (TopKHits), so the shuffle carries |anchors|·k
-    // rows per partition — never the scored corpus.
+    // B30: hard-negative mining for contrastive training
     "hard_negatives" -> ((s, dir) => {
       val e = emb(s, dir).select("vec_id", "embedding")
         .join(docs(s, dir).select(col("doc_id"), col("lang")),
@@ -173,11 +151,6 @@ object SearchQueries {
       """SELECT doc_id, n_chars FROM documents
         |WHERE n_chars IS NOT NULL AND n_chars >= 150 AND n_chars < 300
         |  AND doc_id IS NOT NULL AND doc_id > 10 AND doc_id <= 400""".stripMargin,
-
-    "knn_exact_l2" ->
-      s"""SELECT e.vec_id, ${l2Sql("e.embedding", "q.embedding")} AS score
-         |FROM embeddings e CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-         |WHERE e.vec_id <> 0 ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
 
     "knn_exact_cosine" ->
       s"""SELECT e.vec_id, ${cosSql("e.embedding", "q.embedding")} AS score

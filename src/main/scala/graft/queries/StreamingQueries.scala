@@ -2,41 +2,18 @@ package graft.queries
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
 import graft.operators.{Dedup, Hll, Hnsw, Ivf, Pq}
 import graft.streaming.{CurationStream, DedupStream, EnrichStream, EventsStream, JoinStream, SketchStream}
 
-/** §2.C7/C8/C17/C25/C31/C35 — the streaming components run AS streams under the
-  * driver's batch oracle. Until now every `graft.streaming` pipeline was
-  * spec-only (MemoryStream parity tests); these entries execute each one as
-  * a real Structured Streaming query (file source → `Trigger.AvailableNow`
-  * → memory sink) inside the `queries` contract and return the final sink
-  * table, so the SAME DuckDB hash gate that checks batch operators checks
-  * streaming execution.
-  *
-  * Determinism contracts (what makes a streaming run hash-comparable):
-  *  - complete-mode aggregations (window counts, enriched counts, HLL max)
-  *    are order/batching-insensitive — the final state equals the batch
-  *    aggregate by associativity (integer sums, counts, max);
-  *  - `dropDuplicatesWithinWatermark` emits exactly one row per key when
-  *    the watermark delay exceeds the data's time span (no state eviction
-  *    mid-run), and the emitted columns are functions of the key;
-  *  - `flatMapGroupsWithState` sessionization runs as ONE micro-batch
-  *    (single staged file + maxFilesPerTrigger, no-data batches off), so
-  *    its output is exactly "every session but each user's last" — the
-  *    open-session tail the batch oracle can subtract.
-  *
-  * At scale the stream replaces the staged temp dir with the real ingest
-  * bucket; nothing else changes — the plans are the shared batch/stream
-  * transforms from `graft.streaming`.
-  */
+/** §2.C7/C8/C17/C25/C31/C35 — the streaming surface: each entry runs a Structured
+  * Streaming query to completion and returns its sink as a batch frame. */
 object StreamingQueries {
 
-  /** File streams need a directory; the testdata tables are single parquet
-    * files. Stage each (dir, table) into a temp dir once per JVM. */
+  /** File streams need a directory. */
   private val staged = new ConcurrentHashMap[String, String]()
   private def stagedDir(dir: String, name: String): String =
     staged.computeIfAbsent(s"$dir/$name", _ => {
@@ -45,65 +22,35 @@ object StreamingQueries {
       d
     })
 
-  /** Streaming read of a testdata table with the batch loader's schema and
-    * TIMESTAMP(NANOS) conversion (lock-step with `Tables`). A single staged
-    * file + an effectively-unbounded maxFilesPerTrigger pins ONE micro-batch
-    * — the stateful entries' determinism contract. */
-  /** The static serve-side state the C66c/C66d IVF×PQ serves share: the
-    * seeded codebook rows, the label-carrying code table, and the literal
-    * probe structs that replay Ivf.probe's (scaled-cosine desc, label
-    * asc) contract per arriving row (over a query column named `qe`).
-    * The probe rides as a LITERAL array_sort projection — an empty
-    * centroid table would plan an untyped empty array and fail obscurely
-    * at bind time, so it refuses loudly instead. */
-  // ceiling on the probe-as-projection coarse quantizer (ADVICE r13):
-  // the per-row probe embeds one literal struct per centroid, so this
-  // bounds plan/codegen size the way Pq.WideBatchCap bounds broadcast size
+  // ceiling on the probe-as-projection coarse quantizer
   private[queries] val ProbeProjectionCap = 1024
 
-  private def ivfpqServeStatics(s: SparkSession, dir: String)
-      : (Array[(Int, Long, Array[Double])], DataFrame,
-         Seq[org.apache.spark.sql.Column]) =
-    ivfpqServeStaticsOf(Tables(s, dir, "embeddings"), numSub = 8, subDim = 8)
-
-  /** The C66c statics over ANY (vec_id, embedding, label) frame — the
-    * d=64 serves pass the base table, the C66f width gate the derived-
-    * wide frame (probe structs stay one cosine KERNEL call per centroid,
-    * so width changes literal size, not plan shape). */
-  private def ivfpqServeStaticsOf(emb: org.apache.spark.sql.DataFrame,
-                                  numSub: Int, subDim: Int)
-      : (Array[(Int, Long, Array[Double])], DataFrame,
-         Seq[org.apache.spark.sql.Column]) = {
-    val cbRows = Pq.seededCodebook(emb, numSub = numSub, subDim = subDim,
+  /** The static side of the PQ/IVF×PQ serving streams at width `w`: the seeded codebook,
+    * the encoded code table (with its `label` when `probed`) and, when `probed`, one
+    * literal cosine struct per centroid for the per-row probe projection. The wide code
+    * table materializes before the stream starts (the in-stream d=2048 encode measured
+    * ~1.4 s of per-task interpreter time); the d=64 encode is cheaper in-stream. */
+  private def serveStatics(w: Width, s: SparkSession, dir: String, probed: Boolean)
+      : (Array[(Int, Long, Array[Double])], DataFrame, Seq[Column]) = {
+    val emb = if (probed) w.labeled(s, dir) else w.frame(s, dir)
+    val cbRows = Pq.seededCodebook(emb, numSub = w.numSub, subDim = w.subDim,
       numCodes = 64).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    // materialize the WIDE static code table BEFORE the stream starts
-    // (r17 optimization): the broadcast side is otherwise re-evaluated
-    // inside the micro-batch, where the d=2048 encode measured ~1.4 s of
-    // per-task interpreter time — as a batch materialize it runs the
-    // spread parallel encode once, and the stream broadcasts stored
-    // rows. The d=64 encode is cheap enough in-stream that the extra
-    // materialize job costs more than it saves (measured), so it stays
-    // lazy below the width threshold.
     val codes0 = Pq.encodeFast(
       emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v"),
-      cbRows, numSub = numSub, subDim = subDim)
-      .join(emb.selectExpr("vec_id", "CAST(label AS BIGINT) AS label"), "vec_id")
-    val codes = if (numSub * subDim >= 1024) Dedup.materialize(codes0) else codes0
+      cbRows, numSub = w.numSub, subDim = w.subDim)
+    val codes1 =
+      if (probed) codes0.join(emb.selectExpr("vec_id", "CAST(label AS BIGINT) AS label"), "vec_id")
+      else codes0
+    val codes = if (w.wide) Dedup.materialize(codes1) else codes1
+    if (!probed) return (cbRows, codes, Nil)
     val cents = Ivf.centroids(emb).collect()
       .map(r => (r.getAs[Number](0).longValue, r.getSeq[Float](1)))
       .sortBy(_._1)
     require(cents.nonEmpty,
       "streaming ivfpq serve: empty centroid table — the per-row probe " +
         "projection needs at least one cluster; ingest the corpus first")
-    // the probe rides as ONE literal cosine struct per centroid inside the
-    // per-row projection, so plan/codegen size grows O(C) with the label
-    // count (ADVICE r13) — the probe-as-projection pattern's scaling
-    // assumption is a BOUNDED coarse quantizer (model state, the
-    // WideBatchCap convention). Past the cap the projection would silently
-    // fall back to interpreted evaluation or fail at codegen; refuse
-    // loudly instead — a corpus with more clusters should serve through
-    // the batch IVF×PQ path, whose probes are a broadcast relation.
+    // the probe rides as ONE literal cosine struct per centroid inside the per-row projection
     require(cents.length <= ProbeProjectionCap,
       s"streaming ivfpq serve: ${cents.length} centroids exceed the " +
         s"probe-as-projection cap $ProbeProjectionCap — each cluster adds " +
@@ -120,6 +67,55 @@ object StreamingQueries {
     (cbRows, codes, probeStructs)
   }
 
+  /** The serve streams' query file (the first 8 corpus rows) at width `w` as (q_id, qe);
+    * `external` maps each component through `derive` (one float round) into non-indexed
+    * vectors with ids vec_id + 1000. */
+  private def serveQueries(w: Width, s: SparkSession, dir: String, external: Boolean,
+                           derive: String): DataFrame = {
+    val rows = readStreamTable(s, dir, "embeddings").filter(col("vec_id") < 8)
+    if (!external) rows.select(col("vec_id").as("q_id"), w.widen(col("embedding")).as("qe"))
+    else rows.select((col("vec_id") + 1000).as("q_id"), w.widen(col("embedding")).as("we"))
+      .selectExpr("q_id",
+        s"CAST(transform(CAST(we AS ARRAY<DOUBLE>), x -> CAST($derive AS FLOAT)) AS ARRAY<FLOAT>) AS qe")
+  }
+
+  /** C66/C66b–h: PQ (and, when `probed`, IVF×PQ) query serving as a stream. Arriving
+    * queries derive their whole ADC table in the micro-batch projection, fan out over the
+    * broadcast code table, and one complete-mode k-heap per q_id keeps O(|Q|·k) state.
+    * Stage-1 (ADC-ranked) only: the exact rerank would be a second streaming aggregation.
+    * The queries are keyed by q_id before the fan-out so the heap's exchange sits below
+    * the scoring projection instead of being added after it. */
+  private def pqServeStream(w: Width, s: SparkSession, dir: String, name: String,
+                            sink: String, external: Boolean, probed: Boolean): DataFrame = {
+    requireStreamQueriesPresent(s, dir, name)
+    val (cbRows, codes, probeStructs) = serveStatics(w, s, dir, probed)
+    val qs0 = serveQueries(w, s, dir, external, "x * 1.5D")
+      .withColumn("qv", col("qe").cast("array<double>"))
+    val qStream = (if (probed) qs0.withColumn("parr", array(probeStructs: _*))
+        .withColumn("probes", expr("transform(slice(array_sort(parr), 1, 2), x -> x.label)"))
+        else qs0)
+      .withColumn("tds", Pq.adcTableCol(cbRows, w.numSub, w.subDim))
+      .drop("parr", "qe", "qv")
+      .withColumn("one", lit(1))
+      .repartition(col("q_id"))
+    val keep = Seq(
+      Some(col("vec_id") =!= col("q_id")).filter(_ => !external),
+      Some(array_contains(col("probes"), col("label"))).filter(_ => probed)).flatten
+    val joined = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
+    val scored = keep.reduceOption(_ && _).fold(joined)(joined.filter)
+      .drop("one")
+      .withColumn("adist", expr(Pq.wideAdistSql(w.numSub)).cast("long"))
+    runToTable(s,
+      scored.groupBy("q_id")
+        .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), 10,
+          asc = true).as("hits")),
+      sink, "complete")
+      .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
+      .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
+        col("hit.id").as("vec_id"), col("hit.score").as("adist"))
+  }
+
+  /** Streaming read of a testdata table with the batch loader's schema and TIMESTAMP(NANOS). */
   private def readStreamTable(s: SparkSession, dir: String, name: String): DataFrame = {
     val src = stagedDir(dir, name)
     val schema = s.read.parquet(src).schema
@@ -128,29 +124,6 @@ object StreamingQueries {
       schema)
   }
 
-  /** Run a streaming frame to completion (AvailableNow) and return the
-    * result as a batch frame.
-    *
-    * APPEND-mode entries go through a FILE (parquet) sink + read-back — the
-    * production path, keeping the driver out of the data flow (an appended
-    * stream's volume is unbounded; a memory sink would materialize it all
-    * on the driver). COMPLETE-mode aggregations stay on the memory sink:
-    * Spark's file sink cannot express complete mode, and a complete-mode
-    * result is by construction a bounded aggregate state, not the stream.
-    * Sink + checkpoint dirs are fixed per entry and wiped before each run
-    * (a stale checkpoint would mark every source file already-processed and
-    * emit nothing; a fresh temp dir per run would leak a copy per pass).
-    *
-    * The stateful shuffle is sized DOWN for the run: a stateful operator
-    * materializes one state store per shuffle partition per operator, and
-    * at the gate corpus sizes 32 partitions mean 32× state-store
-    * open/commit/maintenance per micro-batch for a few thousand rows —
-    * pure overhead. 8 partitions is the right size for this state volume;
-    * at 100 TB the same knob goes UP with the key cardinality (state
-    * partitioning is fixed at the first checkpoint, so production picks it
-    * per stream, not per cluster default). Batch entries are untouched —
-    * the conf is set only for the stream's lifetime (execution happens
-    * inside this method, unlike lazy batch frames). */
   private val StreamShufflePartitions =
     sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
   /** Stream-STREAM joins maintain FOUR state stores per partition (each
@@ -162,23 +135,14 @@ object StreamingQueries {
     * the knob goes UP with the join-key cardinality. */
   private val StreamJoinShufflePartitions =
     sys.env.getOrElse("SPARK_GRAFT_STREAM_JOIN_PARTS", "4")
-  // per-process temp root: concurrent harness JVMs must not share
-  // sink/checkpoint dirs (mode-overwrite clobbers files mid-read)
+  // per-process temp root
   private def wiped(sub: String): String = graft.TmpDirs.wiped(sub)
-  /** Large-state option: the default HDFSBacked provider keeps every state
-    * store ON EXECUTOR HEAP — fine for the gate corpora, an OOM at 100 TB
-    * state volumes (billions of dedup keys, wide join windows). Spark's
-    * bundled RocksDB provider spills state to local disk with an off-heap
-    * block cache; select it per session via
-    * `spark.graft.stream.statestore=rocksdb` (or env
-    * `SPARK_GRAFT_STREAM_STATESTORE=rocksdb`). Results are provider-
-    * independent (RocksDbStateSpec proves bit-equality on the stateful
-    * entries); the provider is fixed at the first checkpoint of a stream,
-    * and these entries start from fresh checkpoints each run. */
+  /** Large-state option: the default HDFSBacked provider keeps every state store ON EXECUTOR. */
   val StateStoreConf = "spark.graft.stream.statestore"
   private val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  /** Run a streaming frame to completion (AvailableNow) and return the result as a batch frame. */
   private def runToTable(s: SparkSession, out: DataFrame, name: String,
                          mode: String,
                          parts: String = StreamShufflePartitions): DataFrame = {
@@ -237,28 +201,24 @@ object StreamingQueries {
         "vacuously); regenerate the corpus")
   }
 
-  /** C71's streamed cascade stage-1 (static sign-code index, arriving
-    * queries, complete-mode per-q_id heap) run to its sink table — shared
-    * by the serve entry and the C71b downstream rerank, which differ only
-    * in what consumes the shortlist. Output: (q_id, rank, vec_id, ham). */
-  private def cascadeServeStream(s: SparkSession, dir: String,
-                                 sink: String): DataFrame = {
+  /** C71/C71c/C71d/C71e: cascade stage-1 serving as a stream. The packed sign-code table
+    * is static and broadcast; arriving queries pack inline (`external` derives x − 0.25,
+    * one float round, which flips the sign of every component in [0, 0.25)), Hamming-rank
+    * the table, and one complete-mode k-heap per q_id keeps O(|Q|·stage1) state. */
+  private def cascadeServeStream(w: Width, s: SparkSession, dir: String, sink: String,
+                                 external: Boolean = false): DataFrame = {
     requireStreamQueriesPresent(s, dir, s"cascade serve stream ($sink)")
-    val codes = Tables(s, dir, "embeddings").selectExpr("vec_id",
-      s"${graft.operators.Cascade.bqHalf("embedding", 0)} AS lo",
-      s"${graft.operators.Cascade.bqHalf("embedding", 32)} AS hi")
-    val qStream = readStreamTable(s, dir, "embeddings")
-      .filter(col("vec_id") < 8)
-      .selectExpr("vec_id AS q_id",
-        s"${graft.operators.Cascade.bqHalf("embedding", 0)} AS q_lo",
-        s"${graft.operators.Cascade.bqHalf("embedding", 32)} AS q_hi")
+    val vecs = graft.functions.vectors
+    val codes = w.frame(s, dir)
+      .select(col("vec_id"), vecs.bqPack(col("embedding"), w.groups).as("p"))
+    val qStream = serveQueries(w, s, dir, external, "x - 0.25D")
+      .select(col("q_id"), vecs.bqPack(col("qe"), w.groups).as("qp"))
       .withColumn("one", lit(1))
-    // constant-key stream-static BroadcastHashJoin (the C66 shape)
-    val scored = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
-      .filter(col("vec_id") =!= col("q_id"))
+      .repartition(col("q_id"))
+    val joined = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
+    val scored = (if (external) joined else joined.filter(col("vec_id") =!= col("q_id")))
       .drop("one")
-      .withColumn("ham",
-        expr("CAST(bit_count(lo ^ q_lo) + bit_count(hi ^ q_hi) AS BIGINT)"))
+      .withColumn("ham", vecs.hammingLong(col("p"), col("qp")))
     runToTable(s,
       scored.groupBy("q_id")
         .agg(graft.functions.aggs.topK(col("ham"), col("vec_id"),
@@ -269,16 +229,134 @@ object StreamingQueries {
         col("hit.id").as("vec_id"), col("hit.score").as("ham"))
   }
 
-  /** Documents carry no event time; ingest order IS doc order, so a
-    * doc_id-derived timestamp is the deterministic stand-in — offset by 1s
-    * because a row AT the initial watermark (epoch 0) is dropped as late.
-    * The delay below keeps every key's dedup state live for the whole run. */
+  /** Documents carry no event time. */
   private def docsStream(s: SparkSession, dir: String): DataFrame =
     readStreamTable(s, dir, "documents")
       .withColumn("ts", expr("timestamp_micros(1000000 + doc_id)"))
   private val NoEvictDelay = "3650 days"
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The streaming families defined once over their [[Width]]; each emits a d=64 entry
+    * and its `_2048` twin. */
+  private val twins: Seq[Seq[Width.Entry]] = Seq(
+    // C58/C58d: streaming IVF ingest; arrivals assign to the batch-built centroids in a
+    // stateless narrow projection (no watermark, no state store), ≡ the batch assignment
+    Width.twin("streaming_ivf_ingest")(
+      w => (s, dir) => {
+        val cent = Ivf.centroids(w.labeled(s, dir)
+          .filter(col("vec_id") < HybridQueries.IvfAppendSplit))
+        runToTable(s,
+          Ivf.assignToNearest(
+            readStreamTable(s, dir, "embeddings")
+              .filter(col("vec_id") >= HybridQueries.IvfAppendSplit)
+              .select(col("vec_id"), w.widen(col("embedding")).as("embedding")), cent)
+            .select(col("vec_id"), col("label").cast("long").as("label"), col("d")),
+          w.name("sq_ivf_ingest"), "append")
+      },
+      w => HybridQueries.oracle(w.name("knn_ivf_append"))),
+
+    // C58c/C58e: streaming PQ encode with the stored seeded codebook, one stateless
+    // projection; every arriving vector leaves as its code row
+    Width.twin("streaming_pq_ingest")(
+      w => (s, dir) => {
+        val cbRows = Pq.seededCodebook(w.frame(s, dir), numSub = w.numSub, subDim = w.subDim,
+          numCodes = 64).collect()
+          .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
+        runToTable(s,
+          Pq.encodeFast(
+            readStreamTable(s, dir, "embeddings")
+              .filter(col("vec_id") >= HybridQueries.IvfAppendSplit)
+              .select(col("vec_id"), w.widen(col("embedding")).cast("array<double>").as("v")),
+            cbRows, numSub = w.numSub, subDim = w.subDim),
+          w.name("sq_pq_ingest"), "append")
+      },
+      w => {
+        val codeCols = (0 until w.numSub).map(m =>
+          s"  CAST(max(CASE WHEN m = $m THEN code END) AS BIGINT) AS code_$m")
+          .mkString(",\n")
+        s"""WITH ${w.cte}${FusionQueries.pqCodebookDuck(w)},
+           |body AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM ${w.tbl}
+           |         WHERE vec_id >= ${HybridQueries.IvfAppendSplit}),
+           |${FusionQueries.pqEncodeDuck(w)}
+           |SELECT vec_id,
+           |$codeCols
+           |FROM enc GROUP BY vec_id""".stripMargin
+      }),
+
+    // C58b/C58f: the streamed delta plus the persisted base graphs ≡ a full fresh build
+    // (ascending-id append), so at the saturating beam the exact top-k replays it
+    Width.twin("streaming_hnsw_append")(
+      w => (s, dir) => {
+        val basePath = HybridQueries.hnswBase(w, s, dir)
+        val delta = runToTable(s,
+          readStreamTable(s, dir, "embeddings")
+            .filter(col("vec_id") >= HybridQueries.IvfAppendSplit)
+            .select(col("vec_id"), w.widen(col("embedding")).as("embedding")),
+          w.name("sq_hnsw_append"), "append")
+        val qv = HybridQueries.requireQueryPresent(
+            w.frame(s, dir).filter(col("vec_id") === 6), w.name("streaming_hnsw_append"))
+          .select("embedding").collect().head.getSeq[Float](0).toArray
+        Hnsw.searchAppended(s, basePath, delta, numParts = 8, qv, 10, ef = 0)
+      },
+      w => s"""${w.withTbl}SELECT e.vec_id,
+              |  CAST(floor(list_distance(CAST(e.embedding AS DOUBLE[]),
+              |    CAST(q.embedding AS DOUBLE[])) * 10000 + 0.5) AS BIGINT) AS score
+              |FROM ${w.tbl} e CROSS JOIN (SELECT embedding FROM ${w.tbl} WHERE vec_id = 6) q
+              |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin),
+
+    // C66/C66e: PQ serving stream; the oracle is the batch replay cut at the ADC ranking
+    Width.twin("streaming_pq_serve")(
+      w => (s, dir) => pqServeStream(w, s, dir, w.name("streaming_pq_serve"),
+        w.name("sq_pq_serve"), external = false, probed = false),
+      w => FusionQueries.pqBatchOracleSql(w, Some("vec_id < 8"), adcOnly = true)),
+
+    // C66b/C66g: external (non-indexed) queries, no self-exclusion
+    Width.twin("streaming_pq_serve_external")(
+      w => (s, dir) => pqServeStream(w, s, dir, w.name("streaming_pq_serve_external"),
+        w.name("sq_pq_serve_ext"), external = true, probed = false),
+      w => FusionQueries.pqBatchOracleSql(w, None, qsSelect = Some(externalServeQs(w)),
+        excludeSelf = false, adcOnly = true)),
+
+    // C66c/C66f: IVF×PQ serving stream; each arriving query picks its 2 probes as a pure
+    // projection over the literal centroids
+    Width.twin("streaming_ivfpq_serve")(
+      w => (s, dir) => pqServeStream(w, s, dir, w.name("streaming_ivfpq_serve"),
+        w.name("sq_ivfpq_serve"), external = false, probed = true),
+      w => FusionQueries.ivfpqBatchOracleSql(w, Some("vec_id < 8"), adcOnly = true)),
+
+    // C66d/C66h: external queries through the IVF×PQ serving stream
+    Width.twin("streaming_ivfpq_serve_external")(
+      w => (s, dir) => pqServeStream(w, s, dir, w.name("streaming_ivfpq_serve_external"),
+        w.name("sq_ivfpq_serve_ext"), external = true, probed = true),
+      w => FusionQueries.ivfpqBatchOracleSql(w, None, adcOnly = true,
+        qsSelect = Some(externalServeQs(w)), excludeSelf = false)),
+
+    // C71/C71d: cascade stage-1 serving stream; the oracle replays the per-q_id Hamming
+    // ranking with the heap's tie order (ham asc, lower id wins)
+    Width.twin("streaming_cascade_serve")(
+      w => (s, dir) => cascadeServeStream(w, s, dir, w.name("sq_casc_serve"))
+        .select("q_id", "rank", "vec_id", "ham"),
+      w => s"""WITH ${FusionQueries.cascBaseDuck(w)}
+              |SELECT q_id, CAST(rn1 AS BIGINT) AS rank, vec_id, ham FROM r1
+              |WHERE rn1 <= ${FusionQueries.CascStage1}""".stripMargin),
+
+    // C71c/C71e: external queries through the cascade stage-1 stream
+    Width.twin("streaming_cascade_serve_external")(
+      w => (s, dir) => cascadeServeStream(w, s, dir, w.name("sq_casc_serve_ext"),
+        external = true),
+      w => {
+        val qs = s"""SELECT q_id, ${FusionQueries.packDuck(w, "qe")} AS q_p,
+                    |  CAST(qe AS DOUBLE[]) AS q_vec
+                    |  FROM (SELECT vec_id + 1000 AS q_id,
+                    |    list_transform(CAST(embedding AS DOUBLE[]),
+                    |      x -> CAST(x - 0.25 AS FLOAT)) AS qe
+                    |    FROM ${w.tbl} WHERE vec_id < 8)""".stripMargin
+        s"""WITH ${FusionQueries.cascBaseDuck(w, excludeSelf = false, qsSelect = Some(qs))}
+           |SELECT q_id, CAST(rn1 AS BIGINT) AS rank, vec_id, ham FROM r1
+           |WHERE rn1 <= ${FusionQueries.CascStage1}""".stripMargin
+      })
+  )
+
+  val defs: Map[String, (SparkSession, String) => DataFrame] = Map[String, Width.Run](
     // C7: windowed agg AS a stream — complete mode, integer cents sum
     // (order-insensitive merge; see EventsStream.windowedAggExact)
     "streaming_window" -> ((s, dir) =>
@@ -288,8 +366,7 @@ object StreamingQueries {
         .select(expr("unix_micros(window_start) div 60000000").as("hour_min"),
           col("event_type"), col("n"), col("sum_cents"))),
 
-    // C31: stream-static enrichment (stateless broadcast join per batch)
-    // feeding a windowed count — the live form of every dim-join query
+    // C31: stream-static enrichment (stateless broadcast join per batch) feeding a windowed count
     "streaming_enrich" -> ((s, dir) => {
       val dim = Tables(s, dir, "customer")
         .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
@@ -300,16 +377,7 @@ object StreamingQueries {
           col("segment"), col("n"))
     }),
 
-    // C63: benchmark decontamination AS a stream — the live contamination
-    // guard at the ingest edge (B15's batch backstop, the dedup_incremental
-    // lambda contract): the benchmark's distinct shingle-hash set is
-    // BOUNDED model state, sorted once on the driver and shipped as a
-    // codegen reference object; each arriving doc's per-doc-distinct
-    // 3-gram hashes are membership-counted ROW-LOCALLY by the
-    // CountInSortedSet kernel (O(k log n), inside WholeStageCodegen), so
-    // the plan is a stateless narrow append-mode map — no join state, no
-    // aggregation state, at any ingest volume. Same constants and the
-    // SAME oracle as batch B15.
+    // C63: benchmark decontamination AS a stream
     "streaming_decontaminate" -> ((s, dir) => {
       val bench: Array[Long] = graft.operators.Dedup
         .shingledExploded(Tables(s, dir, "documents")
@@ -328,15 +396,7 @@ object StreamingQueries {
       runToTable(s, flagged, "sq_decontam", "append")
     }),
 
-    // C62: trained-BPE token accounting AS a stream — the live "tokens
-    // ingested per source" meter: arriving docs explode to words (narrow),
-    // stream-static-join the batch-trained dictionary (stateless; UNHINTED
-    // since r8 — broadcast while the dictionary's stats fit, degrading to
-    // a key-partitioned shuffle join when they don't, see TokenStream),
-    // and feed a complete-mode per-source aggregate (bounded
-    // dimension ⇒ bounded state). Training stays batch-side (the
-    // Bpe.trainedMerges memo — the stream only joins the (word, n_sym)
-    // map); the oracle replays training end-to-end via the bpeChain CTEs.
+    // C62: trained-BPE token accounting AS a stream
     "streaming_bpe_tokens" -> ((s, dir) => {
       val wl = graft.operators.Bpe.wordSymLens(Tables(s, dir, "documents"), dir)
       runToTable(s,
@@ -345,9 +405,7 @@ object StreamingQueries {
         .select(col("source"), col("n_ws"), col("n_bpe"))
     }),
 
-    // C25: bucket-level HLL sketch AS a stream — bounded state (≤256 rows
-    // per window/type), max-rho merge is associative so complete-mode
-    // state equals the batch sketch
+    // C25: bucket-level HLL sketch AS a stream
     "streaming_sketch" -> ((s, dir) =>
       runToTable(s,
         SketchStream.sketchStream(readStreamTable(s, dir, "events"), "2 hours"),
@@ -355,34 +413,6 @@ object StreamingQueries {
         .select(expr("unix_micros(window_start) div 60000000").as("hour_min"),
           col("event_type"), col("bucket").cast("long").as("bucket"),
           col("rho").cast("long").as("rho"))),
-
-    // C60: per-source embedding centroids AS a stream — VECTOR state
-    // through the state store (streaming_topk carries a k-heap per group,
-    // this a d-long running sum): arriving vectors quantize narrowly,
-    // stream-static join tags the source, complete-mode VecSumLong+count
-    // per source; emission floor-means and explodes to (source, dim,
-    // cmean) rows. State is O(sources·d) forever — the live form of the
-    // A34 drift monitor's centroid side, updating as the crawl lands.
-    // C58's GRAPH sibling: the live-ingest tier of the persisted HNSW
-    // index. The arriving half streams through a stateless narrow
-    // projection into the delta parquet sink (emission independent of
-    // batching — the same strongest-determinism contract as
-    // streaming_ivf_ingest), and the SERVE path then answers from the
-    // persisted base graphs + the streamed delta via the append walk
-    // (arrivals route by replaying the build's hash partitioning;
-    // ascending-id append ⇒ bit-identical to a full fresh build, so the
-    // brute-force oracle replays the answer at any sf).
-    "streaming_hnsw_append" -> ((s, dir) => {
-      val basePath = HybridQueries.ensureHnswBase(s, dir)
-      val delta = runToTable(s,
-        readStreamTable(s, dir, "embeddings")
-          .filter(col("vec_id") >= HybridQueries.IvfAppendSplit)
-          .select("vec_id", "embedding"),
-        "sq_hnsw_append", "append")
-      val qv = Tables(s, dir, "embeddings").filter(col("vec_id") === 6)
-        .select("embedding").collect().head.getSeq[Float](0).toArray
-      Hnsw.searchAppended(s, basePath, delta, numParts = 8, qv, 10, ef = 0)
-    }),
 
     "streaming_drift" -> ((s, dir) => {
       val dim = Tables(s, dir, "documents").select(col("doc_id"), col("source"))
@@ -400,20 +430,14 @@ object StreamingQueries {
         .selectExpr("source", "CAST(dim AS BIGINT) AS dim", "cmean")
     }),
 
-    // C17: streaming exact dedup — dropDuplicatesWithinWatermark keyed by
-    // md5(text); one emission per content hash (delay > data span)
-    // (null text has no content identity — md5 is null, which streaming
-    // state cannot key; excluded on both sides)
+    // C17: streaming exact dedup
     "streaming_dedup" -> ((s, dir) =>
       runToTable(s,
         DedupStream.dedupWithinWatermark(
           docsStream(s, dir).filter(col("text").isNotNull), NoEvictDelay).select("h"),
         "sq_dedup", "append")),
 
-    // C35: the streaming curation pipeline — stateless language/quality
-    // gates (B21's shared fragments) + watermarked content-hash dedup;
-    // emitted columns (h, quality) are functions of the dedup key, so the
-    // output is arrival-order independent
+    // C35: the streaming curation pipeline
     "streaming_curation" -> ((s, dir) =>
       runToTable(s,
         CurationStream.gated(docsStream(s, dir), CurationQueries.MinQuality)
@@ -423,11 +447,7 @@ object StreamingQueries {
           .select("h", "quality"),
         "sq_curation", "append")),
 
-    // C39: stream-stream interval join — two LIVE sides with watermarked,
-    // time-bounded join state (see streaming.JoinStream). Inner-join
-    // emission is batching-independent, so the emitted set hash-matches
-    // the batch self-join; the no-evict delay keeps every pair in-bound
-    // for the bounded run.
+    // C39: stream-stream interval join
     "streaming_join" -> ((s, dir) => {
       val clicks = readStreamTable(s, dir, "events")
         .filter(col("event_type") === "click")
@@ -438,12 +458,7 @@ object StreamingQueries {
         "sq_join", "append", StreamJoinShufflePartitions)
     }),
 
-    // C47: the LEFT OUTER stream-stream join — conversion AND abandonment
-    // from one query: unmatched clicks emit (null purchase) only once the
-    // watermark proves their hour is over. With a 1-minute delay the final
-    // no-data batch advances the watermark to min(max c_ts, max p_ts) − 1
-    // min and flushes exactly the closed unmatched windows — the oracle
-    // reproduces that watermark arithmetic.
+    // C47: the LEFT OUTER stream-stream join
     "streaming_join_outer" -> ((s, dir) => {
       val clicks = readStreamTable(s, dir, "events")
         .filter(col("event_type") === "click")
@@ -452,95 +467,6 @@ object StreamingQueries {
       runToTable(s,
         JoinStream.clickPurchaseOuter(clicks, purchases, "1 minute"),
         "sq_join_outer", "append", StreamJoinShufflePartitions)
-    }),
-
-    // C58: STREAMING vector ingest — A30's FAISS-add() path as a live
-    // stream (the reference ingests while serving; acorn.py:35 builds,
-    // then adds). Centroids come from the batch-built index (vec_id <
-    // split) and compile into the NearestCentroid codegen kernel, so the
-    // stream side is a STATELESS NARROW PROJECTION: no watermark, no
-    // state store, every arriving vector assigns and appends to the file
-    // sink regardless of batching — the strongest determinism contract a
-    // stream can have. At 100 TB this is the live ingest tier writing
-    // into the clustered layout (C16's partition pruning reads it back).
-    "streaming_ivf_ingest" -> ((s, dir) => {
-      val cent = Ivf.centroids(Tables(s, dir, "embeddings")
-        .filter(col("vec_id") < HybridQueries.IvfAppendSplit))
-      runToTable(s,
-        Ivf.assignToNearest(
-          readStreamTable(s, dir, "embeddings")
-            .filter(col("vec_id") >= HybridQueries.IvfAppendSplit)
-            .drop("label"), cent)
-          .select(col("vec_id"), col("label").cast("long").as("label"), col("d")),
-        "sq_ivf_ingest", "append")
-    }),
-
-    // C58d: the streaming IVF ingest at the REFERENCE width — the ingest
-    // side of the width story (the serve family is width-gated; a
-    // production stream also WRITES at the width the encoder emits):
-    // wide centroids from the wide batch base compile into the
-    // NearestCentroid kernel (10×2048 literal state), arriving rows
-    // widen INLINE (WidenVec) and assign in the same stateless narrow
-    // projection — no watermark, no state store. Stream ≡ the A30d
-    // batch assignment (the oracle IS knn_ivf_append_2048's).
-    "streaming_ivf_ingest_2048" -> ((s, dir) => {
-      val wBase = HybridQueries.wideEmbeddings(s, dir)
-        .join(Tables(s, dir, "embeddings").select("vec_id", "label"), "vec_id")
-        .filter(col("vec_id") < HybridQueries.IvfAppendSplit)
-      val cent = Ivf.centroids(wBase)
-      runToTable(s,
-        Ivf.assignToNearest(
-          readStreamTable(s, dir, "embeddings")
-            .filter(col("vec_id") >= HybridQueries.IvfAppendSplit)
-            .select(col("vec_id"),
-              graft.functions.vectors.widen(col("embedding"), 64,
-                HybridQueries.WideDims).as("embedding")), cent)
-          .select(col("vec_id"), col("label").cast("long").as("label"), col("d")),
-        "sq_ivf_ingest_2048", "append")
-    }),
-
-    // C58e: the streaming PQ encode at width — the live tier writing the
-    // 16 B/row wide code table the width serves (C66e/C66f/C66g/C66h)
-    // scan: the wide seeded codebook (16×128) compiles into PqNearestCode,
-    // arriving rows widen INLINE and encode in one stateless narrow
-    // projection — every arriving 8 KB wide vector leaves as 16 bytes.
-    "streaming_pq_ingest_2048" -> ((s, dir) => {
-      val (numSub, subDim) = (16, 128)
-      val cbRows = Pq.seededCodebook(HybridQueries.wideEmbeddings(s, dir),
-        numSub = numSub, subDim = subDim, numCodes = 64).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-      runToTable(s,
-        Pq.encodeFast(
-          readStreamTable(s, dir, "embeddings")
-            .filter(col("vec_id") >= HybridQueries.IvfAppendSplit)
-            .select(col("vec_id"),
-              graft.functions.vectors.widen(col("embedding"), 64,
-                HybridQueries.WideDims).cast("array<double>").as("v")),
-          cbRows, numSub = numSub, subDim = subDim),
-        "sq_pq_ingest_2048", "append")
-    }),
-
-    // C58f: the streaming HNSW append at width — stream-ingested wide
-    // delta + the persisted wide base ≡ a full fresh wide build ≡ exact
-    // at the saturating beam (the ascending-id append identity), so the
-    // wide brute-force oracle replays the answer. Self-hit included
-    // (query 6 is a base row).
-    "streaming_hnsw_append_2048" -> ((s, dir) => {
-      val basePath = HybridQueries.ensureHnswWideBase(s, dir)
-      val delta = runToTable(s,
-        readStreamTable(s, dir, "embeddings")
-          .filter(col("vec_id") >= HybridQueries.IvfAppendSplit)
-          .select(col("vec_id"),
-            graft.functions.vectors.widen(col("embedding"), 64,
-              HybridQueries.WideDims).as("embedding")),
-        "sq_hnsw_append_2048", "append")
-      val qRows = HybridQueries.wideEmbeddings(s, dir)
-        .filter(col("vec_id") === 6).select("embedding").collect()
-      require(qRows.nonEmpty,
-        "streaming_hnsw_append_2048: query id 6 absent from the corpus — " +
-          "the gate would pass vacuously on two empty frames")
-      val qv = qRows.head.getSeq[Float](0).toArray
-      Hnsw.searchAppended(s, basePath, delta, numParts = 8, qv, 10, ef = 0)
     }),
 
     // C69c: the HLL cardinality cube MAINTAINED as a stream — C69's
@@ -560,536 +486,9 @@ object StreamingQueries {
       Hll.estimate(sketch, Seq("source", "lang")).select("source", "lang", "est")
     }),
 
-    // C58c: STREAMING PQ encode — A21f's incremental-add path as a live
-    // stream, completing the ingest symmetry (C58 = IVF assign, C58b =
-    // HNSW append, this = the compressed family): the codebook comes from
-    // the batch-built index (seeded, never retrained — the A21f
-    // convention) and compiles into the PqNearestCode codegen kernel, so
-    // the stream side is a STATELESS NARROW PROJECTION — no watermark, no
-    // state store; every arriving vector becomes its M-byte code row and
-    // appends to the sink regardless of batching. At 100 TB this is the
-    // live tier writing the 8 B/row code table the serving scans read.
-    "streaming_pq_ingest" -> ((s, dir) => {
-      val cbRows = Pq.seededCodebook(Tables(s, dir, "embeddings"),
-        numSub = 8, subDim = 8, numCodes = 64).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-      runToTable(s,
-        Pq.encodeFast(
-          readStreamTable(s, dir, "embeddings")
-            .filter(col("vec_id") >= HybridQueries.IvfAppendSplit)
-            .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v"),
-          cbRows, numSub = 8, subDim = 8),
-        "sq_pq_ingest", "append")
-    }),
-
-    // C66: PQ query SERVING as a stream — the reference's online-serving
-    // loop in Spark's micro-batch model: queries ARRIVE (readStream), the
-    // compressed index is STATIC (one-time encodeFast, broadcast), and
-    // each arriving query is answered by ADC ranking computed inline —
-    // no per-query driver work at all, because the codebook rides as a
-    // typedlit literal inside the projection (Pq.adcDistCol) instead of
-    // a precomputed ADC table. One complete-mode k-heap aggregation per
-    // q_id (the streaming_topk contract: state is O(|Q|·k) forever).
-    // This is ADC-ranked serving (knn_pq's shortlist stage, R=k) — the
-    // exact-rerank stage would be a second streaming aggregation, which
-    // Spark forbids; production reranks the emitted shortlist downstream.
-    "streaming_pq_serve" -> ((s, dir) => {
-      requireStreamQueriesPresent(s, dir, "streaming_pq_serve")
-      val emb = Tables(s, dir, "embeddings")
-      val cbRows = Pq.seededCodebook(emb, numSub = 8, subDim = 8,
-        numCodes = 64).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-      val codes = Pq.encodeFast(
-        emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v"),
-        cbRows, numSub = 8, subDim = 8)
-      val qStream = readStreamTable(s, dir, "embeddings")
-        .filter(col("vec_id") < 8)
-        .selectExpr("vec_id AS q_id", "CAST(embedding AS ARRAY<DOUBLE>) AS qv")
-        .withColumn("one", lit(1))
-      // constant-key stream-static BroadcastHashJoin: every arriving query
-      // row fans out over the broadcast code table inside the task
-      val scored = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
-        .filter(col("vec_id") =!= col("q_id"))
-        .drop("one")
-        .withColumn("adist", Pq.adcDistCol(cbRows, numSub = 8, subDim = 8))
-      runToTable(s,
-        scored.groupBy("q_id")
-          .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), 10,
-            asc = true).as("hits")),
-        "sq_pq_serve", "complete")
-        .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-        .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("hit.id").as("vec_id"), col("hit.score").as("adist"))
-    }),
-
-    // C66e: the PQ serving stream at the REFERENCE width (r14 verdict
-    // next #3 — of the streaming serve family only the cascade had a
-    // d=2048 gate): the static side is the ENCODED wide corpus (16
-    // codes/row via PqNearestCode — 16 B/row broadcast where the raw
-    // frame is 8 KB/row, the 100 TB serving economics); arriving queries
-    // widen INLINE (WidenVec) and derive their WHOLE ADC table in the
-    // micro-batch projection (Pq.adcTableCol — nested HOFs over the
-    // typedlit codebook; adcDistCol's inlined form would put 2048
-    // squared-diff terms in the per-CANDIDATE path at this width), so
-    // the candidate scan pays only 16 array lookups per row
-    // (Pq.wideAdistSql — the batch scan's arithmetic). Same O(|Q|·k)
-    // complete-mode k-heap state as C66; stage-1-only contract (the
-    // exact rerank is a second streaming aggregation — downstream,
-    // the C66 convention).
-    "streaming_pq_serve_2048" -> ((s, dir) => {
-      requireStreamQueriesPresent(s, dir, "streaming_pq_serve_2048")
-      val (numSub, subDim) = (16, 128)
-      val w = HybridQueries.wideEmbeddings(s, dir)
-      val cbRows = Pq.seededCodebook(w, numSub = numSub, subDim = subDim,
-        numCodes = 64).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-      val codes = Dedup.materialize(Pq.encodeFast(
-        w.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v"),
-        cbRows, numSub = numSub, subDim = subDim))
-      val qStream = readStreamTable(s, dir, "embeddings")
-        .filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"),
-          graft.functions.vectors.widen(col("embedding"), 64,
-            HybridQueries.WideDims).cast("array<double>").as("qv"))
-        .withColumn("tds", Pq.adcTableCol(cbRows, numSub, subDim))
-        .drop("qv")
-        .withColumn("one", lit(1))
-        // r18: hash the arriving queries across the stream's shuffle
-        // partitions BEFORE the broadcast fan-out — the whole candidate
-        // scoring otherwise runs inside the single file-scan task while
-        // the heap agg's own exchange sits right after it; keying the
-        // exchange by q_id pre-satisfies the agg's distribution, so this
-        // MOVES the shuffle below the heavy projection rather than adding
-        // one (8 query rows cross the wire, the 16k scored rows no longer
-        // do)
-        .repartition(col("q_id"))
-      val scored = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
-        .filter(col("vec_id") =!= col("q_id"))
-        .drop("one")
-        .withColumn("adist", expr(Pq.wideAdistSql(numSub)).cast("long"))
-      runToTable(s,
-        scored.groupBy("q_id")
-          .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), 10,
-            asc = true).as("hits")),
-        "sq_pq_serve_2048", "complete")
-        .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-        .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("hit.id").as("vec_id"), col("hit.score").as("adist"))
-    }),
-
-    // C66b: EXTERNAL queries served as a stream — the A47 × C66
-    // composition closure: the reference's production loop receives
-    // queries that are NOT indexed rows (query.jpg embedded at serve
-    // time), and a serving stream receives them continuously. Arriving
-    // rows derive a deterministic non-indexed vector inline (one float
-    // round per component — both engines agree bit-for-bit), take ids in
-    // an explicit external id space (vec_id + 1000), and ADC-rank the
-    // static broadcast code table with NO self-exclusion — an external
-    // query has no corpus row to exclude. Same O(|Q|·k) complete-mode
-    // heap state as C66.
-    "streaming_pq_serve_external" -> ((s, dir) => {
-      requireStreamQueriesPresent(s, dir, "streaming_pq_serve_external")
-      val emb = Tables(s, dir, "embeddings")
-      val cbRows = Pq.seededCodebook(emb, numSub = 8, subDim = 8,
-        numCodes = 64).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-      val codes = Pq.encodeFast(
-        emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v"),
-        cbRows, numSub = 8, subDim = 8)
-      val qStream = readStreamTable(s, dir, "embeddings")
-        .filter(col("vec_id") < 8)
-        .selectExpr("vec_id + 1000 AS q_id",
-          "CAST(transform(CAST(embedding AS ARRAY<DOUBLE>), " +
-            "x -> CAST(x * 1.5D AS FLOAT)) AS ARRAY<DOUBLE>) AS qv")
-        .withColumn("one", lit(1))
-      val scored = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
-        .drop("one")
-        .withColumn("adist", Pq.adcDistCol(cbRows, numSub = 8, subDim = 8))
-      runToTable(s,
-        scored.groupBy("q_id")
-          .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), 10,
-            asc = true).as("hits")),
-        "sq_pq_serve_ext", "complete")
-        .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-        .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("hit.id").as("vec_id"), col("hit.score").as("adist"))
-    }),
-
-    // C66g: EXTERNAL queries through the WIDE PQ serving stream (r15
-    // verdict next #3 — the one external × streaming × width cell left
-    // open: a production stream receives NON-indexed queries at the
-    // width the index was built). C66b's external construction composed
-    // with C66e's wide-ADC projection: arriving rows widen INLINE
-    // (WidenVec), derive the deterministic external vector (×1.5, one
-    // float round per component — both engines agree bit-for-bit,
-    // derivation order pinned as widen-then-scale), take ids in the
-    // external id space (vec_id + 1000), derive their WHOLE ADC table in
-    // the micro-batch projection (Pq.adcTableCol), and ADC-rank the
-    // static broadcast 16 B/row code table with NO self-exclusion — an
-    // external query has no corpus row to exclude. Same O(|Q|·k)
-    // complete-mode heap state as C66.
-    "streaming_pq_serve_external_2048" -> ((s, dir) => {
-      requireStreamQueriesPresent(s, dir, "streaming_pq_serve_external_2048")
-      val (numSub, subDim) = (16, 128)
-      val w = HybridQueries.wideEmbeddings(s, dir)
-      val cbRows = Pq.seededCodebook(w, numSub = numSub, subDim = subDim,
-        numCodes = 64).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-      val codes = Dedup.materialize(Pq.encodeFast(
-        w.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v"),
-        cbRows, numSub = numSub, subDim = subDim))
-      val qStream = readStreamTable(s, dir, "embeddings")
-        .filter(col("vec_id") < 8)
-        .select((col("vec_id") + 1000).as("q_id"),
-          graft.functions.vectors.widen(col("embedding"), 64,
-            HybridQueries.WideDims).as("we"))
-        .selectExpr("q_id",
-          "CAST(transform(CAST(we AS ARRAY<DOUBLE>), " +
-            "x -> CAST(x * 1.5D AS FLOAT)) AS ARRAY<DOUBLE>) AS qv")
-        .withColumn("tds", Pq.adcTableCol(cbRows, numSub, subDim))
-        .drop("qv")
-        .withColumn("one", lit(1))
-        // r18: key the arriving queries by q_id across the stream's
-        // shuffle partitions BEFORE the broadcast fan-out (see
-        // streaming_pq_serve_2048) — moves the heap agg's exchange below
-        // the heavy wide scoring projection instead of adding one
-        .repartition(col("q_id"))
-      val scored = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
-        .drop("one")
-        .withColumn("adist", expr(Pq.wideAdistSql(numSub)).cast("long"))
-      runToTable(s,
-        scored.groupBy("q_id")
-          .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), 10,
-            asc = true).as("hits")),
-        "sq_pq_serve_ext_2048", "complete")
-        .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-        .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("hit.id").as("vec_id"), col("hit.score").as("adist"))
-    }),
-
-    // C66c: IVF×PQ SERVING as a stream — C66's serving pattern with the
-    // COARSE QUANTIZER in the serve path: centroids are model state
-    // (C×d, literal), so each ARRIVING query selects its own nProbe=2
-    // clusters as a pure projection — an array_sort over C literal-
-    // centroid structs replaying Ivf.probe's (scaled-cosine desc, label
-    // asc) contract with NO extra streaming aggregation — and only the
-    // probed clusters' members survive the membership filter before the
-    // ADC k-heap. At 100 TB an arriving row fans out over nProbe/C of
-    // the broadcast code table instead of all of it. Same O(|Q|·k)
-    // complete-mode heap state as C66.
-    "streaming_ivfpq_serve" -> ((s, dir) => {
-      requireStreamQueriesPresent(s, dir, "streaming_ivfpq_serve")
-      val (cbRows, codes, probeStructs) = ivfpqServeStatics(s, dir)
-      val qStream = readStreamTable(s, dir, "embeddings")
-        .filter(col("vec_id") < 8)
-        .selectExpr("vec_id AS q_id", "embedding AS qe",
-          "CAST(embedding AS ARRAY<DOUBLE>) AS qv")
-        .withColumn("parr", array(probeStructs: _*))
-        .withColumn("probes",
-          expr("transform(slice(array_sort(parr), 1, 2), x -> x.label)"))
-        .drop("parr", "qe")
-        .withColumn("one", lit(1))
-      val scored = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
-        .filter(col("vec_id") =!= col("q_id") &&
-          array_contains(col("probes"), col("label")))
-        .drop("one")
-        .withColumn("adist", Pq.adcDistCol(cbRows, numSub = 8, subDim = 8))
-      runToTable(s,
-        scored.groupBy("q_id")
-          .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), 10,
-            asc = true).as("hits")),
-        "sq_ivfpq_serve", "complete")
-        .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-        .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("hit.id").as("vec_id"), col("hit.score").as("adist"))
-    }),
-
-    // C66f: the IVF×PQ serving stream at the REFERENCE width — C66e's
-    // wide-ADC projection with the COARSE QUANTIZER in the serve path:
-    // the wide centroids are model state (C×2048 floats, each riding as
-    // ONE literal-argument cosine-kernel struct — the C66c probe-as-
-    // projection pattern; width grows literal size, not plan shape, and
-    // the ProbeProjectionCap refusal still bounds C), so each arriving
-    // query selects its own nProbe=2 clusters as a pure array_sort
-    // projection, derives its ADC table inline (Pq.adcTableCol), and
-    // ADC-ranks ONLY the probed clusters' members of the broadcast
-    // 16 B/row code table. At 100 TB an arriving row fans out over
-    // nProbe/C of the compressed index. Same O(|Q|·k) heap as C66.
-    "streaming_ivfpq_serve_2048" -> ((s, dir) => {
-      requireStreamQueriesPresent(s, dir, "streaming_ivfpq_serve_2048")
-      val (numSub, subDim) = (16, 128)
-      val w = HybridQueries.wideEmbeddings(s, dir)
-        .join(Tables(s, dir, "embeddings").select("vec_id", "label"), "vec_id")
-      val (cbRows, codes, probeStructs) = ivfpqServeStaticsOf(w, numSub, subDim)
-      val qStream = readStreamTable(s, dir, "embeddings")
-        .filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"),
-          graft.functions.vectors.widen(col("embedding"), 64,
-            HybridQueries.WideDims).as("qe"))
-        .withColumn("qv", col("qe").cast("array<double>"))
-        .withColumn("parr", array(probeStructs: _*))
-        .withColumn("probes",
-          expr("transform(slice(array_sort(parr), 1, 2), x -> x.label)"))
-        .withColumn("tds", Pq.adcTableCol(cbRows, numSub, subDim))
-        .drop("parr", "qe", "qv")
-        .withColumn("one", lit(1))
-        // r18: key the arriving queries by q_id across the stream's
-        // shuffle partitions BEFORE the broadcast fan-out (see
-        // streaming_pq_serve_2048) — moves the heap agg's exchange below
-        // the heavy wide scoring projection instead of adding one
-        .repartition(col("q_id"))
-      val scored = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
-        .filter(col("vec_id") =!= col("q_id") &&
-          array_contains(col("probes"), col("label")))
-        .drop("one")
-        .withColumn("adist", expr(Pq.wideAdistSql(numSub)).cast("long"))
-      runToTable(s,
-        scored.groupBy("q_id")
-          .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), 10,
-            asc = true).as("hits")),
-        "sq_ivfpq_serve_2048", "complete")
-        .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-        .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("hit.id").as("vec_id"), col("hit.score").as("adist"))
-    }),
-
-    // C66d: EXTERNAL queries through the streaming IVF×PQ serve — the
-    // C66b × C66c closure: a production stream receives NON-indexed
-    // queries continuously AND the index it probes is coarse-quantized.
-    // Arriving rows derive the external vector inline (the C66b ×1.5
-    // float-round derivation), select their own nProbe=2 clusters as the
-    // same pure array_sort projection over literal centroids, and
-    // ADC-rank only the probed clusters' members with NO self-exclusion
-    // — an external query has no corpus row to exclude.
-    "streaming_ivfpq_serve_external" -> ((s, dir) => {
-      requireStreamQueriesPresent(s, dir, "streaming_ivfpq_serve_external")
-      val (cbRows, codes, probeStructs) = ivfpqServeStatics(s, dir)
-      val qStream = readStreamTable(s, dir, "embeddings")
-        .filter(col("vec_id") < 8)
-        .selectExpr("vec_id + 1000 AS q_id",
-          "CAST(transform(CAST(embedding AS ARRAY<DOUBLE>), " +
-            "x -> CAST(x * 1.5D AS FLOAT)) AS ARRAY<FLOAT>) AS qe")
-        .withColumn("qv", col("qe").cast("array<double>"))
-        .withColumn("parr", array(probeStructs: _*))
-        .withColumn("probes",
-          expr("transform(slice(array_sort(parr), 1, 2), x -> x.label)"))
-        .drop("parr", "qe")
-        .withColumn("one", lit(1))
-      val scored = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
-        .filter(array_contains(col("probes"), col("label")))
-        .drop("one")
-        .withColumn("adist", Pq.adcDistCol(cbRows, numSub = 8, subDim = 8))
-      runToTable(s,
-        scored.groupBy("q_id")
-          .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), 10,
-            asc = true).as("hits")),
-        "sq_ivfpq_serve_ext", "complete")
-        .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-        .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("hit.id").as("vec_id"), col("hit.score").as("adist"))
-    }),
-
-    // C66h: EXTERNAL queries through the WIDE IVF×PQ serving stream —
-    // the C66d × C66f closure (r15 verdict next #3): non-indexed queries
-    // arrive at the width the coarse-quantized index was built. Arriving
-    // rows widen INLINE and derive the external vector (widen-then-scale,
-    // one float round — the C66g derivation), select their own nProbe=2
-    // clusters as the pure array_sort projection over literal wide
-    // centroids (cosine against the DERIVED external vector), derive
-    // their ADC table inline (Pq.adcTableCol), and ADC-rank ONLY the
-    // probed clusters' members of the broadcast 16 B/row code table with
-    // NO self-exclusion. Same O(|Q|·k) heap state as C66.
-    "streaming_ivfpq_serve_external_2048" -> ((s, dir) => {
-      requireStreamQueriesPresent(s, dir, "streaming_ivfpq_serve_external_2048")
-      val (numSub, subDim) = (16, 128)
-      val w = HybridQueries.wideEmbeddings(s, dir)
-        .join(Tables(s, dir, "embeddings").select("vec_id", "label"), "vec_id")
-      val (cbRows, codes, probeStructs) = ivfpqServeStaticsOf(w, numSub, subDim)
-      val qStream = readStreamTable(s, dir, "embeddings")
-        .filter(col("vec_id") < 8)
-        .select((col("vec_id") + 1000).as("q_id"),
-          graft.functions.vectors.widen(col("embedding"), 64,
-            HybridQueries.WideDims).as("we"))
-        .selectExpr("q_id",
-          "CAST(transform(CAST(we AS ARRAY<DOUBLE>), " +
-            "x -> CAST(x * 1.5D AS FLOAT)) AS ARRAY<FLOAT>) AS qe")
-        .withColumn("qv", col("qe").cast("array<double>"))
-        .withColumn("parr", array(probeStructs: _*))
-        .withColumn("probes",
-          expr("transform(slice(array_sort(parr), 1, 2), x -> x.label)"))
-        .withColumn("tds", Pq.adcTableCol(cbRows, numSub, subDim))
-        .drop("parr", "qe", "qv")
-        .withColumn("one", lit(1))
-        // r18: key the arriving queries by q_id across the stream's
-        // shuffle partitions BEFORE the broadcast fan-out (see
-        // streaming_pq_serve_2048) — moves the heap agg's exchange below
-        // the heavy wide scoring projection instead of adding one
-        .repartition(col("q_id"))
-      val scored = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
-        .filter(array_contains(col("probes"), col("label")))
-        .drop("one")
-        .withColumn("adist", expr(Pq.wideAdistSql(numSub)).cast("long"))
-      runToTable(s,
-        scored.groupBy("q_id")
-          .agg(graft.functions.aggs.topK(col("adist"), col("vec_id"), 10,
-            asc = true).as("hits")),
-        "sq_ivfpq_serve_ext_2048", "complete")
-        .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-        .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("hit.id").as("vec_id"), col("hit.score").as("adist"))
-    }),
-
-    // C71: cascade stage-1 SERVING as a stream — C66's serving pattern
-    // (static compressed index, arriving queries) applied to the funnel's
-    // 8-byte Hamming stage: the always-resident sign-code index is STATIC
-    // (one bqHalf projection, broadcast), queries ARRIVE (readStream) and
-    // pack to (q_lo, q_hi) inline, every arriving row Hamming-ranks the
-    // broadcast code table inside the task, and ONE complete-mode k-heap
-    // per q_id emits the stage-1 shortlist — state O(|Q|·stage1) forever.
-    // This is the funnel's cheapest stage served live (bit_count(xor) on
-    // 16 bytes/candidate); the sq8 and exact stages rerank the emitted
-    // shortlist downstream — a second streaming aggregation is forbidden,
-    // the C66 convention.
-    "streaming_cascade_serve" -> ((s, dir) =>
-      cascadeServeStream(s, dir, "sq_casc_serve")
-        .select("q_id", "rank", "vec_id", "ham")),
-
-    // C71d: the cascade serving stream at the REFERENCE width — every
-    // streaming serve so far ran at d=64, but the production stream
-    // serves the index the reference actually builds (2048-d, 64-long
-    // packed sign codes, 256 B/row always-resident). The static side
-    // packs the derived-wide corpus once (BqPackVec); arriving queries
-    // widen AND pack INLINE in the stream projection (WidenVec →
-    // BqPackVec — two codegen kernels, no boxed lambdas in the
-    // per-micro-batch path); each row Hamming-ranks the broadcast code
-    // table (HammingDistLong on 64 longs = 512 B/candidate) into the
-    // same O(|Q|·stage1) complete-mode k-heap as C71.
-    "streaming_cascade_serve_2048" -> ((s, dir) => {
-      requireStreamQueriesPresent(s, dir, "streaming_cascade_serve_2048")
-      val vecs = graft.functions.vectors
-      val groups = HybridQueries.WideDims / 32
-      val codes = HybridQueries.wideEmbeddings(s, dir)
-        .select(col("vec_id"), vecs.bqPack(col("embedding"), groups).as("p"))
-      val qStream = readStreamTable(s, dir, "embeddings")
-        .filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"),
-          vecs.bqPack(
-            vecs.widen(col("embedding"), 64, HybridQueries.WideDims),
-            groups).as("qp"))
-        .withColumn("one", lit(1))
-        // r18: key the arriving queries by q_id across the stream's
-        // shuffle partitions BEFORE the broadcast fan-out (see
-        // streaming_pq_serve_2048) — moves the heap agg's exchange below
-        // the heavy wide scoring projection instead of adding one
-        .repartition(col("q_id"))
-      val scored = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
-        .filter(col("vec_id") =!= col("q_id"))
-        .drop("one")
-        .withColumn("ham", vecs.hammingLong(col("p"), col("qp")))
-      runToTable(s,
-        scored.groupBy("q_id")
-          .agg(graft.functions.aggs.topK(col("ham"), col("vec_id"),
-            FusionQueries.CascStage1, asc = true).as("hits")),
-        "sq_casc_serve_2048", "complete")
-        .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-        .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("hit.id").as("vec_id"), col("hit.score").as("ham"))
-    }),
-
-    // C71c: EXTERNAL queries through the streaming cascade stage-1 (r12
-    // verdict next #8 — C66b closed external×PQ; this completes the
-    // external symmetry for the funnel): arriving NON-indexed vectors
-    // (deterministic derivation x−0.25, one float round — flips the sign
-    // of every component in [0, 0.25), so the packed code genuinely
-    // differs from the base row's) take ids in the external id space,
-    // pack to (q_lo, q_hi) INLINE in the stream projection, and
-    // Hamming-rank the static broadcast sign-code table with NO
-    // self-exclusion — an external query has no corpus row to exclude.
-    // Same O(|Q|·stage1) complete-mode heap state as C71.
-    "streaming_cascade_serve_external" -> ((s, dir) => {
-      requireStreamQueriesPresent(s, dir, "streaming_cascade_serve_external")
-      val codes = Tables(s, dir, "embeddings").selectExpr("vec_id",
-        s"${graft.operators.Cascade.bqHalf("embedding", 0)} AS lo",
-        s"${graft.operators.Cascade.bqHalf("embedding", 32)} AS hi")
-      val qStream = readStreamTable(s, dir, "embeddings")
-        .filter(col("vec_id") < 8)
-        .selectExpr("vec_id + 1000 AS q_id",
-          "CAST(transform(CAST(embedding AS ARRAY<DOUBLE>), " +
-            "x -> CAST(x - 0.25D AS FLOAT)) AS ARRAY<FLOAT>) AS qe")
-        .selectExpr("q_id",
-          s"${graft.operators.Cascade.bqHalf("qe", 0)} AS q_lo",
-          s"${graft.operators.Cascade.bqHalf("qe", 32)} AS q_hi")
-        .withColumn("one", lit(1))
-      val scored = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
-        .drop("one")
-        .withColumn("ham",
-          expr("CAST(bit_count(lo ^ q_lo) + bit_count(hi ^ q_hi) AS BIGINT)"))
-      runToTable(s,
-        scored.groupBy("q_id")
-          .agg(graft.functions.aggs.topK(col("ham"), col("vec_id"),
-            FusionQueries.CascStage1, asc = true).as("hits")),
-        "sq_casc_serve_ext", "complete")
-        .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-        .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("hit.id").as("vec_id"), col("hit.score").as("ham"))
-    }),
-
-    // C71e: EXTERNAL queries through the WIDE cascade stage-1 — the
-    // C71c × C71d closure, completing the external × streaming × width
-    // symmetry across all three serving families (PQ C66g, IVF×PQ C66h,
-    // cascade here): arriving rows widen INLINE, derive the external
-    // vector (x−0.25, one float round — the cascade family's documented
-    // sign-flip derivation, applied after the widen like C66g), pack to
-    // 64 longs (BqPackVec), and Hamming-rank the static broadcast
-    // 512 B/row sign-code table with NO self-exclusion. Same
-    // O(|Q|·stage1) complete-mode heap as C71.
-    "streaming_cascade_serve_external_2048" -> ((s, dir) => {
-      requireStreamQueriesPresent(s, dir, "streaming_cascade_serve_external_2048")
-      val vecs = graft.functions.vectors
-      val groups = HybridQueries.WideDims / 32
-      val codes = HybridQueries.wideEmbeddings(s, dir)
-        .select(col("vec_id"), vecs.bqPack(col("embedding"), groups).as("p"))
-      val qStream = readStreamTable(s, dir, "embeddings")
-        .filter(col("vec_id") < 8)
-        .select((col("vec_id") + 1000).as("q_id"),
-          vecs.widen(col("embedding"), 64, HybridQueries.WideDims).as("we"))
-        .selectExpr("q_id",
-          "CAST(transform(CAST(we AS ARRAY<DOUBLE>), " +
-            "x -> CAST(x - 0.25D AS FLOAT)) AS ARRAY<FLOAT>) AS qe")
-        .select(col("q_id"), vecs.bqPack(col("qe"), groups).as("qp"))
-        .withColumn("one", lit(1))
-        // r18: key the arriving queries by q_id across the stream's
-        // shuffle partitions BEFORE the broadcast fan-out (see
-        // streaming_pq_serve_2048) — moves the heap agg's exchange below
-        // the heavy wide scoring projection instead of adding one
-        .repartition(col("q_id"))
-      val scored = qStream.join(broadcast(codes.withColumn("one", lit(1))), "one")
-        .drop("one")
-        .withColumn("ham", vecs.hammingLong(col("p"), col("qp")))
-      runToTable(s,
-        scored.groupBy("q_id")
-          .agg(graft.functions.aggs.topK(col("ham"), col("vec_id"),
-            FusionQueries.CascStage1, asc = true).as("hits")),
-        "sq_casc_serve_ext_2048", "complete")
-        .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-        .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("hit.id").as("vec_id"), col("hit.score").as("ham"))
-    }),
-
-    // C71b: the DOWNSTREAM RERANK the C66/C71 scaladoc promises (r11
-    // verdict next #8 — "production reranks the emitted shortlist
-    // downstream; a second streaming aggregation is forbidden" was
-    // documentation, this is the code): the C71 stream runs to its sink
-    // table, then ONE BATCH pass reranks that sink through the funnel's
-    // sq8 + exact stages — literally Cascade.rerankShortlist, the same
-    // code path the batch funnel's tail runs, over the streamed stage-1
-    // shortlist. Stream stage-1 ≡ batch stage-1 (complete-mode k-heap
-    // over the whole table) and the tail is shared by construction, so
-    // the end-to-end result equals knn_cascade_batch row for row — the
-    // oracle IS the batch funnel's (spec-pinned too). At 100 TB the sink
-    // table is O(|Q|·stage1) and the rerank pages floats for it alone.
+    // C71b: the DOWNSTREAM RERANK the C66/C71 scaladoc promises
     "streaming_cascade_rerank" -> ((s, dir) => {
-      val short1 = cascadeServeStream(s, dir, "sq_casc_rerank")
+      val short1 = cascadeServeStream(Width.Base, s, dir, "sq_casc_rerank")
         .select("q_id", "vec_id", "ham")
       val e = Tables(s, dir, "embeddings").selectExpr("vec_id", "embedding",
         "CAST(embedding AS ARRAY<DOUBLE>) AS v")
@@ -1101,14 +500,7 @@ object StreamingQueries {
         FusionQueries.CascStage2, k = 10)
     }),
 
-    // C59: continuous top-k maintenance AS a stream — the live leaderboard
-    // (largest transactions per event type, here top-5 by integer cents).
-    // The custom TopKHits TypedImperativeAggregate carries its k-heap
-    // THROUGH the state store: per micro-batch each partition folds new
-    // rows into a partial heap map-side, the complete-mode state holds one
-    // ≤k-entry buffer per group, and emission re-evals the heap — state is
-    // O(groups·k) forever, independent of stream length. The batch mirror
-    // is the same aggregate (StreamingQueriesSpec proves stream ≡ batch).
+    // C59: continuous top-k maintenance AS a stream
     "streaming_topk" -> ((s, dir) =>
       runToTable(s,
         readStreamTable(s, dir, "events")
@@ -1121,15 +513,7 @@ object StreamingQueries {
         .select(col("event_type"), (col("pos") + 1).cast("long").as("rank"),
           col("hit.id").as("event_id"), col("hit.score").as("cents"))),
 
-    // C70: B39's weighted priority sample MAINTAINED as a stream — the
-    // bottom-k rank H(doc) div w(doc) is stateless per row (content-
-    // derived, no RNG state), so the live sample is ONE complete-mode
-    // bottom-k heap: TopKHits folds each micro-batch into a ≤k-entry
-    // buffer, state stays O(k) forever regardless of stream length, and
-    // every emission IS the exact weighted sample of everything ingested
-    // so far (bottom-k sketches merge by union-then-cut — the law
-    // CurationSpec pins for the batch form is what makes the streaming
-    // fold correct). The curation pipeline's sampling stage, live.
+    // C70: B39's weighted priority sample MAINTAINED as a stream
     "streaming_weighted_sample" -> ((s, dir) =>
       runToTable(s,
         readStreamTable(s, dir, "documents")
@@ -1145,10 +529,7 @@ object StreamingQueries {
         .select((col("pos") + 1).cast("long").as("rank"),
           col("hit.id").as("doc_id"), col("hit.score").as("pri"))),
 
-    // C8: stateful sessionization AS a stream (flatMapGroupsWithState,
-    // event-time timeout). Pinned to one micro-batch with no-data batches
-    // off: no timeout fires, so the emitted set is exactly "all sessions
-    // except each user's last" — the open tail state still holds.
+    // C8: stateful sessionization AS a stream (flatMapGroupsWithState, event-time timeout)
     "streaming_sessionize" -> ((s, dir) => {
       val key = "spark.sql.streaming.noDataMicroBatches.enabled"
       val prev = s.conf.getOption(key)
@@ -1163,89 +544,14 @@ object StreamingQueries {
             expr("unix_micros(sess_end) div 1000000").as("sess_end"))
       } finally prev.fold(s.conf.unset(key))(v => s.conf.set(key, v))
     })
-  )
+  ) ++ Width.defsOf(twins)
 
-  // ---- the one shared replay of the streaming PQ/IVF×PQ serves --------
-  // (ADVICE r13: C66/C66b/C66c/C66d duplicated ~35 CTE lines — cb/body/
-  // enc0/dmin/enc/q/adc/sums — differing only in the qs derivation, the
-  // probe prelude, and the self-exclusion predicate; a fix landing in one
-  // copy would silently miss the others. One parameterized composer, the
-  // cascBaseDuckWide convention.)
-
-  /** Indexed query set: the first 8 corpus vectors ask (self-excluded). */
-  private val IndexedServeQs =
-    """SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
-      |       FROM embeddings WHERE vec_id < 8""".stripMargin
-
-  /** External query set: the C66b derivation — ×1.5 with one float round
-    * (then widened back to double, the entry's transform order), ids
-    * offset by 1000 so no corpus row matches (⇒ no self-exclusion). */
-  private val ExternalServeQs =
-    """SELECT vec_id + 1000 AS q_id,
-      |  list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(CAST(x * 1.5 AS FLOAT) AS DOUBLE)) AS qv
-      |  FROM embeddings WHERE vec_id < 8""".stripMargin
-
-  /** External query set AT WIDTH (C66g/C66h): the corpus vector widened
-    * (the `wide` CTE both wide composers open with), then ×1.5 with one
-    * float round per component — widen-then-scale, matching the entries'
-    * WidenVec→transform order; ids offset by 1000 so no corpus row
-    * matches (⇒ no self-exclusion). `qemb` carries the FLOAT form the
-    * IVF×PQ composer's cosine probe reads; the plain-PQ composer ignores
-    * it. */
-  private val ExternalServeQsWide =
-    """SELECT vec_id + 1000 AS q_id,
-      |  list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(CAST(x * 1.5 AS FLOAT) AS DOUBLE)) AS qv,
-      |  CAST(list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(x * 1.5 AS FLOAT)) AS FLOAT[]) AS qemb
-      |  FROM wide WHERE vec_id < 8""".stripMargin
-
-  /** The streaming PQ-serve oracle: seeded codebook, whole-corpus argmin
-    * encode, the parameterized `qs` CTE, per-q ADC tables, and the
-    * per-q_id (adist asc, id asc) rank cut — `probed` adds the per-query
-    * coarse probe prelude (scaled-cosine desc, label asc, top 2) plus the
-    * label-membership join; `excludeSelf` keeps indexed queries out of
-    * their own answer sets (external ids match no corpus row). */
-  private def pqServeDuck(qsCte: String, probed: Boolean,
-                          excludeSelf: Boolean): String = {
-    val probeCtes = if (probed)
-      s""",
-         |cent AS (${DuckDialect.centSql("embeddings")}),
-         |pr AS (SELECT q_id, label FROM (
-         |  SELECT qs.q_id, c.label, row_number() OVER (PARTITION BY qs.q_id
-         |    ORDER BY CAST(floor(list_cosine_similarity(CAST(c.cent AS DOUBLE[]),
-         |      qs.qv) * 10000 + 0.5) AS BIGINT) DESC, c.label ASC) AS rn
-         |  FROM cent c CROSS JOIN qs) WHERE rn <= 2)""".stripMargin
-    else ""
-    val memberJoin = if (probed)
-      """
-        |  JOIN embeddings el ON el.vec_id = enc.vec_id
-        |  JOIN pr ON pr.q_id = adc.q_id AND pr.label = el.label""".stripMargin
-    else ""
-    val excl = if (excludeSelf) "\n  WHERE enc.vec_id <> adc.q_id" else ""
-    s"""WITH cb AS (SELECT m.m AS m, e.vec_id AS code,
-       |    (CAST(e.embedding AS DOUBLE[]))[m.m*8+1 : m.m*8+8] AS cw
-       |  FROM embeddings e, (SELECT unnest(range(8)) AS m) m WHERE e.vec_id < 64),
-       |body AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |enc0 AS (SELECT b.vec_id, cb.m, cb.code,
-       |  CAST(floor((${FusionQueries.pqTerms("b.v", "cb.cw", 8, offset = true)}) * 10000.0) AS BIGINT) AS d
-       |  FROM body b CROSS JOIN cb),
-       |dmin AS (SELECT vec_id, m, min(d) AS d0 FROM enc0 GROUP BY 1, 2),
-       |enc AS (SELECT e.vec_id, e.m, min(e.code) AS code
-       |        FROM enc0 e JOIN dmin ON e.vec_id = dmin.vec_id AND e.m = dmin.m AND e.d = dmin.d0
-       |        GROUP BY 1, 2),
-       |qs AS ($qsCte)$probeCtes,
-       |q AS (SELECT qs.q_id, m.m AS m, qv[m.m*8+1 : m.m*8+8] AS qsub
-       |      FROM qs, (SELECT unnest(range(8)) AS m) m),
-       |adc AS (SELECT q.q_id, cb.m, cb.code,
-       |  CAST(floor((${FusionQueries.pqTerms("q.qsub", "cb.cw", 8, offset = false)}) * 10000.0) AS BIGINT) AS td
-       |  FROM cb JOIN q ON cb.m = q.m),
-       |sums AS (SELECT adc.q_id, enc.vec_id, CAST(sum(adc.td) AS BIGINT) AS adist
-       |  FROM enc JOIN adc ON enc.m = adc.m AND enc.code = adc.code$memberJoin$excl
-       |  GROUP BY 1, 2)
-       |SELECT q_id, rank, vec_id, adist FROM (
-       |  SELECT q_id, vec_id, adist, CAST(row_number() OVER (PARTITION BY q_id
-       |    ORDER BY adist ASC, vec_id ASC) AS BIGINT) AS rank FROM sums)
-       |WHERE rank <= 10""".stripMargin
-  }
+  /** The C66b external query set at width `w` (q_id, qv, qemb): x·1.5, one float round. */
+  private def externalServeQs(w: Width): String =
+    s"""SELECT vec_id + 1000 AS q_id,
+       |  list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(CAST(x * 1.5 AS FLOAT) AS DOUBLE)) AS qv,
+       |  CAST(list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(x * 1.5 AS FLOAT)) AS FLOAT[]) AS qemb
+       |  FROM ${w.tbl} WHERE vec_id < 8""".stripMargin
 
   val oracle: Map[String, String] = {
     import TextScoring._
@@ -1260,15 +566,6 @@ object StreamingQueries {
         """SELECT epoch_us(date_trunc('hour', ts)) // 60000000 AS hour_min, event_type,
           | count(*) AS n, CAST(sum(CAST(floor(value * 100.0) AS BIGINT)) AS BIGINT) AS sum_cents
           |FROM events GROUP BY 1, 2""".stripMargin,
-
-      // stream-ingested delta + persisted base == full fresh build ==
-      // exact (saturating beam); self-hit included (query is indexed)
-      "streaming_hnsw_append" ->
-        """SELECT e.vec_id,
-          |  CAST(floor(list_distance(CAST(e.embedding AS DOUBLE[]),
-          |    CAST(q.embedding AS DOUBLE[])) * 10000 + 0.5) AS BIGINT) AS score
-          |FROM embeddings e CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 6) q
-          |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
 
       "streaming_enrich" ->
         """SELECT epoch_us(date_trunc('hour', e.ts)) // 60000000 AS hour_min,
@@ -1285,12 +582,10 @@ object StreamingQueries {
            |  CAST(max(CASE WHEN w = 0 THEN 53 ELSE 53 - length(bin(w)) END) AS BIGINT) AS rho
            |FROM b GROUP BY 1, 2, 3""".stripMargin,
 
-      // C63 runs B15's exact gate as a stream — the oracle IS B15's
-      // (shared constants, shared hash, shared threshold)
+      // C63 runs B15's exact gate as a stream
       "streaming_decontaminate" -> CurationQueries.oracle("decontaminate"),
 
-      // stream state ≡ the batch per-source aggregate over the SAME
-      // trained dictionary (the bpe_encode oracle's wl CTE, re-keyed)
+      // stream state ≡ the batch per-source aggregate over the SAME trained dictionary
       "streaming_bpe_tokens" -> {
         val iters = graft.operators.Bpe.DefaultIters
         s"""WITH ${DuckDialect.bpeChain(iters)},
@@ -1316,125 +611,8 @@ object StreamingQueries {
            |  CAST((sv - ((sv % cnt + cnt) % cnt)) // cnt AS BIGINT) AS cmean
            |FROM comp c JOIN cnts USING (source)""".stripMargin,
 
-      // C66: the knn_pq pipeline MINUS the rerank stage (ADC-ranked
-      // serving) — shared cb/enc/adc arithmetic with the PQ oracles;
-      // per-query rank replays the k-heap's (adist asc, id asc) contract.
-      // C66/C66b/C66c/C66d compose ONE shared replay (pqServeDuck —
-      // ADVICE r13: the four blocks duplicated ~35 CTE lines differing
-      // only in qs derivation, probe prelude, and self-exclusion).
-      "streaming_pq_serve" ->
-        pqServeDuck(IndexedServeQs, probed = false, excludeSelf = true),
-
-      // C66e: the wide batch replay cut at the ADC ranking (the serve
-      // stops where a second streaming aggregation would begin) — ONE
-      // composer with the A21g family (pqBatchWideOracleSql2048), the
-      // pqServeDuck convention at width
-      "streaming_pq_serve_2048" -> FusionQueries.pqBatchWideOracleSql2048(
-        Some("vec_id < 8"), adcOnly = true),
-
-      // C66f: the wide IVF×PQ batch replay cut at the probe-restricted
-      // ADC ranking — ONE composer with the A24d family
-      "streaming_ivfpq_serve_2048" -> FusionQueries.ivfpqBatchWideOracleSql2048(
-        Some("vec_id < 8"), adcOnly = true),
-
-      // C66g/C66h: the wide serve replays with the qs CTE deriving the
-      // external queries (widen-then-scale, ids + 1000) and the
-      // self-exclusion dropped — external q_ids name no corpus row
-      "streaming_pq_serve_external_2048" -> FusionQueries.pqBatchWideOracleSql2048(
-        qsWhere = None, qsSelect = Some(ExternalServeQsWide),
-        excludeSelf = false, adcOnly = true),
-
-      "streaming_ivfpq_serve_external_2048" -> FusionQueries.ivfpqBatchWideOracleSql2048(
-        qsWhere = None, qsSelect = Some(ExternalServeQsWide),
-        excludeSelf = false, adcOnly = true),
-
-      // C66c: the C66 replay with the knn_ivfpq probe prelude made
-      // per-query (scaled-cosine desc, label asc, top 2 per q_id) and a
-      // label-membership join restricting each query's sums to its own
-      // probed clusters' members
-      "streaming_ivfpq_serve" ->
-        pqServeDuck(IndexedServeQs, probed = true, excludeSelf = true),
-
-      // C66d: the C66c replay with the external qs derivation (the C66b
-      // ×1.5 float round) and the self-exclusion dropped
-      "streaming_ivfpq_serve_external" ->
-        pqServeDuck(ExternalServeQs, probed = true, excludeSelf = false),
-
-      // C66b: the C66 replay with the qs CTE deriving the external
-      // scaled vectors (one float round, then widened back to double —
-      // the entry's transform order) and NO self-exclusion
-      "streaming_pq_serve_external" ->
-        pqServeDuck(ExternalServeQs, probed = false, excludeSelf = false),
-
-      // C71: the per-q_id Hamming ranking replayed relationally — same
-      // tie order as the heap (ham asc, lower id wins), cut at the
-      // funnel's stage-1 width
-      "streaming_cascade_serve" ->
-        s"""WITH b AS (SELECT vec_id,
-           |  ${FusionQueries.bqHalfDuck("embedding", 0)} AS lo,
-           |  ${FusionQueries.bqHalfDuck("embedding", 32)} AS hi FROM embeddings),
-           |qs AS (SELECT vec_id AS q_id, lo AS q_lo, hi AS q_hi FROM b WHERE vec_id < 8),
-           |h AS (SELECT q.q_id, b.vec_id,
-           |    CAST(bit_count(xor(b.lo, q.q_lo)) + bit_count(xor(b.hi, q.q_hi)) AS BIGINT) AS ham
-           |  FROM b CROSS JOIN qs q WHERE b.vec_id <> q.q_id)
-           |SELECT q_id, rank, vec_id, ham FROM (
-           |  SELECT q_id, vec_id, ham, CAST(row_number() OVER (PARTITION BY q_id
-           |    ORDER BY ham ASC, vec_id ASC) AS BIGINT) AS rank FROM h)
-           |WHERE rank <= ${FusionQueries.CascStage1}""".stripMargin,
-
-      // C71d: the shared wide funnel base (FusionQueries.cascBaseDuckWide
-      // — ONE copy of the BqPackVec bit-order pack CTE and the per-q
-      // Hamming ranking, the same CTEs the batch funnel oracles read)
-      // cut at the stage-1 width with the heap's (ham asc, id asc) order
-      "streaming_cascade_serve_2048" ->
-        s"""WITH ${FusionQueries.cascBaseDuckWide()}
-           |SELECT q_id, CAST(rn1 AS BIGINT) AS rank, vec_id, ham FROM r1
-           |WHERE rn1 <= ${FusionQueries.CascStage1}""".stripMargin,
-
-      // C71e: the wide funnel base with the qs CTE deriving the external
-      // queries (widen → x−0.25 float round → pack, the b CTE's own
-      // bit-order fold) and the self-exclusion dropped
-      "streaming_cascade_serve_external_2048" ->
-        s"""WITH ${FusionQueries.cascBaseDuckWide(qsSelect = Some(
-             """SELECT q_id,
-               |  list_transform(range(0, 64), g ->
-               |    list_reduce(list_transform(range(0, 32), j ->
-               |      CASE WHEN qe[g*32 + j + 1] > 0.0 THEN CAST(1 AS BIGINT) << j
-               |           ELSE CAST(0 AS BIGINT) END), (x, y) -> x + y)) AS q_p,
-               |  CAST(qe AS DOUBLE[]) AS q_vec
-               |  FROM (SELECT vec_id + 1000 AS q_id,
-               |    list_transform(CAST(embedding AS DOUBLE[]),
-               |      x -> CAST(x - 0.25 AS FLOAT)) AS qe
-               |    FROM wide WHERE vec_id < 8)""".stripMargin),
-             excludeSelf = false)}
-           |SELECT q_id, CAST(rn1 AS BIGINT) AS rank, vec_id, ham FROM r1
-           |WHERE rn1 <= ${FusionQueries.CascStage1}""".stripMargin,
-
-      // C71b: the streamed stage-1 + downstream batch rerank equals the
-      // batch funnel end-to-end (stream stage-1 ≡ batch stage-1, shared
-      // rerank tail by construction) — the oracle IS knn_cascade_batch's
+      // C71b: the streamed stage-1 + downstream batch rerank equals the batch funnel end-to-end
       "streaming_cascade_rerank" -> FusionQueries.oracle("knn_cascade_batch"),
-
-      // C71c: the external derivation (x−0.25, one float round) packed and
-      // Hamming-ranked with no self-exclusion — stream ≡ this batch SQL
-      "streaming_cascade_serve_external" ->
-        s"""WITH b AS (SELECT vec_id,
-           |  ${FusionQueries.bqHalfDuck("embedding", 0)} AS lo,
-           |  ${FusionQueries.bqHalfDuck("embedding", 32)} AS hi FROM embeddings),
-           |qe AS (SELECT vec_id + 1000 AS q_id,
-           |    list_transform(CAST(embedding AS DOUBLE[]),
-           |      x -> CAST(x - 0.25 AS FLOAT)) AS qe
-           |  FROM embeddings WHERE vec_id < 8),
-           |qs AS (SELECT q_id,
-           |  ${FusionQueries.bqHalfDuck("qe", 0)} AS q_lo,
-           |  ${FusionQueries.bqHalfDuck("qe", 32)} AS q_hi FROM qe),
-           |h AS (SELECT q.q_id, b.vec_id,
-           |    CAST(bit_count(xor(b.lo, q.q_lo)) + bit_count(xor(b.hi, q.q_hi)) AS BIGINT) AS ham
-           |  FROM b CROSS JOIN qs q)
-           |SELECT q_id, rank, vec_id, ham FROM (
-           |  SELECT q_id, vec_id, ham, CAST(row_number() OVER (PARTITION BY q_id
-           |    ORDER BY ham ASC, vec_id ASC) AS BIGINT) AS rank FROM h)
-           |WHERE rank <= ${FusionQueries.CascStage1}""".stripMargin,
 
       // C70: the batch bottom-k replayed with rank — same tie order as
       // the heap (pri asc, lower id wins)
@@ -1456,8 +634,7 @@ object StreamingQueries {
           |      ORDER BY CAST(floor(value * 100) AS BIGINT) DESC, event_id ASC) AS BIGINT) AS rank
           |  FROM events) WHERE rank <= 5""".stripMargin,
 
-      // the gates are B21's shared fragments; (h, quality) both determined
-      // by text, so DISTINCT equals the stream's one-per-key emission
+      // the gates are B21's shared fragments
       "streaming_curation" ->
         s"""WITH t AS (SELECT doc_id, n_chars, text, $dTok AS tk FROM documents),
            |sc AS (SELECT doc_id, n_chars, text,
@@ -1476,7 +653,6 @@ object StreamingQueries {
           |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR""".stripMargin,
 
       // inner matches ∪ unmatched clicks whose window the final watermark
-      // (min of the two sides' max event time, minus the delay) closed
       "streaming_join_outer" ->
         """WITH c AS (SELECT user_id, event_id AS c_id, ts AS c_ts FROM events
           |           WHERE event_type = 'click'),
@@ -1494,8 +670,7 @@ object StreamingQueries {
           |WHERE c.c_id NOT IN (SELECT c_id FROM j)
           |  AND c.c_ts + INTERVAL 1 HOUR < (SELECT w FROM wm)""".stripMargin,
 
-      // C69c: the fine-level branch of the C69 oracle — registers from
-      // one scan, estimate from registers only (no exact side)
+      // C69c: the fine-level branch of the C69 oracle
       "streaming_hll_rollup" -> {
         val e = s"CAST(floor(((${Hll.AlphaScaled}.0 / 1000000.0) * 65536.0 " +
           "* 9007199254740992.0) / CAST(zsum AS DOUBLE)) AS BIGINT)"
@@ -1511,89 +686,7 @@ object StreamingQueries {
            |SELECT source, lang, $e AS est FROM zf""".stripMargin
       },
 
-      // C58c: stateless encode stream ≡ the batch encode — the shared
-      // cb/enc CTEs of the PQ oracles restricted to the arriving ids,
-      // pivoted to the kernel's wide (vec_id, code_0…code_7) layout
-      "streaming_pq_ingest" -> {
-        val codeCols = (0 until 8).map(m =>
-          s"  CAST(max(CASE WHEN m = $m THEN code END) AS BIGINT) AS code_$m")
-          .mkString(",\n")
-        s"""WITH cb AS (SELECT m.m AS m, e.vec_id AS code,
-           |    (CAST(e.embedding AS DOUBLE[]))[m.m*8+1 : m.m*8+8] AS cw
-           |  FROM embeddings e, (SELECT unnest(range(8)) AS m) m WHERE e.vec_id < 64),
-           |body AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-           |         WHERE vec_id >= ${HybridQueries.IvfAppendSplit}),
-           |enc0 AS (SELECT b.vec_id, cb.m, cb.code,
-           |  CAST(floor((${FusionQueries.pqTerms("b.v", "cb.cw", 8, offset = true)}) * 10000.0) AS BIGINT) AS d
-           |  FROM body b CROSS JOIN cb),
-           |dmin AS (SELECT vec_id, m, min(d) AS d0 FROM enc0 GROUP BY 1, 2),
-           |enc AS (SELECT e.vec_id, e.m, min(e.code) AS code
-           |        FROM enc0 e JOIN dmin ON e.vec_id = dmin.vec_id AND e.m = dmin.m AND e.d = dmin.d0
-           |        GROUP BY 1, 2)
-           |SELECT vec_id,
-           |$codeCols
-           |FROM enc GROUP BY vec_id""".stripMargin
-      },
-
-      // stateless assignment stream ≡ the batch assignment (A30's oracle
-      // with the identical scaled-L2 argmin and label tie-break)
-      "streaming_ivf_ingest" -> {
-        def l2s(a: String, b: String) =
-          s"CAST(floor(list_distance(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[])) * 10000 + 0.5) AS BIGINT)"
-        val split = HybridQueries.IvfAppendSplit
-        s"""WITH cent AS (${DuckDialect.centSql(s"(SELECT * FROM embeddings WHERE vec_id < $split)")}),
-           |a AS (SELECT e.vec_id, c.label, ${l2s("e.embedding", "c.cent")} AS d,
-           |  row_number() OVER (PARTITION BY e.vec_id
-           |    ORDER BY ${l2s("e.embedding", "c.cent")} ASC, c.label ASC) AS rn
-           |  FROM embeddings e CROSS JOIN cent c WHERE e.vec_id >= $split)
-           |SELECT vec_id, CAST(label AS BIGINT) AS label, d FROM a WHERE rn = 1""".stripMargin
-      },
-
-      // C58d: stateless wide assignment stream ≡ the A30d batch
-      // assignment — the oracle IS knn_ivf_append_2048's (same arriving
-      // ids, same wide centroids, same scaled-L2 argmin)
-      "streaming_ivf_ingest_2048" -> HybridQueries.oracle("knn_ivf_append_2048"),
-
-      // C58e: the C58c encode replay at width — the wide cb/enc CTEs
-      // (pqFold, the binder-safe 128-dim form) restricted to arriving
-      // ids, pivoted to the kernel's (vec_id, code_0…code_15) layout
-      "streaming_pq_ingest_2048" -> {
-        val (numSub, subDim, numCodes) = (16, 128, 64)
-        val codeCols = (0 until numSub).map(m =>
-          s"  CAST(max(CASE WHEN m = $m THEN code END) AS BIGINT) AS code_$m")
-          .mkString(",\n")
-        s"""WITH wide AS MATERIALIZED (SELECT vec_id,
-           |    ${HybridQueries.wideDuck} AS embedding FROM embeddings),
-           |cb AS (SELECT m.m AS m, e.vec_id AS code,
-           |    (CAST(e.embedding AS DOUBLE[]))[m.m*$subDim+1 : m.m*$subDim+$subDim] AS cw
-           |  FROM wide e, (SELECT unnest(range($numSub)) AS m) m WHERE e.vec_id < $numCodes),
-           |body AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM wide
-           |         WHERE vec_id >= ${HybridQueries.IvfAppendSplit}),
-           |enc0 AS (SELECT b.vec_id, cb.m, cb.code,
-           |  CAST(floor(${FusionQueries.pqFold("b.v", "cb.cw", subDim, offset = true)} * 10000.0) AS BIGINT) AS d
-           |  FROM body b CROSS JOIN cb),
-           |dmin AS (SELECT vec_id, m, min(d) AS d0 FROM enc0 GROUP BY 1, 2),
-           |enc AS (SELECT e.vec_id, e.m, min(e.code) AS code
-           |        FROM enc0 e JOIN dmin ON e.vec_id = dmin.vec_id AND e.m = dmin.m AND e.d = dmin.d0
-           |        GROUP BY 1, 2)
-           |SELECT vec_id,
-           |$codeCols
-           |FROM enc GROUP BY vec_id""".stripMargin
-      },
-
-      // C58f: wide stream-ingested delta + persisted wide base == full
-      // fresh wide build == exact (saturating beam); self-hit included
-      "streaming_hnsw_append_2048" ->
-        s"""WITH wide AS MATERIALIZED (SELECT vec_id,
-           |    ${HybridQueries.wideDuck} AS embedding FROM embeddings)
-           |SELECT e.vec_id,
-           |  CAST(floor(list_distance(CAST(e.embedding AS DOUBLE[]),
-           |    CAST(q.embedding AS DOUBLE[])) * 10000 + 0.5) AS BIGINT) AS score
-           |FROM wide e CROSS JOIN (SELECT embedding FROM wide WHERE vec_id = 6) q
-           |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin,
-
-      // batch sessionization minus each user's LAST session (the stream's
-      // still-open tail) — same gap/window CTEs as events_sessionize
+      // batch sessionization minus each user's LAST session (the stream's still-open tail)
       "streaming_sessionize" ->
         """WITH g AS (
           |  SELECT user_id, ts, event_id,
@@ -1616,6 +709,6 @@ object StreamingQueries {
           |  FROM sess GROUP BY user_id, sess_idx)
           |SELECT user_id, n_events, sess_start, sess_end
           |FROM agg WHERE sess_idx < last_idx""".stripMargin
-    )
+    ) ++ Width.oraclesOf(twins)
   }
 }

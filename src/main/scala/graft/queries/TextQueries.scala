@@ -3,14 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables
 
-/** §2.B7–B10 — text analysis for training-data curation. All shuffle-free
-  * narrow scans (per-document expressions) except the final fingerprint
-  * group-count; every score is deterministic integer-scaled arithmetic so
-  * the DuckDB oracle hash-matches. */
-/** Shared language-ID / quality-score fragments (both dialects) — single
-  * source of truth for B7/B8, the composed B21 `curation_pipeline`, and
-  * its streaming form (`streaming.CurationStream`). All fragments assume
-  * a token-array column `tk` plus `text`/`n_chars`. */
+/** §2.B7–B10 — text analysis for training-data curation; every score is deterministic
+  * integer-scaled arithmetic so the DuckDB oracle hash-matches. */
+/** Shared language-ID / quality-score fragments (both dialects). */
 private[graft] object TextScoring {
   // marker tokens per language for the n-gram/marker language-ID heuristic
   val EnMarkers = Seq("the", "a", "data")
@@ -47,8 +42,7 @@ private[graft] object TextScoring {
     s"CAST(len(list_filter(tk, x -> ${inList("x", Stopwords)})) AS BIGINT) AS stop",
     "CAST(list_sum(list_transform(tk, x -> length(x))) AS BIGINT) AS totchars")
 
-  /** all-integer combined score ∈ [0, 10⁴] over the quality inputs —
-    * `div` is Spark's integer division; DuckDB uses `//`. */
+  /** all-integer combined score ∈ [0, 10⁴] over the quality inputs. */
   def qualityExpr(div: String): String =
     s"""( (5 * least(n_chars, 500))
        |+ ((2500 * (ntok - least(punct, ntok))) $div ntok)
@@ -90,16 +84,7 @@ object TextQueries {
           org.apache.spark.sql.functions.col("pair").asc)
         .limit(20)),
 
-    // B34b: the BPE training LOOP (r6 verdict missing #1 — bpe_pair_counts
-    // is ONE iteration; this is the whole driver-looped argmax-merge
-    // training, operators.Bpe.train): 8 iterations, each ONE pair-keyed
-    // map-side-combined shuffle over the cached distinct-word table + a
-    // narrow greedy fold applying the argmax merge. Emits the ordered
-    // merge table ('merge' rows: iteration, pair, weighted count) and the
-    // trained vocabulary slice ('vocab' rows: top-10 final symbols by
-    // corpus frequency). The oracle REPLAYS the full training as an
-    // unrolled CTE chain (DuckDialect.bpeChain), so every argmax decision
-    // and every fold application is cross-engine-verified.
+    // B34b: the BPE training LOOP
     "bpe_train" -> ((s, dir) => {
       val merges = graft.operators.Bpe.trainedMerges(docs(s, dir), dir)
       val mergeRows = s.createDataFrame(
@@ -118,16 +103,7 @@ object TextQueries {
       mergeRows.unionByName(vocab)
     }),
 
-    // B34d: BATCHED training at production iteration shape (r7 verdict
-    // "next" #1 — one driver-argmax job per merge cannot reach 10⁴-merge
-    // vocabularies): each of 8 scan jobs accepts up to 16 mutually-non-
-    // interacting merges from the top-64 pair pool (operators.Bpe.
-    // trainBatched — ≥80 merges tri-scale from 8 jobs, ~1/10th the jobs
-    // per merge of B34b). The oracle replays EVERYTHING: the pair
-    // recounts, the greedy accepted-only selection (a framed-string
-    // list_reduce fold), and the in-order rule application — so the
-    // batch-selection semantics are cross-engine-pinned, not just the
-    // final vocabulary.
+    // B34d: BATCHED training at production iteration shape
     "bpe_train_batched" -> ((s, dir) => {
       val merges = graft.operators.Bpe.trainedBatched(docs(s, dir), dir)
       val mergeRows = s.createDataFrame(
@@ -146,12 +122,7 @@ object TextQueries {
       mergeRows.unionByName(vocab)
     }),
 
-    // B34e: end-of-word-marked training (Sennrich §3.2) — every word's
-    // symbol sequence ends in '</w>', so word-final contexts train their
-    // own merges (('e','</w>') etc. — required for reversible
-    // re-segmentation). Same sequential loop and oracle replay as B34b
-    // over the marked word table; BpeBatchSpec pins the divergence from
-    // the unmarked vocabulary.
+    // B34e: end-of-word-marked training (Sennrich §3.2)
     "bpe_train_eow" -> ((s, dir) => {
       val merges = graft.operators.Bpe.trainedMergesEow(docs(s, dir), dir)
       val mergeRows = s.createDataFrame(
@@ -171,12 +142,7 @@ object TextQueries {
       mergeRows.unionByName(vocab)
     }),
 
-    // B34f: the apply path under the BATCHED-trained vocabulary — closes
-    // the train→encode loop for B34d exactly as B34c does for B34b: the
-    // batched merge table encodes the DISTINCT words once (one kernel
-    // pass over the dictionary), the token stream only joins (word →
-    // n_sym). Same dictionary-encode scale shape; the oracle replays
-    // batched training (bpeBatchChain) and then the join.
+    // B34f: the apply path under the BATCHED-trained vocabulary
     "bpe_encode_batched" -> ((s, dir) => {
       val rules = graft.operators.Bpe.trainedBatched(docs(s, dir), dir)
         .map(m => (m.l, m.r))
@@ -189,12 +155,7 @@ object TextQueries {
           org.apache.spark.sql.functions.sum("n_sym").as("n_bpe"))
     }),
 
-    // B34c: the tokenizer-APPLY path — encode the corpus with the trained
-    // merge table at the dictionary-encode shape: the merge chain runs
-    // once over DISTINCT words (operators.Bpe.wordSymLens), and the token
-    // stream only joins against that tiny (word → n_sym) map. Per doc:
-    // whitespace token count vs trained-BPE token count — the number a
-    // training pipeline actually packs on.
+    // B34c: the tokenizer-APPLY path
     "bpe_encode" -> ((s, dir) =>
       docs(s, dir).selectExpr("doc_id", s"explode($sTok) AS word")
         .join(graft.operators.Bpe.wordSymLens(docs(s, dir), dir), "word")
@@ -229,10 +190,7 @@ object TextQueries {
           s"CAST(size($sTok) AS BIGINT) AS n_ws",
           s"CAST($sBpe AS BIGINT) AS n_bpe")),
 
-    // B22: within-document repetition score (the Gopher-style rep filter):
-    // the fraction of a doc's 3-gram shingles that are repeats — high rep
-    // = boilerplate/spam. Pure narrow scan: the codegen'd shingle kernel +
-    // two array sizes per row; integer-scaled ratio, no shuffle at any SF
+    // B22: within-document repetition score
     "text_repetition" -> ((s, dir) =>
       docs(s, dir)
         .select(org.apache.spark.sql.functions.col("doc_id"),
@@ -246,16 +204,7 @@ object TextQueries {
         .selectExpr("doc_id", "n_sh", "n_uniq",
           "((n_sh - n_uniq) * 1000000) div n_sh AS rep")),
 
-    // B26: corpus-frequency rarity scoring — the integer-exact stand-in for
-    // unigram-LM perplexity filtering: rarity(token) = 64 − bit_length(corpus
-    // term count) (floor-log₂ buckets, so no libm ln), a document's score is
-    // the mean token rarity ×10⁴. High score = rare-token-dense (jargon,
-    // noise, misspellings); low = stop-word slop. Shape at scale: the vocab
-    // aggregate partial-aggregates map-side; the per-doc re-aggregation after
-    // the broadcast vocab join ALSO partial-aggregates (explode keeps a doc's
-    // tokens row-local), so both shuffles carry ~one row per key. At 100 TB
-    // the vocab side is capped to a top-V broadcast with an OOV default —
-    // the standard vocab-cap contract.
+    // B26: corpus-frequency rarity scoring
     "text_rarity" -> ((s, dir) => {
       val toks = docs(s, dir)
         .selectExpr("doc_id", s"$sTok AS tk")
@@ -272,22 +221,7 @@ object TextQueries {
         .selectExpr("doc_id", "rsum", "ntok", "(rsum * 10000) div ntok AS rarity")
     }),
 
-    // B37: bigram-LM surprisal score — the CONTEXT-SENSITIVE fluency
-    // filter (CCNet/Wenzek et al. 2020 filter corpora by LM perplexity;
-    // B26's rarity is the bag-of-words degenerate case). A self-trained
-    // bigram model: ctx(a) = Σ_b c2(a,b); surprisal of (a,b) in integer
-    // bits = floor(log₂(ctx(a) div c2(a,b))) via length(bin(x))−1 — the
-    // B26 integer-log₂ convention, so the whole score replays exactly.
-    // Repetitive boilerplate (every bigram near-certain) scores → 0,
-    // token soup (every bigram novel) scores high — the two tails a
-    // quality gate cuts. Shape: bigrams are a NARROW transform+explode
-    // (a doc's pairs never leave its row before the count shuffle); c2
-    // is one (a,b)-keyed hash agg, ctx a second agg OVER c2's result
-    // (vocab²-sized, not stream-sized); the scoring join broadcasts both
-    // model tables back over the stream. At 100 TB the model side is
-    // top-V-capped with an OOV default (the B26 vocab-cap contract) and
-    // the scoring join degrades to a token-keyed shuffle when V outgrows
-    // the broadcast threshold — the stream is never collected.
+    // B37: bigram-LM surprisal score
     "text_bigram_lm" -> ((s, dir) => {
       // (r18: a scan spread was A/B-measured here and REJECTED — flat at
       // ~1.45 s: the broadcast model joins dominate, not the explode)
@@ -343,8 +277,7 @@ object TextQueries {
         .limit(15)
     }),
 
-    // B10: document fingerprint — hash of the sorted distinct token set
-    // (rolling/bag fingerprint); grouped to show collision-based dedup
+    // B10: document fingerprint
     "text_fingerprint" -> ((s, dir) =>
       docs(s, dir)
         .selectExpr("doc_id", s"$sTok AS tk")

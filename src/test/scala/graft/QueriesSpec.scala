@@ -21,6 +21,21 @@ class QueriesSpec extends SparkSpec {
     assert(stale.isEmpty, s"rows-only allowlist names unknown queries: $stale")
   }
 
+  /** The entries defined at the reference width only; every other `_2048` entry is the
+    * twin of a d=64 entry. */
+  private val WideOnly = Set("knn_hnsw_external_2048", "knn_ivfpq_batch_sharded_2048",
+    "knn_ivfpq_residual_batch_sharded_2048", "knn_pq_consumer_restore_2048")
+
+  test("entry names match the snapshot and each _2048 entry has a d=64 twin") {
+    val src = scala.io.Source.fromResource("entry_names.txt")
+    val snapshot = try src.getLines().map(_.trim).filter(_.nonEmpty).toSet finally src.close()
+    val names = SparkEntry.queries.keySet
+    assert(names == snapshot, s"added: ${names -- snapshot}; dropped: ${snapshot -- names}")
+    val orphans = (names.filter(_.endsWith("_2048")) -- WideOnly)
+      .filterNot(n => names(n.stripSuffix("_2048")))
+    assert(orphans.isEmpty, s"_2048 entries without their d=64 twin: $orphans")
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"query $name runs at sf0.001") {
       val df = fn(spark, dir)

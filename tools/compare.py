@@ -3,6 +3,11 @@
 result parquet dumped by graft.Verify, run the corresponding oracle SQL in
 DuckDB over the same testdata parquet tables and compare row sets.
 Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
+       python3 tools/compare.py --against <parentVerifyOutDir> <verifyOutDir>
+
+With --against, no oracle runs: the two graft.Verify dumps are compared entry
+by entry over every entry directory of either dump (rows-only entries
+included) — row sets, column names and column types must be identical.
 """
 import sys, json, glob, os
 import duckdb
@@ -71,5 +76,48 @@ def main(sf_dir, out_dir):
     print(f"== {n_pass} pass / {n_fail} fail ==")
     return 1 if n_fail else 0
 
+def dump_entries(out_dir):
+    return {os.path.basename(d) for d in glob.glob(os.path.join(out_dir, "*"))
+            if os.path.isdir(d)}
+
+def read_dump(con, files):
+    rel = f"SELECT * FROM read_parquet({files!r})"
+    rows = con.execute(rel).fetchall()
+    cols = [d[0] for d in con.description]
+    return cols, col_types(con, f"({rel})"), rows
+
+def against(parent_dir, out_dir):
+    """Compare two Verify dumps entry by entry: rows, column names, types."""
+    con = duckdb.connect()
+    a, b = dump_entries(parent_dir), dump_entries(out_dir)
+    n_same = n_diff = 0
+    for name in sorted(a | b):
+        if name not in a or name not in b:
+            side = "parent" if name not in a else "change"
+            print(f"DIFF {name}: missing from the {side} dump"); n_diff += 1; continue
+        fa = glob.glob(os.path.join(parent_dir, name, "*.parquet"))
+        fb = glob.glob(os.path.join(out_dir, name, "*.parquet"))
+        if not fa or not fb:
+            if bool(fa) != bool(fb):
+                print(f"DIFF {name}: result parquet in one dump only"); n_diff += 1
+            else:
+                print(f"SAME {name} (no result files)"); n_same += 1
+            continue
+        ca, ta, ra = read_dump(con, fa)
+        cb, tb, rb = read_dump(con, fb)
+        # column order is free (the gate sorts columns by name before hashing)
+        if sorted(ca) != sorted(cb) or ta != tb:
+            print(f"DIFF {name}: columns {sorted(ta.items())} vs {sorted(tb.items())}")
+            n_diff += 1; continue
+        ia = sorted(range(len(ca)), key=lambda i: ca[i])
+        ib = sorted(range(len(cb)), key=lambda i: cb[i])
+        if norm([[r[i] for i in ia] for r in ra]) != norm([[r[i] for i in ib] for r in rb]):
+            print(f"DIFF {name}: {len(ra)} vs {len(rb)} rows differ"); n_diff += 1; continue
+        print(f"SAME {name} ({len(ra)} rows)"); n_same += 1
+    print(f"== {n_same} same / {n_diff} differ ==")
+    return 1 if n_diff else 0
+
 if __name__ == "__main__":
+    if sys.argv[1] == "--against":
+        sys.exit(against(sys.argv[2], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))

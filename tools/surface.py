@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
-"""Report graft's main-source surface: lines and public `def`s per top-level
-object (or class/trait) under src/main/scala/graft.
+"""Report graft's main-source surface: lines, non-comment lines and public
+`def`s per top-level object (or class/trait) under src/main/scala/graft.
 
 Usage: python3 tools/surface.py [--against REV]
 
@@ -8,7 +8,9 @@ With --against, the same counts at REV are read through `git show` (nothing
 is checked out) and printed next to the working tree's with the delta.
 
 A top-level declaration owns its lines up to the next one in the file (the
-file's package and imports go to the first). A public def is a `def` in a
+file's package and imports go to the first). A non-comment line holds code
+outside comments; text inside string literals (the oracles' SQL) counts as
+code, comment-only and blank lines do not. A public def is a `def` in a
 top-level body (not nested deeper) without a private/protected modifier;
 qualified `private[x]` counts as private.
 """
@@ -28,19 +30,23 @@ DEF = re.compile(r"^\s*((?:(?:override|final|implicit|inline|private|protected)"
 
 def code_lines(text):
     """Yield (brace depth at line start, line with comments and string or
-    char literals blanked) for each line."""
+    char literals blanked, whether the line holds code) for each line."""
     depth, state, out = 0, None, []
     i, n = 0, len(text)
-    line_depth, buf = 0, []
+    line_depth, buf, is_code = 0, [], False
     while i < n:
         c = text[i]
         if c == "\n":
             if state == "line":
                 state = None
-            out.append((line_depth, "".join(buf)))
-            buf, line_depth = [], depth
+            out.append((line_depth, "".join(buf), is_code))
+            buf, line_depth, is_code = [], depth, False
             i += 1
             continue
+        if state in ("triple", "string") or (state is None and not c.isspace()
+                                              and not text.startswith("//", i)
+                                              and not text.startswith("/*", i)):
+            is_code = is_code or not c.isspace()
         if state is None:
             if text.startswith("//", i):
                 state = "line"
@@ -78,31 +84,35 @@ def code_lines(text):
             if c == '"':
                 state = None
         i += 1
-    out.append((line_depth, "".join(buf)))
+    out.append((line_depth, "".join(buf), is_code))
     return out
 
 
 def surface(files):
-    """{qualified top-level name: [lines, public defs]} over (path, text)."""
+    """{qualified top-level name: [lines, non-comment lines, public defs]}
+    over (path, text)."""
     rows = {}
     for path, text in files:
         pkg = re.search(r"^package\s+([\w.]+)", text, re.M)
         prefix = pkg.group(1) + "." if pkg else ""
-        current, pending = None, 0
-        for depth, line in code_lines(text):
+        current, pending = None, [0, 0]
+        for depth, line, is_code in code_lines(text):
             m = DECL.match(line) if depth == 0 else None
             if m:
                 current = prefix + m.group(2)
-                entry = rows.setdefault(current, [0, 0])
-                entry[0] += pending
-                pending = 0
+                entry = rows.setdefault(current, [0, 0, 0])
+                entry[0] += pending[0]
+                entry[1] += pending[1]
+                pending = [0, 0]
             if current is None:
-                pending += 1
+                pending[0] += 1
+                pending[1] += is_code
                 continue
             rows[current][0] += 1
+            rows[current][1] += is_code
             d = DEF.match(line) if depth == 1 else None
             if d and not re.search(r"\b(private|protected)\b", d.group(1)):
-                rows[current][1] += 1
+                rows[current][2] += 1
     return rows
 
 
@@ -134,23 +144,26 @@ def main():
     args = ap.parse_args()
     now = surface(worktree_files())
     if not args.against:
-        print(f"{'object':<50} {'lines':>7} {'defs':>5}")
+        print(f"{'object':<50} {'lines':>7} {'code':>7} {'defs':>5}")
         for name in sorted(now):
-            print(f"{name:<50} {now[name][0]:>7} {now[name][1]:>5}")
-        print(f"{'total':<50} {sum(v[0] for v in now.values()):>7} "
-              f"{sum(v[1] for v in now.values()):>5}")
+            v = now[name]
+            print(f"{name:<50} {v[0]:>7} {v[1]:>7} {v[2]:>5}")
+        tot = [sum(v[i] for v in now.values()) for i in range(3)]
+        print(f"{'total':<50} {tot[0]:>7} {tot[1]:>7} {tot[2]:>5}")
         return 0
     then = surface(rev_files(args.against))
     names = sorted(set(now) | set(then))
-    print(f"{'object':<50} {'lines':>7} {'Δ':>6} {'defs':>5} {'Δ':>4}")
+    print(f"{'object':<50} {'lines':>7} {'Δ':>6} {'code':>7} {'Δ':>6} {'defs':>5} {'Δ':>4}")
     for name in names:
-        a, b = then.get(name, [0, 0]), now.get(name, [0, 0])
+        a, b = then.get(name, [0, 0, 0]), now.get(name, [0, 0, 0])
         if a != b:
-            print(f"{name:<50} {b[0]:>7} {b[0] - a[0]:>+6} {b[1]:>5} {b[1] - a[1]:>+4}")
-    la, lb = sum(v[0] for v in then.values()), sum(v[0] for v in now.values())
-    da, db = sum(v[1] for v in then.values()), sum(v[1] for v in now.values())
-    print(f"main-source lines: {la} -> {lb} ({lb - la:+d}); "
-          f"public defs: {da} -> {db} ({db - da:+d}) against {args.against}")
+            print(f"{name:<50} {b[0]:>7} {b[0] - a[0]:>+6} {b[1]:>7} {b[1] - a[1]:>+6} "
+                  f"{b[2]:>5} {b[2] - a[2]:>+4}")
+    ta = [sum(v[i] for v in then.values()) for i in range(3)]
+    tb = [sum(v[i] for v in now.values()) for i in range(3)]
+    print(f"main-source lines: {ta[0]} -> {tb[0]} ({tb[0] - ta[0]:+d}); "
+          f"non-comment lines: {ta[1]} -> {tb[1]} ({tb[1] - ta[1]:+d}); "
+          f"public defs: {ta[2]} -> {tb[2]} ({tb[2] - ta[2]:+d}) against {args.against}")
     return 0
 
 
