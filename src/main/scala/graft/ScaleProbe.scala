@@ -315,13 +315,14 @@ object ScaleProbe {
     val emb = syntheticEmbeddings(spark, nVecs)
     val docs = syntheticDocs(spark, nDocs)
     val nEvents = 4 * nDocs
-    emb.write.mode("overwrite").parquet("/root/repo/target/probe/emb")
-    docs.write.mode("overwrite").parquet("/root/repo/target/probe/docs")
+    val probeDir = graft.TmpDirs.path("probe")
+    emb.write.mode("overwrite").parquet(s"$probeDir/emb")
+    docs.write.mode("overwrite").parquet(s"$probeDir/docs")
     syntheticEvents(spark, nEvents)
-      .write.mode("overwrite").parquet("/root/repo/target/probe/events")
-    val e = spark.read.parquet("/root/repo/target/probe/emb")
-    val d = spark.read.parquet("/root/repo/target/probe/docs")
-    val ev = spark.read.parquet("/root/repo/target/probe/events")
+      .write.mode("overwrite").parquet(s"$probeDir/events")
+    val e = spark.read.parquet(s"$probeDir/emb")
+    val d = spark.read.parquet(s"$probeDir/docs")
+    val ev = spark.read.parquet(s"$probeDir/events")
 
     val q1 = e.filter(col("vec_id") === 7).select(col("embedding").as("q_vec"))
     val qs = e.filter(col("vec_id") < 8)
@@ -437,7 +438,7 @@ object ScaleProbe {
         val zd = d.selectExpr("doc_id % 256 AS u", "n_chars % 256 AS dd")
           .withColumn("zval", expr(graft.operators.ZOrder.zvalExpr("u", "dd", 8)))
         graft.operators.ZOrder.writeZOrdered(
-          zd, "zval", "/root/repo/target/probe/zorder", nFiles = 64)
+          zd, "zval", s"$probeDir/zorder", nFiles = 64)
       },
       // multi-probe LSH: 1-flip Hamming ball, still one narrow scan + heap
       time("multiprobe_lsh")(graft.operators.Lsh.multiProbeSearch(

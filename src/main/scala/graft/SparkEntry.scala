@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Knn, MetaPredicate}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Entry contract — see SURVEY.md §7. */
 object SparkEntry {
 
   /** Flagship: hybrid search (metadata pre-filter + exact cosine kNN) on

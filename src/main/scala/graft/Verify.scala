@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // before any oracle is read: two of them name export files under outDir
+    graft.queries.Exports.under(outDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.{exchange, FileSourceScanExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import graft.functions.{pq, scaled, vectors}
 
 /** Product quantization (IVF-PQ style) — the canonical 100 TB vector-
@@ -436,13 +437,16 @@ object Pq {
       case other => other.children.exists(streamedHasShuffle)
     }
     val leaves = streamedLeaves(plan)
-    // FileScanRDD / checkpoint-RDD partition counts and file sizes are
-    // driver-side metadata — reading them runs nothing
+    // FileScanRDD / checkpoint-RDD / cached-buffer partition counts and
+    // file sizes are driver-side metadata — reading them runs nothing. A
+    // cache whose buffers are not built yet has no count to read (building
+    // them would plan its query), so it counts as degenerate, like local rows.
     val leafParts = leaves.map {
       case f: FileSourceScanExec => f.inputRDDs().map(_.getNumPartitions).sum
       case r: RDDScanExec => r.rdd.getNumPartitions
-      case _ => 1 // unknown leaf (cached relation, local rows): treat as
-                  // degenerate — same spread decision as before r18
+      case m: InMemoryTableScanExec if m.relation.cacheBuilder.isCachedColumnBuffersLoaded =>
+        m.relation.cacheBuilder.cachedColumnBuffers.getNumPartitions
+      case _ => 1
     }.sum.max(1)
     val spark = body.sparkSession
     val current =

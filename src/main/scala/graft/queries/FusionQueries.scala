@@ -73,19 +73,20 @@ object FusionQueries {
         numSub = w.numSub, subDim = w.subDim)
     }
 
-  /** A52: the export hand-off proven from the consumer side. The artifacts persist at a
-    * fixed path (not TmpDirs, which is deleted at JVM exit) because the DuckDB oracle
-    * reads them after the Verify pass; rebuilt whenever the sfDir changes. */
-  private[queries] val PqConsumerPath = "/root/repo/target/pq_consumer_2048/index"
-  private var pqConsumerBuiltFor: Option[String] = None
+  /** A52: the export hand-off proven from the consumer side. The artifacts go to an
+    * [[Exports]] directory because the DuckDB oracle reads them after the Verify pass;
+    * rebuilt whenever the sfDir or the export directory changes. */
+  private[queries] def PqConsumerPath: String = Exports.path("pq_consumer_2048/index")
+  private var pqConsumerBuiltFor: Option[(String, String)] = None
   private def ensurePqConsumerExport(s: SparkSession, dir: String): String =
     synchronized {
-      if (!pqConsumerBuiltFor.contains(dir)) {
-        Pq.buildAndWriteIndex(Width.Wide.frame(s, dir), PqConsumerPath,
+      val path = PqConsumerPath
+      if (!pqConsumerBuiltFor.contains((dir, path))) {
+        Pq.buildAndWriteIndex(Width.Wide.frame(s, dir), path,
           numSub = Width.Wide.numSub, subDim = Width.Wide.subDim, numCodes = 64)
-        pqConsumerBuiltFor = Some(dir)
+        pqConsumerBuiltFor = Some((dir, path))
       }
-      PqConsumerPath
+      path
     }
 
   /** The A47 external-query construction: midpoints of corpus pairs (2g, 2g+1) for
@@ -768,7 +769,7 @@ object FusionQueries {
        |bmall AS (SELECT doc_id, CAST(sum((idf * tf * 2200) // denom) AS BIGINT) AS bm25
        |          FROM sc GROUP BY doc_id)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  def oracle: Map[String, String] = Map(
     "text_bm25" ->
       s"""WITH $bm25Sql
          |SELECT doc_id, bm25 FROM bmall ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin,

@@ -405,17 +405,17 @@ object HybridQueries {
       case "c3" => col("model_year").isNotNull && col("model_year") <= 2010
     }
 
-  /** A14h: the clustered-layout export at a FIXED path. */
-  private[queries] val ClusteredConsumerPath =
-    "/root/repo/target/ivf_consumer/layout"
-  private var clusteredConsumerBuiltFor: Option[String] = None
+  /** A14h: the clustered-layout export, in an [[Exports]] directory its oracle reads. */
+  private[queries] def ClusteredConsumerPath: String = Exports.path("ivf_consumer/layout")
+  private var clusteredConsumerBuiltFor: Option[(String, String)] = None
   private def ensureClusteredConsumerExport(s: SparkSession, dir: String): String =
     synchronized {
-      if (!clusteredConsumerBuiltFor.contains(dir)) {
-        Ivf.writeClustered(emb(s, dir), ClusteredConsumerPath)
-        clusteredConsumerBuiltFor = Some(dir)
+      val path = ClusteredConsumerPath
+      if (!clusteredConsumerBuiltFor.contains((dir, path))) {
+        Ivf.writeClustered(emb(s, dir), path)
+        clusteredConsumerBuiltFor = Some((dir, path))
       }
-      ClusteredConsumerPath
+      path
     }
 
   /** A50c/A50d: the capstone's strategy matrix and recall table at the reference width. */
@@ -1118,7 +1118,7 @@ object HybridQueries {
     // A14b: the 100 TB index LAYOUT, oracle-verified end-to-end
     "clustered_probe" -> ((s, dir) => {
       val e = emb(s, dir)
-      val path = "/root/repo/target/clustered/" + new java.io.File(dir).getName
+      val path = graft.TmpDirs.path("clustered/" + new java.io.File(dir).getName)
       Ivf.writeClustered(e, path)
       val q = e.filter(col("vec_id") === 4).select(col("embedding").as("q_vec"))
       // 2 probed labels are k·1 model state (same contract as buildAndRegisterIndex)
@@ -1539,7 +1539,7 @@ object HybridQueries {
        |FROM verd v JOIN served s ON s.label = v.label""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  def oracle: Map[String, String] = Map(
     "ivf_build" ->
       """SELECT e.label, d.dim AS dim,
         | CAST(floor(avg(CAST(e.embedding[d.dim + 1] AS DOUBLE)) * 10000 + 0.5) AS BIGINT) AS cvs,

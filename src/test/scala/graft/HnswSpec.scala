@@ -1,5 +1,6 @@
 package graft
 
+import scala.collection.mutable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import graft.operators.{Hnsw, Ivf, Knn, MetaPredicate}
@@ -350,7 +351,40 @@ class HnswSpec extends SparkSpec {
   }
 
   // ---- resident serving: the registry of restored graphs, and the
-  // engine's cached relation, against the per-query operators ----
+  // engine's resident relation, against the per-query operators, on both
+  // sides of the driver budget ----
+
+  /** Each side of the driver budget: serving state on the driver (the
+    * budget unbounded) or in Spark (budget 0). */
+  private val Sides = Seq(true -> Long.MaxValue, false -> 0L)
+
+  /** `body` once per side, each with the index at `paths` restored afresh. */
+  private def onBothSides(paths: String*)(body: Boolean => Unit): Unit =
+    Sides.foreach { case (driver, budget) =>
+      paths.foreach(Hnsw.release)
+      try DriverResident.withBudget(budget)(withClue(s"[driver=$driver] ")(body(driver)))
+      finally paths.foreach(Hnsw.release)
+    }
+
+  /** (graft's `entry:phase:operator` tags, stage count) of every Spark job
+    * `body` submits; Spark's own session and execution tags are left out. */
+  private def jobsOf(body: => Any): Seq[(Set[String], Int)] = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Set[String], Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Set.empty[String])(_.split(",").toSet.filterNot(_.startsWith("spark-"))),
+          e.stageInfos.size))
+    }
+    org.apache.spark.sql.graftbridge.CacheProbe.drainListeners(spark)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.graftbridge.CacheProbe.drainListeners(spark)
+    } finally sc.removeSparkListener(listener)
+    jobs.toArray(Array.empty[(Set[String], Int)]).toSeq
+  }
 
   private object Serving {
     val K = 10
@@ -390,8 +424,9 @@ class HnswSpec extends SparkSpec {
           .repartition(4, col("vec_id")),
         qv, K, metaSearch = budget)
 
-    /** every strategy's answer per class, each checked against its reference */
-    def answers(): Map[(String, String), Seq[(Long, Long)]] = {
+    /** every strategy's answer per class, each checked against its
+      * reference, with the engine and the index on the `driver` side */
+    def answers(driver: Boolean): Map[(String, String), Seq[(Long, Long)]] = {
       val engine = HybridSearchEngine(corpus, meta)
       val vecs = corpus.select("vec_id", "embedding")
       val cent = Ivf.centroids(corpus)
@@ -417,6 +452,9 @@ class HnswSpec extends SparkSpec {
             (cls, strategy) -> g
           }
         }.toMap
+        assert(engine.onDriver.contains(driver), "the engine's rows sit on the wrong side")
+        assert(Hnsw.residentSides.get((hnswPath, 4)).contains(driver),
+          "the index's graphs sit on the wrong side")
         // post-filter may come back empty on the selective class; no
         // strategy may come back empty everywhere and gate nothing
         out.groupBy(_._1._2).foreach { case (strategy, byCls) =>
@@ -435,56 +473,73 @@ class HnswSpec extends SparkSpec {
 
   test("resident answers equal the per-query operators, under any partitioning and with AQE off") {
     import Serving._
-    // answers() builds a new engine, so each conf plans its own shapes
-    val base = answers()
-    Seq("spark.sql.shuffle.partitions" -> "1", "spark.sql.shuffle.partitions" -> "7",
-      "spark.sql.shuffle.partitions" -> "64", "spark.sql.adaptive.enabled" -> "false")
-      .foreach(c => assert(withConf(c)(answers()) == base, s"answers changed under $c"))
+    val bySide = mutable.Map.empty[Boolean, Map[(String, String), Seq[(Long, Long)]]]
+    onBothSides(hnswPath) { driver =>
+      // answers() builds a new engine, so each conf plans its own shapes;
+      // the index restores afresh under each conf
+      val base = answers(driver)
+      Seq("spark.sql.shuffle.partitions" -> "1", "spark.sql.shuffle.partitions" -> "7",
+        "spark.sql.shuffle.partitions" -> "64", "spark.sql.adaptive.enabled" -> "false")
+        .foreach { c =>
+          Hnsw.release(hnswPath)
+          assert(withConf(c)(answers(driver)) == base, s"answers changed under $c")
+        }
+      bySide(driver) = base
+    }
+    assert(bySide(true) == bySide(false), "the two sides of the budget answer differently")
   }
 
   test("post-filter counts a corpus row without metadata as a candidate that fails") {
     import Serving._
-    val engine = HybridSearchEngine(corpus, meta)
-    try {
-      assert(rows(engine.exactSearch(query, 50)).map(_._1).contains(orphan))
-      val post = rows(engine.postFilterSearch(Map.empty, query, 50, largeK = 50))
-      assert(!post.map(_._1).contains(orphan))
-      assert(post.size == 49, "the other 49 candidates all have metadata and pass")
-      assert(!rows(engine.preFilterSearch(Map.empty, query, 50)).map(_._1).contains(orphan))
-    } finally engine.close()
+    onBothSides() { _ =>
+      val engine = HybridSearchEngine(corpus, meta)
+      try {
+        assert(rows(engine.exactSearch(query, 50)).map(_._1).contains(orphan))
+        val post = rows(engine.postFilterSearch(Map.empty, query, 50, largeK = 50))
+        assert(!post.map(_._1).contains(orphan))
+        assert(post.size == 49, "the other 49 candidates all have metadata and pass")
+        assert(!rows(engine.preFilterSearch(Map.empty, query, 50)).map(_._1).contains(orphan))
+      } finally engine.close()
+    }
   }
 
   test("a point search refuses a query frame that does not hold exactly one row") {
     import Serving._
-    val engine = HybridSearchEngine(corpus, meta)
-    try {
-      val two = corpus.filter(col("vec_id").isin(1L, 2L)).select(col("embedding").as("q_vec"))
-      val searches: Seq[DataFrame => Any] = Seq(
-        engine.preFilterSearch(Map.empty, _, K),
-        engine.postFilterSearch(Map.empty, _, K),
-        engine.acornSearch(Map.empty, _, K),
-        engine.exactSearch(_, K))
-      for (q <- Seq(two, two.limit(0)); search <- searches) {
-        val e = intercept[IllegalArgumentException](search(q))
-        assert(e.getMessage.contains("exactly one row"), e.getMessage)
-      }
-    } finally engine.close()
+    onBothSides() { _ =>
+      val engine = HybridSearchEngine(corpus, meta)
+      try {
+        val two = corpus.filter(col("vec_id").isin(1L, 2L)).select(col("embedding").as("q_vec"))
+        val searches: Seq[DataFrame => Any] = Seq(
+          engine.preFilterSearch(Map.empty, _, K),
+          engine.postFilterSearch(Map.empty, _, K),
+          engine.acornSearch(Map.empty, _, K),
+          engine.exactSearch(_, K))
+        for (q <- Seq(two, two.limit(0)); search <- searches) {
+          val e = intercept[IllegalArgumentException](search(q))
+          assert(e.getMessage.contains("exactly one row"), e.getMessage)
+        }
+      } finally engine.close()
+    }
   }
 
   test("close releases the resident relation; a closed engine refuses searches") {
     import Serving._
-    // over a slice of the corpus, so no other engine shares its cached relation
-    val engine = HybridSearchEngine(corpus.filter(col("vec_id") > 0), meta)
-    assertReleases {
-      val (rdds, cached) = held
-      engine.preFilterSearch(Map.empty, query, K).collect()
-      engine.acornSearch(Map.empty, query, K).collect()
-      assert(held._2 == cached + 1 && (held._1 -- rdds).nonEmpty, "the relation was not cached")
-      assert(engine.shapes == 2)
-      engine.close()
+    onBothSides() { driver =>
+      // over a slice of the corpus, so no other engine shares its cached relation
+      val engine = HybridSearchEngine(corpus.filter(col("vec_id") > 0), meta)
+      assertReleases {
+        val (rdds, cached) = held
+        engine.preFilterSearch(Map.empty, query, K).collect()
+        engine.acornSearch(Map.empty, query, K).collect()
+        if (driver) assert(held == ((rdds, cached)), "a driver snapshot cached the relation")
+        else assert(held._2 == cached + 1 && (held._1 -- rdds).nonEmpty, "the relation was not cached")
+        assert(engine.shapes == 2)
+        engine.close()
+      }
+      assert(engine.shapes == 0, "close kept prepared plans")
+      assert(engine.onDriver.isEmpty, "close kept the serving rows")
+      intercept[IllegalArgumentException](engine.preFilterSearch(Map.empty, query, K))
     }
-    assert(engine.shapes == 0, "close kept prepared plans")
-    intercept[IllegalArgumentException](engine.preFilterSearch(Map.empty, query, K))
   }
 
   test("engines sharing a cached relation: only the last close unpersists it") {
@@ -492,23 +547,27 @@ class HnswSpec extends SparkSpec {
     // two engines over the same inputs share one cache entry; closing the
     // first must leave the second serving from it (a premature unpersist
     // left the second engine's prepared plans recomputing the join from
-    // lineage on every query), and the second close must free everything
+    // lineage on every query), and the second close must free everything.
+    // Below the budget each engine holds its own snapshot and caches nothing.
     val inputs = corpus.filter(col("vec_id") > 1)
     val pred = MetaPredicate(Classes(1)._2.toSeq: _*)
     val expected = rows(Knn.prefilterKnn(inputs.select("vec_id", "embedding"), meta, pred,
       query, K, Knn.Cosine))
-    assertReleases {
-      val (_, cached) = held
-      val a = HybridSearchEngine(inputs, meta)
-      val b = HybridSearchEngine(inputs, meta)
-      assert(rows(a.preFilterSearch(Classes(1)._2, query, K)) == expected)
-      assert(rows(b.preFilterSearch(Classes(1)._2, query, K)) == expected)
-      assert(held._2 == cached + 1, "two engines over the same inputs hold one cache entry")
-      a.close()
-      assert(held._2 == cached + 1, "closing one engine uncached the other's relation")
-      for (_ <- 1 to 2)
+    onBothSides() { driver =>
+      assertReleases {
+        val (_, cached) = held
+        val shared = if (driver) 0 else 1
+        val a = HybridSearchEngine(inputs, meta)
+        val b = HybridSearchEngine(inputs, meta)
+        assert(rows(a.preFilterSearch(Classes(1)._2, query, K)) == expected)
         assert(rows(b.preFilterSearch(Classes(1)._2, query, K)) == expected)
-      b.close()
+        assert(held._2 == cached + shared, "two engines over the same inputs hold one cache entry")
+        a.close()
+        assert(held._2 == cached + shared, "closing one engine uncached the other's relation")
+        for (_ <- 1 to 2)
+          assert(rows(b.preFilterSearch(Classes(1)._2, query, K)) == expected)
+        b.close()
+      }
     }
   }
 
@@ -516,21 +575,29 @@ class HnswSpec extends SparkSpec {
     import Serving._
     val p = TmpDirs.wiped("resident_spec_release")
     Hnsw.buildAndWrite(corpus.select("vec_id", "embedding"), p, dims = 64, numParts = 4)
-    assertReleases {
-      val rdds = held._1
-      rows(filteredWalk(p, Classes.head._2, 0))
-      rows(Hnsw.searchPersisted(spark, p, qv, K))
-      assert((held._1 -- rdds).size == 1, "routed and unrouted searches share one restore")
-      Hnsw.release(p)
+    onBothSides(p) { driver =>
+      assertReleases {
+        val rdds = held._1
+        rows(filteredWalk(p, Classes.head._2, 0))
+        rows(Hnsw.searchPersisted(spark, p, qv, K))
+        assert(Hnsw.residentSides.keySet.count(_._1 == p) == 1,
+          "routed and unrouted searches share one restore")
+        assert((held._1 -- rdds).size == (if (driver) 0 else 1),
+          "the graphs sit in the wrong place")
+        Hnsw.release(p)
+        assert(!Hnsw.residentSides.keySet.exists(_._1 == p), "release kept the graphs")
+      }
     }
   }
 
   test("a numParts other than the build's is refused, not routed to the wrong graphs") {
     import Serving._
-    assertReleases {
-      Seq(3, 8).foreach { n =>
-        val e = intercept[IllegalArgumentException](filteredWalk(hnswPath, Classes(1)._2, 0, n))
-        assert(e.getMessage.contains("numParts"), e.getMessage)
+    onBothSides(hnswPath) { _ =>
+      assertReleases {
+        Seq(3, 8).foreach { n =>
+          val e = intercept[IllegalArgumentException](filteredWalk(hnswPath, Classes(1)._2, 0, n))
+          assert(e.getMessage.contains("numParts"), e.getMessage)
+        }
       }
     }
   }
@@ -539,21 +606,26 @@ class HnswSpec extends SparkSpec {
     import Serving._
     val sub = "resident_spec_overwrite"
     val everyone = Map[String, (String, Any)]("n_chars" -> ("geq", 0))
-    rows(filteredWalk(hnswPath, everyone, 0)) // the shared index is resident first
-    assertReleases {
-      val rdds = held._1
-      val p = TmpDirs.wiped(sub)
-      val vecs = corpus.select("vec_id", "embedding")
-      Hnsw.buildAndWrite(vecs.filter(col("vec_id") < 250), p, dims = 64, numParts = 4)
-      assert(rows(filteredWalk(p, everyone, 0)).forall(_._1 < 250))
-      val newer = vecs.filter(col("vec_id") >= 250)
-      Hnsw.buildAndWrite(newer, p, dims = 64, numParts = 4)
-      val got = rows(filteredWalk(p, everyone, 0))
-      assert(got == rows(Knn.prefilterKnn(newer, meta, MetaPredicate(everyone.toSeq: _*),
-        query, K, Knn.L2)))
-      assert((held._1 -- rdds).size == 1, "the stale graphs were not released")
-      TmpDirs.wiped(sub) // deletes the index
-      rows(filteredWalk(hnswPath, everyone, 0)) // any access sweeps the registry
+    onBothSides() { driver =>
+      rows(filteredWalk(hnswPath, everyone, 0)) // the shared index is resident first
+      assertReleases {
+        val rdds = held._1
+        val p = TmpDirs.wiped(sub)
+        val vecs = corpus.select("vec_id", "embedding")
+        Hnsw.buildAndWrite(vecs.filter(col("vec_id") < 250), p, dims = 64, numParts = 4)
+        assert(rows(filteredWalk(p, everyone, 0)).forall(_._1 < 250))
+        val newer = vecs.filter(col("vec_id") >= 250)
+        Hnsw.buildAndWrite(newer, p, dims = 64, numParts = 4)
+        val got = rows(filteredWalk(p, everyone, 0))
+        assert(got == rows(Knn.prefilterKnn(newer, meta, MetaPredicate(everyone.toSeq: _*),
+          query, K, Knn.L2)))
+        assert((held._1 -- rdds).size == (if (driver) 0 else 1),
+          "the stale graphs were not released")
+        assert(Hnsw.residentSides.keySet.count(_._1 == p) == 1, "the stale graphs stayed registered")
+        TmpDirs.wiped(sub) // deletes the index
+        rows(filteredWalk(hnswPath, everyone, 0)) // any access sweeps the registry
+        assert(!Hnsw.residentSides.keySet.exists(_._1 == p), "the deleted index stayed registered")
+      }
     }
   }
 
@@ -561,18 +633,75 @@ class HnswSpec extends SparkSpec {
     import Serving._
     val p = TmpDirs.wiped("resident_spec_concurrent")
     Hnsw.buildAndWrite(corpus.select("vec_id", "embedding"), p, dims = 64, numParts = 4)
-    assertReleases {
-      val rdds = held._1
-      // the acorn_pipeline_e2e shape: one filtered walk per class, built concurrently
-      val got = Par.ordered(Classes) { case (cls, m) =>
-        filteredWalk(p, m, 0).select(lit(cls).as("cls"), col("vec_id"), col("score"))
-      }.reduce(_ union _).collect().toSeq.map(r => (r.getString(0), (r.getLong(1), r.getLong(2))))
-      assert((held._1 -- rdds).size == 1, "concurrent first calls restored more than once")
-      Classes.foreach { case (cls, m) =>
-        assert(got.filter(_._1 == cls).map(_._2) == rows(freshWalk(m, 0)), cls)
-      }
+    def restores(jobs: Seq[(Set[String], Int)]): Int =
+      jobs.count(_._1.contains("searchFilteredPersisted:build:restore"))
+    onBothSides(p) { driver =>
+      val once = restores(jobsOf(rows(filteredWalk(p, Classes.head._2, 0))))
       Hnsw.release(p)
+      assertReleases {
+        val rdds = held._1
+        // the acorn_pipeline_e2e shape: one filtered walk per class, built concurrently
+        var got = Seq.empty[(String, (Long, Long))]
+        val jobs = jobsOf {
+          got = Par.ordered(Classes) { case (cls, m) =>
+            filteredWalk(p, m, 0).select(lit(cls).as("cls"), col("vec_id"), col("score"))
+          }.reduce(_ union _).collect().toSeq.map(r => (r.getString(0), (r.getLong(1), r.getLong(2))))
+        }
+        assert(once > 0 && restores(jobs) == once, "concurrent first calls restored more than once")
+        assert((held._1 -- rdds).size == (if (driver) 0 else 1))
+        Classes.foreach { case (cls, m) =>
+          assert(got.filter(_._1 == cls).map(_._2) == rows(freshWalk(m, 0)), cls)
+        }
+        Hnsw.release(p)
+      }
     }
+  }
+
+  test("driver graphs and RDD graphs return identical rows from all four registry readers") {
+    import Serving._
+    val qs = Seq(QueryId, 57L, 203L).map(id => id -> queryVec(id))
+    val m = Classes(1)._2
+    def readers(): Seq[Seq[org.apache.spark.sql.Row]] = Seq(
+      Hnsw.searchPersisted(spark, hnswPath, qv, K, ef = 16),
+      Hnsw.searchPersistedBatch(spark, hnswPath, qs, K, ef = 16),
+      Hnsw.searchFilteredPersisted(spark, hnswPath, passing(m), 4, qv, K, metaSearch = 40),
+      Hnsw.searchFilteredPersistedBatch(spark, hnswPath, passing(m), 4, qs, K, metaSearch = 40)
+    ).map(df => df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().toSeq
+      .sortBy(_.toString))
+    val bySide = mutable.Map.empty[Boolean, Seq[Seq[org.apache.spark.sql.Row]]]
+    onBothSides(hnswPath) { driver =>
+      bySide(driver) = readers()
+      assert(Hnsw.residentSides.get((hnswPath, 4)).contains(driver))
+    }
+    assert(bySide(true).forall(_.nonEmpty))
+    bySide(true).zip(bySide(false)).zipWithIndex.foreach { case ((d, r), i) =>
+      assert(d == r, s"reader $i: driver $d vs RDD $r")
+    }
+  }
+
+  test("below the budget a warmed point search runs one job: the query frame's collect") {
+    import Serving._
+    val m = Classes(1)._2
+    Hnsw.release(hnswPath)
+    try DriverResident.withBudget(Long.MaxValue) {
+      val engine = HybridSearchEngine(corpus, meta)
+      try {
+        val searches: Seq[(String, () => DataFrame)] = Seq(
+          "preFilterSearch" -> (() => engine.preFilterSearch(m, query, K)),
+          "postFilterSearch" -> (() => engine.postFilterSearch(m, query, K)),
+          "acornSearch" -> (() => engine.acornSearch(m, query, K)),
+          "exactSearch" -> (() => engine.exactSearch(query, K)))
+        searches.foreach { case (entry, search) =>
+          rows(search()) // warm: the snapshot, the centroids and the shape
+          val jobs = jobsOf(rows(search()))
+          assert(jobs.map(_._1) == Seq(Set(s"$entry:exec:query_frame")), s"$entry ran $jobs")
+        }
+      } finally engine.close()
+      rows(filteredWalk(hnswPath, m, 100)) // warm: the restore
+      val jobs = jobsOf(rows(filteredWalk(hnswPath, m, 100)))
+      assert(jobs == Seq((Set("searchFilteredPersisted:exec:passing_ids"), 1)),
+        s"a warmed filtered walk ran $jobs")
+    } finally Hnsw.release(hnswPath)
   }
 
   // ---- prepared point plans: each query shape planned and compiled once,
@@ -619,13 +748,15 @@ class HnswSpec extends SparkSpec {
     // every strategy's bindings differ, so a value frozen at the first
     // binding cannot pass
     Bindings.map(references).transpose.foreach(answers => assert(answers.distinct.size == answers.size))
-    Seq("true", "false").foreach { wholeStage =>
-      // a shape is planned under the conf of its first use: a new engine per conf
-      withConf("spark.sql.codegen.wholeStage" -> wholeStage) {
-        val engine = HybridSearchEngine(corpus, meta)
-        try Bindings.foreach { b =>
-          assert(searches(engine, b).map(rows) == references(b), s"wholeStage=$wholeStage $b")
-        } finally engine.close()
+    onBothSides() { _ =>
+      Seq("true", "false").foreach { wholeStage =>
+        // a shape is planned under the conf of its first use: a new engine per conf
+        withConf("spark.sql.codegen.wholeStage" -> wholeStage) {
+          val engine = HybridSearchEngine(corpus, meta)
+          try Bindings.foreach { b =>
+            assert(searches(engine, b).map(rows) == references(b), s"wholeStage=$wholeStage $b")
+          } finally engine.close()
+        }
       }
     }
   }
@@ -634,25 +765,29 @@ class HnswSpec extends SparkSpec {
     import Serving._, Prepared._
     import org.apache.spark.metrics.source.CodegenMetrics
     references // computed first: the operators compile their own code
-    val engine = HybridSearchEngine(corpus, meta)
-    try {
-      searches(engine, Bindings.head).foreach(rows)
-      val shapes = engine.shapes
-      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      Bindings.tail.foreach(b => assert(searches(engine, b).map(rows) == references(b), b))
-      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
-        "a query of a prepared shape compiled code")
-      assert(shapes == 4 && engine.shapes == shapes, "pre, post, probe (acorn and adaptive), exact")
-    } finally engine.close()
+    onBothSides() { _ =>
+      val engine = HybridSearchEngine(corpus, meta)
+      try {
+        searches(engine, Bindings.head).foreach(rows)
+        val shapes = engine.shapes
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        Bindings.tail.foreach(b => assert(searches(engine, b).map(rows) == references(b), b))
+        assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+          "a query of a prepared shape compiled code")
+        assert(shapes == 4 && engine.shapes == shapes, "pre, post, probe (acorn and adaptive), exact")
+      } finally engine.close()
+    }
   }
 
   test("same-shape queries run concurrently each return their own answer") {
     import Serving._, Prepared._
-    val engine = HybridSearchEngine(corpus, meta)
-    try {
-      val got = Par.ordered(Bindings ++ Bindings ++ Bindings, parallelism = 6)(b =>
-        searches(engine, b).map(rows))
-      assert(got == (Bindings ++ Bindings ++ Bindings).map(references))
-    } finally engine.close()
+    onBothSides() { _ =>
+      val engine = HybridSearchEngine(corpus, meta)
+      try {
+        val got = Par.ordered(Bindings ++ Bindings ++ Bindings, parallelism = 6)(b =>
+          searches(engine, b).map(rows))
+        assert(got == (Bindings ++ Bindings ++ Bindings).map(references))
+      } finally engine.close()
+    }
   }
 }

@@ -721,4 +721,20 @@ class PlanAuditSpec extends SparkSpec {
       s"a rollup level rescans the corpus\n${p.take(3000)}")
     assert(p.contains("Scan ExistingRDD"), p.take(3000))
   }
+
+  test("spreadHeavyKernel reads a cached body's partition count: a spread one is kept as is") {
+    val n = spark.sparkContext.defaultParallelism
+    assert(n > 1)
+    assertReleases {
+      val spread = spark.range(0, 1000, 1, n).toDF("id").cache()
+      val narrow = spark.range(0, 1000, 1, 1).toDF("id").cache()
+      try {
+        Seq(spread, narrow).foreach(_.count()) // builds the cached buffers
+        assert(graft.operators.Pq.spreadHeavyKernel(spread, 1L << 20) eq spread,
+          "a cached body of defaultParallelism partitions was repartitioned")
+        assert(!(graft.operators.Pq.spreadHeavyKernel(narrow, 1L << 20) eq narrow),
+          "a one-partition cached body was not spread")
+      } finally Seq(spread, narrow).foreach(_.unpersist(blocking = true))
+    }
+  }
 }

@@ -7,18 +7,17 @@ class QueriesSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  /** Entries the driver checks rows-only (no DuckDB oracle), each with the
-    * SURVEY §2 rationale. Additions here must be justified in §2. */
-  private val RowsOnly = Set(
-    "knn_pq_trained", // A25: iterative fp KMeans training is engine-specific
-    "knn_ivf_trained" // A14c: same rationale for the trained-IVF composition
-  )
+  /** Entries checked rows-only (no DuckDB oracle), each with the SURVEY §2
+    * rationale. Additions here must be justified in §2. */
+  private val RowsOnly = Set.empty[String]
 
   test("every declared query has an oracle or is explicitly rows-only") {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- RowsOnly
     assert(noOracle.isEmpty, s"queries without oracle SQL: $noOracle")
     val stale = RowsOnly -- SparkEntry.queries.keySet
     assert(stale.isEmpty, s"rows-only allowlist names unknown queries: $stale")
+    val withOracle = RowsOnly.intersect(SparkEntry.oracleSql.keySet)
+    assert(withOracle.isEmpty, s"rows-only allowlist names queries with an oracle: $withOracle")
   }
 
   /** The entries defined at the reference width only; every other `_2048` entry is the

@@ -2,8 +2,13 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.SparkSession
 
-/** Test access to the `private[sql]` size of a session's cache manager. */
+/** Test access to the `private[sql]` size of a session's cache manager, and
+  * to the listener bus's drain. */
 object CacheProbe {
+  /** Block until every event posted so far reached the listeners. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   def entries(spark: SparkSession): Int =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.numCachedEntries
