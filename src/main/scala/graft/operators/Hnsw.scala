@@ -4,9 +4,11 @@ import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, element_at, lit, max, posexplode, typedLit}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import graft.DriverResident
@@ -44,8 +46,19 @@ import graft.DriverResident
   * Algorithm: Malkov & Yashunin (TPAMI'18), the public HNSW formulation —
   * greedy descent over upper layers, beam (ef) search at layer 0, simple
   * closest-M neighbor selection, bidirectional links with degree pruning.
+  *
+  * Every reader is a graph source, a walk and a merge. The sources are the
+  * per-partition builder (`perPartition`: the fresh readers and
+  * `buildAndWrite`) and the registry of graphs restored from a persisted
+  * index (the persisted readers, and `searchAppended`, which inserts its
+  * arrivals into copies of them). The walks are `nearest` (beam) and
+  * `acorn` (filtered); the merges are `topHits` (global top-k) and
+  * `topHitsPerQuery` (per-query top-k).
   */
 object Hnsw {
+
+  // every frame built here holds tuples or PersistedNode rows
+  private implicit def productEncoder[T <: Product: TypeTag]: Encoder[T] = Encoders.product[T]
 
   /** One partition's graph. Distances are squared L2 in double (sqrt is
     * monotone — only comparisons happen inside the graph). Serializable, so
@@ -56,12 +69,27 @@ object Hnsw {
     private val vecs = mutable.ArrayBuffer.empty[Array[Float]]
     private val extIds = mutable.ArrayBuffer.empty[Long]
     private val nodeLevels = mutable.ArrayBuffer.empty[Int]
-    // links(node)(level) = neighbor node ids
-    private val links = mutable.ArrayBuffer.empty[Array[mutable.ArrayBuffer[Int]]]
+    // links(node)(level) = neighbor node ids; an insert replaces a list,
+    // never writes one in place, so copies may share the lists
+    private val links = mutable.ArrayBuffer.empty[Array[Array[Int]]]
     private var entryPoint = -1
     private var topLevel = -1
 
     def size: Int = vecs.length
+
+    /** Make this empty graph a copy of `src` that later inserts leave `src`
+      * untouched by: the node tables and each node's per-level array are
+      * copied; the vectors and the neighbour lists are shared. */
+    def copyFrom(src: Graph): Unit = {
+      require(size == 0 && src.dims == dims,
+        s"hnsw: copying a ${src.dims}-dim graph into a $dims-dim graph of $size nodes")
+      vecs ++= src.vecs; extIds ++= src.extIds; nodeLevels ++= src.nodeLevels
+      src.links.foreach(l => links += l.clone())
+      entryPoint = src.entryPoint; topLevel = src.topLevel
+    }
+
+    private def neighbours(n: Int, level: Int): Array[Int] =
+      if (level < links(n).length) links(n)(level) else Array.emptyIntArray
 
     /** Deterministic level: u ∈ (0,1] from the id's md5, standard
       * floor(−ln(u)·mL) geometric draw — no RNG state. */
@@ -92,8 +120,7 @@ object Hnsw {
         val (cd, c) = candidates.dequeue()
         if (cd > results.head._1 && results.size >= ef) candidates.clear()
         else {
-          val nbrs = if (level < links(c).length) links(c)(level) else mutable.ArrayBuffer.empty[Int]
-          nbrs.foreach { n =>
+          neighbours(c, level).foreach { n =>
             if (!visited(n)) {
               visited += n
               val d = sq(q, vecs(n))
@@ -117,40 +144,23 @@ object Hnsw {
       val node = vecs.length
       val level = levelOf(id)
       vecs += v; extIds += id; nodeLevels += level
-      links += Array.fill(level + 1)(mutable.ArrayBuffer.empty[Int])
+      links += Array.fill(level + 1)(Array.emptyIntArray)
       if (entryPoint < 0) { entryPoint = node; topLevel = level; return }
-      var ep = entryPoint
-      // greedy descent through layers above the node's level
-      var l = topLevel
-      while (l > level) {
-        var changed = true
-        var best = sq(v, vecs(ep))
-        while (changed) {
-          changed = false
-          val nbrs = if (l < links(ep).length) links(ep)(l) else mutable.ArrayBuffer.empty[Int]
-          nbrs.foreach { n =>
-            val d = sq(v, vecs(n))
-            if (d < best) { best = d; ep = n; changed = true }
-          }
-        }
-        l -= 1
-      }
+      var ep = descend(v, level)
       // connect on layers min(level, topLevel)..0
-      l = math.min(level, topLevel)
+      var l = math.min(level, topLevel)
       while (l >= 0) {
         val cands = searchLayer(v, ep, efConstruction, l)
         val cap = if (l == 0) maxM0 else m
-        val selected = cands.take(m).map(_._2)
-        links(node)(l) ++= selected
+        val selected = cands.take(m).map(_._2).toArray
+        links(node)(l) = selected
         selected.foreach { n =>
-          val nl = links(n)(l)
-          nl += node
-          if (nl.length > cap) {
-            // prune to the `cap` closest (simple selection, deterministic)
-            val pruned = nl.map(x => (sq(vecs(n), vecs(x)), extIds(x), x))
+          val nl = links(n)(l) :+ node
+          // prune to the `cap` closest (simple selection, deterministic)
+          links(n)(l) =
+            if (nl.length <= cap) nl
+            else nl.map(x => (sq(vecs(n), vecs(x)), extIds(x), x))
               .sortBy(t => (t._1, t._2)).take(cap).map(_._3)
-            nl.clear(); nl ++= pruned
-          }
         }
         if (cands.nonEmpty) ep = cands.head._2
         l -= 1
@@ -160,9 +170,7 @@ object Hnsw {
 
     /** Serialize every node verbatim: (node, extId, vec, level, links). */
     def dumpNodes: Seq[(Int, Long, Array[Float], Int, Array[Array[Int]])] =
-      (0 until size).map { n =>
-        (n, extIds(n), vecs(n), nodeLevels(n), links(n).map(_.toArray))
-      }
+      (0 until size).map(n => (n, extIds(n), vecs(n), nodeLevels(n), links(n)))
 
     def entry: (Int, Int) = (entryPoint, topLevel)
 
@@ -173,22 +181,22 @@ object Hnsw {
     def restoreNode(id: Long, v: Array[Float], level: Int, nbrs: Array[Array[Int]]): Unit = {
       require(v.length == dims, s"hnsw restore: vector has ${v.length} dims, graph has $dims")
       vecs += v; extIds += id; nodeLevels += level
-      links += nbrs.map(a => mutable.ArrayBuffer.from(a))
+      links += nbrs
     }
 
     def restoreEntry(ep: Int, top: Int): Unit = { entryPoint = ep; topLevel = top }
 
-    /** Greedy descent through the upper layers to the layer-0 entry. */
-    private def descendToLayer0(q: Array[Float]): Int = {
+    /** Greedy descent from the entry point through the layers above
+      * `level`: where an insert at `level`, or a search (level 0), starts. */
+    private def descend(q: Array[Float], level: Int): Int = {
       var ep = entryPoint
       var l = topLevel
-      while (l > 0) {
+      while (l > level) {
         var changed = true
         var best = sq(q, vecs(ep))
         while (changed) {
           changed = false
-          val nbrs = if (l < links(ep).length) links(ep)(l) else mutable.ArrayBuffer.empty[Int]
-          nbrs.foreach { n =>
+          neighbours(ep, l).foreach { n =>
             val d = sq(q, vecs(n))
             if (d < best) { best = d; ep = n; changed = true }
           }
@@ -214,7 +222,7 @@ object Hnsw {
     def search(q: Array[Float], k: Int, ef: Int): Seq[(Long, Long)] = {
       if (entryPoint < 0) return Seq.empty
       val effEf = math.max(ef, k)
-      val beam = searchLayer(q, descendToLayer0(q), effEf, 0)
+      val beam = searchLayer(q, descend(q, 0), effEf, 0)
       val all =
         if (effEf >= size && beam.length < size) {
           val seen = mutable.BitSet.empty
@@ -331,7 +339,7 @@ object Hnsw {
                        largeK: Int = 200, ef: Int = 200,
                        twoHop: Boolean = false): Seq[(Long, Long)] = {
       if (entryPoint < 0) return Seq.empty
-      val ep0 = descendToLayer0(q)
+      val ep0 = descend(q, 0)
       val blocked = mutable.BitSet.empty
       val unblockable = mutable.BitSet.empty
       val survivors = mutable.BitSet.empty
@@ -375,73 +383,39 @@ object Hnsw {
     }
   }
 
-  /** Distributed search: build a graph per partition (ascending-id insert),
-    * search each, merge the ≤ P·k per-partition heaps to the global top-k.
-    * `corpus` must expose (vec_id: long, embedding: array<float>).
-    * `ef <= 0` is the SATURATING sentinel: the beam widens to each
-    * partition's size, so the local result is exact at ANY sf — the
-    * setting the oracle-replayed driver entries use (a fixed ef would
-    * silently turn approximate the moment a corpus outgrows it). */
-  def searchPerPartition(corpus: DataFrame, query: Array[Float], k: Int,
-                         m: Int = 16, efConstruction: Int = 64, ef: Int = 64): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val dims = query.length
-    val perPart: Dataset[(Long, Long)] = corpus
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val g = new Graph(dims, m, efConstruction)
-          rows.foreach { case (id, v) => g.insert(id, v) }
-          g.search(query, k, if (ef > 0) ef else rows.length).iterator
-        }
-      }
-    perPart.toDF("vec_id", "score")
-      .orderBy(col("score").asc, col("vec_id").asc).limit(k)
-  }
+  // ---- sources: the per-partition builder and the persisted index ----
 
-  /** BATCHED fresh-graph search — [[searchPerPartition]] amortized over a
-    * query file: each partition builds its graph ONCE and answers every
-    * broadcast query, ≤ P·|Q|·k rows into the same per-query k-heap merge
-    * [[searchPersistedBatch]] uses. The A14d coarse-quantizer probe's
-    * batch form rides this (the centroid frame is the corpus; at 10⁶
-    * centroids per-query rebuilds would dominate the serve). */
-  def searchPerPartitionBatch(corpus: DataFrame, queries: Seq[(Long, Array[Float])],
-                              k: Int, m: Int = 16, efConstruction: Int = 64,
-                              ef: Int = 64): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, posexplode}
-    val qb = spark.sparkContext.broadcast(queries)
-    val perPart: Dataset[(Long, Long, Long)] = corpus
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
+  /** `walk(graph, passes)` over one graph per non-empty partition of
+    * `corpus`, built by inserting the partition's rows in ascending vec_id
+    * order — the graph [[buildAndWrite]] persists for that partition, so a
+    * fresh walk equals the same walk over the restored index. `corpus`
+    * exposes (vec_id, embedding) and, when `filtered`, the boolean `pass`
+    * that `passes` tests; unfiltered walks pass every id. A graph is as wide
+    * as its partition's first row. */
+  private def perPartition[T: Encoder](corpus: DataFrame, filtered: Boolean, m: Int,
+                                       efConstruction: Int, maxRows: Int = Int.MaxValue)
+                                      (walk: (Graph, Long => Boolean) => IterableOnce[T]): Dataset[T] =
+    corpus
+      .select(col("vec_id").cast("long"), col("embedding"),
+        if (filtered) col("pass").cast("boolean") else lit(true))
+      .as[(Long, Array[Float], Boolean)]
       .mapPartitions { it =>
         val rows = it.toArray.sortBy(_._1)
+        require(rows.length <= maxRows,
+          s"hnsw: partition ${org.apache.spark.TaskContext.getPartitionId()} holds " +
+            s"${rows.length} rows > maxRowsPerGraph=$maxRows; the whole partition is " +
+            "materialized in executor memory to build its graph — " +
+            "repartition the corpus to more partitions (raise numParts) " +
+            "or raise the knob if the executors have the headroom")
         if (rows.isEmpty) Iterator.empty
         else {
-          val dims = rows.head._2.length
-          val g = new Graph(dims, m, efConstruction)
-          rows.foreach { case (id, v) => g.insert(id, v) }
-          qb.value.iterator.flatMap { case (qid, qv) =>
-            require(qv.length == dims,
-              s"hnsw query $qid has ${qv.length} dims, corpus has $dims")
-            g.search(qv, k, if (ef > 0) ef else rows.length)
-              .map { case (id, s) => (qid, id, s) }
-          }
+          val g = new Graph(rows.head._2.length, m, efConstruction)
+          rows.foreach { case (id, v, _) => g.insert(id, v) }
+          val passes: Long => Boolean =
+            if (filtered) rows.iterator.collect { case (id, _, true) => id }.toSet else _ => true
+          walk(g, passes).iterator
         }
       }
-    perPart.toDF("q_id", "vec_id", "score")
-      .groupBy("q_id")
-      .agg(graft.functions.aggs.topK(col("score"), col("vec_id"), k, asc = true).as("hits"))
-      .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(col("q_id"), col("hit.id").as("vec_id"),
-        (col("pos") + 1).cast("long").as("rank"), col("hit.score").as("score"))
-  }
 
   /** The persisted-index EXPORT CONTRACT version. The on-disk parquet is
     * the hand-off artifact an external serving engine (FAISS / Milvus /
@@ -490,9 +464,9 @@ object Hnsw {
     * same partitioning always yields the same graphs) and serializes every
     * node — vectors, levels, adjacency, entry point — as one flat parquet
     * table. Query-time cost then starts at the GRAPH, not at insertion:
-    * searchPersisted restores nodes verbatim (no re-insertion, no neighbor
-    * recomputation) and runs the same beam search `searchPerPartition`
-    * would. */
+    * the registry restores nodes verbatim (no re-insertion, no neighbor
+    * recomputation) and its readers run the same walks the fresh readers
+    * run. */
   /** `maxRowsPerGraph` guards the per-partition materialization: each
     * graph is built over `it.toArray`, i.e. the WHOLE partition resident
     * in one executor's heap (vectors + adjacency ≈ rows·(4·dims + 16·m)
@@ -504,81 +478,85 @@ object Hnsw {
 
   def buildAndWrite(corpus: DataFrame, path: String, dims: Int, numParts: Int,
                     m: Int = 16, efConstruction: Int = 64,
-                    maxRowsPerGraph: Int = DefaultMaxRowsPerGraph): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    // cast BEFORE partitioning: the append/filtered serving paths replay
-    // this assignment as pmod(hash(vec_id AS BIGINT), numParts), and
-    // Murmur3 hashes INT and BIGINT differently — partitioning on a raw
-    // int column would route arrivals to the wrong graphs
-    corpus
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .repartition(numParts, col("vec_id"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val part = org.apache.spark.TaskContext.getPartitionId()
-        val rows = it.toArray.sortBy(_._1)
-        require(rows.length <= maxRowsPerGraph,
-          s"hnsw buildAndWrite: partition $part holds ${rows.length} rows > " +
-            s"maxRowsPerGraph=$maxRowsPerGraph; the whole partition is " +
-            "materialized in executor memory to build its graph — " +
-            "repartition the corpus to more partitions (raise numParts) " +
-            "or raise the knob if the executors have the headroom")
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val g = new Graph(dims, m, efConstruction)
-          rows.foreach { case (id, v) => g.insert(id, v) }
-          val (ep, top) = g.entry
-          g.dumpNodes.iterator.map { case (n, id, v, lvl, nbrs) =>
-            PersistedNode(part, n, id, v, lvl, nbrs, ep, top)
-          }
-        }
+                    maxRowsPerGraph: Int = DefaultMaxRowsPerGraph): Unit =
+    // cast BEFORE partitioning: `partOf` replays this assignment on the
+    // long form, and Murmur3 hashes INT and BIGINT differently —
+    // partitioning on a raw int column would route ids to the wrong graphs
+    perPartition(corpus.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+        .repartition(numParts, col("vec_id")), filtered = false, m, efConstruction,
+        maxRowsPerGraph) { (g, _) =>
+      require(g.dims == dims, s"hnsw buildAndWrite: the corpus has ${g.dims} dims, dims = $dims")
+      val part = org.apache.spark.TaskContext.getPartitionId()
+      val (ep, top) = g.entry
+      g.dumpNodes.iterator.map { case (n, id, v, lvl, nbrs) =>
+        PersistedNode(part, n, id, v, lvl, nbrs, ep, top)
       }
-      .write.mode("overwrite").parquet(path)
-  }
+    }.write.mode("overwrite").parquet(path)
 
   /** Rebuild one part's graph from its dumped nodes verbatim — no
     * re-insertion, no neighbor recomputation — so a restored graph is
-    * bit-identical to the built one. `m` and `efConstruction` only matter
-    * to later inserts. */
-  private def restoreGraph(rows: Seq[PersistedNode], m: Int = 16,
-                           efConstruction: Int = 64): Graph = {
+    * bit-identical to the built one. */
+  private def restoreGraph(rows: Seq[PersistedNode]): Graph = {
     checkVersion(rows.head)
     val sorted = rows.sortBy(_.node)
-    val g = new Graph(sorted.head.vec.length, m, efConstruction)
+    val g = new Graph(sorted.head.vec.length, 16, 64)
     sorted.foreach(r => g.restoreNode(r.ext_id, r.vec, r.level, r.links))
     g.restoreEntry(sorted.head.ep, sorted.head.top)
     g
   }
 
   /** The graph an id belongs to: the build's `repartition(numParts,
-    * vec_id)` assignment, `pmod(hash(vec_id AS BIGINT), numParts)`. */
+    * vec_id)` assignment, Spark's Murmur3 hash (seed 42) of the BIGINT id
+    * modulo numParts. The one runtime copy of the rule. */
   private def partOf(id: Long, numParts: Int): Int =
     Math.floorMod(Murmur3_x86_32.hashLong(id, 42), numParts)
 
-  // a wrong-width query must fail loudly, not compute truncated distances
-  private def requireDims(g: Graph, q: Array[Float], what: String = "hnsw query"): Unit =
-    require(q.length == g.dims, s"$what has ${q.length} dims, persisted index has ${g.dims}")
+  // ---- walks: one graph's hits, the same on every source ----
 
-  /** (budget, return cut, beam) of a filtered walk over `n` nodes.
-    * `metaSearch <= 0` saturates: all three >= n (+10 so the budget's
-    * stepping cannot overshoot an exact cap). */
-  private def walkSettings(n: Int, metaSearch: Int, largeK: Int, ef: Int): (Int, Int, Int) =
-    if (metaSearch > 0) (metaSearch, largeK, ef)
-    else (n + 10, math.max(largeK, n), math.max(ef, n))
+  // a wrong-width query must fail loudly, not compute truncated distances
+  private def requireDims(g: Graph, q: Array[Float], what: String): Unit =
+    require(q.length == g.dims, s"$what has ${q.length} dims, the index has ${g.dims}")
+
+  /** The top-k of `q` by a beam of `ef`; `ef <= 0` is the SATURATING
+    * sentinel: the beam widens to the graph's size, so the result is exact
+    * at ANY sf — the setting the oracle-replayed driver entries use (a
+    * fixed ef would silently turn approximate the moment a corpus outgrows
+    * it). */
+  private def nearest(g: Graph, q: Array[Float], k: Int, ef: Int,
+                      what: String = "hnsw query"): Seq[(Long, Long)] = {
+    requireDims(g, q, what)
+    g.search(q, k, if (ef > 0) ef else g.size)
+  }
+
+  /** The ACORN walk of `q` over the ids `passes` admits. `metaSearch <= 0`
+    * saturates: budget, return cut and beam all >= the graph's size (+10
+    * so the budget's stepping cannot overshoot an exact cap). */
+  private def acorn(g: Graph, q: Array[Float], k: Int, passes: Long => Boolean,
+                    metaSearch: Int, ef: Int, largeK: Int, twoHop: Boolean = false,
+                    what: String = "hnsw query"): Seq[(Long, Long)] = {
+    requireDims(g, q, what)
+    val (ms, lk, e) =
+      if (metaSearch > 0) (metaSearch, largeK, ef)
+      else (g.size + 10, math.max(largeK, g.size), math.max(ef, g.size))
+    g.searchFiltered(q, k, passes, ms, lk, e, twoHop)
+  }
+
+  /** `walk(q_id, q)` per query, its hits tagged with the query id. */
+  private def each(queries: Seq[(Long, Array[Float])])
+                  (walk: (Long, Array[Float]) => Seq[(Long, Long)]): Iterator[(Long, Long, Long)] =
+    queries.iterator.flatMap { case (qid, qv) => walk(qid, qv).map { case (id, s) => (qid, id, s) } }
 
   // ---- resident serving: each persisted index's graphs restored once ----
   //
   // A restore rebuilds the graphs verbatim (`restoreGraph`) in one job.
   // Below the driver-memory budget (`DriverResident.budget`, against the
   // graphs' in-memory bytes) they are then collected to the driver, and the
-  // four registry readers walk them there when called: the filtered ones
-  // run one single-stage job, the collect of the passing ids, and the
-  // unfiltered ones none. Above the budget the graphs stay in a persisted
-  // RDD and the readers return lazy frames, the filtered ones routing the
-  // passing ids to the graphs' partitions. Both sides walk with the same
-  // `walkSettings`, guards and (score, id) merge.
+  // five registry readers walk them there when called: the routed ones
+  // (filtered walks and appends) run one single-stage job, the collect of
+  // the passing ids or the arriving rows, and the others none. Above the
+  // budget the graphs stay in a persisted RDD and the readers return lazy
+  // frames, the routed ones sending their rows to the graphs' partitions.
+  // Both sides run the same walks and merges.
 
   /** One restored graph: its part, the nodes of the part that `partOf` puts
     * elsewhere, and its in-memory size. */
@@ -587,7 +565,7 @@ object Hnsw {
     * else `numParts` Spark partitions persisted MEMORY_ONLY, graph part p in
     * partition p (`Right`). */
   private final case class Resident(sc: SparkContext, listing: Seq[(String, Long, Long)],
-                                    graphs: Either[Seq[Graph], RDD[Restored]],
+                                    graphs: Either[Seq[Restored], RDD[Restored]],
                                     misrouted: Long)
   /** keyed by (index path, numParts) */
   private val registry = mutable.HashMap.empty[(String, Int), Resident]
@@ -640,30 +618,28 @@ object Hnsw {
         drop(key)
         throw new IllegalArgumentException(
           s"hnsw persisted index at $path: ${r.misrouted} nodes sit in a graph other " +
-            s"than pmod(hash(ext_id), ${key._2}) — the index was built with a " +
-            "different numParts, and passing ids would be routed to the wrong " +
+            s"than the one numParts = ${key._2} assigns them — the index was built with a " +
+            "different numParts, and routed rows would reach the wrong " +
             "graphs; search with the numParts the index was built with")
       }
       r
     }
 
-  private def partCount(spark: SparkSession, path: String): Int = {
-    import org.apache.spark.sql.functions.{col, max}
+  private def partCount(spark: SparkSession, path: String): Int =
     Option(spark.read.parquet(path).agg(max(col("part"))).head.get(0))
       .fold(1)(_.asInstanceOf[Int] + 1)
-  }
 
-  /** In-memory bytes of a restored node: its float vector, and per layer an
-    * `ArrayBuffer` of boxed neighbour ids (about 20 bytes a link). */
+  /** In-memory bytes of a restored node: its float vector (16 + 4·dims), its
+    * boxed id (24), its four buffer slots (16), its per-level array (16 + 4 a
+    * level) and per level an `Array[Int]` of neighbour ids (16 + 4 a link). */
   private def nodeBytes(r: PersistedNode): Long =
-    64L + 4L * r.vec.length + r.links.iterator.map(l => 56L + 20L * l.length).sum
+    72L + 4L * r.vec.length + r.links.iterator.map(l => 20L + 4L * l.length).sum
 
   /** Restore the index's graphs in one job, graph part p in partition p,
     * sizing them and counting misrouted nodes as they restore. Graphs
     * within the driver budget are then collected to the driver and the RDD
     * released; larger ones stay persisted. */
   private def loadResident(spark: SparkSession, path: String, numParts: Int): Resident = {
-    import spark.implicits._
     // listed before the read, so an overwrite racing the restore re-lists
     val files = listing(spark.sparkContext, path).getOrElse(Nil)
     val graphs = spark.read.parquet(path).as[PersistedNode].rdd
@@ -679,227 +655,119 @@ object Hnsw {
         .fold((0L, 0L)) { case ((m1, b1), (m2, b2)) => (m1 + m2, b1 + b2) }
       if (bytes > DriverResident.budget) Resident(spark.sparkContext, files, Right(graphs), misrouted)
       else {
-        val local = graphs.map(_.graph).collect().toSeq
+        val local = graphs.collect().toSeq
         graphs.unpersist(blocking = false)
         Resident(spark.sparkContext, files, Left(local), misrouted)
       }
     } catch { case e: Throwable => graphs.unpersist(blocking = false); throw e }
   }
 
-  /** `passing` ids (a `vec_id` column), each in the partition of the graph
-    * that holds it: only the ids cross the shuffle. */
-  private def route(passing: DataFrame, numParts: Int): RDD[(Int, Long)] =
-    passingIds(passing).rdd
-      .map(id => (partOf(id, numParts), id)).partitionBy(new HashPartitioner(numParts))
+  /** Rows each walked with the graph that holds their `id` under the
+    * build's `numParts` (`partOf`); on the driver they are read by one job
+    * tagged `entry:exec:op`. */
+  private final case class Routed[R](rows: Dataset[R], id: R => Long, numParts: Int, op: String)
 
-  private def passingIds(passing: DataFrame): Dataset[Long] = {
-    val spark = passing.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    passing.select(col("vec_id").cast("long")).filter(col("vec_id").isNotNull).as[Long]
-  }
+  /** the rows of a reader that routes none */
+  private val Unrouted = Option.empty[Routed[Long]]
 
-  /** `walk(graph, passes)` over every resident graph of the index at `path`.
-    * On the driver, `passes` tests the `passing` ids, collected in one
-    * single-stage job; in the graphs' partitions, it tests the ids routed
-    * there. Unfiltered readers pass no `passing` and ignore `passes`. */
-  private def walked[T: ClassTag](spark: SparkSession, path: String,
-                                  passing: Option[(DataFrame, Int)], entry: String)
-                                 (walk: (Graph, Long => Boolean) => IterableOnce[T])
-      : Either[Seq[T], RDD[T]] =
-    resident(spark, path, passing.map(_._2), entry).graphs match {
-      case Left(gs) =>
-        val passes: Long => Boolean = passing.fold[Long => Boolean](_ => true) { case (p, _) =>
-          DriverResident.tagged(spark.sparkContext, s"$entry:exec:passing_ids")(
-            passingIds(p).collect().toSet)
+  private def passingIds(passing: DataFrame, numParts: Int): Routed[Long] =
+    Routed(passing.select(col("vec_id").cast("long")).filter(col("vec_id").isNotNull)
+      .as(Encoders.scalaLong), (id: Long) => id, numParts, "passing_ids")
+
+  /** `walk(graph, rows)` over every resident graph of the index at `path`,
+    * `rows` being the `routed` rows of the graph's part — and over every
+    * part that rows reach but no graph holds, as `walk(None, rows)`. On the
+    * driver the rows are collected in one single-stage job and the walks
+    * run concurrently, one per part, as the partitions' walks do; in the
+    * graphs' partitions the rows are routed there, only they crossing the
+    * shuffle. Readers that route nothing pass `Unrouted` and get no rows. */
+  private def walked[R: ClassTag, T: Encoder: ClassTag](spark: SparkSession, path: String,
+                                                        entry: String, routed: Option[Routed[R]])
+                                                       (walk: (Option[Graph], Seq[R]) => IterableOnce[T])
+      : Either[Seq[T], Dataset[T]] =
+    resident(spark, path, routed.map(_.numParts), entry).graphs match {
+      case Left(restored) =>
+        val rows = routed.fold(Map.empty[Int, Seq[R]]) { r =>
+          DriverResident.tagged(spark.sparkContext, s"$entry:exec:${r.op}")(r.rows.collect().toSeq)
+            .groupBy(x => partOf(r.id(x), r.numParts))
         }
-        // one walk per graph, run concurrently as the partitions' walks are
+        val graphs = restored.map(g => g.part -> g.graph).toMap
         implicit val ec: ExecutionContext = ExecutionContext.global
-        Left(Await.result(Future.traverse(gs) { g =>
-          Future(walk(g, passes).iterator.toSeq)
+        Left(Await.result(Future.traverse((graphs.keySet ++ rows.keySet).toSeq.sorted) { p =>
+          Future(walk(graphs.get(p), rows.getOrElse(p, Nil)).iterator.toSeq)
         }, Duration.Inf).flatten)
-      case Right(rdd) => Right(passing match {
-        case Some((p, numParts)) => rdd.zipPartitions(route(p, numParts)) { (gs, ids) =>
-          val ok = ids.map(_._2).toSet
-          gs.flatMap(r => walk(r.graph, ok))
-        }
-        case None => rdd.flatMap(r => walk(r.graph, _ => true))
-      })
+      case Right(rdd) => Right(spark.createDataset(routed match {
+        case Some(r) =>
+          val (id, numParts) = (r.id, r.numParts)
+          val sent = r.rows.rdd.map(x => (partOf(id(x), numParts), x))
+            .partitionBy(new HashPartitioner(numParts))
+          rdd.zipPartitions(sent) { (gs, rs) =>
+            val rows = rs.map(_._2).toSeq
+            val graphs = gs.map(g => Option(g.graph)).toSeq
+            (if (graphs.isEmpty && rows.nonEmpty) Seq(None) else graphs).iterator
+              .flatMap(walk(_, rows))
+          }
+        case None => rdd.flatMap(g => walk(Some(g.graph), Nil))
+      }))
     }
 
-  /** The global top-k of (vec_id, score) hits by (score, vec_id). */
-  private def topHits(spark: SparkSession, hits: Either[Seq[(Long, Long)], RDD[(Long, Long)]],
-                      k: Int): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
+  // ---- merges: the global top-k, and the per-query top-k ----
+
+  /** The global top-k of (vec_id, score) hits by (score, vec_id): on the
+    * driver, or through TakeOrdered over a frame of ≤ P·k rows. */
+  private def topHits(spark: SparkSession, hits: Either[Seq[(Long, Long)], Dataset[(Long, Long)]],
+                      k: Int): DataFrame =
     hits match {
-      case Left(hs) => hs.sortBy { case (id, s) => (s, id) }.take(k).toDF("vec_id", "score")
-      case Right(rdd) =>
-        rdd.toDF("vec_id", "score").orderBy(col("score").asc, col("vec_id").asc).limit(k)
+      case Left(hs) =>
+        spark.createDataset(hs.sortBy { case (id, s) => (s, id) }.take(k)).toDF("vec_id", "score")
+      case Right(ds) => ds.toDF("vec_id", "score").orderBy(col("score").asc, col("vec_id").asc).limit(k)
     }
-  }
 
   /** Per-query top-k of (q_id, vec_id, score) hits by (score, vec_id) as
     * (q_id, vec_id, rank, score): on the driver, or through the k-heap merge
     * batchKnn uses, ≤ P·|Q|·k rows in. */
   private def topHitsPerQuery(spark: SparkSession,
-                              hits: Either[Seq[(Long, Long, Long)], RDD[(Long, Long, Long)]],
-                              k: Int): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, posexplode}
+                              hits: Either[Seq[(Long, Long, Long)], Dataset[(Long, Long, Long)]],
+                              k: Int): DataFrame =
     hits match {
       case Left(hs) =>
-        hs.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, h) =>
+        spark.createDataset(hs.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, h) =>
           h.map { case (_, id, s) => (s, id) }.sorted.take(k).zipWithIndex
             .map { case ((s, id), i) => (q, id, i + 1L, s) }
-        }.toDF("q_id", "vec_id", "rank", "score")
-      case Right(rdd) =>
-        rdd.toDF("q_id", "vec_id", "score")
+        }).toDF("q_id", "vec_id", "rank", "score")
+      case Right(ds) =>
+        ds.toDF("q_id", "vec_id", "score")
           .groupBy("q_id")
           .agg(graft.functions.aggs.topK(col("score"), col("vec_id"), k, asc = true).as("hits"))
           .select(col("q_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
           .select(col("q_id"), col("hit.id").as("vec_id"),
             (col("pos") + 1).cast("long").as("rank"), col("hit.score").as("score"))
     }
-  }
 
-  /** Search every persisted graph and merge to the global top-k. The
-    * graphs are the resident ones, restored verbatim, so results equal
-    * searching the freshly built graphs. */
-  def searchPersisted(spark: SparkSession, path: String, query: Array[Float],
-                      k: Int, ef: Int = 64): DataFrame =
-    topHits(spark, walked(spark, path, None, "searchPersisted") { (g, _) =>
-      requireDims(g, query)
-      g.search(query, k, if (ef > 0) ef else g.size)
-    }, k)
+  // ---- readers: a source, a walk and a merge each ----
 
-  /** BATCHED serving from the persisted index — the reference's evaluation
-    * loop (acorn.py __main__: one index, a whole query file): every
-    * resident graph answers the whole query set, and the merge carries
-    * ≤ P·|Q|·k rows. */
-  def searchPersistedBatch(spark: SparkSession, path: String,
-                           queries: Seq[(Long, Array[Float])], k: Int,
-                           ef: Int = 64): DataFrame =
-    topHitsPerQuery(spark, walked(spark, path, None, "searchPersistedBatch") { (g, _) =>
-      queries.iterator.flatMap { case (qid, qv) =>
-        requireDims(g, qv, s"hnsw query $qid")
-        g.search(qv, k, if (ef > 0) ef else g.size).map { case (id, s) => (qid, id, s) }
-      }
-    }, k)
+  /** Distributed search: build a graph per partition (ascending-id insert),
+    * search each, merge the ≤ P·k per-partition heaps to the global top-k.
+    * `corpus` must expose (vec_id: long, embedding: array<float>).
+    * `ef <= 0` is the saturating sentinel (see `nearest`). */
+  def searchPerPartition(corpus: DataFrame, query: Array[Float], k: Int,
+                         m: Int = 16, efConstruction: Int = 64, ef: Int = 64): DataFrame =
+    topHits(corpus.sparkSession, Right(perPartition(corpus, filtered = false, m, efConstruction)(
+      (g, _) => nearest(g, query, k, ef))), k)
 
-  /** APPEND while serving — A30's graph form (the reference add_items()s
-    * into a live index, acorn.py:61): restore the persisted graphs, insert
-    * the arriving rows per partition, search. Arriving rows route to their
-    * graph by replaying the build's hash partitioning (`pmod(hash(vec_id),
-    * numParts)` IS HashPartitioning's assignment), and appending preserves
-    * the ascending-id insertion discipline — when arriving ids exceed the
-    * indexed ids (the ingest case), the appended graph is BIT-IDENTICAL to
-    * a fresh full-corpus build under the same partitioning (spec-proved).
-    * The inserts mutate the graphs, so every call restores its own copy:
-    * cogroup co-partitions graphs and arrivals in one shuffle of the
-    * (tiny) arriving side plus the node table. */
-  def searchAppended(spark: SparkSession, path: String, arriving: DataFrame,
-                     numParts: Int, query: Array[Float], k: Int, ef: Int = 64,
-                     m: Int = 16, efConstruction: Int = 64): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    val nodes = spark.read.parquet(path).as[PersistedNode]
-    val arr = arriving.select(
-        // hash the CAST column: Murmur3 over int vs long differs, and the
-        // build partitioned on the long form
-        pmod(hash(col("vec_id").cast("long")), lit(numParts)).cast("int").as("part"),
-        col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .as[(Int, Long, Array[Float])]
-    val perPart = nodes.groupByKey(_.part).cogroup(arr.groupByKey(_._1)) {
-      (_, ns, as) =>
-        val nodeRows = ns.toSeq
-        val g =
-          if (nodeRows.isEmpty) new Graph(query.length, m, efConstruction)
-          else restoreGraph(nodeRows, m, efConstruction)
-        requireDims(g, query)
-        as.toArray.sortBy(_._2).foreach { case (_, id, v) => g.insert(id, v) }
-        if (g.size == 0) Iterator.empty
-        else g.search(query, k, if (ef > 0) ef else g.size).iterator
-    }
-    perPart.toDF("vec_id", "score")
-      .orderBy(col("score").asc, col("vec_id").asc).limit(k)
-  }
-
-  /** ACORN against the PERSISTED index — the reference's actual serving
-    * path (one filter-agnostic index on disk, acorn.py:61; every filtered
-    * query walks it, acorn.py:149). The predicate is evaluated
-    * relationally at query time and only its passing ids reach the walks,
-    * so ONE persisted index serves every predicate — the whole point of
-    * ACORN vs per-predicate indexes. `numParts` must be the build's. */
-  def searchFilteredPersisted(spark: SparkSession, path: String, passing: DataFrame,
-                              numParts: Int, query: Array[Float], k: Int,
-                              metaSearch: Int, ef: Int = 200, largeK: Int = 200): DataFrame =
-    topHits(spark, walked(spark, path, Some((passing, numParts)), "searchFilteredPersisted") {
-      (g, passes) =>
-        requireDims(g, query)
-        val (ms, lk, e) = walkSettings(g.size, metaSearch, largeK, ef)
-        g.searchFiltered(query, k, passes, ms, lk, e)
-    }, k)
-
-  /** BATCHED ACORN against the persisted index — the reference's README §3
-    * evaluation loop (one filter-agnostic index, a whole query file per
-    * selectivity class, acorn.py:296-302): the passing ids are read once,
-    * as in searchFilteredPersisted, and every query walks the resident
-    * graphs; the merge carries ≤ P·|Q|·k rows into the per-query k-heap. */
-  def searchFilteredPersistedBatch(spark: SparkSession, path: String, passing: DataFrame,
-                                   numParts: Int, queries: Seq[(Long, Array[Float])], k: Int,
-                                   metaSearch: Int, ef: Int = 200, largeK: Int = 200): DataFrame =
-    topHitsPerQuery(spark, walked(spark, path, Some((passing, numParts)),
-        "searchFilteredPersistedBatch") { (g, passes) =>
-      val (ms, lk, e) = walkSettings(g.size, metaSearch, largeK, ef)
-      queries.iterator.flatMap { case (qid, qv) =>
-        requireDims(g, qv, s"hnsw query $qid")
-        g.searchFiltered(qv, k, passes, ms, lk, e).map { case (id, sc) => (qid, id, sc) }
-      }
-    }, k)
-
-  /** The whole (budget × twoHop) GRID of filtered walks in ONE pass —
-    * [[searchFilteredPerPartition]] amortized over a settings sweep (the
-    * A51 recall-curve entry: 5 budgets × 2 flags would otherwise rebuild
-    * every per-partition graph 10 times; construction is deterministic,
-    * so one build serves every cell with results identical to the
-    * per-call form — spec-pinned). Output: (budget, two_hop, vec_id,
-    * score), per-cell global top-k via the k-heap merge. budget <= 0 is
-    * the saturating sentinel, as everywhere. */
-  def searchFilteredPerPartitionSweep(corpus: DataFrame, query: Array[Float], k: Int,
-                                      settings: Seq[(Int, Boolean)], m: Int = 16,
-                                      efConstruction: Int = 64, ef: Int = 200,
-                                      largeK: Int = 200): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, posexplode}
-    val dims = query.length
-    val sb = spark.sparkContext.broadcast(settings)
-    val perPart: Dataset[(Int, Boolean, Long, Long)] = corpus
-      .select(col("vec_id").cast("long"), col("embedding"), col("pass").cast("boolean"))
-      .as[(Long, Array[Float], Boolean)]
-      .mapPartitions { it =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val passing = rows.iterator.collect { case (id, _, true) => id }.toSet
-          val g = new Graph(dims, m, efConstruction)
-          rows.foreach { case (id, v, _) => g.insert(id, v) }
-          sb.value.iterator.flatMap { case (budget, twoHop) =>
-            val (ms, lk, e) = walkSettings(rows.length, budget, largeK, ef)
-            g.searchFiltered(query, k, passing, ms, lk, e, twoHop)
-              .map { case (id, s) => (budget, twoHop, id, s) }
-          }
-        }
-      }
-    perPart.toDF("budget", "two_hop", "vec_id", "score")
-      .groupBy("budget", "two_hop")
-      .agg(graft.functions.aggs.topK(col("score"), col("vec_id"), k, asc = true).as("hits"))
-      .select(col("budget").cast("long").as("budget"), col("two_hop"),
-        posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(col("budget"), col("two_hop"), col("hit.id").as("vec_id"),
-        col("hit.score").as("score"))
-  }
+  /** BATCHED fresh-graph search — [[searchPerPartition]] amortized over a
+    * query file: each partition builds its graph ONCE and answers every
+    * query, ≤ P·|Q|·k rows into the same per-query k-heap merge
+    * [[searchPersistedBatch]] uses. The A14d coarse-quantizer probe's
+    * batch form rides this (the centroid frame is the corpus; at 10⁶
+    * centroids per-query rebuilds would dominate the serve). */
+  def searchPerPartitionBatch(corpus: DataFrame, queries: Seq[(Long, Array[Float])],
+                              k: Int, m: Int = 16, efConstruction: Int = 64,
+                              ef: Int = 64): DataFrame =
+    topHitsPerQuery(corpus.sparkSession, Right(perPartition(corpus, filtered = false, m,
+        efConstruction) { (g, _) =>
+      each(queries)((qid, qv) => nearest(g, qv, k, ef, s"hnsw query $qid"))
+    }), k)
 
   /** Distributed ACORN-1: one predicate-aware graph walk per partition.
     * `corpus` must expose (vec_id: long, embedding: array<float>,
@@ -918,26 +786,109 @@ object Hnsw {
   def searchFilteredPerPartition(corpus: DataFrame, query: Array[Float], k: Int,
                                  metaSearch: Int, m: Int = 16, efConstruction: Int = 64,
                                  ef: Int = 200, largeK: Int = 200,
-                                 twoHop: Boolean = false): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val dims = query.length
-    val perPart: Dataset[(Long, Long)] = corpus
-      .select(col("vec_id").cast("long"), col("embedding"), col("pass").cast("boolean"))
-      .as[(Long, Array[Float], Boolean)]
-      .mapPartitions { it =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val passing = rows.iterator.collect { case (id, _, true) => id }.toSet
-          val g = new Graph(dims, m, efConstruction)
-          rows.foreach { case (id, v, _) => g.insert(id, v) }
-          val (ms, lk, e) = walkSettings(rows.length, metaSearch, largeK, ef)
-          g.searchFiltered(query, k, passing, ms, lk, e, twoHop).iterator
-        }
+                                 twoHop: Boolean = false): DataFrame =
+    topHits(corpus.sparkSession, Right(perPartition(corpus, filtered = true, m, efConstruction)(
+      (g, passes) => acorn(g, query, k, passes, metaSearch, ef, largeK, twoHop))), k)
+
+  /** The whole (budget × twoHop) GRID of filtered walks in ONE pass —
+    * [[searchFilteredPerPartition]] amortized over a settings sweep (the
+    * A51 recall-curve entry: 5 budgets × 2 flags would otherwise rebuild
+    * every per-partition graph 10 times; construction is deterministic,
+    * so one build serves every cell with results identical to the
+    * per-call form — spec-pinned). Output: (budget, two_hop, vec_id,
+    * score), per-cell global top-k through the per-query merge, keyed by
+    * the cell's index in `settings`. budget <= 0 is the saturating
+    * sentinel, as everywhere. */
+  def searchFilteredPerPartitionSweep(corpus: DataFrame, query: Array[Float], k: Int,
+                                      settings: Seq[(Int, Boolean)], m: Int = 16,
+                                      efConstruction: Int = 64, ef: Int = 200,
+                                      largeK: Int = 200): DataFrame = {
+    val cell = (col("q_id") + 1).cast("int")
+    topHitsPerQuery(corpus.sparkSession, Right(perPartition(corpus, filtered = true, m,
+        efConstruction) { (g, passes) =>
+      settings.iterator.zipWithIndex.flatMap { case ((budget, twoHop), i) =>
+        acorn(g, query, k, passes, budget, ef, largeK, twoHop).map { case (id, s) => (i.toLong, id, s) }
       }
-    perPart.toDF("vec_id", "score")
-      .orderBy(col("score").asc, col("vec_id").asc).limit(k)
+    }), k).select(element_at(typedLit(settings.map(_._1.toLong)), cell).as("budget"),
+      element_at(typedLit(settings.map(_._2)), cell).as("two_hop"), col("vec_id"), col("score"))
   }
+
+  /** Search every persisted graph and merge to the global top-k. The
+    * graphs are the resident ones, restored verbatim, so results equal
+    * searching the freshly built graphs. */
+  def searchPersisted(spark: SparkSession, path: String, query: Array[Float],
+                      k: Int, ef: Int = 64): DataFrame =
+    topHits(spark, walked(spark, path, "searchPersisted", Unrouted) { (g, _) =>
+      g.iterator.flatMap(nearest(_, query, k, ef))
+    }, k)
+
+  /** BATCHED serving from the persisted index — the reference's evaluation
+    * loop (acorn.py __main__: one index, a whole query file): every
+    * resident graph answers the whole query set, and the merge carries
+    * ≤ P·|Q|·k rows. */
+  def searchPersistedBatch(spark: SparkSession, path: String,
+                           queries: Seq[(Long, Array[Float])], k: Int,
+                           ef: Int = 64): DataFrame =
+    topHitsPerQuery(spark, walked(spark, path, "searchPersistedBatch", Unrouted) { (g, _) =>
+      g.iterator.flatMap(g => each(queries)((qid, qv) => nearest(g, qv, k, ef, s"hnsw query $qid")))
+    }, k)
+
+  /** APPEND while serving — A30's graph form (the reference add_items()s
+    * into a live index, acorn.py:61, and walks that one graph): the
+    * arriving rows route to the resident graph that holds their id
+    * (`partOf`, the build's assignment, under the build's `numParts` — any
+    * other is refused) and insert, in ascending id order, into a COPY of
+    * it, so the resident graphs stay as restored and every call appends
+    * its own arrivals; a part no graph holds starts an empty one. When the
+    * arriving ids exceed the indexed ids (the ingest case), the appended
+    * graph is BIT-IDENTICAL to a fresh full-corpus build under the same
+    * partitioning (spec-proved). The walk and the merge are
+    * [[searchPersisted]]'s. */
+  def searchAppended(spark: SparkSession, path: String, arriving: DataFrame,
+                     numParts: Int, query: Array[Float], k: Int, ef: Int = 64,
+                     m: Int = 16, efConstruction: Int = 64): DataFrame = {
+    val rows = Routed(arriving.select(col("vec_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])], (r: (Long, Array[Float])) => r._1, numParts, "arriving")
+    topHits(spark, walked(spark, path, "searchAppended", Some(rows)) { (graph, arrivals) =>
+      graph.foreach(requireDims(_, query, "hnsw query"))
+      val g = graph.filter(_ => arrivals.isEmpty).getOrElse {
+        val appended = new Graph(query.length, m, efConstruction)
+        graph.foreach(appended.copyFrom)
+        arrivals.sortBy(_._1).foreach { case (id, v) => appended.insert(id, v) }
+        appended
+      }
+      nearest(g, query, k, ef)
+    }, k)
+  }
+
+  /** ACORN against the PERSISTED index — the reference's actual serving
+    * path (one filter-agnostic index on disk, acorn.py:61; every filtered
+    * query walks it, acorn.py:149). The predicate is evaluated
+    * relationally at query time and only its passing ids reach the walks,
+    * so ONE persisted index serves every predicate — the whole point of
+    * ACORN vs per-predicate indexes. `numParts` must be the build's. */
+  def searchFilteredPersisted(spark: SparkSession, path: String, passing: DataFrame,
+                              numParts: Int, query: Array[Float], k: Int,
+                              metaSearch: Int, ef: Int = 200, largeK: Int = 200): DataFrame =
+    topHits(spark, walked(spark, path, "searchFilteredPersisted",
+        Some(passingIds(passing, numParts))) { (g, ids) =>
+      g.iterator.flatMap(acorn(_, query, k, ids.toSet, metaSearch, ef, largeK))
+    }, k)
+
+  /** BATCHED ACORN against the persisted index — the reference's README §3
+    * evaluation loop (one filter-agnostic index, a whole query file per
+    * selectivity class, acorn.py:296-302): the passing ids are read once,
+    * as in searchFilteredPersisted, and every query walks the resident
+    * graphs; the merge carries ≤ P·|Q|·k rows into the per-query k-heap. */
+  def searchFilteredPersistedBatch(spark: SparkSession, path: String, passing: DataFrame,
+                                   numParts: Int, queries: Seq[(Long, Array[Float])], k: Int,
+                                   metaSearch: Int, ef: Int = 200, largeK: Int = 200): DataFrame =
+    topHitsPerQuery(spark, walked(spark, path, "searchFilteredPersistedBatch",
+        Some(passingIds(passing, numParts))) { (g, ids) =>
+      g.iterator.flatMap { g =>
+        val passes = ids.toSet
+        each(queries)((qid, qv) =>
+          acorn(g, qv, k, passes, metaSearch, ef, largeK, what = s"hnsw query $qid"))
+      }
+    }, k)
 }

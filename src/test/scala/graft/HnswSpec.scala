@@ -214,22 +214,6 @@ class HnswSpec extends SparkSpec {
     assert(persisted.size == 10)
   }
 
-  test("append-after-restore equals the fresh full-corpus build exactly") {
-    val full = emb.select("vec_id", "embedding").repartition(4, col("vec_id"))
-    val base = emb.filter(col("vec_id") < 300).select("vec_id", "embedding")
-    val arriving = emb.filter(col("vec_id") >= 300).select("vec_id", "embedding")
-    val q = queryVec(5)
-    val path = graft.TmpDirs.path("hnsw_spec_append")
-    Hnsw.buildAndWrite(base, path, dims = 64, numParts = 4)
-    val fresh = Hnsw.searchPerPartition(full, q, 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    // within every partition the arriving ids all exceed the base ids, so
-    // restore + ascending append replays the full build's insertion order
-    val appended = Hnsw.searchAppended(spark, path, arriving, 4, q, 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(appended == fresh)
-  }
-
   test("filtered search over the persisted index equals the fresh filtered walk") {
     import graft.operators.MetaPredicate
     val pred = MetaPredicate("lang" -> ("exact", "zh"))
@@ -413,6 +397,10 @@ class HnswSpec extends SparkSpec {
       Hnsw.buildAndWrite(corpus.select("vec_id", "embedding"), p, dims = 64, numParts = 4)
       p
     }
+    /** appends: copies of the first 60 rows under new ids, so they land
+      * near the query and in every part */
+    lazy val arriving: DataFrame = corpus.filter(col("vec_id") < 60)
+      .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
     def filteredWalk(path: String, m: Map[String, (String, Any)], budget: Int,
                              numParts: Int = 4): DataFrame =
       Hnsw.searchFilteredPersisted(spark, path, passing(m), numParts, qv, K, metaSearch = budget)
@@ -594,11 +582,49 @@ class HnswSpec extends SparkSpec {
     import Serving._
     onBothSides(hnswPath) { _ =>
       assertReleases {
-        Seq(3, 8).foreach { n =>
-          val e = intercept[IllegalArgumentException](filteredWalk(hnswPath, Classes(1)._2, 0, n))
+        for (n <- Seq(3, 8); search <- Seq[Int => Any](filteredWalk(hnswPath, Classes(1)._2, 0, _),
+            Hnsw.searchAppended(spark, hnswPath, arriving, _, qv, K))) {
+          val e = intercept[IllegalArgumentException](search(n))
           assert(e.getMessage.contains("numParts"), e.getMessage)
         }
       }
+    }
+  }
+
+  test("append-after-restore equals the fresh full-corpus build exactly") {
+    val full = emb.select("vec_id", "embedding").repartition(4, col("vec_id"))
+    val base = emb.filter(col("vec_id") < 300).select("vec_id", "embedding")
+    val arriving = emb.filter(col("vec_id") >= 300).select("vec_id", "embedding")
+    val q = queryVec(5)
+    val path = graft.TmpDirs.path("hnsw_spec_append")
+    Hnsw.buildAndWrite(base, path, dims = 64, numParts = 4)
+    val fresh = Hnsw.searchPerPartition(full, q, 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // within every partition the arriving ids all exceed the base ids, so
+    // restore + ascending append replays the full build's insertion order
+    onBothSides(path) { _ =>
+      val appended = Hnsw.searchAppended(spark, path, arriving, 4, q, 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(appended == fresh)
+    }
+  }
+
+  test("appends copy the resident graphs: a later search answers as before, and nothing restores") {
+    import Serving._
+    onBothSides(hnswPath) { _ =>
+      var before, after = Seq.empty[(Long, Long)]
+      var appended = Seq.empty[Seq[(Long, Long)]]
+      val jobs = jobsOf {
+        before = rows(Hnsw.searchPersisted(spark, hnswPath, qv, K, ef = 16))
+        appended = Seq.fill(2)(rows(Hnsw.searchAppended(spark, hnswPath, arriving, 4, qv, K, ef = 16)))
+        after = rows(Hnsw.searchPersisted(spark, hnswPath, qv, K, ef = 16))
+      }
+      assert(appended(0) == appended(1), "a second append saw the first one's inserts")
+      assert(appended(0) != before && appended(0).exists(_._1 >= 100000L), "the arrivals were not searched")
+      assert(after == before, "an append changed the resident graphs")
+      val restores = jobs.flatMap(_._1).filter(_.endsWith(":build:restore")).distinct
+      assert(restores == Seq("searchPersisted:build:restore"),
+        s"only the first search may restore; restore tags: $restores")
     }
   }
 
@@ -657,7 +683,7 @@ class HnswSpec extends SparkSpec {
     }
   }
 
-  test("driver graphs and RDD graphs return identical rows from all four registry readers") {
+  test("driver graphs and RDD graphs return identical rows from all five registry readers") {
     import Serving._
     val qs = Seq(QueryId, 57L, 203L).map(id => id -> queryVec(id))
     val m = Classes(1)._2
@@ -665,7 +691,8 @@ class HnswSpec extends SparkSpec {
       Hnsw.searchPersisted(spark, hnswPath, qv, K, ef = 16),
       Hnsw.searchPersistedBatch(spark, hnswPath, qs, K, ef = 16),
       Hnsw.searchFilteredPersisted(spark, hnswPath, passing(m), 4, qv, K, metaSearch = 40),
-      Hnsw.searchFilteredPersistedBatch(spark, hnswPath, passing(m), 4, qs, K, metaSearch = 40)
+      Hnsw.searchFilteredPersistedBatch(spark, hnswPath, passing(m), 4, qs, K, metaSearch = 40),
+      Hnsw.searchAppended(spark, hnswPath, arriving, 4, qv, K, ef = 16)
     ).map(df => df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().toSeq
       .sortBy(_.toString))
     val bySide = mutable.Map.empty[Boolean, Seq[Seq[org.apache.spark.sql.Row]]]
@@ -701,6 +728,10 @@ class HnswSpec extends SparkSpec {
       val jobs = jobsOf(rows(filteredWalk(hnswPath, m, 100)))
       assert(jobs == Seq((Set("searchFilteredPersisted:exec:passing_ids"), 1)),
         s"a warmed filtered walk ran $jobs")
+      // the graphs are resident, so an append reads only its arriving rows
+      val appended = jobsOf(rows(Hnsw.searchAppended(spark, hnswPath, arriving, 4, qv, K)))
+      assert(appended == Seq((Set("searchAppended:exec:arriving"), 1)),
+        s"a warmed append ran $appended")
     } finally Hnsw.release(hnswPath)
   }
 
