@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Per-entry cost breakdown (optimization guide §1 "measure first").
   *
@@ -17,8 +18,9 @@ import org.apache.spark.sql.SparkSession
   *   - exec_sec: wall time of the noop-sink write of the final plan (the
   *     bench's timed shape).
   *   - jobs/stages/tasks and summed executor task time across both
-  *     phases (listener-collected): a large wall/task-time ratio means
-  *     scheduling + planning overhead, not compute.
+  *     phases (listener-collected, read after draining the listener
+  *     bus): a large wall/task-time ratio means scheduling + planning
+  *     overhead, not compute.
   *
   * Usage: `sbt "runMain graft.EntryProbe <entry>[,<entry>...]"` with the
   * usual SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS env; set
@@ -97,6 +99,7 @@ object EntryProbe {
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val t1 = System.nanoTime()
+      Bridge.drainListeners(spark)
       val (jobsB, stagesB, tasksB, ttB) = c.snapshot
       explainDir.foreach { d =>
         val f = new java.io.File(d, s"$name.txt")
@@ -109,8 +112,9 @@ object EntryProbe {
       val t2 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val t3 = System.nanoTime()
-      spark.sparkContext.removeSparkListener(c)
+      Bridge.drainListeners(spark)
       val (jobs, stages, tasks, tt) = c.snapshot
+      spark.sparkContext.removeSparkListener(c)
       spark.catalog.clearCache()
       import scala.jdk.CollectionConverters._
       val topJobs = c.jobWall.asScala.toSeq.sortBy(-_._2).take(8)

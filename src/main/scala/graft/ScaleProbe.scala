@@ -361,9 +361,9 @@ object ScaleProbe {
         numSub = 8, subDim = 8, numCodes = 64, shortlist = 100).count()),
       // A43 three-stage cascade funnel at probe scale: the Hamming stage
       // scans all nVecs 8-byte sign codes, sq8 touches 100 rows, floats 25
-      time("cascade_knn")(graft.operators.Cascade.search(
+      time("cascade_knn")(graft.operators.Cascade.searchWide(
         e.select("vec_id", "embedding"), qid = 7,
-        stage1 = 100, stage2 = 25, k = 10).count()),
+        stage1 = 100, stage2 = 25, k = 10, dims = 64).count()),
       // HLL distinct sketch per lang_k — must stay two map-side partial aggs
       time("hll_distinct")(Hll.estimate(Hll.sketchAgg(Hll.bucketRho(
         d.select(col("lang_k"), col("doc_id")),

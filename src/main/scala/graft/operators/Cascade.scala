@@ -78,68 +78,41 @@ object Cascade {
       s"(CASE WHEN element_at($vec, ${off + j + 1}) > 0.0D THEN ${1L << j}L ELSE 0L END)")
       .mkString(" + ")
 
-  /** Run the funnel for query `qid` over `raw` (needs `vec_id` and
-    * `embedding`; extra columns such as `label` ride through to
-    * `restrict`). Output: (vec_id, score, d8, ham), score desc. */
-  def search(raw: DataFrame, qid: Long, stage1: Int, stage2: Int, k: Int,
-             restrict: DataFrame => DataFrame = identity): DataFrame = {
-    val e = raw.selectExpr(raw.columns.toSeq ++ Seq(
-      "CAST(embedding AS ARRAY<DOUBLE>) AS v",
-      s"${bqHalf("embedding", 0)} AS lo", s"${bqHalf("embedding", 32)} AS hi"): _*)
-    val stats = calibrationAndPresence(e, Seq(qid))
-    val q = e.filter(col("vec_id") === qid)
-      .select(col("lo").as("q_lo"), col("hi").as("q_hi"),
-        col("embedding").as("q_vec"), col("v").as("qd"))
-    restrict(e.filter(col("vec_id") =!= qid))
-      .crossJoin(broadcast(q))
-      .withColumn("ham",
-        expr("CAST(bit_count(lo ^ q_lo) + bit_count(hi ^ q_hi) AS BIGINT)"))
-      .orderBy(col("ham").asc, col("vec_id").asc).limit(stage1)
-      .crossJoin(broadcast(stats))
-      // sq8 quantize + integer sq-L2 as codegen'd kernels (r12: the
-      // transform()/aggregate(zip_with) HOF forms pay boxed per-element
-      // lambdas — arithmetic token-identical, spec-pinned kernel ≡ HOF)
-      .select(col("vec_id"), col("embedding"), col("q_vec"), col("ham"),
-        vectors.sq8(col("v"), col("mn"), col("mx")).as("qa"),
-        vectors.sq8(col("qd"), col("mn"), col("mx")).as("qb"))
-      .withColumn("d8", vectors.sqDistLong(col("qa"), col("qb")))
-      .orderBy(col("d8").asc, col("vec_id").asc).limit(stage2)
-      .withColumn("score", scaled(
-        vectors.cosine(col("embedding"), col("q_vec")), Knn.ScoreDigits))
-      .orderBy(col("score").desc, col("vec_id").asc).limit(k)
-      .select("vec_id", "score", "d8", "ham")
-  }
-
-  /** [[search]] at ARBITRARY width (r11 verdict "what's missing" #2, the
-    * funnel leg): the 64-d form's lo/hi long pair generalizes to a
-    * dims/32-long packed-code array via the BqPackVec / HammingDistLong
-    * kernels (2048 explicit CASE terms would blow the Janino method-size
-    * budget; the kernels are one primitive loop each) and the sq8 stage
-    * runs the Sq8QuantizeVec / SqDistLong kernels. Semantics identical to
-    * [[search]] per stage — Hamming over all sign bits, int8 sq-L2 under
-    * corpus-wide calibration, exact cosine — every cut integer-exact with
-    * ties to the lower id, so the funnel replays in the oracle at the
-    * reference's d=2048. At 100 TB the always-resident code column is
-    * dims/8 bytes/row (256 B at 2048-d vs the reference's 8 KB floats). */
+  /** Run the funnel for query `qid` over `raw` (needs `vec_id` and a
+    * `dims`-wide `embedding`; extra columns such as `label` ride through to
+    * `restrict`). Output: (vec_id, score, d8, ham), score desc.
+    *
+    * Any width: the sign bits pack into dims/32 longs via the BqPackVec /
+    * HammingDistLong kernels (at d=64 the two words are the batch funnel's
+    * [[bqHalf]] lo/hi pair; 2048 explicit CASE terms would blow the Janino
+    * method-size budget, the kernels are one primitive loop each) and the
+    * sq8 stage runs the Sq8QuantizeVec / SqDistLong kernels — Hamming over
+    * all sign bits, int8 sq-L2 under corpus-wide calibration, exact
+    * cosine, every cut integer-exact with ties to the lower id, so the
+    * funnel replays in the oracle at the reference's d=2048. At 100 TB the
+    * always-resident code column is dims/8 bytes/row (256 B at 2048-d vs
+    * the reference's 8 KB floats). */
   def searchWide(raw: DataFrame, qid: Long, stage1: Int, stage2: Int, k: Int,
                  dims: Int,
                  restrict: DataFrame => DataFrame = identity): DataFrame = {
     require(dims % 32 == 0, s"searchWide: dims=$dims must be a multiple of 32")
-    val groups = dims / 32
-    val e = raw.select(col("vec_id"), col("embedding"),
+    val e = raw.select(raw.columns.toSeq.map(col) ++ Seq(
       expr("CAST(embedding AS ARRAY<DOUBLE>)").as("v"),
-      vectors.bqPack(col("embedding"), groups).as("p"))
+      vectors.bqPack(col("embedding"), dims / 32).as("p")): _*)
     val stats = calibrationAndPresence(e, Seq(qid))
     val q = e.filter(col("vec_id") === qid)
       .select(col("p").as("qp"), col("embedding").as("q_vec"), col("v").as("qd"))
     // `restrict` narrows the stage-1 BODY only (e.g. an IVF probe
-    // membership join — the [[search]] A43d convention at width);
-    // calibration and the query side stay corpus-wide index-build state
+    // membership join — A43d); calibration and the query side stay
+    // corpus-wide index-build state
     restrict(e.filter(col("vec_id") =!= qid))
       .crossJoin(broadcast(q))
       .withColumn("ham", vectors.hammingLong(col("p"), col("qp")))
       .orderBy(col("ham").asc, col("vec_id").asc).limit(stage1)
       .crossJoin(broadcast(stats))
+      // sq8 quantize + integer sq-L2 as codegen'd kernels (r12: the
+      // transform()/aggregate(zip_with) HOF forms pay boxed per-element
+      // lambdas — arithmetic token-identical, spec-pinned kernel ≡ HOF)
       .select(col("vec_id"), col("embedding"), col("q_vec"), col("ham"),
         vectors.sq8(col("v"), col("mn"), col("mx")).as("qa"),
         vectors.sq8(col("qd"), col("mn"), col("mx")).as("qb"))
@@ -218,7 +191,7 @@ object Cascade {
     broadcast(short1).join(e.select("vec_id", "embedding", "v"), "vec_id")
       .join(broadcast(qs.select("q_id", "q_vec", "qd")), "q_id")
       .crossJoin(broadcast(stats))
-      // kernels, not HOFs — see the single-query tail above
+      // kernels, not HOFs — see searchWide
       .select(col("q_id"), col("vec_id"), col("embedding"), col("q_vec"), col("ham"),
         vectors.sq8(col("v"), col("mn"), col("mx")).as("qa"),
         vectors.sq8(col("qd"), col("mn"), col("mx")).as("qb"))
@@ -238,47 +211,45 @@ object Cascade {
     * query's Hamming/sq8/cosine cuts, so the union ≡ one whole-file pass
     * (spec-pinned at cap=4); the whole-file duplicate guard lives in the
     * shared skeleton. Linear in shard count by design — the price of the
-    * >cap path. */
-  /** Byte budget under which the sharded driver materializes the FULL
-    * packed frame (embedding + v + sign codes, ~3× corpus bytes in
-    * executor storage) instead of only the narrow stage-1 code table —
-    * sized so any corpus that plausibly fits executor storage whole takes
-    * the faster r17 shape, and a 100 TB corpus never does. Non-file
-    * inputs (tests) report 0 bytes and take the full-pack shape. */
-  val PackMaterializeMaxBytes: Long = 4L << 30
-
+    * >cap path.
+    *
+    * ONE calibration/presence pass for the whole qid set is threaded into
+    * every chunk (r11 ADVICE), and ONE shared pack, size-gated by
+    * [[fullPackFits]]: under the budget the whole packed frame
+    * materializes (A/B-measured: the narrow-only split re-derived the
+    * embedding/v columns per pass and doubled the sharded entry at gate
+    * scale, 1.4 → 2.6 s); past it only the narrow (vec_id, lo, hi)
+    * stage-1 code table is stored (index-sized, the column a store keeps
+    * resident at 100 TB) and each pass's tiny qs filter / ≤shortlist
+    * rerank join re-derives the wide columns lazily. */
   def searchBatchSharded(raw: DataFrame, qids: Seq[Long], stage1: Int,
                          stage2: Int, k: Int, keep: Option[DataFrame] = None,
                          cap: Int = Pq.WideBatchCap): DataFrame = {
-    // ONE calibration/presence pass for the whole qid set, threaded into
-    // every chunk (r11 ADVICE: recomputing per chunk re-scanned the corpus
-    // ⌈|Q|/cap⌉ times for a value that is index-build state) — and ONE
-    // shared pack, SIZE-GATED r18 (ADVICE r17): below the byte budget the
-    // whole packed frame materializes (the r17 shape — A/B-measured: the
-    // narrow-only split re-derived the embedding/v columns per pass and
-    // DOUBLED the sharded entry at gate scale, 1.4 → 2.6 s); past the
-    // budget only the narrow (vec_id, lo, hi) stage-1 code table is
-    // stored (17 bytes/row — index-sized, the column a store keeps
-    // resident at 100 TB) and each pass's tiny qs filter / ≤shortlist
-    // rerank join re-derives the wide columns lazily, so the executor
-    // storage footprint never grows to 3× corpus bytes.
     val packed = raw.selectExpr("vec_id", "embedding",
       "CAST(embedding AS ARRAY<DOUBLE>) AS v",
       s"${bqHalf("embedding", 0)} AS lo", s"${bqHalf("embedding", 32)} AS hi")
-    val bytes = Pq.fileScanBytes(raw)
-    val fullPack = bytes >= 0 && bytes <= PackMaterializeMaxBytes
-    if (fullPack) {
-      val e = graft.operators.Dedup.materialize(packed)
-      val stats = calibrationAndPresence(e, qids)
-      Pq.shardedWide(qids, cap, "cascadeSearchBatchSharded")(chunk =>
-        searchBatch(raw, chunk, stage1, stage2, k, keep, Some(stats), Some(e)))
-    } else {
-      val codes = graft.operators.Dedup.materialize(
-        packed.select("vec_id", "lo", "hi"))
-      val stats = calibrationAndPresence(packed, qids)
-      Pq.shardedWide(qids, cap, "cascadeSearchBatchSharded")(chunk =>
-        searchBatch(raw, chunk, stage1, stage2, k, keep, Some(stats),
-          Some(packed), Some(codes)))
-    }
+    // the row count prunes every column: a parquet corpus answers it from
+    // file footers, so the gate costs no pass over the vectors
+    val (e, codes) =
+      if (fullPackFits(raw.count())) (Dedup.materialize(packed), None)
+      else (packed, Some(Dedup.materialize(packed.select("vec_id", "lo", "hi"))))
+    val stats = calibrationAndPresence(e, qids)
+    Pq.shardedWide(qids, cap, "cascadeSearchBatchSharded")(chunk =>
+      searchBatch(raw, chunk, stage1, stage2, k, keep, Some(stats), Some(e), codes))
   }
+
+  /** Byte budget for the sharded funnel's materialized full pack, in
+    * executor storage: sized so any corpus that plausibly fits executor
+    * storage whole takes the faster full-pack shape, and a 100 TB corpus
+    * never does. */
+  val PackMaterializeMaxBytes: Long = 4L << 30
+
+  /** In-memory bytes of one full-pack row: the 64 packed dims as the float
+    * embedding (4·d) and its double cast `v` (8·d), plus the two sign
+    * words (16). Compressed file bytes would understate it several-fold. */
+  private[graft] val PackRowBytes: Long = 12L * 64 + 16
+
+  /** The full pack of `rows` vectors fits [[PackMaterializeMaxBytes]]. */
+  private[graft] def fullPackFits(rows: Long): Boolean =
+    rows * PackRowBytes <= PackMaterializeMaxBytes
 }

@@ -18,21 +18,25 @@ import graft.functions.{pq, scaled, vectors}
   * verifiable by the DuckDB oracle, the same trade `ivf_build` makes).
   *
   * Scale shape:
-  *  - codebook and ADC table are K·M rows — broadcast, never shuffled;
-  *  - encoding is one narrow crossJoin + a (vec_id, m)-keyed argmin
-  *    aggregate; at 100 TB codes are computed ONCE at ingest and stored
-  *    (the 32× compression is what makes the corpus scannable);
-  *  - the query scan reads codes only, sums M broadcast-table lookups per
-  *    row, and TakeOrders the shortlist — no full-vector I/O until the
-  *    R-row rerank.
+  *  - codebook and ADC tables are K·M-entry model state — driver
+  *    arithmetic, broadcast, never shuffled;
+  *  - encoding is one narrow kernel projection ([[encodeFast]]); at 100 TB
+  *    codes are computed ONCE at ingest and stored (the 32× compression is
+  *    what makes the corpus scannable);
+  *  - the query scan reads codes only, sums M table lookups per row, and
+  *    cuts the shortlist with map-side k-heaps — no full-vector I/O until
+  *    the R-row rerank.
   *
   * All sub-distances are squared L2 computed as an explicit left-assoc
   * 8-term sum (no sqrt, no engine aggregation-order ambiguity), scaled to
   * BIGINT per the repo convention.
   *
-  * A query FILE is served by one batched path per algorithm —
-  * [[searchRerankBatch]], [[searchRerankBatchExternal]], [[ivfpqBatch]] and
-  * [[ivfpqResidualBatch]] — see the batched-serving section below. */
+  * One path serves every query, single or file: each algorithm has one
+  * batched serve — [[searchRerankBatch]], [[searchRerankBatchExternal]],
+  * [[ivfpqBatch]] and [[ivfpqResidualBatch]] — and the single-query forms
+  * ([[searchRerank]], [[searchRerankCb]], [[searchPersisted]],
+  * [[ivfpqResidual]]) are one-query calls of it that project
+  * (vec_id, score). See the batched-serving section below. */
 object Pq {
 
   /** (m, code, cw): KMeans-trained codewords — real Lloyd's over every
@@ -54,8 +58,7 @@ object Pq {
     import spark.implicits._
     val sample = Dedup.materialize(emb.filter(col("vec_id") < sampleMax)
       .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v"))
-    var cb = seededCodebook(emb, numSub, subDim, numCodes).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
+    var cb = codebookRows(seededCodebook(emb, numSub, subDim, numCodes))
     val stackExpr = s"stack($numSub, " +
       (0 until numSub).map(m => s"$m, code_$m").mkString(", ") + ") AS (m, code)"
     for (_ <- 0 until iters) {
@@ -185,65 +188,18 @@ object Pq {
     * (cluster) centroid rather than the raw vector — the residual
     * distribution is far tighter than the raw one, so the same code budget
     * quantizes finer (A24 `knn_ivfpq` is the direct-encode baseline).
-    *
-    * INTEGER-EXACT throughout: quantized components, the KMeans.fitInt
-    * floor-mean centroid arithmetic, integer squared L2 for the probe,
-    * encode argmin, per-cluster ADC and the final rerank — so the whole
-    * composition (centroids → probe → residual seeds → encode →
-    * per-cluster ADC → shortlist → exact rerank) replays in DuckDB.
-    *
-    * Scale shape: centroids + residual codebook are k·d / K·M·d model
-    * state (driver-held, literal-embedded — the KMeans contract). The
-    * probed members' encode is one narrow codegen'd kernel projection; the
-    * ADC is a per-label literal lookup (one CASE arm per probed cluster);
-    * shortlist via TakeOrdered; the exact rerank touches `shortlist` rows.
-    * At 100 TB codes pre-exist from ingest and the probe prunes the code
-    * scan to ~nProbe/k of the corpus — the residual transform changes
-    * WHAT is encoded, not the scan shape. */
+    * Integer-exact end to end; the one-query call of [[ivfpqResidualBatch]],
+    * projected to (vec_id, score). */
   def ivfpqResidual(emb: DataFrame, qid: Int, k: Int, numSub: Int, subDim: Int,
-                    numCodes: Int, nProbe: Int, shortlist: Int): DataFrame = {
-    // store the quantized labeled frame once when wide (it feeds the
-    // model aggregates, the query collects, the residual encode, and
-    // the rerank — the lineage-vs-stored penalty, see materializeIfHeavy)
-    val qe = materializeIfHeavy(quantizedLabeled(emb),
-      numSub.toLong * numCodes * subDim)
-    val model = residualModel(qe, numSub, subDim, numCodes, "ivfpqResidual")
-    val qv = qe.filter(col("vec_id") === qid).select("q").head.getSeq[Long](0).toArray
-    // probe: nProbe nearest centroids, ties to the lower label
-    val probed: Seq[Long] = model.cent.toSeq
-      .map { case (l, c) => (l, sqdFull(c, qv)) }
-      .sortBy { case (l, d) => (d, l) }.take(nProbe).map(_._1)
-    // no q carry (the wide-payload-through-operators penalty — see
-    // searchRerankInt): the rerank re-joins the shortlist to the stored
-    // frame
-    val codes = residualCodes(qe.filter(col("vec_id") =!= qid), model, probed,
-      numSub, subDim, carry = Seq("vec_id", "label"))
-    // per-cluster ADC: td(label, m, code) = ||(q − cent_label)_sub − cw||²,
-    // embedded as literal arrays behind one CASE arm per probed cluster
-    val adcByLabel = probed.map { l =>
-      val qr = Array.tabulate(qv.length)(i => qv(i) - model.cent(l)(i))
-      l -> residualAdc(qr, model.cb, numSub, subDim)
-    }.toMap
-    def adistFor(l: Long): String = adistLookupExpr(adcByLabel(l), numSub)
-    val whens = probed.init.map(l => s"WHEN label = ${l}L THEN (${adistFor(l)})").mkString(" ")
-    val caseExpr =
-      if (probed.size == 1) adistFor(probed.head)
-      else s"CASE $whens ELSE (${adistFor(probed.last)}) END"
-    val qLit = s"array(${qv.map(v => s"${v}L").mkString(", ")})"
-    val short = codes.selectExpr("vec_id", s"CAST($caseExpr AS BIGINT) AS adist")
-      .orderBy(col("adist").asc, col("vec_id").asc).limit(shortlist)
-      .select("vec_id")
-    qe.join(broadcast(short), "vec_id")
-      .selectExpr("vec_id", graft.functions.sqDistLongSql("q", qLit) + " AS score")
-      .orderBy(col("score").asc, col("vec_id").asc).limit(k)
-  }
+                    numCodes: Int, nProbe: Int, shortlist: Int): DataFrame =
+    residualSearch(emb, Seq(qid.toLong), k, numSub, subDim, numCodes, nProbe,
+      shortlist, WideBatchCap, "ivfpqResidual").select("vec_id", "score")
 
-  // ---- shared residual-IVFPQ construction: the single-query and batch
-  // forms build the SAME query-independent structure — integer coarse
-  // centroids, the dense-seed residual codebook, and the
-  // residual-transformed member encode — from ONE construction path each.
+  // ---- the residual-IVFPQ construction: integer coarse centroids, the
+  // dense-seed residual codebook, and the residual-transformed member
+  // encode — query-independent structure built once per serve.
 
-  /** (vec_id, label, q): the quantized labeled corpus every residual form
+  /** (vec_id, label, q): the quantized labeled corpus the residual serve
     * starts from. */
   private def quantizedLabeled(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), col("label").cast("bigint").as("label"),
@@ -311,14 +267,6 @@ object Pq {
       }.toIndexedSeq
     }.toIndexedSeq
 
-  /** Literal element_at lookup summing the M subspace td's over bound
-    * code_0..code_{M−1} columns. */
-  private def adistLookupExpr(tds: IndexedSeq[IndexedSeq[Long]], numSub: Int): String =
-    (0 until numSub).map { m =>
-      val vals = tds(m).map(v => s"${v}L").mkString(", ")
-      s"element_at(array($vals), CAST(code_$m AS INT) + 1)"
-    }.mkString(" + ")
-
   private def sqdFull(a: Array[Long], b: Array[Long]): Long = {
     var acc = 0L; var i = 0
     while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
@@ -358,12 +306,6 @@ object Pq {
       .agg(min(struct(col("d"), col("code"))).as("best"))
       .selectExpr("vec_id", "m", "best.code AS code")
 
-  /** (m, code, td): the query's ADC lookup table (one row per codeword). */
-  def adcTable(query: DataFrame, codebook: DataFrame, subDim: Int): DataFrame =
-    codebook.crossJoin(broadcast(query))
-      .selectExpr("m", "code", s"slice(qv, m * $subDim + 1, $subDim) AS qsub", "cw")
-      .selectExpr("m", "code", s"${sqDistExpr("qsub", "cw", subDim, offset = false)} AS td")
-
   /** Scan-speed encode: the codebook is k·d MODEL STATE (like KMeans
     * centroids), so it rides along as a reference object inside the
     * codegen'd `PqNearestCode` kernel and every code is computed in ONE
@@ -371,7 +313,7 @@ object Pq {
     * (the crossJoin+groupBy `encode` form materialized n·M·K intermediate
     * rows: 26 s vs ~2 s at 500k vectors). The kernel's loop is
     * bit-identical to `encode`'s SQL arithmetic — asserted by spec AND by
-    * the driver oracle through `searchRerank`. Returns wide codes
+    * the driver oracle through every PQ serve. Returns wide codes
     * (vec_id, code_0 … code_{M-1}). */
   def encodeFast(body: DataFrame, cbRows: Array[(Int, Long, Array[Double])],
                  numSub: Int, subDim: Int,
@@ -401,15 +343,6 @@ object Pq {
     * the scan is naturally parallel and this is a no-op). Row placement
     * never affects results: every consumer aggregates by key or through
     * order-insensitive k-heaps. */
-  /** Total file-scan bytes under `df`'s planned physical tree — driver
-    * metadata only, no job (the [[spreadHeavyKernel]] probe's byte leg,
-    * shared by size-gated materialization decisions). 0 for non-file
-    * inputs. */
-  private[graft] def fileScanBytes(df: DataFrame): Long =
-    df.queryExecution.sparkPlan.collectLeaves().collect {
-      case f: FileSourceScanExec => f.relation.location.sizeInBytes
-    }.sum
-
   private[operators] val SpreadMinOpsPerRow = 16384L
   private[graft] def spreadHeavyKernel(body: DataFrame, opsPerRow: Long): DataFrame = {
     if (body.isStreaming || opsPerRow < SpreadMinOpsPerRow) return body
@@ -488,8 +421,10 @@ object Pq {
     if (opsPerRow < SpreadMinOpsPerRow) body
     else Dedup.materialize(spreadHeavyKernel(body, opsPerRow))
 
-  /** Full search: ADC shortlist of `shortlist` candidates over the codes,
-    * then exact L2 rerank of the shortlist to top-`k`.
+  /** Full search for corpus query `qid`: ADC shortlist of `shortlist`
+    * candidates over the codes, then exact L2 rerank of the shortlist to
+    * top-`k`, as (vec_id, score) — the one-query call of
+    * [[searchRerankBatch]].
     *
     * `keep` (optional, single `vec_id` column) restricts the search to a
     * metadata-qualified subset — the ACORN-hybrid composition over the
@@ -500,70 +435,16 @@ object Pq {
   def searchRerank(emb: DataFrame, qid: Int, k: Int, numSub: Int, subDim: Int,
                    numCodes: Int, shortlist: Int,
                    keep: Option[DataFrame] = None): DataFrame =
-    searchRerankCb(emb, seededCodebook(emb, numSub, subDim, numCodes),
-      qid, k, numSub, subDim, shortlist, keep)
+    flatSearch(emb, seededCodebook(emb, numSub, subDim, numCodes), Seq(qid.toLong), k,
+      numSub, subDim, shortlist, keep, WideBatchCap, "searchRerank").select("vec_id", "score")
 
   /** As `searchRerank` but over a caller-supplied codebook (m, code, cw) —
     * the seeded and KMeans-trained paths share everything downstream. */
   def searchRerankCb(emb: DataFrame, cb: DataFrame, qid: Int, k: Int,
                      numSub: Int, subDim: Int, shortlist: Int,
-                     keep: Option[DataFrame] = None): DataFrame = {
-    val cast = emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
-    val body0 = cast.filter(col("vec_id") =!= qid)
-    val body = keep.fold(body0)(ids => body0.join(ids, "vec_id"))
-    // codebook + ADC table are k·d model state: collected once (like KMeans
-    // centroids), embedded as literals so the code scan is one narrow
-    // codegen'd projection — see encodeFast
-    val cbRows = cb.collect().map(r =>
-      (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    val qv = cast.filter(col("vec_id") === qid).select(col("v").as("qv"))
-    // td values computed BY Spark (one 512-row job), so the literal table
-    // is bit-identical to the joined form in both engines
-    val td = adcTable(qv, cb, subDim).collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    // TWO small codegen'd steps, not one giant expression. A single fused
-    // adist expression (argmin inlined into the td lookup, ~8× the size of
-    // one code expression) is too deep for janino: whole-stage codegen
-    // fails, the failure is NOT cached, and every task re-pays a slow
-    // failed compile + interpreted tree-walk — 15-19 s per query at sf0.1
-    // vs ~0.5 s split. Step 1 materializes the 9-column code projection
-    // (each per-subspace argmin compiles fine); localCheckpoint is the
-    // optimizer-OPAQUE barrier — with anything weaker (repartition tried),
-    // Catalyst collapses the projections back into one and re-inlines the
-    // argmin into the top-k's sort order, where TakeOrdered comparators
-    // run INTERPRETED per comparison. The materialized relation is the
-    // ~(8·8B codes + id) per row any PQ index stores anyway.
-    val codes = Dedup.materialize(encodeFast(body, cbRows, numSub, subDim))
-    adcServe(codes, emb, qid, cbRows, td, k, numSub, shortlist)
-  }
-
-  /** The serve tail shared by the inline-encode path (`searchRerankCb`)
-    * and the persisted-index path (`searchPersisted`): ADC shortlist over
-    * a wide code table, exact L2 rerank of the shortlist. Step 2 of the
-    * two-small-codegen-steps shape documented above: td lookup per
-    * subspace as element_at over a literal array — a small projection over
-    * bound code columns, whole-stage codegen'd. (A CASE-key form desugars
-    * to per-branch EqualTo copies of the key, duplicating the lookup 64×.) */
-  private def adcServe(codes: DataFrame, emb: DataFrame, qid: Long,
-                       cbRows: Array[(Int, Long, Array[Double])],
-                       td: Map[(Int, Long), Long],
-                       k: Int, numSub: Int, shortlist: Int): DataFrame = {
-    val adistExpr = (0 until numSub).map { m =>
-      val tds = cbRows.filter(_._1 == m).sortBy(_._2)
-        .map { case (_, c, _) => s"${td((m, c))}L" }
-      s"element_at(array(${tds.mkString(", ")}), CAST(code_$m AS INT) + 1)"
-    }.mkString(" + ")
-    val short = codes
-      .selectExpr("vec_id", s"CAST($adistExpr AS BIGINT) AS adist")
-      .orderBy(col("adist").asc, col("vec_id").asc).limit(shortlist)
-    val qfull = emb.filter(col("vec_id") === qid).select(col("embedding").as("q_vec"))
-    emb.join(broadcast(short.select("vec_id")), "vec_id")
-      .select("vec_id", "embedding")
-      .crossJoin(broadcast(qfull))
-      .withColumn("score", scaled(vectors.l2(col("embedding"), col("q_vec")), Knn.ScoreDigits))
-      .orderBy(col("score").asc, col("vec_id").asc).limit(k)
-      .select("vec_id", "score")
-  }
+                     keep: Option[DataFrame] = None): DataFrame =
+    flatSearch(emb, cb, Seq(qid.toLong), k, numSub, subDim, shortlist, keep,
+      WideBatchCap, "searchRerankCb").select("vec_id", "score")
 
   /** One-time PQ index BUILD: encode the WHOLE corpus (production ingest
     * encodes everything; queries are excluded at serve time — encode is
@@ -598,8 +479,7 @@ object Pq {
   def buildAndWriteIndex(emb: DataFrame, path: String, numSub: Int,
                          subDim: Int, numCodes: Int): Unit = {
     val cb = seededCodebook(emb, numSub, subDim, numCodes)
-    val cbRows = cb.collect().map(r =>
-      (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
+    val cbRows = codebookRows(cb)
     val body = emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
     encodeFast(body, cbRows, numSub, subDim)
       .write.mode("overwrite").parquet(s"$path/codes")
@@ -612,9 +492,9 @@ object Pq {
     * stored artifacts built at different (numSub, subDim) would otherwise
     * serve silently wrong rankings, or appends would write codes in a
     * foreign layout. Shared by [[searchPersisted]] and [[appendToIndex]].
-    * Returns (codebook frame, collected rows). */
+    * Returns the collected (m, code, cw) rows. */
   def restoreCodebook(s: SparkSession, path: String, numSub: Int,
-                      subDim: Int): (DataFrame, Array[(Int, Long, Array[Double])]) = {
+                      subDim: Int): Array[(Int, Long, Array[Double])] = {
     val cb = s.read.parquet(s"$path/codebook")
     // the export contract pins the exact column set — a codebook without
     // the version column predates the contract (or is foreign) and its
@@ -630,8 +510,7 @@ object Pq {
           s"this engine reads $SchemaVersion — rebuild the index or use a " +
           "matching engine version")
     }
-    val cbRows = all.map(r =>
-      (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
+    val cbRows = all.map(codewordRow)
     val storedSubs = cbRows.map(_._1).distinct.sorted
     require(storedSubs.sameElements(0 until numSub),
       s"pq restore: codebook at $path holds subspaces ${storedSubs.mkString(",")}, " +
@@ -641,7 +520,7 @@ object Pq {
         s"pq restore: codeword (m=$m, code=$c) at $path has ${cw.length} dims, " +
           s"caller expects subDim=$subDim — the index was built at a different layout")
     }
-    (cb, cbRows)
+    cbRows
   }
 
   /** Incremental ADD to the persisted PQ index (A21f; the reference's
@@ -659,7 +538,7 @@ object Pq {
     * the existing corpus-sized code table is never rewritten. */
   def appendToIndex(s: SparkSession, path: String, arriving: DataFrame,
                     numSub: Int, subDim: Int): Unit = {
-    val (_, cbRows) = restoreCodebook(s, path, numSub, subDim)
+    val cbRows = restoreCodebook(s, path, numSub, subDim)
     // Refuse ids already indexed (r11 ADVICE): a duplicate vec_id would
     // write a second code row and searchPersisted's shortlist heap would
     // double-serve that id, silently breaking the append ≡ rebuild pin.
@@ -694,33 +573,23 @@ object Pq {
     * touching raw embeddings except the ≤`shortlist`-row rerank page-in.
     * The A35c lifecycle (build once / serve many) for the compressed
     * family: at 100 TB the serve cost is one 8-byte-per-row scan of a
-    * parquet relation plus a broadcast rerank. Results are identical to
-    * `searchRerank` at the same constants (spec-pinned). */
+    * parquet relation plus a broadcast rerank. The flat pass of
+    * [[searchRerankBatch]] over the stored codes, projected to
+    * (vec_id, score); results are identical to `searchRerank` at the same
+    * constants (spec-pinned). An absent `qid` is refused: it would empty
+    * the answer and its oracle alike. */
   def searchPersisted(s: SparkSession, path: String, emb: DataFrame,
                       qid: Long, k: Int, numSub: Int, subDim: Int,
                       shortlist: Int): DataFrame = {
-    val (cb, cbRows) = restoreCodebook(s, path, numSub, subDim)
+    val cbRows = restoreCodebook(s, path, numSub, subDim)
     val codes = s.read.parquet(s"$path/codes")
     val expectCols = "vec_id" +: (0 until numSub).map(m => s"code_$m")
     require(codes.columns.sameElements(expectCols),
       s"pq restore: code table at $path has columns ${codes.columns.mkString(",")}, " +
         s"expected ${expectCols.mkString(",")}")
-    val qv = emb.filter(col("vec_id") === qid)
-      .selectExpr("CAST(embedding AS ARRAY<DOUBLE>) AS qv")
-    // ADVICE r14: an absent qid would empty the entry AND its oracle and
-    // the hash gate would pass vacuously — refuse loudly instead (the
-    // requireQueryPresent convention, on the operator side so every
-    // persisted-serve entry at every width inherits it). The ADC collect
-    // crossJoins the non-empty codebook against the query, so an empty
-    // table ⟺ the qid is absent — one action serves both the guard and
-    // the serve (ADVICE r15: the separate limit(1).count() paid an extra
-    // job per serve on the hot path).
-    val td = adcTable(qv, cb, subDim).collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    require(td.nonEmpty,
-      s"pq persisted serve: query id $qid absent from the corpus — the " +
-        "gate would pass vacuously on two empty frames")
-    adcServe(codes.filter(col("vec_id") =!= qid), emb, qid, cbRows, td, k, numSub, shortlist)
+    val qs = indexedQueries(emb, Seq(qid), "searchPersisted")
+    pqPasses(emb, qs, cbRows, codes, k, numSub, subDim, shortlist, WideBatchCap,
+      excludeSelf = true).select("vec_id", "score")
   }
 
   /** Group [[cbRows]] by subspace and validate the positional-lookup
@@ -813,8 +682,9 @@ object Pq {
 
   // ---- batched serving: one sharded joined-ADC path per algorithm ----
   //
-  // The reference serves every query of an evaluation file through one ADC
-  // shortlist-and-rerank. Each batch entry point below
+  // The reference serves one query at a time, and an evaluation file through
+  // the same ADC shortlist-and-rerank; here a single query is a one-query
+  // file. Each batch entry point below
   //  1. runs the whole-file guard ([[requireQueryFile]]: cap range, empty,
   //     duplicates across the file) and refuses ids absent from the corpus;
   //  2. builds its pass-invariant state once: the codebook or residual
@@ -827,9 +697,9 @@ object Pq {
   //     shortlists with map-side k-heaps (TopKHits: ≤ |Q|·shortlist rows
   //     per partition cross the only shuffle) and reranks them exactly.
   // Every q_id lands in exactly one pass and per-query funnels are
-  // independent, so any cap yields the same rows (spec-pinned), and each
-  // query's rows equal its single-query form's. Output: (q_id, vec_id,
-  // rank, score), the A12 batch convention.
+  // independent, so any cap yields the same rows and each query's rows are
+  // the ones it gets alone (both spec-pinned). Output: (q_id, vec_id, rank,
+  // score), the A12 batch convention.
 
   /** Queries per pass: the broadcast ADC relation carries |Q|·M·K BIGINT
     * entries (~|Q|·4 KB at M=8, K=64) and the rerank broadcasts
@@ -865,10 +735,12 @@ object Pq {
     passes(qids, cap)(pass)
   }
 
-  private def seededRows(emb: DataFrame, numSub: Int, subDim: Int,
-                         numCodes: Int): Array[(Int, Long, Array[Double])] =
-    seededCodebook(emb, numSub, subDim, numCodes).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
+  /** The (m, code, cw) rows of a codebook frame, collected. */
+  private def codebookRows(cb: DataFrame): Array[(Int, Long, Array[Double])] =
+    cb.collect().map(codewordRow)
+
+  private def codewordRow(r: org.apache.spark.sql.Row): (Int, Long, Array[Double]) =
+    (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray)
 
   /** (q_id, q_vec) rows of a query frame, collected: one per frame row,
     * repeats included (the guards read them). */
@@ -899,7 +771,7 @@ object Pq {
   /** One query's ADC table, tds(m)(code) = floor(Σᵢ (q[m·subDim+i] − cw[i])²
     * · 10⁴) in code order: [[sqDistExpr]]'s IEEE double arithmetic in the
     * same term order (a left fold from +0.0 adds nothing), so the values
-    * equal the engine-computed [[adcTable]]'s bit for bit. */
+    * equal the oracle's SQL-computed tables bit for bit. */
   private def adcTds(q: Array[Float], cbRows: Array[(Int, Long, Array[Double])],
                      numSub: Int, subDim: Int): Seq[Seq[Long]] =
     (0 until numSub).map { m =>
@@ -976,7 +848,8 @@ object Pq {
     * excluded from its own answer. Encoding runs once over the whole
     * corpus, query rows included (each is corpus for the other queries):
     * encode is per-row independent, so encode-all-then-exclude ≡
-    * exclude-then-encode and per-query results ≡ [[searchRerank]].
+    * exclude-then-encode, and each query's rows are its [[searchRerank]]
+    * answer.
     *
     * `keep` (optional, single `vec_id` column) restricts candidates to a
     * metadata-qualified subset — the ACORN-hybrid composition over the
@@ -986,18 +859,38 @@ object Pq {
   def searchRerankBatch(emb: DataFrame, qids: Seq[Long], k: Int, numSub: Int,
                         subDim: Int, numCodes: Int, shortlist: Int,
                         keep: Option[DataFrame] = None,
-                        cap: Int = WideBatchCap): DataFrame = {
-    val who = "searchRerankBatch"
+                        cap: Int = WideBatchCap): DataFrame =
+    flatSearch(emb, seededCodebook(emb, numSub, subDim, numCodes), qids, k, numSub,
+      subDim, shortlist, keep, cap, "searchRerankBatch")
+
+  /** The flat serve of corpus query ids over codebook `cb`. By name: the
+    * whole-file guard runs before the codebook frame is even analysed, so
+    * a bad query file refuses whatever the corpus frame is. */
+  private def flatSearch(emb: DataFrame, cb: => DataFrame, qids: Seq[Long], k: Int,
+                         numSub: Int, subDim: Int, shortlist: Int,
+                         keep: Option[DataFrame], cap: Int, who: String): DataFrame = {
     requireQueryFile(qids, cap, who)
-    val cbRows = seededRows(emb, numSub, subDim, numCodes)
+    val cbRows = codebookRows(cb)
     // queries before the encode: a bad query file refuses before the
     // corpus pays anything
     val qs = indexedQueries(emb, qids, who)
-    // materialized: the encode and the ADC lookup must compile as two
-    // small codegen steps (the janino-depth split, see searchRerankCb)
-    val codes = Dedup.materialize(encodeFast(candidates(emb, keep), cbRows, numSub, subDim))
-    pqPasses(emb, qs, cbRows, codes, k, numSub, subDim, shortlist, cap, excludeSelf = true)
+    pqPasses(emb, qs, cbRows, flatCodes(emb, keep, cbRows, numSub, subDim), k, numSub,
+      subDim, shortlist, cap, excludeSelf = true)
   }
+
+  /** The materialized wide codes of the (`keep`-restricted) corpus. The
+    * encode and the ADC lookup must compile as TWO small codegen steps: a
+    * fused expression (argmin inlined into the lookup) is too deep for
+    * janino, whole-stage codegen fails uncached and every task re-pays a
+    * failed compile plus an interpreted tree-walk (15-19 s per query at
+    * sf0.1 vs ~0.5 s split). localCheckpoint is the optimizer-opaque
+    * barrier — under anything weaker Catalyst collapses the projections
+    * back into one. The stored relation is the ~(M·8 B + id) per row any
+    * PQ index stores anyway. */
+  private def flatCodes(emb: DataFrame, keep: Option[DataFrame],
+                        cbRows: Array[(Int, Long, Array[Double])],
+                        numSub: Int, subDim: Int): DataFrame =
+    Dedup.materialize(encodeFast(candidates(emb, keep), cbRows, numSub, subDim))
 
   /** Batched PQ search over EXTERNAL queries: a (q_id, q_vec ARRAY<FLOAT>)
     * frame whose vectors are not corpus rows — the reference's demo shape,
@@ -1013,10 +906,9 @@ object Pq {
     val qs = collectQueries(
       queries.selectExpr("q_id", "CAST(q_vec AS ARRAY<FLOAT>) AS q_vec"))
     requireQueryFile(qs.map(_._1), cap, who)
-    val cbRows = seededRows(emb, numSub, subDim, numCodes)
-    val codes = Dedup.materialize(encodeFast(candidates(emb, keep), cbRows, numSub, subDim))
-    pqPasses(emb, qs.sortBy(_._1), cbRows, codes, k, numSub, subDim, shortlist, cap,
-      excludeSelf = false)
+    val cbRows = codebookRows(seededCodebook(emb, numSub, subDim, numCodes))
+    pqPasses(emb, qs.sortBy(_._1), cbRows, flatCodes(emb, keep, cbRows, numSub, subDim), k,
+      numSub, subDim, shortlist, cap, excludeSelf = false)
   }
 
   /** Batched IVF×PQ (A24's batch form): per-query coarse probes (the
@@ -1032,7 +924,7 @@ object Pq {
     val who = "ivfpqBatch"
     requireQueryFile(qids, cap, who)
     val s = emb.sparkSession
-    val cbRows = seededRows(emb, numSub, subDim, numCodes)
+    val cbRows = codebookRows(seededCodebook(emb, numSub, subDim, numCodes))
     val qs = indexedQueries(emb, qids, who)
     val tds = qs.map { case (q, v) => q -> adcTds(v, cbRows, numSub, subDim) }.toMap
     val probes = Ivf.probeBatch(Ivf.centroids(emb), queryFrame(s, qs), nProbe)
@@ -1056,12 +948,18 @@ object Pq {
     * union serves every query; only the per-(query, probed cluster) ADC
     * tables differ. Probes and tables are exact integer driver work on
     * the collected query vectors and the model state, so the path stays
-    * integer-exact end to end and per-query results ≡ [[ivfpqResidual]]
-    * (spec-pinned). */
+    * integer-exact end to end. */
   def ivfpqResidualBatch(emb: DataFrame, qids: Seq[Long], k: Int, numSub: Int,
                          subDim: Int, numCodes: Int, nProbe: Int,
-                         shortlist: Int, cap: Int = WideBatchCap): DataFrame = {
-    val who = "ivfpqResidualBatch"
+                         shortlist: Int, cap: Int = WideBatchCap): DataFrame =
+    residualSearch(emb, qids, k, numSub, subDim, numCodes, nProbe, shortlist, cap,
+      "ivfpqResidualBatch")
+
+  /** [[ivfpqResidualBatch]]'s body; `who` names the public caller in
+    * its refusals. */
+  private def residualSearch(emb: DataFrame, qids: Seq[Long], k: Int, numSub: Int,
+                             subDim: Int, numCodes: Int, nProbe: Int, shortlist: Int,
+                             cap: Int, who: String): DataFrame = {
     requireQueryFile(qids, cap, who)
     val s = emb.sparkSession
     // store the quantized labeled frame once when wide (it feeds the

@@ -129,8 +129,7 @@ object FusionQueries {
     * frame whose rows carry their `label`. */
   private def cascade(w: Width, e: DataFrame, qid: Long, stage1: Int,
                       restrict: DataFrame => DataFrame = identity): DataFrame =
-    if (w.wide) Cascade.searchWide(e, qid, stage1, CascStage2, k = 10, dims = w.dims, restrict)
-    else Cascade.search(e, qid, stage1, CascStage2, k = 10, restrict)
+    Cascade.searchWide(e, qid, stage1, CascStage2, k = 10, dims = w.dims, restrict)
 
   /** A40 MMR: top-MmrR relevance shortlist, R² pairwise sim via a broadcast self-join,
     * then the greedy λ-tradeoff loop over the collected integer state. The exact-count
@@ -242,46 +241,37 @@ object FusionQueries {
            |$out""".stripMargin
       }),
 
-    // A21/A46: product-quantized search, ADC shortlist and exact L2 rerank
+    // A21/A46: product-quantized search, ADC shortlist and exact L2 rerank; a single
+    // query is the batch serve's one-query call, and its oracle the one-query slice
     Width.twin("knn_pq")(
-      w => (s, dir) => pqSearch(w, w.frame(s, dir), qid = 0),
-      w => pqOracleSql(w, qid = 0)),
+      w => (s, dir) => pqBatch(w, w.frame(s, dir), Seq(0L)).select("vec_id", "score"),
+      w => oneQuery(pqBatchOracleSql(w, Some("vec_id = 0")))),
 
     // A23/A46e: metadata-filtered PQ, the keep set prunes the code scan
     Width.twin("hybrid_knn_pq")(
-      w => (s, dir) => pqSearch(w, w.frame(s, dir), qid = 0, keep = Some(enKeep(s, dir))),
-      w => pqOracleSql(w, qid = 0, bodySelect = Some(
-        s"""SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v
-           |  FROM ${w.tbl} e JOIN documents d ON d.doc_id = e.vec_id
-           |  WHERE e.vec_id <> 0 AND $EnDuck""".stripMargin))),
+      w => (s, dir) => pqBatch(w, w.frame(s, dir), Seq(0L), keep = Some(enKeep(s, dir)))
+        .select("vec_id", "score"),
+      w => oneQuery(pqBatchOracleSql(w, Some("vec_id = 0"), bodySelect = Some(enBodyDuck(w))))),
 
     // A24/A46f: IVF×PQ, the ADC scan reads only the 2 probed clusters' codes
     Width.twin("knn_ivfpq")(
-      w => (s, dir) => {
-        val e = w.labeled(s, dir)
-        val q = e.filter(col("vec_id") === 0).select(col("embedding").as("q_vec"))
-        val probed = Ivf.probe(Ivf.centroids(e), q, nProbe = 2)
-        pqSearch(w, w.frame(s, dir), qid = 0,
-          keep = Some(e.join(broadcast(probed), "label").select("vec_id")))
-      },
-      w => pqOracleSql(w, qid = 0, prelude = probesDuck(w, qid = 0), bodySelect = Some(
-        s"""SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v
-           |  FROM ${w.tbl} e JOIN probes p ON e.label = p.label
-           |  WHERE e.vec_id <> 0""".stripMargin))),
+      w => (s, dir) => Pq.ivfpqBatch(w.labeled(s, dir), Seq(0L), k = 10, numSub = w.numSub,
+        subDim = w.subDim, numCodes = 64, nProbe = 2, shortlist = 100).select("vec_id", "score"),
+      w => oneQuery(ivfpqBatchOracleSql(w, Some("vec_id = 0")))),
 
     // A21e/A21h: the persisted-index lifecycle; the serve scans the stored codes.
     // Persistence must not change a row, so the fresh pipeline is the oracle.
     Width.twin("knn_pq_persisted")(
       w => (s, dir) => Pq.searchPersisted(s, pqIndex(w, s, dir), w.frame(s, dir), qid = 9,
         k = 10, numSub = w.numSub, subDim = w.subDim, shortlist = 100),
-      w => pqOracleSql(w, qid = 9)),
+      w => oneQuery(pqBatchOracleSql(w, Some("vec_id = 9")))),
 
     // A21f/A21i: incremental add; codeword seeds sit in the base half and encode is per
     // row, so appended serve ≡ full-rebuild serve
     Width.twin("knn_pq_append")(
       w => (s, dir) => Pq.searchPersisted(s, pqAppendedIndex(w, s, dir), w.frame(s, dir),
         qid = 5, k = 10, numSub = w.numSub, subDim = w.subDim, shortlist = 100),
-      w => pqOracleSql(w, qid = 5)),
+      w => oneQuery(pqBatchOracleSql(w, Some("vec_id = 5")))),
 
     // A25/A25b: integer-exact trained codebook, train→encode→search replayed as CTEs
     Width.twin("knn_pq_trained")(
@@ -299,7 +289,7 @@ object FusionQueries {
     Width.twin("knn_ivfpq_residual")(
       w => (s, dir) => Pq.ivfpqResidual(w.labeled(s, dir), qid = 0, k = 10,
         numSub = w.numSub, subDim = w.subDim, numCodes = 16, nProbe = 2, shortlist = 100),
-      w => s"SELECT vec_id, score FROM (${ivfpqResidualBatchOracleSql(w, "vec_id = 0")})"),
+      w => oneQuery(ivfpqResidualBatchOracleSql(w, "vec_id = 0"))),
 
     // A21c/A21g: the batch PQ serve, one encode and one code scan for the query file
     Width.twin("knn_pq_batch_wide")(
@@ -317,10 +307,8 @@ object FusionQueries {
     Width.twin("hybrid_knn_pq_batch_wide")(
       w => (s, dir) => pqBatch(w, w.frame(s, dir), 0L until w.pick(128L, 8L),
         keep = Some(enKeep(s, dir))),
-      w => pqBatchOracleSql(w, Some(s"vec_id < ${w.pick(128, 8)}"), bodySelect = Some(
-        s"""SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v
-           |  FROM ${w.tbl} e JOIN documents d ON d.doc_id = e.vec_id
-           |  WHERE $EnDuck""".stripMargin))),
+      w => pqBatchOracleSql(w, Some(s"vec_id < ${w.pick(128, 8)}"),
+        bodySelect = Some(enBodyDuck(w)))),
 
     // A47/A47c: external (non-corpus) midpoint queries, no self-exclusion
     Width.twin("knn_pq_batch_external")(
@@ -661,7 +649,7 @@ object FusionQueries {
     // A27: quantization-loss evaluation
     "recall_pq" -> ((s, dir) => {
       val e = Tables(s, dir, "embeddings")
-      val approx = pqSearch(Width.Base, e, qid = 0).select("vec_id")
+      val approx = pqBatch(Width.Base, e, Seq(0L)).select("vec_id")
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("q_vec"))
       val exact = Knn.topK(e.filter(col("vec_id") =!= 0).select("vec_id", "embedding"),
         q, 10, Knn.L2).select("vec_id")
@@ -867,9 +855,8 @@ object FusionQueries {
     "knn_pq_batch" -> pqBatchOracleSql(Width.Base, Some("vec_id <= 4")),
 
     // A23b: the same batch pipeline over the metadata-qualified body only
-    "hybrid_knn_pq_batch" -> pqBatchOracleSql(Width.Base, Some("vec_id <= 4"), bodySelect = Some(
-      s"""SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v
-         |  FROM embeddings e JOIN documents d ON d.doc_id = e.vec_id WHERE $EnDuck""".stripMargin)),
+    "hybrid_knn_pq_batch" -> pqBatchOracleSql(Width.Base, Some("vec_id <= 4"),
+      bodySelect = Some(enBodyDuck(Width.Base))),
 
     // A24b: per-query probes (the hybrid_knn centroid ordering, windowed per q)
     "knn_ivfpq_batch" -> ivfpqBatchOracleSql(Width.Base, Some("vec_id <= 4")),
@@ -905,7 +892,7 @@ object FusionQueries {
          |WHERE rank <= 10""".stripMargin,
 
     "recall_pq" -> {
-      s"""WITH pqr AS (${pqOracleSql(Width.Base, qid = 0)}),
+      s"""WITH pqr AS (${oneQuery(pqBatchOracleSql(Width.Base, Some("vec_id = 0")))}),
          |ex AS (SELECT e.vec_id
          |  FROM embeddings e
          |  CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
@@ -1105,29 +1092,14 @@ object FusionQueries {
         |    ORDER BY score ASC, vec_id ASC) AS BIGINT) AS rank, score FROM rr)
         |WHERE rank <= 10""".stripMargin
 
-  /** The single-query PQ oracle at width `w`, parameterized by the body (corpus) CTE;
-    * `prelude` injects CTEs the body references. */
-  private def pqOracleSql(w: Width, qid: Int, bodySelect: Option[String] = None,
-                          prelude: String = ""): String = {
-    val d = w.subDim
-    val body = bodySelect.getOrElse(
-      s"SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM ${w.tbl} WHERE vec_id <> $qid")
-    s"""WITH ${w.cte}$prelude${pqCodebookDuck(w)},
-       |body AS MATERIALIZED ($body),
-       |${pqEncodeDuck(w)},
-       |q AS (SELECT m.m AS m, (CAST(e.embedding AS DOUBLE[]))[m.m*$d+1 : m.m*$d+$d] AS qsub
-       |  FROM ${w.tbl} e, (SELECT unnest(range(${w.numSub})) AS m) m WHERE e.vec_id = $qid),
-       |adc AS (SELECT cb.m, cb.code,
-       |  CAST(floor(${pqFold("q.qsub", "cb.cw", d, offset = false)} * 10000.0) AS BIGINT) AS td
-       |  FROM cb JOIN q ON cb.m = q.m),
-       |short AS (SELECT enc.vec_id FROM enc JOIN adc ON enc.m = adc.m AND enc.code = adc.code
-       |  GROUP BY enc.vec_id ORDER BY sum(adc.td) ASC, enc.vec_id ASC LIMIT 100)
-       |SELECT e.vec_id,
-       |  CAST(floor(list_distance(CAST(e.embedding AS DOUBLE[]), CAST(q2.embedding AS DOUBLE[])) * 10000 + 0.5) AS BIGINT) AS score
-       |FROM ${w.tbl} e JOIN short USING (vec_id)
-       |CROSS JOIN (SELECT embedding FROM ${w.tbl} WHERE vec_id = $qid) q2
-       |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin
-  }
+  /** The (vec_id, score) answer of a batch oracle's one query. */
+  private def oneQuery(batchSql: String): String = s"SELECT vec_id, score FROM ($batchSql)"
+
+  /** The PQ body restricted to the English documents ([[enKeep]]'s rows) at width `w`. */
+  private def enBodyDuck(w: Width): String =
+    s"""SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v
+       |  FROM ${w.tbl} e JOIN documents d ON d.doc_id = e.vec_id
+       |  WHERE $EnDuck""".stripMargin
 
   /** The batch PQ oracle at width `w`: one encode over `bodySelect` (default: the whole
     * frame), per-query ADC, window cuts. Queries come from exactly one of `qsWhere` over
@@ -1292,12 +1264,6 @@ object FusionQueries {
        |CROSS JOIN (SELECT q FROM ed WHERE vec_id = 0) qq
        |ORDER BY score ASC, e.vec_id ASC LIMIT 10""".stripMargin
   }
-
-  /** PQ search over the seeded 64-codeword codebook at width `w`. */
-  private def pqSearch(w: Width, e: DataFrame, qid: Int,
-                       keep: Option[DataFrame] = None): DataFrame =
-    Pq.searchRerank(e, qid = qid, k = 10, numSub = w.numSub, subDim = w.subDim,
-      numCodes = 64, shortlist = 100, keep = keep)
 
   /** The batch PQ serve at width `w` (one encode and one code scan per capped pass). */
   private def pqBatch(w: Width, e: DataFrame, qids: Seq[Long],

@@ -18,6 +18,12 @@ object Bridge {
   def sessionUUID(spark: org.apache.spark.sql.SparkSession): String =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 
+  /** Block until every listener event posted so far has reached the
+    * listeners: the bus is asynchronous, so counts read right after an
+    * action can miss its last stage and task events. */
+  def drainListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Register a function builder on a live session (the non-extensions
     * path; `graft.GraftExtensions` is the spark.sql.extensions path). */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,

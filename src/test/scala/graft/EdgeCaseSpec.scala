@@ -164,6 +164,26 @@ class EdgeCaseSpec extends SparkSpec {
         shortlist = 10).collect()
     }
     assert(e2.getMessage.contains("999999"), e2.getMessage)
+    // the single-query forms are one-query calls of the batch serves and
+    // inherit the guard
+    import graft.operators.Pq
+    val path = TmpDirs.wiped("edge_pq_absent")
+    Pq.buildAndWriteIndex(emb, path, numSub = 2, subDim = 8, numCodes = 8)
+    val singles: Seq[(String, () => Any)] = Seq(
+      "searchRerank" -> (() => Pq.searchRerank(emb, qid = 999999, k = 3,
+        numSub = 2, subDim = 8, numCodes = 8, shortlist = 10).collect()),
+      "searchRerankCb" -> (() => Pq.searchRerankCb(emb,
+        Pq.seededCodebook(emb, numSub = 2, subDim = 8, numCodes = 8), qid = 999999,
+        k = 3, numSub = 2, subDim = 8, shortlist = 10).collect()),
+      "ivfpqResidual" -> (() => Pq.ivfpqResidual(embL, qid = 999999, k = 3,
+        numSub = 2, subDim = 8, numCodes = 8, nProbe = 2, shortlist = 10).collect()),
+      "searchPersisted" -> (() => Pq.searchPersisted(spark, path, emb, qid = 999999L,
+        k = 3, numSub = 2, subDim = 8, shortlist = 10).collect()))
+    for ((name, serve) <- singles) {
+      val e = intercept[IllegalArgumentException](serve())
+      assert(e.getMessage.contains(s"$name: query ids absent from the corpus: 999999"),
+        s"$name: ${e.getMessage}")
+    }
   }
 
   test("batched PQ paths refuse duplicate query ids, naming them") {

@@ -267,7 +267,7 @@ class FunnelSpec extends SparkSpec {
     }
     assert(eBatch.getMessage.contains("absent"))
     val eSingle = intercept[IllegalArgumentException] {
-      Cascade.search(e, qid = 999999L, stage1 = 100, stage2 = 25, k = 10)
+      Cascade.searchWide(e, qid = 999999L, stage1 = 100, stage2 = 25, k = 10, dims = 64)
     }
     assert(eSingle.getMessage.contains("absent"))
     val eSharded = intercept[IllegalArgumentException] {

@@ -801,4 +801,15 @@ class FusionSpec extends SparkSpec {
       .select("q_id", "vec_id", "score")
     assert(sorted(narrow) === sorted(full))
   }
+
+  test("cascade full-pack gate reads the in-memory pack estimate, both sides") {
+    // the budget models the materialized pack (float embedding + double
+    // cast + two sign words per row), not compressed file bytes
+    import graft.operators.Cascade
+    assert(Cascade.PackRowBytes === 4 * 64 + 8 * 64 + 16)
+    val rows = Cascade.PackMaterializeMaxBytes / Cascade.PackRowBytes
+    assert(Cascade.fullPackFits(rows))
+    assert(!Cascade.fullPackFits(rows + 1))
+    assert(Cascade.fullPackFits(Tables(spark, dir, "embeddings").count()))
+  }
 }

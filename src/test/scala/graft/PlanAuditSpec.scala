@@ -6,7 +6,9 @@ package graft
   *
   *  - metadata predicates reach the parquet scan (`PushedFilters`)
   *  - vector scans prune to the needed columns (`ReadSchema`)
-  *  - single-query top-k plans as `TakeOrderedAndProject` (no full sort)
+  *  - single-query top-k plans as `TakeOrderedAndProject` (no full sort);
+  *    a single PQ query is its batch serve's one-query call and plans as
+  *    the joined batch
   *  - batch top-k partial-aggregates map-side (`partial_top_k_hits`),
   *    never a window over the scored corpus
   *  - centroid builds partial-aggregate (`partial_vec_sum`)
@@ -19,6 +21,26 @@ class PlanAuditSpec extends SparkSpec {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+
+  /** Executed plans of the checkpoint jobs that building entry `name`
+    * runs — the stored relations its serve plan only sees as
+    * `Scan ExistingRDD`. */
+  private def checkpointPlans(name: String): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit =
+        if (fn == "checkpoint" || fn == "localCheckpoint") seen.add(qe.executedPlan.toString)
+      def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      SparkEntry.queries(name)(spark, dir)
+      org.apache.spark.sql.graftbridge.CacheProbe.drainListeners(spark)
+    } finally spark.listenerManager.unregister(l)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(seen).asScala.toSeq
+  }
 
   test("events_anomaly_mad: histogram plan — base table feeds ONE live scan") {
     // the r6 rewrite's contract: medians come from the (type, cents)
@@ -166,12 +188,19 @@ class PlanAuditSpec extends SparkSpec {
     val p = plan("knn_ivfsq_2048")
     assert(p.contains("vec_sq8") && p.contains("vec_sqdist_long"), p.take(3000))
     assert(p.contains("TakeOrderedAndProject") && !p.contains("Window"), p.take(3000))
-    // knn_ivfpq_residual_2048: the residual encode runs as the
-    // NearestCentroidLong kernel projection (codegen'd argmin), the
-    // shortlist/rerank as TakeOrdered
-    val p2 = plan("knn_ivfpq_residual_2048")
-    assert(p2.contains("nearest_centroid_long"), p2.take(3000))
-    assert(p2.contains("TakeOrderedAndProject") && !p2.contains("Window"), p2.take(3000))
+    // knn_ivfpq_residual_2048: the one query is the joined batch over the
+    // materialized wide codes; at this width the rerank reads the stored
+    // quantized frame as well. The residual encode runs in the job that
+    // stores the codes, so its pin reads that job's plan: the
+    // NearestCentroidLong kernel projection (codegen'd argmin), never an
+    // argmin aggregate
+    val p2 = assertJoinedBatch("knn_ivfpq_residual_2048", scans = 2)
+    assert(p2.contains("code_15"), p2.take(3000))
+    val stores = checkpointPlans("knn_ivfpq_residual_2048")
+    assert(stores.exists(_.contains("nearest_centroid_long")),
+      s"residual encode is not the kernel projection\n${stores.mkString("\n---\n").take(6000)}")
+    assert(!stores.exists(_.contains("partial_min")),
+      s"residual encode regressed to an argmin aggregate\n${stores.mkString("\n---\n").take(6000)}")
     // knn_pq_batch_wide_2048 inherits A21c's whole O(1)-in-|Q| contract
     // at width: one BNLJ of the 8-row driver-local ADC relation with the
     // one code scan, two partial k-heaps
@@ -190,12 +219,12 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Window") && !p.contains("SortMergeJoin"), p.take(3000))
     // knn_pq_persisted_2048: the serve plan scans the STORED code table
     // (code_0… columns from parquet) and never runs the encode kernel —
-    // re-encoding at serve time is exactly what A21h exists to rule out
-    val p2 = plan("knn_pq_persisted_2048")
+    // re-encoding at serve time is exactly what A21h exists to rule out;
+    // the scan joins the driver-local ADC relation (no materialized scan)
+    val p2 = assertJoinedBatch("knn_pq_persisted_2048", scans = 0)
     assert(p2.contains("code_0"), p2.take(3000))
     assert(!p2.contains("pq_nearest_code"),
       s"the persisted serve re-encoded the corpus\n${p2.take(3000)}")
-    assert(p2.contains("TakeOrderedAndProject") && !p2.contains("Window"), p2.take(3000))
   }
 
   test("hybrid_knn: centroid build partial-aggregates via vec_sum") {
@@ -321,11 +350,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), p.take(2000))
   }
 
-  test("knn_pq: codebook/ADC joins stay broadcast, shortlist via TakeOrdered") {
-    val p = plan("knn_pq")
-    assert(!p.contains("CartesianProduct"), p.take(2000))
-    assert(!p.contains("SortMergeJoin"), "code scan must join the broadcast ADC table")
-    assert(p.contains("TakeOrderedAndProject"), p.take(2000))
+  test("knn_pq: one-query joined ADC, one code scan, two k-heap cuts") {
+    // the single query is the batch serve's one-query call: the code scan
+    // crosses the broadcast one-row ADC relation, never a merge join
+    val p = assertJoinedBatch("knn_pq")
+    assert(p.contains("BroadcastNestedLoopJoin"), p.take(3000))
   }
 
   test("decontaminate: benchmark shingle set joins broadcast against the corpus") {
@@ -351,12 +380,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("partial_max"), p.take(2000))
   }
 
-  test("knn_ivfpq: probed code scan joins broadcast, rerank via TakeOrdered") {
-    val p = plan("knn_ivfpq")
-    assert(!p.contains("CartesianProduct"), p.take(2000))
-    assert(!p.contains("SortMergeJoin"),
-      "probe and shortlist joins must broadcast — the corpus is never a merge-join side")
-    assert(p.contains("TakeOrderedAndProject"), p.take(2000))
+  test("knn_ivfpq: one-query label-keyed joined ADC over the probed codes") {
+    // probe membership and ADC resolve in one broadcast join on label —
+    // the corpus is never a merge-join side
+    val p = assertJoinedBatch("knn_ivfpq")
+    assert(p.contains("BroadcastHashJoin"), p.take(3000))
   }
 
   test("salted_agg: two chained hash aggregates, both phases partial") {
@@ -401,9 +429,11 @@ class PlanAuditSpec extends SparkSpec {
       p.take(3000))
   }
 
-  test("recall_pq: both ranking sides end in TakeOrdered; intersection joins broadcast") {
-    val p = plan("recall_pq")
-    assert("TakeOrderedAndProject".r.findAllIn(p).size >= 2, p.take(3000))
+  test("recall_pq: joined-ADC PQ side, TakeOrdered exact side, broadcast join") {
+    // the approximate side is the one-query joined batch, the exact side
+    // a TakeOrdered cut; the intersection joins broadcast
+    val p = assertJoinedBatch("recall_pq")
+    assert(p.contains("TakeOrderedAndProject"), p.take(3000))
     assert(p.contains("BroadcastHashJoin"), p.take(3000))
   }
 
@@ -563,18 +593,20 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), p.take(3000))
   }
 
-  /** The joined batch contract every PQ batch entry shares: no per-query
-    * projection columns (the deleted literal form's adist_<q>), ONE
-    * materialized code scan — the ADC relation and the rerank's query
-    * vectors are driver-local rows (LocalTableScan), since the ADC state
-    * is one driver action, not a materialized relation — two partial
-    * k-heap cuts (shortlist and rerank), and never a Window, a
-    * SortMergeJoin or a CartesianProduct over scored rows. */
-  private def assertJoinedBatch(name: String): String = {
+  /** The joined batch contract every PQ serve shares, single queries
+    * included: no per-query projection columns (the deleted literal form's
+    * adist_<q>), `scans` materialized scans — the encoded codes; none for
+    * a stored code table, two where the rerank reads a stored quantized
+    * frame — the ADC relation and the rerank's query vectors are
+    * driver-local rows (LocalTableScan), since the ADC state is one driver
+    * action, not a materialized relation — two partial k-heap cuts
+    * (shortlist and rerank), and never a Window, a SortMergeJoin or a
+    * CartesianProduct over scored rows. */
+  private def assertJoinedBatch(name: String, scans: Int = 1): String = {
     val p = plan(name)
     assert(!p.contains("adist_"), s"$name: per-query literal columns leaked\n${p.take(3000)}")
-    assert("Scan ExistingRDD".r.findAllIn(p).length === 1,
-      s"$name: expected exactly one materialized scan (the codes)\n${p.take(3000)}")
+    assert("Scan ExistingRDD".r.findAllIn(p).length === scans,
+      s"$name: expected $scans materialized scan(s)\n${p.take(3000)}")
     assert(p.contains("LocalTableScan"), s"$name: ADC relation not driver-local\n${p.take(3000)}")
     assert("partial_top_k_hits".r.findAllIn(p).length === 2, s"$name\n${p.take(3000)}")
     assert(!p.contains("Window") && !p.contains("SortMergeJoin") &&
@@ -646,14 +678,12 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p.take(3000))
   }
 
-  test("knn_ivfpq_residual: literal ADC (no join), broadcast residual transform, TakeOrdered") {
-    // the codebook/ADC must be literal-embedded model state: the only join
-    // in the scan path is the broadcast centroid join for the residual
-    // transform; shortlist and rerank cut via TakeOrdered, never a sort
-    val p = plan("knn_ivfpq_residual")
-    assert(p.contains("TakeOrderedAndProject"), p.take(3000))
-    assert(!p.contains("SortMergeJoin"), p.take(3000))
-    assert(!p.contains("CartesianProduct"), p.take(3000))
+  test("knn_ivfpq_residual: one-query label-keyed joined ADC, k-heaps") {
+    // the one query's per-probed-cluster ADC tables ride the broadcast
+    // (q_id, label, tds) relation; the residual transform's centroid join
+    // and the rerank join broadcast
+    val p = assertJoinedBatch("knn_ivfpq_residual")
+    assert(p.contains("BroadcastHashJoin"), p.take(3000))
   }
 
   test("dedup_span_coverage: key-partitioned shuffles only, no broadcast of the gram table") {
@@ -691,14 +721,12 @@ class PlanAuditSpec extends SparkSpec {
   test("knn_pq_persisted: the serve plan never re-encodes") {
     // the lifecycle contract: the timed body reads the STORED code table —
     // the encode kernel must not appear anywhere in the serve plan, the
-    // shortlist is a TakeOrdered over the parquet code scan, and the
-    // rerank join arrives broadcast
-    val p = plan("knn_pq_persisted")
+    // shortlist is a k-heap cut over the parquet code scan joined to the
+    // driver-local ADC relation, and the rerank join arrives broadcast
+    val p = assertJoinedBatch("knn_pq_persisted", scans = 0)
     assert(!p.contains("pq_nearest_code"),
       s"serve plan re-encodes the corpus\n${p.take(3000)}")
-    assert(p.contains("TakeOrderedAndProject"), p.take(3000))
-    assert(p.contains("BroadcastExchange"), p.take(3000))
-    assert(!p.contains("SortMergeJoin"), p.take(3000))
+    assert(p.contains("code_0") && p.contains("BroadcastExchange"), p.take(3000))
   }
 
   test("sample_stratified: heap-based selection — quota join broadcast, k-heaps partial") {

@@ -5,9 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Test access to the `private[sql]` size of a session's cache manager, and
   * to the listener bus's drain. */
 object CacheProbe {
-  /** Block until every event posted so far reached the listeners. */
-  def drainListeners(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
+  def drainListeners(spark: SparkSession): Unit = Bridge.drainListeners(spark)
 
   def entries(spark: SparkSession): Int =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
