@@ -1,5 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
+import scala.util.control.NonFatal
 
 object Bench {
 
@@ -61,11 +66,6 @@ object Bench {
   private def f3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    s((s.size - 1) / 2) // lower median — robust, no interpolation
-  }
-
   /** The README §"Strategy comparison" rows — the reference's README §3
     * evaluation axes (one entry per search strategy). */
   val StrategyEntries: Seq[String] = Seq(
@@ -110,34 +110,125 @@ object Bench {
     println(s"""{"metric":"isolate","entries":${results.mkString("{", ",", "}")}}""")
   }
 
+  /** One successful timed pass of an entry. `buildS` times `fn(spark, dir)`:
+    * everything the entry does before its final plan exists, driver jobs
+    * (model collects, Lloyd iterations, checkpoints) included. `execS`
+    * times the noop-sink write of that plan. Jobs, stages, tasks and
+    * summed executor task time count both phases; the `*Build` fields are
+    * the build phase's share. A wall far above task time is scheduling and
+    * planning overhead, not compute.
+    *
+    * `rssDeltaMb` is the entry's resident GROWTH: VmRSS across the pass,
+    * against the post-clearCache baseline of the previous entry (ADVICE
+    * r6: the absolute post-pass RSS in one shared interleaved JVM mostly
+    * reflects heap growth from EARLIER entries). It under-counts
+    * transients a mid-pass GC reclaims — the TRUE per-strategy peak comes
+    * from SPARK_GRAFT_BENCH_ISOLATE's fresh-JVM VmHWM runs, which the
+    * README strategy table uses. */
+  private[graft] final case class Pass(
+      buildS: Double, execS: Double,
+      jobsBuild: Int, jobs: Int, stagesBuild: Int, stages: Int,
+      tasksBuild: Int, tasks: Int, taskSBuild: Double, taskS: Double,
+      rssDeltaMb: Long) {
+    def wall: Double = buildS + execS
+  }
+
+  /** The successful passes per entry, in pass order; `names` keeps the
+    * measured order. */
+  private[graft] final case class Record(names: Seq[String],
+                                         passes: Map[String, Vector[Pass]]) {
+    /** Entries with no successful pass: kept out of medians and totals. */
+    def failed: Seq[String] = names.filterNot(passes.contains)
+    /** Per entry with a successful pass, the pass whose wall is the lower
+      * median of its walls (no interpolation: robust to one stalled pass). */
+    def medianPasses: Seq[(String, Pass)] = names.flatMap { n =>
+      passes.get(n).map { ps => n -> ps.sortBy(_.wall).apply((ps.size - 1) / 2) }
+    }
+  }
+
+  /** Run-wide counters, read as differences of snapshots taken after
+    * draining the listener bus. */
+  private final class Counts extends SparkListener {
+    @volatile private var jobs, stages, tasks = 0
+    @volatile private var taskMs = 0L
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages += 1
+      tasks += s.stageInfo.numTasks
+    }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      if (t.taskMetrics != null) taskMs += t.taskMetrics.executorRunTime
+    def snapshot(spark: SparkSession): (Int, Int, Int, Long) = {
+      Bridge.drainListeners(spark)
+      (jobs, stages, tasks, taskMs)
+    }
+  }
+
+  /** One pass of `fn` at `dir`, or the failure it threw. The bus drains
+    * between the timed phases, outside both timers. Execution goes through
+    * the noop sink, NOT count(): count() lets the optimizer prune
+    * everything that doesn't change cardinality (narrow projections,
+    * windows), timing a parquet metadata row-count instead of the query.
+    * The noop sink materializes every output column. */
+  private def timedPass(spark: SparkSession, c: Counts,
+                        fn: (SparkSession, String) => DataFrame,
+                        dir: String): Either[Throwable, Pass] = {
+    val (j0, s0, n0, ms0) = c.snapshot(spark)
+    val rssBefore = rssMb
+    try {
+      val t0 = System.nanoTime()
+      val df = fn(spark, dir)
+      val t1 = System.nanoTime()
+      val (j1, s1, n1, ms1) = c.snapshot(spark)
+      val t2 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val t3 = System.nanoTime()
+      val rssAfter = rssMb
+      val (j2, s2, n2, ms2) = c.snapshot(spark)
+      Right(Pass((t1 - t0) / 1e9, (t3 - t2) / 1e9, j1 - j0, j2 - j0, s1 - s0, s2 - s0,
+        n1 - n0, n2 - n0, (ms1 - ms0) / 1e3, (ms2 - ms0) / 1e3,
+        math.max(rssAfter - rssBefore, 0L)))
+    } catch { case NonFatal(e) => Left(e) }
+  }
+
+  /** `passes` interleaved passes of `entries` at `dir`: pass 1 over every
+    * entry, then pass 2, … Host stalls on a shared machine arrive in
+    * multi-minute waves, so back-to-back repeats of one entry would all
+    * land in the same wave, while interleaving decorrelates them. The
+    * cache is cleared after every pass, so per-query caches do not leak
+    * across timings. A failing pass is printed with its entry's name and
+    * left out of the record; the run goes on. */
+  private[graft] def measure(spark: SparkSession,
+                             entries: Seq[(String, (SparkSession, String) => DataFrame)],
+                             dir: String, passes: Int): Record = {
+    val c = new Counts
+    spark.sparkContext.addSparkListener(c)
+    try {
+      val done = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Pass]]
+      for (_ <- 1 to passes; (name, fn) <- entries) {
+        timedPass(spark, c, fn, dir) match {
+          case Right(p) => done(name) = done.getOrElse(name, Vector.empty) :+ p
+          case Left(e) => System.err.println(s"[bench] $name failed at $dir: $e")
+        }
+        spark.catalog.clearCache()
+      }
+      Record(entries.map(_._1), done.toMap)
+    } finally spark.sparkContext.removeSparkListener(c)
+  }
+
+  private def jsonList(xs: Seq[String]): String =
+    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+
   def main(args: Array[String]): Unit = {
     if (sys.env.get("SPARK_GRAFT_BENCH_ISOLATE").contains("1")) { runIsolated(); return }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // n timed passes per entry, INTERLEAVED (pass 1 over all entries, then
-    // pass 2, ...): host stalls on the shared machine arrive in multi-minute
-    // waves (SURVEY §8f), so back-to-back repeats of one entry would all
-    // land in the same wave while interleaving decorrelates them. The
-    // reported per-query number is the lower MEDIAN of the n passes.
+    // n timed passes per entry, interleaved (see [[measure]]); the
+    // reported per-query number is the lower median of the n passes
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     // full per-pass timings go to a FILE the driver can keep — the 2,000
     // char stdout tail truncates a 119-entry per-query map
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE", "BENCH_full.json")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.SessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Execute through the noop sink, NOT count(): count() lets the
-    // optimizer prune everything that doesn't change cardinality (narrow
-    // projections, windows), timing a parquet metadata row-count instead
-    // of the query. The noop sink forces full materialization of every
-    // output column — the honest throughput measurement.
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-            d: String): Unit =
-      fn(spark, d).write.format("noop").mode("overwrite").save()
+    val spark = Tables.mainSession()
     // SPARK_GRAFT_ONLY=a,b,c → time only those entries (targeted re-bench)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -146,38 +237,14 @@ object Bench {
     // Warm-up pass at the smallest SF: JIT-compiles the codegen'd stages so
     // the timed passes measure steady-state throughput, not JVM warmup.
     val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      selected.foreach { case (_, fn) =>
-        try run(fn, warmDir) catch { case _: Throwable => () }
-      }
-      spark.catalog.clearCache()
-    }
+    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
+      measure(spark, selected, warmDir, passes = 1)
     val loadBefore = loadAvg
-    val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
-      .withDefaultValue(Vector.empty)
-    // per-entry resident GROWTH: VmRSS delta across the pass, sampled
-    // against the post-clearCache baseline of the previous entry (ADVICE
-    // r6: the absolute post-pass RSS in one shared interleaved JVM mostly
-    // reflects heap growth from EARLIER entries, so cross-entry
-    // comparisons were weakly attributable). The delta still under-counts
-    // transients a mid-pass GC reclaims — the TRUE per-strategy peak
-    // comes from SPARK_GRAFT_BENCH_ISOLATE's fresh-JVM VmHWM runs, which
-    // the README strategy table uses.
-    val rss = scala.collection.mutable.Map.empty[String, Vector[Long]]
-      .withDefaultValue(Vector.empty)
-    for (_ <- 1 to nRuns; (name, fn) <- selected) {
-      val rssBefore = rssMb
-      val t0 = System.nanoTime()
-      try run(fn, sfDir) catch { case _: Throwable => () }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      val rssAfter = rssMb
-      spark.catalog.clearCache() // per-query caches must not leak across timings
-      times(name) = times(name) :+ elapsed
-      rss(name) = rss(name) :+ math.max(rssAfter - rssBefore, 0L)
-    }
+    val record = measure(spark, selected, sfDir, nRuns)
     val loadAfter = loadAvg
-    val med = selected.map { case (name, _) => name -> median(times(name)) }
-    val mins = selected.map { case (name, _) => name -> times(name).min }.toMap
+    val medPass = record.medianPasses
+    val med = medPass.map { case (name, p) => name -> p.wall }
+    val mins = record.passes.map { case (name, ps) => name -> ps.map(_.wall).min }
     // stall signature: even the median is >3× the entry's own best pass —
     // the run contains host-stall contamination; report both numbers
     val stalled = med.collect {
@@ -192,23 +259,34 @@ object Bench {
       .map { case (c, m) =>
         s""""$c":{"sec":${f3(m.map(_._2).sum)},"n":${m.size}}""" }
       .mkString("{", ",", "}")
-    // full artifact: every pass's raw timing, for stall forensics
+    val passesOf = record.passes.withDefaultValue(Vector.empty)
+    // full artifact: every successful pass's raw timing, for stall forensics
     val full = selected.map { case (name, _) =>
-      "\"" + name + "\":[" + times(name).map(f3).mkString(",") + "]"
+      "\"" + name + "\":[" + passesOf(name).map(p => f3(p.wall)).mkString(",") + "]"
     }.mkString("{", ",", "}")
-    val stalledJson = stalled.map("\"" + _ + "\"").mkString("[", ",", "]")
     val rssJson = selected.map { case (name, _) =>
-      val v = rss(name).sorted
+      val v = passesOf(name).map(_.rssDeltaMb).sorted
       "\"" + name + "\":" + (if (v.isEmpty) -1L else v((v.size - 1) / 2))
     }.mkString("{", ",", "}")
+    // the median pass's layer split: build + exec = the reported median
+    val layers = medPass.map { case (name, p) =>
+      s""""$name":{"build_s":${f3(p.buildS)},"exec_s":${f3(p.execS)}""" +
+        s""","jobs_build":${p.jobsBuild},"jobs":${p.jobs}""" +
+        s""","stages_build":${p.stagesBuild},"stages":${p.stages}""" +
+        s""","tasks_build":${p.tasksBuild},"tasks":${p.tasks}""" +
+        s""","task_s_build":${f3(p.taskSBuild)},"task_s":${f3(p.taskS)}}"""
+    }.mkString("{", ",", "}")
+    val failedJson = jsonList(record.failed)
+    val stalledJson = jsonList(stalled)
     val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec"""" +
       s""","queries":${fmtQ(med)},"classes":$classes""" +
       s""","n_runs":$nRuns,"total_min":${f3(totalMin)},"stalled":$stalledJson""" +
       s""","rss_mb":$rssMb,"vmhwm_mb":$vmHwmMb,"loadavg":[${f3(loadBefore)},${f3(loadAfter)}]""" +
       s""","sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
-      s"""{"runs":$full,"medians":${fmtQ(med)},"rss_delta_mb_entries":$rssJson,"summary":$line}""")
-    catch { case _: Throwable => () }
+      s"""{"runs":$full,"medians":${fmtQ(med)},"rss_delta_mb_entries":$rssJson""" +
+        s""","layers":$layers,"failed":$failedJson,"summary":$line}""")
+    catch { case NonFatal(e) => System.err.println(s"[bench] could not write $outFile: $e") }
     println(line)
     // parse insurance (r17 verdict #4): the full line above grows with the
     // entry count (~12 KB at 283 entries) and r16's round-over-round
@@ -222,7 +300,7 @@ object Bench {
       s""","classes":$classes,"n_runs":$nRuns,"total_min":${f3(totalMin)}""" +
       s""","stalled":$stalledJson,"rss_mb":$rssMb,"vmhwm_mb":$vmHwmMb""" +
       s""","loadavg":[${f3(loadBefore)},${f3(loadAfter)}],"sf":"$sfDir"""" +
-      s""","bench_file":"$outFile"}""")
+      s""","bench_file":"$outFile","failed":$failedJson}""")
     spark.stop()
   }
 }

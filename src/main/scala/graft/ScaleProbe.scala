@@ -10,7 +10,7 @@ import graft.operators.{Bpe, Dedup, Hll, Hnsw, Ivf, Knn, Pq}
   * gate — a per-round regression probe for the scale story.
   *
   * Usage: `sbt "runMain graft.ScaleProbe [nVecs] [nDocs]"` (defaults
-  * 500k/500k, local[32]).
+  * 500k/500k; cores from `SPARK_GRAFT_CPUS`, see [[Tables.mainSession]]).
   */
 object ScaleProbe {
 
@@ -297,16 +297,7 @@ object ScaleProbe {
     val nVecs = sized.lift(0).map(_.toLong)
       .getOrElse(if (wide || diag) 123000L else 500000L)
     val nDocs = sized.lift(1).map(_.toLong).getOrElse(500000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // NOTE: driver heap cannot be set here in local mode (the JVM is
-      // already running) — size it via the launcher (sbt -J-Xmx…)
-    Tables.SessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.mainSession()
     clearAfter = () => spark.catalog.clearCache()
 
     if (diag) { runKmeansDiag(spark, nVecs); spark.stop(); return }

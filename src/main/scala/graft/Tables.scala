@@ -64,4 +64,22 @@ object Tables {
     "spark.sql.codegen.hugeMethodLimit" -> "8000",
     "spark.sql.codegen.cache.maxEntries" -> "5000"
   )
+
+  /** The session the mains (Verify, Bench, ScaleProbe) run in:
+    * `local[SPARK_GRAFT_CPUS]`, default 4 (the core count the oracle gate
+    * runs at; results are not yet checked to be invariant to it), shuffle
+    * partitions = cpus, UI off, [[SessionConfigs]], WARN logs. The driver
+    * heap is the launcher's (`sbt -J-Xmx…`, `SPARK_DRIVER_MEM`): a running
+    * JVM cannot resize it. */
+  private[graft] def mainSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+    SessionConfigs.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -90,7 +90,7 @@ object Bpe {
       // not the core count — a blanket defaultParallelism shattered the
       // gate-scale vocabulary into 32 near-empty partitions that every one
       // of the train loop's ~40 stages re-paid as task-launch quanta
-      // (EntryProbe: ~80 ms/stage wall over ~7 ms/task compute; the
+      // (Bench layers: ~80 ms/stage wall over ~7 ms/task compute; the
       // driver's 8-core bench beat 32 cores 3:1 on this family). At 100 TB
       // the byte-derived count saturates at defaultParallelism.
       .repartition(wordTableParts(docs), col("word"))

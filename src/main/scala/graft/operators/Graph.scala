@@ -72,7 +72,7 @@ object Graph {
       // Per-iteration materialization of the rank table (r18, r17 verdict
       // #5): the one-lazy-plan form nested every iteration's subtree
       // inside the next — at k=5 the final plan re-analyzed and re-planned
-      // a 5-deep join chain, and EntryProbe measured 748 tasks /
+      // a 5-deep join chain, and Bench's layer split measured 748 tasks /
       // ~130 s summed task time for a 1.2M-edge graph (plan-depth
       // overhead, not compute). Checkpointing RANKS ONLY (|nodes| rows,
       // the tiny side) caps plan depth at one join per action; the edge

@@ -333,8 +333,8 @@ object Pq {
     * §2.5 "one huge unsplittable file → repartition immediately after
     * the read"): the gate corpora are single-row-group parquet files, so
     * without this every wide encode runs as ONE task while the other
-    * cores idle — EntryProbe measured the d=2048 encode as a 4.7 s
-    * single-task job. The shuffle moves the narrow input rows once
+    * cores idle — Bench's layer split measured the d=2048 encode as a
+    * 4.7 s single-task job. The shuffle moves the narrow input rows once
     * (cheap) and only fires when (a) the per-row kernel work is heavy
     * (`opsPerRow`, ≈ distance mults per row, above [[SpreadMinOpsPerRow]]),
     * (b) the frame is a batch frame (a streaming side must stay a
@@ -410,7 +410,7 @@ object Pq {
 
   /** Materialize (spread) a derived vector frame BEFORE a heavy consumer
     * when the downstream per-row kernel work crosses
-    * [[SpreadMinOpsPerRow]] — measured (r17 EntryProbe + isolation
+    * [[SpreadMinOpsPerRow]] — measured (r17 Bench layer split + isolation
     * probe): the d=2048 integer encode over the LINEAGE
     * quantize(widen(...)) frame ran ~6× slower than the identical encode
     * over the same rows read back from a checkpoint (5.1 s vs 0.9 s at
@@ -626,9 +626,13 @@ object Pq {
     * per m and sums — term order identical to [[sqDistExpr]] +
     * [[wideAdistExpr]], so the oracle's sums CTE replays it exactly.
     * Expects the query vector in `qvCol` (ARRAY<DOUBLE>) and the row
-    * codes in code_0 … code_{M-1}. */
-  def adcDistCol(cbRows: Array[(Int, Long, Array[Double])], numSub: Int,
-                 subDim: Int, qvCol: String = "qv"): Column = {
+    * codes in code_0 … code_{M-1}. No serve calls it: the streaming
+    * serves use [[adcTableCol]]. It stays, package-private, as the
+    * reference that [[adcTableCol]] and StreamingQueriesSpec's batch
+    * replica are checked against. */
+  private[graft] def adcDistCol(cbRows: Array[(Int, Long, Array[Double])],
+                                numSub: Int, subDim: Int,
+                                qvCol: String = "qv"): Column = {
     val byM = densifiedByM(cbRows, numSub, "adcDistCol")
     (0 until numSub).map { m =>
       val codes = byM(m)
@@ -645,9 +649,9 @@ object Pq {
   }
 
   /** One arriving query's WHOLE ADC table as a projection column — the
-    * streaming counterpart of [[adcTables]] for widths where
-    * [[adcDistCol]]'s inlined M·subDim-term tree would dwarf the plan
-    * (16×128 = 2048 terms per candidate ROW at d=2048):
+    * streaming counterpart of the batch serves' driver-side [[adcTds]],
+    * for widths where [[adcDistCol]]'s inlined M·subDim-term tree would
+    * dwarf the plan (16×128 = 2048 terms per candidate ROW at d=2048):
     * `tds[m+1][code+1] = floor(Σᵢ (qv[m·subDim+i] − cw[i])² · 10⁴)`,
     * computed via nested HOFs over the typedlit codebook (model state
     * rides as a literal, the [[adcDistCol]] convention). A serving

@@ -142,8 +142,8 @@ object DedupQueries {
     // B36: per-document duplicated-span coverage
     "dedup_span_coverage" -> ((s, dir) => {
       // spread the per-doc tokenize+shingle+md5 kernel off the single
-      // scan task (r18; the multivector_maxsim convention — EntryProbe
-      // measured the gram derivation as a 1.2 s single-task stage)
+      // scan task (r18; the multivector_maxsim convention — Bench's layer
+      // split measured the gram derivation as a 1.2 s single-task stage)
       val g = Pq.spreadHeavyKernel(docs(s, dir), opsPerRow = 1 << 20)
         .select(col("doc_id"),
           graft.functions.text.shingles(expr(Dedup.TokExpr), SpanGram).as("sh"))

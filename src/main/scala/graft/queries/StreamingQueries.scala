@@ -124,17 +124,16 @@ object StreamingQueries {
       schema)
   }
 
-  private val StreamShufflePartitions =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
+  /** Shuffle partitions of a streaming aggregation's state stores. */
+  private val StreamShufflePartitions = "8"
   /** Stream-STREAM joins maintain FOUR state stores per partition (each
     * side × keyToNumValues/keyWithIndexToValue) — 4× the per-partition
     * state machinery of a single-store aggregation — so their overhead
     * floor sits lower: r18 A/B at sf0.1 measured 4 parts at 2.5/2.6 s vs
-    * 8 parts at 2.9/3.1 s for the inner/outer join entries. Same
-    * env-parameterized contract as [[StreamShufflePartitions]]: at 100 TB
-    * the knob goes UP with the join-key cardinality. */
-  private val StreamJoinShufflePartitions =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_JOIN_PARTS", "4")
+    * 8 parts at 2.9/3.1 s for the inner/outer join entries. Both counts
+    * are tuned at the gate scales; larger state (at 100 TB, the join-key
+    * cardinality) needs more. */
+  private val StreamJoinShufflePartitions = "4"
   // per-process temp root
   private def wiped(sub: String): String = graft.TmpDirs.wiped(sub)
   /** Large-state option: the default HDFSBacked provider keeps every state store ON EXECUTOR. */
@@ -151,9 +150,7 @@ object StreamingQueries {
     s.conf.set(key, parts)
     val ssKey = "spark.sql.streaming.stateStore.providerClass"
     val prevSs = s.conf.getOption(ssKey)
-    val wantRocks = sys.env.get("SPARK_GRAFT_STREAM_STATESTORE")
-      .orElse(s.conf.getOption(StateStoreConf))
-      .exists(_.equalsIgnoreCase("rocksdb"))
+    val wantRocks = s.conf.getOption(StateStoreConf).exists(_.equalsIgnoreCase("rocksdb"))
     if (wantRocks) s.conf.set(ssKey, RocksDbProvider)
     try {
       if (mode == "append") {

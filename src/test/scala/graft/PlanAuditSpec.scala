@@ -156,9 +156,10 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("knn_pq_batch_external: map-side k-heaps, no window below the cut, no cartesian") {
-    // the external-query wide batch inherits searchRerankBatchWide's scale
-    // shape: the corpus×ADC scan must feed a partial TopKHits aggregate
-    // (shuffle ≤ |Q|·shortlist rows), never a window over scored rows
+    // the external-query batch (searchRerankBatchExternal) runs
+    // searchRerankBatch's joined-ADC shape: the corpus×ADC scan must feed a
+    // partial TopKHits aggregate (shuffle ≤ |Q|·shortlist rows), never a
+    // window over scored rows
     val p = plan("knn_pq_batch_external")
     assert(p.contains("partial_top_k_hits"), p.take(3000))
     assert(!p.contains("Window"), p.take(3000))
